@@ -101,22 +101,19 @@ def connected_components(
         # without this every iteration's action replays that lineage.
         .localCheckpoint(eager=True)
     )
-    if max_iter is None and edges.count() <= CC_DRIVER_MAX_EDGES:
+    # NULL ids would crash the union-find (None < int); the iterative
+    # path tolerates them (equi-joins). Checking in the edge-count job
+    # keeps a NULL-bearing graph from ever being collected.
+    if max_iter is None and edges.agg(
+        (F.count(F.lit(1)) <= CC_DRIVER_MAX_EDGES)
+        & (F.count_if(F.col("u").isNull() | F.col("v").isNull()) == 0)
+    ).first()[0]:
         rows = [(r[0], r[1]) for r in edges.collect()]
-        # NULL ids would crash the union-find (None < int in the
-        # min-root union); the iterative path tolerates them via
-        # equi-join semantics, so a NULL-bearing graph falls through
-        # to that path instead of raising (r12 advice).
-        if all(u is not None and v is not None for u, v in rows):
-            utype = edges.schema["u"].dataType
-            out = _driver_components(rows)
-            schema = T.StructType(
-                [
-                    T.StructField("doc_id", utype),
-                    T.StructField("cluster_id", utype),
-                ]
-            )
-            return pairs.sparkSession.createDataFrame(out, schema)
+        utype = edges.schema["u"].dataType
+        schema = T.StructType(
+            [T.StructField("doc_id", utype), T.StructField("cluster_id", utype)]
+        )
+        return pairs.sparkSession.createDataFrame(_driver_components(rows), schema)
     labels = edges.select(F.col("u").alias("doc_id")).distinct().withColumn(
         "label", F.col("doc_id")
     )

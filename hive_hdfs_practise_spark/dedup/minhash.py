@@ -23,6 +23,12 @@ note; measured with ALL 128 aggregate columns forced).
 P is the largest 32-bit prime; a_i < 2^31 and x < 2^32 keep every
 product inside signed-64 range. Coefficients come from a fixed seed
 → signatures are deterministic across runs and clusters.
+
+One-expression rule: the k-slot aggregate is ONE ``F.expr`` text from
+``perm_min_sql`` (the DuckDB oracles' generator), never k Columns —
+each Column op is a py4j round trip, ~16,000 per 128-perm plan: 0.8–
+1.3 s Python CPU, 1.3–2.9 s wall per build (warm, 4 cores), above a
+40-doc batch's signature math. The text takes a few hundred calls.
 """
 
 from __future__ import annotations
@@ -124,12 +130,48 @@ def md5_shingle_hash_sql(expr: str) -> str:
 
 
 def perm_min_sql(i: int, h: str = "h") -> str:
-    """DuckDB twin of one ``_perm_mins`` slot: min((a_i·h + b_i) mod
-    P32). Same coefficients, same non-negative operands, so plain
-    ``%`` matches Spark's. a < 2^31 and h < 2^32 keep the product in
-    signed-64 range on both engines."""
+    """Permutation-min slot i, min((a_i·h + b_i) mod P32), as SQL text
+    valid in BOTH engines: the Spark aggregate (``_signature``)
+    and the DuckDB oracles share it. a < 2^31 and h < 2^32 keep the
+    product in signed-64 range. Deliberately minimal — codegen'd 128×
+    into one method, so each redundant node multiplies compile time
+    AND per-row cost:
+    - no NULL guard: ``a*NULL+b`` propagates NULL and ``min()``
+      ignores NULLs natively, so empty-doc marker rows fall through
+      to an all-NULL group (→ sentinel via coalesce);
+    - ``%`` instead of ``pmod``: both operands are provably
+      non-negative (a,b < 2^31, h < 2^32), where pmod costs two
+      remainders to fix a sign that can never be negative.
+    Measured on the sf0.1 corpus (all slots forced): 3.6s cold /
+    1.2s warm vs 8.1s / 3.8s for the guarded-pmod form — identical
+    signatures (checksum-equal)."""
     a, b = _COEFFS[i]
     return f"min((CAST({a} AS BIGINT) * {h} + {b}) % {P32})"
+
+
+def _signature(
+    exploded: DataFrame, id_cols: list[str], n_perm: int, downsample: int
+) -> DataFrame:
+    """(id_cols..., sig) from ``_h`` rows: downsample filter, then ONE
+    aggregate expression (module docstring). An empty doc's NULL
+    marker row passes the filter and gets the all-P32 sentinel.
+
+    A filter before the wide aggregate beats folding the predicate
+    into the 128 min() updates on BOTH codegen settings (sf0.1, all
+    agg columns forced): 4.7s vs 6.7s interpreted (maxFields=100 —
+    the skipped 75% of rows otherwise still pay 128 when() evaluations
+    each), 4.4s vs 4.8s fused (maxFields≥129). An earlier measurement
+    claiming the fold was 10× faster was an artifact of Catalyst
+    pruning unread aggregate columns in the probe query."""
+    if downsample > 1:
+        exploded = exploded.filter(
+            F.col("_h").isNull() | (F.pmod(F.col("_h"), F.lit(downsample)) == 0)
+        )
+    slots = ", ".join(
+        f"coalesce({perm_min_sql(i, '_h')}, CAST({P32} AS BIGINT))"
+        for i in range(n_perm)
+    )
+    return exploded.groupBy(*id_cols).agg(F.expr(f"array({slots})").alias("sig"))
 
 
 def minhash_signature_df(
@@ -157,37 +199,7 @@ def minhash_signature_df(
     exploded = df.select(
         *id_cols, F.explode_outer(F.col(shingles_col)).alias("_shingle")
     ).withColumn("_h", h)
-    if downsample > 1:
-        # keep the null marker rows (empty docs) so groupBy retains them
-        exploded = exploded.filter(
-            F.col("_h").isNull() | (F.pmod(F.col("_h"), F.lit(downsample)) == 0)
-        )
-    agg = exploded.groupBy(*id_cols).agg(*_perm_mins(n_perm))
-    sig = F.array(
-        *[F.coalesce(F.col(f"_m{i}"), F.lit(P32).cast("bigint")) for i in range(n_perm)]
-    )
-    return agg.select(*id_cols, sig.alias("sig"))
-
-
-def _perm_mins(n_perm: int) -> list[Column]:
-    """The k permutation-min aggregate slots over ``_h``.
-
-    Deliberately minimal per-slot expression — this text is codegen'd
-    128× into one generated method, so every redundant node multiplies
-    compile time AND per-row cost:
-    - no ``when(isNotNull, ...)`` guard: ``a*NULL+b`` propagates NULL
-      and ``min()`` ignores NULLs natively, so empty-doc marker rows
-      fall through to an all-NULL group → sentinel via coalesce;
-    - ``%`` instead of ``pmod``: both operands are provably
-      non-negative (a,b < 2^31, _h < 2^32), where pmod costs two
-      remainders to fix a sign that can never be negative.
-    Measured on the sf0.1 corpus (all slots forced): 3.6s cold /
-    1.2s warm vs 8.1s / 3.8s for the guarded-pmod form — identical
-    signatures (checksum-equal)."""
-    return [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(P32)).alias(f"_m{i}")
-        for i, (a, b) in enumerate(_COEFFS[:n_perm])
-    ]
+    return _signature(exploded, id_cols, n_perm, downsample)
 
 
 def minhash_signature_from_text(
@@ -230,24 +242,7 @@ def minhash_signature_from_text(
             shingle_hash(F.col(text_col).substr(F.col("_i"), F.lit(k)), family),
         ).alias("_h"),
     )
-    # downsampling is a FILTER before the wide aggregate (NULL marker
-    # rows for empty docs pass through so groupBy retains them). A
-    # filter here beats folding the predicate into the 128 min()
-    # updates on BOTH codegen settings (sf0.1, all agg columns
-    # forced): 4.7s vs 6.7s interpreted (maxFields=100 — the skipped
-    # 75% of rows otherwise still pay 128 when() evaluations each),
-    # 4.4s vs 4.8s fused (maxFields≥129). An earlier measurement
-    # claiming the fold was 10× faster was an artifact of Catalyst
-    # pruning unread aggregate columns in the probe query.
-    if downsample > 1:
-        exploded = exploded.filter(
-            F.col("_h").isNull() | (F.pmod(F.col("_h"), F.lit(downsample)) == 0)
-        )
-    agg = exploded.groupBy(*id_cols).agg(*_perm_mins(n_perm))
-    sig = F.array(
-        *[F.coalesce(F.col(f"_m{i}"), F.lit(P32).cast("bigint")) for i in range(n_perm)]
-    )
-    return agg.select(*id_cols, sig.alias("sig"))
+    return _signature(exploded, id_cols, n_perm, downsample)
 
 
 def lsh_candidate_pairs(
@@ -414,6 +409,17 @@ def lsh_bands(
     )
 
 
+def _band_rows(sigs, extra_cols, n_bands, rows_per_band, family) -> DataFrame:
+    """(band, band_key, doc_id, *extra_cols): the band-index rows."""
+    return sigs.select(
+        F.posexplode(
+            lsh_bands(F.col("sig"), n_bands, rows_per_band, family)
+        ).alias("band", "band_key"),
+        "doc_id",
+        *extra_cols,
+    )
+
+
 def write_minhash_index(
     spark,
     docs: DataFrame,
@@ -468,15 +474,11 @@ def write_minhash_index(
     sigs.write.mode("overwrite").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )
-    banded = spark.table(f"{table_prefix}_sigs").select(
-        "doc_id",
-        *extra_cols,
-        F.posexplode(
-            lsh_bands(F.col("sig"), n_bands, rows_per_band, family)
-        ).alias("band", "band_key"),
-    )
     write_bucketed(
-        banded.select("band", "band_key", "doc_id", *extra_cols),
+        _band_rows(
+            spark.table(f"{table_prefix}_sigs"), extra_cols, n_bands,
+            rows_per_band, family,
+        ),
         f"{table_prefix}_bands",
         ["band", "band_key"],
         n_buckets=n_buckets,
@@ -511,7 +513,14 @@ def append_minhash_index(
     MUST match the original build (signatures/bands are per-doc
     deterministic, so appended-index == from-scratch-rebuild row for
     row — pinned by dedup_minhash_index_append's oracle and the
-    untouched-files test)."""
+    untouched-files test).
+
+    The write stage is sized to the DELTA: k tasks, k the largest
+    divisor of ``n_buckets`` ≤ the partition count of the checkpointed
+    delta signatures (JVM RDD, no job). k | n gives ``pmod(h, n) mod k
+    == pmod(h, k)``: each bucket stays in one task (one file per
+    touched bucket) without a 32-task stage per 40-doc batch (~0.9 s
+    task-deserialize CPU on 4 cores). Builds and vacuum keep n."""
     # delta signatures are tiny (batch × n_perm longs) and feed both
     # the sigs append and the banding — checkpoint so the delta text
     # is scanned once
@@ -522,20 +531,15 @@ def append_minhash_index(
     dsigs.write.mode("append").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )
-    banded = dsigs.select(
-        "doc_id",
-        *extra_cols,
-        F.posexplode(
-            lsh_bands(F.col("sig"), n_bands, rows_per_band, family)
-        ).alias("band", "band_key"),
-    )
+    parts = max(dsigs._jdf.rdd().getNumPartitions(), 1)
+    k = max(d for d in range(1, parts + 1) if n_buckets % d == 0)
     (
         # bucket-hash clustering before the write: one file per
         # touched bucket per append instead of partitions×buckets
         # (see write_bucketed — appends compound the small-file
         # blowup fastest, one file set per batch forever)
-        banded.select("band", "band_key", "doc_id", *extra_cols)
-        .repartition(n_buckets, "band", "band_key")
+        _band_rows(dsigs, extra_cols, n_bands, rows_per_band, family)
+        .repartition(k, "band", "band_key")
         .write.mode("append")
         .format("parquet")
         .bucketBy(n_buckets, "band", "band_key")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..dedup.minhash import (  # registration-free
-    _perm_mins,
     lsh_candidate_pairs,
     md5_shingle_hash_sql,
     minhash_family,
@@ -1757,10 +1756,8 @@ def graph_link_prediction_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # every vertex has >= 1 neighbor (und comes from the edge list),
     # so no empty-set sentinel is needed — the mins are never NULL
-    agg = hashed.groupBy("v").agg(*_perm_mins(LP_PERM))
-    sigs = agg.select(
-        "v", F.array(*[F.col(f"_m{i}") for i in range(LP_PERM)]).alias("sig")
-    )
+    slots = ", ".join(perm_min_sql(i, "_h") for i in range(LP_PERM))
+    sigs = hashed.groupBy("v").agg(F.expr(f"array({slots})").alias("sig"))
     banded = sigs.select("v", F.posexplode("sig").alias("band", "band_key"))
     mcnt = (
         pairs_within_buckets(banded, "v", ["band", "band_key"], distinct=False)

@@ -95,6 +95,95 @@ class TestMinHash:
         ids = [r.doc_id for r in down.collect()]
         assert len(ids) == len(set(ids)) <= 5
 
+    # (family, downsample, input path) -> (md5 of the sorted
+    # (doc_id, sig) rows, row count), captured on the per-slot
+    # Column builder the one-expression aggregate replaced
+    SIG_CHECKSUMS = {
+        ("md5", 1, "shingles"): ("a032b08f4807124f", 13),
+        ("md5", 1, "text"): ("a032b08f4807124f", 13),
+        ("md5", 4, "shingles"): ("8c7d819f50a097c2", 11),
+        ("md5", 4, "text"): ("8c7d819f50a097c2", 11),
+        ("xxhash", 1, "shingles"): ("33a89ce7578dd702", 13),
+        ("xxhash", 1, "text"): ("e0fa06cc682166af", 13),
+        ("xxhash", 4, "shingles"): ("75c085d6f102561f", 6),
+        ("xxhash", 4, "text"): ("8c821f35f5119eae", 11),
+    }
+
+    @staticmethod
+    def _degenerate_docs(spark):
+        rows = [
+            (0, BASE), (1, BASE), (2, NEAR), (3, FAR),
+            (4, ""), (5, None), (6, "     "), (7, "abc"), (8, "abcd"),
+            (9, "abcde"), (10, "  \t\n  "),
+            (11, "数据去重的近似方法 minhash 签名"), (12, "xy"),
+        ]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    @pytest.mark.parametrize("family", ["md5", "xxhash"])
+    @pytest.mark.parametrize("downsample", [1, 4])
+    @pytest.mark.parametrize("path", ["shingles", "text"])
+    def test_signature_checksums_pinned(self, spark, family, downsample, path):
+        """Signatures are byte-identical to the per-slot builder on a
+        corpus with empty, NULL, whitespace-only and shorter-than-k
+        docs, for both families, both input paths, with and without
+        downsampling."""
+        import hashlib
+
+        from hive_hdfs_practise_spark.dedup.minhash import (
+            minhash_signature_from_text,
+        )
+
+        docs = self._degenerate_docs(spark)
+        if path == "text":
+            sigs = minhash_signature_from_text(
+                docs, ["doc_id"], "text", 5, downsample=downsample, family=family
+            )
+        else:
+            arr = docs.select(
+                "doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles")
+            )
+            sigs = minhash_signature_df(
+                arr, ["doc_id"], downsample=downsample, family=family
+            )
+        rows = sorted((r.doc_id, tuple(r.sig)) for r in sigs.collect())
+        got = (hashlib.md5(repr(rows).encode()).hexdigest()[:16], len(rows))
+        assert got == self.SIG_CHECKSUMS[(family, downsample, path)]
+
+    def test_signature_plan_gateway_calls_bounded(self, spark, monkeypatch):
+        """Building a 128-perm signature plan must stay a few hundred
+        py4j calls (the per-slot Column form took ~16,000, about a
+        second of Python CPU per build): counts gateway round trips
+        instead of timing them."""
+        from py4j import clientserver
+
+        from hive_hdfs_practise_spark.dedup.minhash import (
+            minhash_signature_from_text,
+        )
+
+        docs = self._degenerate_docs(spark)
+        arr = docs.select(
+            "doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles")
+        )
+        calls = [0]
+        send = clientserver.ClientServerConnection.send_command
+
+        def counting(self, *args, **kwargs):
+            calls[0] += 1
+            return send(self, *args, **kwargs)
+
+        monkeypatch.setattr(
+            clientserver.ClientServerConnection, "send_command", counting
+        )
+        for family in ("md5", "xxhash"):
+            calls[0] = 0
+            minhash_signature_from_text(
+                docs, ["doc_id"], "text", 5, 128, downsample=4, family=family
+            )
+            assert calls[0] < 1000, (family, "text", calls[0])
+            calls[0] = 0
+            minhash_signature_df(arr, ["doc_id"], n_perm=128, family=family)
+            assert calls[0] < 1000, (family, "shingles", calls[0])
+
     def test_lsh_pairs_subset_of_bruteforce(self, spark, tmp_path):
         # LSH candidates (verified ≥ threshold) ⊆ brute-force pairs on
         # the driver corpus at sf0.001, restricted to same-lang blocks
@@ -222,6 +311,43 @@ class TestClusters:
             for r in cl.connected_components(pairs).collect()
         }
         assert fast == slow and len(fast) > 0
+
+    def test_null_ids_take_iterative_path(self, spark, monkeypatch):
+        """A NULL-bearing edge graph is routed to the iterative loop by
+        the engine-side check: the edge list is never collected, the
+        driver union-find is never reached, and the result equals the
+        forced-iterative run."""
+        from hive_hdfs_practise_spark.dedup import clusters as cl
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (None, 4), (10, None), (10, 11)],
+            "doc_a LONG, doc_b LONG",
+        )
+        edge_collects = []
+        collect = type(pairs).collect
+
+        def spying_collect(df):
+            if df.columns == ["u", "v"]:
+                edge_collects.append(df)
+            return collect(df)
+
+        monkeypatch.setattr(type(pairs), "collect", spying_collect)
+
+        def no_driver(rows):
+            raise AssertionError("driver union-find ran on a NULL graph")
+
+        monkeypatch.setattr(cl, "_driver_components", no_driver)
+        got = {
+            r.doc_id: r.cluster_id
+            for r in cl.connected_components(pairs).collect()
+        }
+        monkeypatch.setattr(cl, "CC_DRIVER_MAX_EDGES", -1)
+        want = {
+            r.doc_id: r.cluster_id
+            for r in cl.connected_components(pairs).collect()
+        }
+        assert got == want and not edge_collects
+        assert got[1] == got[2] == got[3] == 1 and got[11] == 10
 
 
 class TestClustersLshParity:
@@ -1344,6 +1470,73 @@ class TestMinhashIndexed:
             for r in spark.table("minhash_append_full_idx_sigs").collect()
         }
         assert got_sigs == want_sigs and got_sigs
+
+    def test_append_write_sized_to_delta(self, spark):
+        """A small-delta append writes one file per touched bucket,
+        each holding only rows whose (band, band_key) hash is its
+        bucket id, from a write stage of k tasks, k | n_buckets and
+        no more than the delta signatures' partitions (here at most
+        the session's 8 shuffle partitions) — not n_buckets tasks."""
+        import os
+        import random
+        import re
+        from collections import Counter
+
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators.compaction import (
+            table_location,
+        )
+
+        rng = random.Random(3)
+        words = ["alpha", "beta", "gamma", "delta", "omega", "kappa", "sigma"]
+        docs = spark.createDataFrame(
+            [(i, " ".join(rng.choice(words) for _ in range(30))) for i in range(60)],
+            "doc_id long, text string",
+        )
+        prefix = "minhash_append_layout_idx"
+        mh.write_minhash_index(
+            spark, docs.filter("doc_id < 40"), prefix, downsample=4, family="md5"
+        )
+        root = table_location(spark, f"{prefix}_bands")
+
+        def files():
+            return {f for f in os.listdir(root) if f.endswith(".parquet")}
+
+        before = files()
+        sc = spark.sparkContext
+        sc.setJobGroup("append-layout-pin", "append")
+        try:
+            mh.append_minhash_index(
+                spark, docs.filter("doc_id >= 40"), prefix, downsample=4,
+                family="md5",
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        write_job = max(st.getJobIdsForGroup("append-layout-pin"))
+        write_stage = max(st.getJobInfo(write_job).stageIds)
+        tasks = st.getStageInfo(write_stage).numTasks
+        assert tasks <= 8 and 32 % tasks == 0, tasks
+
+        new = sorted(files() - before)
+        assert new
+        bucket_of = {
+            f: int(re.search(r"_(\d{5})\.c\d+", f).group(1)) for f in new
+        }
+        assert max(Counter(bucket_of.values()).values()) == 1
+        hashed = (
+            spark.read.parquet(*[os.path.join(root, f) for f in new])
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(
+                F.collect_set(
+                    F.pmod(F.hash("band", "band_key"), F.lit(32))
+                ).alias("b")
+            )
+            .collect()
+        )
+        assert len(hashed) == len(new)
+        for r in hashed:
+            assert r.b == [bucket_of[os.path.basename(r.f)]], r.f
 
     def test_auto_bucketed_scan_conf_restored(self, spark):
         """r9 advice fix: the indexed query pins autoBucketedScan=false

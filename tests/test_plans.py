@@ -105,8 +105,9 @@ def test_no_unintended_cartesian_products(spark):
     Checkpoint-eager builders are skipped (covered by their own
     tests; building them here would execute real jobs)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from bench import BENCH_QUERIES
     from test_schemas import BUILD_EXECUTES
 

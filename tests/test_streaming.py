@@ -602,6 +602,28 @@ class TestStreamMinhashDedup:
         # the trigger boundary
         assert any(a <= split_at < b for a, b, _ in got)
 
+    @pytest.mark.parametrize("raw", ["0", "-4", "abc", "2.5"])
+    def test_invalid_state_shards_rejected(self, monkeypatch, raw):
+        """0 would make the shard key pmod(x, 0) and a negative count
+        negative shard keys: the knob is rejected by name."""
+        from hive_hdfs_practise_spark.streaming.minhash_stream import (
+            _state_shards,
+        )
+
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", raw)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_SHARDS"):
+            _state_shards()
+
+    def test_state_shards_default_and_override(self, monkeypatch):
+        from hive_hdfs_practise_spark.streaming.minhash_stream import (
+            _state_shards,
+        )
+
+        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_SHARDS", raising=False)
+        assert _state_shards() == 256
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", "1024")
+        assert _state_shards() == 1024
+
 
 class TestStreamKmvDistinct:
     """r8: stream_kmv_distinct_users — the streaming KMV estimate

@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from hive_hdfs_practise_spark import plans  # noqa: E402
 from hive_hdfs_practise_spark.session import get_spark  # noqa: E402
@@ -24,7 +26,7 @@ def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = f"/root/repo/plans/{tag}"
+    out_dir = f"{REPO}/plans/{tag}"
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")

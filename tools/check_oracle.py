@@ -38,6 +38,7 @@ import math
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
@@ -211,7 +212,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # import this checkout's package in the driver AND in the Python
+    # workers (they inherit PYTHONPATH, not sys.path)
+    repo = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, repo)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
     from hive_hdfs_practise_spark import plans
 
     if os.environ.get("ORACLE_VANILLA"):

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 NODE_RE = re.compile(
     r"^(?P<indent>[\s:+*-]*)(?P<node>(?:\*\(\d+\)\s*)?[A-Za-z][A-Za-z0-9]+)"
@@ -73,7 +75,7 @@ def main() -> None:
         lines.append("```")
         lines.extend(skeleton(plan))
         lines.append("```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(f"{REPO}/PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(BENCH_QUERIES)} queries)")
 

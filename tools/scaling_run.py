@@ -16,8 +16,10 @@ from __future__ import annotations
 import sys
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from bench import BENCH_QUERIES
 from hive_hdfs_practise_spark import plans
@@ -309,7 +311,7 @@ def main() -> None:
         note = " ⚠" if (r is None or (r and r > 15)) else ""
         lines.append(f"| {name} | {tb_s} | {ts_s} | {r if r else '—'}{note} |")
     lines += ["", FINDINGS]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(f"{REPO}/SCALING.md", "w") as f:
         f.write("\n".join(lines))
     print("wrote SCALING.md")
 

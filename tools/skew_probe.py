@@ -23,8 +23,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

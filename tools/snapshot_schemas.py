@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from hive_hdfs_practise_spark import plans
 from hive_hdfs_practise_spark.session import get_spark
@@ -23,7 +25,7 @@ def main() -> None:
     out = {}
     for name, fn in sorted(plans.QUERIES.items()):
         out[name] = fn(spark, SF).schema.simpleString()
-    with open("/root/repo/tests/fixtures/query_schemas.json", "w") as f:
+    with open(f"{REPO}/tests/fixtures/query_schemas.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(f"recorded {len(out)} schemas")
 

@@ -11,8 +11,10 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 from hive_hdfs_practise_spark import plans  # noqa: E402
 from hive_hdfs_practise_spark.session import get_spark  # noqa: E402
