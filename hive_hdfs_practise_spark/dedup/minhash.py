@@ -194,8 +194,13 @@ def minhash_signature_df(
     concentrates around the true value). Only sound when documents
     carry ≥ ~10·d shingles; high-similarity pairs survive intact
     because they share the same sampled subset. Candidates are
-    exact-verified downstream either way."""
-    h = shingle_hash(F.col("_shingle"), family)
+    exact-verified downstream either way.
+
+    The hash is guarded so the NULL marker row of an empty shingle
+    array stays NULL (``xxhash64(NULL)`` is 42, not NULL): signatures
+    equal ``minhash_signature_from_text``'s for both families."""
+    s = F.col("_shingle")
+    h = F.when(s.isNotNull(), shingle_hash(s, family))
     exploded = df.select(
         *id_cols, F.explode_outer(F.col(shingles_col)).alias("_shingle")
     ).withColumn("_h", h)

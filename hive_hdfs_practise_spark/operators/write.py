@@ -14,6 +14,16 @@ module preserves the reference's contract under the same single-
 writer assumption the reference itself makes. For multi-writer
 deployments use ``surrogate_ids`` (unique, ascending, NOT dense),
 or route inserts through a single streaming writer task.
+
+Rows built in Python enter the plan as a one-row SQL relation with
+their values BOUND as named parameters (never formatted into SQL
+text — ``movie_name`` is user input), not via
+``createDataFrame([row])``. That call parallelizes a pickled Python
+RDD, so every insert ran ``defaultParallelism`` Python worker tasks
+for one row: a median 1.43 s of CPU per insert on 4 cores, against
+0.37 s for the bound relation (perfbench ``serve``). The bound
+relation plans as a ``Project`` over ``OneRowRelation``: no RDD, no
+Python worker.
 """
 
 from __future__ import annotations
@@ -26,9 +36,18 @@ from pyspark.sql import functions as F
 from ..schemas import ORDER_SCHEMA
 
 
+# one CAST(:name AS type) per ORDER_SCHEMA field; only the schema's
+# names and types are formatted in, the values are bound per call
+_ORDER_ROW_SQL = "SELECT " + ", ".join(
+    f"CAST(:{f.name} AS {f.dataType.simpleString()}) AS {f.name}"
+    for f in ORDER_SCHEMA
+)
+
+
 def next_order_id(order_info: DataFrame) -> int:
-    """A1/A2: max+1 (empty table → 1). One scalar aggregate — at
-    scale this is a parquet-footer-statistics read, not a scan."""
+    """A1/A2: max+1 (empty table → 1). One scalar aggregate that scans
+    the ``order_id`` column: for these DSv1 parquet tables Spark reads
+    no footer MAX statistics (aggregate pushdown is DSv2-only)."""
     row = order_info.agg(F.max("order_id").alias("m")).head()
     return (row["m"] or 0) + 1
 
@@ -39,7 +58,8 @@ def build_order_row(
     item: dict,
     now: str | None = None,
 ) -> DataFrame:
-    """One new order row with reference-identical derivations."""
+    """One new order row with reference-identical derivations, as a
+    bound one-row SQL relation (module docstring)."""
     oid = next_order_id(order_info)
     row = {
         "order_id": oid,
@@ -51,7 +71,7 @@ def build_order_row(
         # F3: wall-clock formatted timestamp
         "create_time": now or time.strftime("%Y-%m-%d %H:%M:%S"),
     }
-    return spark.createDataFrame([row], ORDER_SCHEMA)
+    return spark.sql(_ORDER_ROW_SQL, args=row)
 
 
 def insert_order(

@@ -97,15 +97,17 @@ class TestMinHash:
 
     # (family, downsample, input path) -> (md5 of the sorted
     # (doc_id, sig) rows, row count), captured on the per-slot
-    # Column builder the one-expression aggregate replaced
+    # Column builder the one-expression aggregate replaced; the two
+    # xxhash shingles-path pins re-pinned to the text path's values
+    # when the empty-doc marker row stopped hashing to xxhash64(NULL)
     SIG_CHECKSUMS = {
         ("md5", 1, "shingles"): ("a032b08f4807124f", 13),
         ("md5", 1, "text"): ("a032b08f4807124f", 13),
         ("md5", 4, "shingles"): ("8c7d819f50a097c2", 11),
         ("md5", 4, "text"): ("8c7d819f50a097c2", 11),
-        ("xxhash", 1, "shingles"): ("33a89ce7578dd702", 13),
+        ("xxhash", 1, "shingles"): ("e0fa06cc682166af", 13),
         ("xxhash", 1, "text"): ("e0fa06cc682166af", 13),
-        ("xxhash", 4, "shingles"): ("75c085d6f102561f", 6),
+        ("xxhash", 4, "shingles"): ("8c821f35f5119eae", 11),
         ("xxhash", 4, "text"): ("8c821f35f5119eae", 11),
     }
 
@@ -148,6 +150,9 @@ class TestMinHash:
         rows = sorted((r.doc_id, tuple(r.sig)) for r in sigs.collect())
         got = (hashlib.md5(repr(rows).encode()).hexdigest()[:16], len(rows))
         assert got == self.SIG_CHECKSUMS[(family, downsample, path)]
+        # both input paths sign the same shingle sets, empty docs too
+        other = "text" if path == "shingles" else "shingles"
+        assert got == self.SIG_CHECKSUMS[(family, downsample, other)]
 
     def test_signature_plan_gateway_calls_bounded(self, spark, monkeypatch):
         """Building a 128-perm signature plan must stay a few hundred
