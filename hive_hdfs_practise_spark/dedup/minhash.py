@@ -39,6 +39,14 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.compaction import (
+    append_bucketed,
+    delete_ids,
+    reset_index,
+    vacuum_index,
+)
+from ..sources.writers import write_bucketed
+
 P32 = 4_294_967_291  # largest prime < 2^32
 
 _FAMILY_ENV = "SPARK_GRAFT_MINHASH_FAMILY"
@@ -439,8 +447,8 @@ def write_minhash_index(
     extra_cols: tuple[str, ...] = (),
 ) -> None:
     """Materialize the MinHash-LSH index — the dedup family's
-    build-once/probe-repeatedly form (the ``write_ivf_index``
-    pattern):
+    build-once/probe-repeatedly form; the lifecycle (append, delete,
+    vacuum, compact) is ``operators/compaction.py``'s:
 
     - ``{prefix}_bands``: (band, band_key, doc_id), written BUCKETED
       by (band, band_key) so each LSH bucket's members are co-located
@@ -450,28 +458,14 @@ def write_minhash_index(
       buckets' files.
     - ``{prefix}_sigs``: (doc_id, sig) — the signatures, for the
       agreement prefilter and for probing new docs without
-      re-reading corpus text.
+      re-reading corpus text. Not bucketed.
 
     ``extra_cols`` (e.g. ``("lang",)``) carries blocking columns
     into both tables: signatures group on (doc_id, *extra) and the
     bands rows keep them, so a lang-blocked consumer can group on
     (lang, band, band_key) — still exchange-free, because the
     (band, band_key) hash layout co-locates every superset group."""
-    import shutil
-
-    from ..operators.compaction import table_location
-    from ..sources.writers import write_bucketed
-
-    # same dangling-location dance as similarity/knn.py's
-    # write_ivf_index: a fresh session's catalog has no record of an
-    # earlier session's managed tables, but their files survive.
-    # _dels too (r11): a fresh build must not inherit a previous
-    # index generation's tombstones.
-    for suffix in ("_bands", "_sigs", "_dels"):
-        t = f"{table_prefix}{suffix}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(table_location(spark, t), ignore_errors=True)
-
+    reset_index(spark, table_prefix, ("_bands", "_sigs"))
     sigs = minhash_signature_from_text(
         docs, ["doc_id", *extra_cols], "text", k, n_perm,
         downsample=downsample, family=family,
@@ -500,35 +494,19 @@ def append_minhash_index(
     rows_per_band: int = 8,
     downsample: int = 1,
     family: str = "md5",
-    n_buckets: int = 32,
     extra_cols: tuple[str, ...] = (),
 ) -> None:
-    """Append a delta batch's rows to an ALREADY-WRITTEN MinHash
-    index (``write_minhash_index``) — the index-MAINTENANCE half of
-    the ingestion loop (``probe_minhash_index`` is the detection
-    half): signatures and band rows are computed for the DELTA ONLY
-    and appended; nothing already in the index is read or rewritten.
-
-    The bucketed layout is what makes the bands table
-    append-friendly: a bucketed append writes its own set of
-    per-bucket files next to the existing ones (bucket id is encoded
-    in the file name), readers merge them, and every file of bucket N
-    still holds only keys that hash to N — so the exchange-free
-    candidate grouping survives any number of appends. Parameters
-    MUST match the original build (signatures/bands are per-doc
-    deterministic, so appended-index == from-scratch-rebuild row for
-    row — pinned by dedup_minhash_index_append's oracle and the
-    untouched-files test).
-
-    The write stage is sized to the DELTA: k tasks, k the largest
-    divisor of ``n_buckets`` ≤ the partition count of the checkpointed
-    delta signatures (JVM RDD, no job). k | n gives ``pmod(h, n) mod k
-    == pmod(h, k)``: each bucket stays in one task (one file per
-    touched bucket) without a 32-task stage per 40-doc batch (~0.9 s
-    task-deserialize CPU on 4 cores). Builds and vacuum keep n."""
+    """Append a delta batch to an ALREADY-WRITTEN index: signatures
+    and band rows are computed for the DELTA ONLY and appended
+    (``append_bucketed`` for the bands); nothing already in the index
+    is read or rewritten. The signature parameters MUST match the
+    build: signatures/bands are per-doc deterministic, so the appended
+    index equals a from-scratch build row for row (pinned by
+    dedup_minhash_index_append's oracle and the untouched-files
+    test)."""
     # delta signatures are tiny (batch × n_perm longs) and feed both
     # the sigs append and the banding — checkpoint so the delta text
-    # is scanned once
+    # is scanned once (and the band rows' plan has no exchange)
     dsigs = minhash_signature_from_text(
         docs, ["doc_id", *extra_cols], "text", k, n_perm,
         downsample=downsample, family=family,
@@ -536,94 +514,31 @@ def append_minhash_index(
     dsigs.write.mode("append").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )
-    parts = max(dsigs._jdf.rdd().getNumPartitions(), 1)
-    k = max(d for d in range(1, parts + 1) if n_buckets % d == 0)
-    (
-        # bucket-hash clustering before the write: one file per
-        # touched bucket per append instead of partitions×buckets
-        # (see write_bucketed — appends compound the small-file
-        # blowup fastest, one file set per batch forever)
-        _band_rows(dsigs, extra_cols, n_bands, rows_per_band, family)
-        .repartition(k, "band", "band_key")
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, "band", "band_key")
-        .saveAsTable(f"{table_prefix}_bands")
+    append_bucketed(
+        spark,
+        _band_rows(dsigs, extra_cols, n_bands, rows_per_band, family),
+        f"{table_prefix}_bands",
     )
 
 
 def delete_from_minhash_index(spark, doc_ids, table_prefix: str) -> None:
-    """DELETE documents from a written MinHash index the way every
-    immutable-file index does it (the LSM/tombstone pattern): append
-    the doc_ids to an append-only ``{prefix}_dels`` table and filter
-    them out at probe time. Nothing in ``_bands``/``_sigs`` is read
-    or rewritten — a delete costs one tiny append no matter the index
-    size; the space of dead rows is reclaimed by the next rebuild (or
-    a compaction that folds the tombstones in). ``write_minhash_index``
-    drops the tombstone table, so a fresh build never inherits a
-    previous generation's deletes."""
-    doc_ids.select("doc_id").write.mode("append").format(
-        "parquet"
-    ).saveAsTable(f"{table_prefix}_dels")
+    """Tombstone documents (``operators.compaction.delete_ids``): the
+    probes stop returning them at once; ``vacuum_minhash_index`` or a
+    rebuild reclaims their rows."""
+    delete_ids(doc_ids, table_prefix, "doc_id")
 
 
-def vacuum_minhash_index(spark, table_prefix: str, n_buckets: int = 32) -> int:
-    """Fold the tombstones into the index — the space-reclaim half of
-    the delete story (``delete_from_minhash_index`` is the logical
-    half): rewrite ``_bands``/``_sigs`` without the ``_dels`` doc_ids
-    and drop the tombstone table, so subsequent probes need no
-    anti-join. Returns the number of doc_ids vacuumed.
-
-    Scale shape note: a MinHash band index cannot vacuum
-    incrementally — every doc scatters across its 16 bands' buckets,
-    so tombstoned rows live in essentially every bucket file and the
-    reclaim IS a full rewrite (which is why deletes are tombstones in
-    the first place and vacuums are periodic). The rewrite reads the
-    old tables once (checkpointed — Spark cannot overwrite a table
-    it is still reading lazily), rewrites the same bucketed layout,
-    and the exchange-free probe plan survives (tests).
-
-    Crash-recovery rule (r11 advice): the three publishes (_bands
-    overwrite, _sigs overwrite, _dels drop) are not atomic as a
-    group, and the safe order is DELS LAST — every intermediate
-    crash state keeps tombstoned probes correct. A crash after the
-    _bands overwrite but before the _dels drop leaves live
-    tombstones over an already-vacuumed bands table: probes
-    anti-join ids that no longer exist (a no-op), and RE-RUNNING
-    VACUUM converges (idempotent — pinned by TestIndexVacuum's
-    second-run-returns-0 assertion... after an interrupted first run
-    the rerun re-filters and re-drops). A crash between the two
-    overwrites leaves _sigs rows for vacuumed docs — benign: a
-    candidate pair requires BAND rows, so an orphan signature can
-    never surface in any probe output; it is reclaimed by the rerun
-    or the next rebuild."""
-    if not spark.catalog.tableExists(f"{table_prefix}_dels"):
-        return 0
-    from ..sources.writers import write_bucketed
-
-    dels = spark.table(f"{table_prefix}_dels").select("doc_id").distinct()
-    n_dels = dels.count()
-    if n_dels == 0:
-        return 0
-    bands = (
-        spark.table(f"{table_prefix}_bands")
-        .join(F.broadcast(dels), "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
+def vacuum_minhash_index(spark, table_prefix: str) -> int:
+    """Fold the tombstones into ``_bands`` and ``_sigs``
+    (``operators.compaction.vacuum_index``). A document's 16 band rows
+    scatter over up to 16 buckets, so a band index's vacuum rewrites
+    most buckets even for a few deletes (which is why deletes are
+    tombstones and vacuums periodic); a ``_sigs`` file is rewritten
+    only if it holds a tombstoned doc. Returns the number of doc_ids
+    vacuumed."""
+    return vacuum_index(
+        spark,
+        table_prefix,
+        (f"{table_prefix}_bands", f"{table_prefix}_sigs"),
+        "doc_id",
     )
-    sigs = (
-        spark.table(f"{table_prefix}_sigs")
-        .join(F.broadcast(dels), "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    cols = [c for c in bands.columns]
-    write_bucketed(
-        bands.select("band", "band_key", *[c for c in cols if c not in ("band", "band_key")]),
-        f"{table_prefix}_bands",
-        ["band", "band_key"],
-        n_buckets=n_buckets,
-    )
-    sigs.write.mode("overwrite").format("parquet").saveAsTable(
-        f"{table_prefix}_sigs"
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_dels")
-    return n_dels

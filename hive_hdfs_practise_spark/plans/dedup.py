@@ -37,6 +37,7 @@ from ..dedup import minhash as mh
 from ..functions import simhash as sh
 from ..functions import text as tx
 from ..functions import vectors as vec
+from ..operators.compaction import live_rows
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K  # noqa: F401  (re-export)
 from .registry import register
@@ -341,7 +342,7 @@ def _est_prefilter(cand: DataFrame, sigs: DataFrame) -> DataFrame:
     )
 
 
-def _indexed_pairs(spark, sf_dir, table_prefix, post=None, tombstones=False):
+def _indexed_pairs(spark, sf_dir, table_prefix, post=None):
     """Verified (doc_a, doc_b, jaccard) pairs probed from a WRITTEN
     unblocked band index — the ONE probe implementation shared by
     dedup_minhash_indexed, dedup_minhash_index_append, and
@@ -351,17 +352,13 @@ def _indexed_pairs(spark, sf_dir, table_prefix, post=None, tombstones=False):
     agreement prefilter + exact-Jaccard verify. ``post`` runs INSIDE
     the conf scope (a transform applied after build_with_conf would
     recompile the plan under the restored conf and lose the
-    bucketed-scan pin). With ``tombstones`` the probe anti-joins the
-    ``{prefix}_dels`` table's doc_ids out of the band rows first — a
-    tiny broadcast anti-join (map-side, so the exchange-free pin
-    survives; deleted ids cannot then appear in any candidate)."""
+    bucketed-scan pin). Band rows come from ``live_rows``, so
+    tombstoned doc_ids never reach a candidate (a broadcast anti-join,
+    map-side: the exchange-free pin survives)."""
     from ..operators.confscope import build_with_conf
 
     def _probe() -> DataFrame:
-        banded = spark.table(f"{table_prefix}_bands")
-        if tombstones:
-            dels = spark.table(f"{table_prefix}_dels").select("doc_id")
-            banded = banded.join(F.broadcast(dels), "doc_id", "left_anti")
+        banded = live_rows(spark, f"{table_prefix}_bands", table_prefix, "doc_id")
         cand = mh.pairs_within_buckets(banded, "doc_id", ["band", "band_key"])
         sigs = spark.table(f"{table_prefix}_sigs")
         pre = _est_prefilter(cand, sigs)
@@ -559,9 +556,10 @@ def probe_minhash_index(
             mh.lsh_bands(F.col("sig"), N_BANDS, ROWS_PER_BAND, family)
         ).alias("band", "band_key"),
     )
-    idx = spark.table(f"{table_prefix}_bands")
+    idx = live_rows(spark, f"{table_prefix}_bands", table_prefix, "doc_id")
     # the delta's banded rows broadcast; the index streams map-side —
-    # no shuffle of the (much larger) index ever happens
+    # no shuffle of the (much larger) index ever happens; tombstoned
+    # corpus docs are never candidates
     cand = (
         idx.join(F.broadcast(dbands), ["band", "band_key"])
         .select(
@@ -743,9 +741,7 @@ def dedup_minhash_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         == DELETE_NIBBLE
     ).select("doc_id")
     mh.delete_from_minhash_index(spark, dels, "minhash_del_idx")
-    return _indexed_pairs(
-        spark, sf_dir, "minhash_del_idx", tombstones=True
-    )
+    return _indexed_pairs(spark, sf_dir, "minhash_del_idx")
 
 
 def _dedup_cost_oracle() -> str:

@@ -495,7 +495,7 @@ def knn_ivf_index_append_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_ivf_index(
         spark, corpus, "ivf_append_idx", nlist=IVF_NLIST, iters=IVF_ITERS
     )
-    append_ivf_index(spark, delta, "ivf_append_idx", nlist=IVF_NLIST)
+    append_ivf_index(spark, delta, "ivf_append_idx")
     return knn_ivf_indexed(
         spark, "ivf_append_idx", QUERY_VEC_ID, TOP_K, nprobe=IVF_NPROBE
     )
@@ -535,7 +535,7 @@ def knn_ivf_index_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_ivf_index(
         spark, corpus, "ivf_compact_idx", nlist=IVF_NLIST, iters=IVF_ITERS
     )
-    append_ivf_index(spark, delta, "ivf_compact_idx", nlist=IVF_NLIST)
+    append_ivf_index(spark, delta, "ivf_compact_idx")
     compact_bucketed_table(spark, "ivf_compact_idx_assign")
     return knn_ivf_indexed(
         spark, "ivf_compact_idx", QUERY_VEC_ID, TOP_K, nprobe=IVF_NPROBE
@@ -571,9 +571,8 @@ def knn_ivf_index_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     in test_similarity). Nothing in ``_assign``/``_centroids`` is
     read or rewritten — a delete costs one tiny append no matter the
     index size (content-hash byte-stability pinned); dead rows are
-    reclaimed by ``vacuum_ivf_index`` (which, unlike the band index's
-    full-rewrite vacuum, rewrites ONLY the affected cluster buckets —
-    an inverted list vacuums incrementally) or the next rebuild.
+    reclaimed by ``vacuum_ivf_index`` (which rewrites ONLY the cluster
+    buckets holding a deleted vector) or the next rebuild.
 
     Certification: build the FULL-corpus index, tombstone the
     md5-nibble-'f' shard, probe — the output must equal the frozen
@@ -604,7 +603,6 @@ def knn_ivf_index_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         QUERY_VEC_ID,
         TOP_K,
         nprobe=IVF_NPROBE,
-        tombstones=True,
     )
 
 

@@ -1072,9 +1072,7 @@ def stream_ivf_index_append(
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        append_ivf_index(
-            spark, batch_df, "ivf_stream_idx", nlist=IVF_NLIST
-        )
+        append_ivf_index(spark, batch_df, "ivf_stream_idx")
 
     delta_stream = _embeddings_stream(spark, sf_dir).where(nib == "0")
     run_foreach_batch(delta_stream, _append, "stream_ivf_index_append")

@@ -26,6 +26,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vectors as vec
+from ..operators.compaction import (
+    append_bucketed,
+    delete_ids,
+    live_rows,
+    reset_index,
+    vacuum_index,
+)
+from ..sources.writers import write_bucketed
 
 
 def assign_clusters(emb: DataFrame, centroids: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -109,7 +117,9 @@ def write_ivf_index(
     iters: int = 3,
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the IVF index the module docstring promises:
+    """Materialize the IVF index the module docstring promises; the
+    lifecycle (append, delete, vacuum, compact) is
+    ``operators/compaction.py``'s:
 
     - ``{prefix}_assign``: the corpus + cluster_id, written BUCKETED
       by cluster_id (``write_bucketed``) so each inverted list is a
@@ -120,25 +130,7 @@ def write_ivf_index(
     - ``{prefix}_centroids``: the nlist × dim quantizer, a plain tiny
       table the query side loads to pick its probe lists.
     """
-    import shutil
-
-    from ..operators.compaction import table_location
-    from ..sources.writers import write_bucketed
-
-    # A fresh session's in-memory catalog has no record of tables an
-    # earlier session materialized, but their managed files survive
-    # in the warehouse dir — saveAsTable then refuses the "dangling"
-    # location (LOCATION_ALREADY_EXISTS). Drop catalog entries AND
-    # clear leftover default-location directories before writing
-    # (table_location handles the lowercased-identifier dance — one
-    # copy of it repo-wide, r11 review).
-    # _dels too (the minhash-index precedent): a fresh build must not
-    # inherit a previous index generation's tombstones.
-    for suffix in ("_centroids", "_assign", "_dels"):
-        t = f"{table_prefix}{suffix}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(table_location(spark, t), ignore_errors=True)
-
+    reset_index(spark, table_prefix, ("_centroids", "_assign"))
     centroids = kmeans_centroids(emb, nlist, iters, vec_col)
     centroids.write.mode("overwrite").format("parquet").saveAsTable(
         f"{table_prefix}_centroids"
@@ -155,173 +147,37 @@ def append_ivf_index(
     spark,
     emb: DataFrame,
     table_prefix: str,
-    nlist: int = 8,
     vec_col: str = "embedding",
 ) -> None:
-    """Append a delta batch to an ALREADY-WRITTEN IVF index — the
-    index-maintenance half of the ANN ingestion loop (the
-    ``append_minhash_index`` pattern): the delta is assigned against
-    the FROZEN centroid table (read back from the index — centroids
-    are NOT retrained, which is exactly what a production IVF
-    deployment does between periodic rebuilds) and appended to the
-    bucketed assignment table. A bucketed append writes its own
-    per-bucket files next to the existing ones (never rewriting
-    them), and every file of bucket N still holds only cluster_ids
-    hashing to N — bucket PRUNING survives any number of appends.
-    ``nlist`` must match the original build's bucket count."""
+    """Append a delta batch to an ALREADY-WRITTEN IVF index: the delta
+    is assigned against the FROZEN centroid table (centroids are not
+    retrained, which is what a production IVF deployment does between
+    periodic rebuilds) and appended to the bucketed assignment table
+    (``append_bucketed``); bucket pruning survives any number of
+    appends."""
     centroids = spark.table(f"{table_prefix}_centroids")
-    (
-        # bucket-hash clustering before the append (see
-        # write_bucketed): one file per touched inverted list per
-        # batch instead of partitions×lists
-        assign_clusters(emb, centroids, vec_col)
-        .repartition(nlist, "cluster_id")
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(nlist, "cluster_id")
-        .saveAsTable(f"{table_prefix}_assign")
-    )
+    # checkpointed: the assignment's groupBy is an exchange, and the
+    # append sizes its write stage from the delta's partition count
+    rows = assign_clusters(emb, centroids, vec_col).localCheckpoint(eager=True)
+    append_bucketed(spark, rows, f"{table_prefix}_assign")
 
 
 def delete_from_ivf_index(spark, vec_ids, table_prefix: str) -> None:
-    """DELETE vectors from a written IVF index the way every
-    immutable-file index does it (the LSM/tombstone pattern,
-    ``delete_from_minhash_index``'s twin): append the vec_ids to an
-    append-only ``{prefix}_dels`` table and filter them out at probe
-    time. Nothing in ``_assign``/``_centroids`` is read or rewritten —
-    a retraction (takedown, opt-out, re-embedding recall) costs one
-    tiny append no matter the index size; dead rows are reclaimed by
-    ``vacuum_ivf_index`` or the next rebuild. ``write_ivf_index``
-    drops the tombstone table, so a fresh build never inherits a
-    previous generation's deletes."""
-    vec_ids.select("vec_id").write.mode("append").format(
-        "parquet"
-    ).saveAsTable(f"{table_prefix}_dels")
+    """Tombstone vectors (``operators.compaction.delete_ids``): the
+    probe stops returning them at once; ``vacuum_ivf_index`` or a
+    rebuild reclaims their rows."""
+    delete_ids(vec_ids, table_prefix, "vec_id")
 
 
-def _catalog_bucket_count(spark, table: str) -> int:
-    """The bucket count a table was WRITTEN with, from the catalog —
-    maintenance ops must never trust a caller-supplied count (r12
-    review: a mismatched pmod would mark the wrong buckets affected,
-    leave tombstoned rows live, and still drop ``_dels`` — silent
-    resurrection of deleted vectors)."""
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if r.col_name.strip() == "Num Buckets":
-            return int(r.data_type.strip())
-    raise ValueError(f"{table} is not a bucketed table")
-
-
-def vacuum_ivf_index(
-    spark, table_prefix: str, n_buckets: int | None = None,
-    max_parallel: int = 8,
-) -> int:
-    """Fold the tombstones into the index — and, unlike the MinHash
-    band index (whose every doc scatters across all 16 bands' buckets,
-    forcing vacuum to be a FULL rewrite), an inverted list vacuums
-    INCREMENTALLY: each vector lives in exactly ONE cluster bucket,
-    so only the buckets that actually hold tombstoned rows are read
-    and rewritten; every other inverted list's files are untouched
-    byte-for-byte (pinned in test_similarity). At 100 TB this is the
-    difference between a vacuum proportional to the retraction set's
-    lists and one proportional to the index.
-
-    Mechanics: the affected bucket ids are computed with the same
-    murmur3+pmod expression Spark's bucketing uses (evaluated engine-
-    side on the actual column type — never a driver-side reimpl.);
-    each affected bucket's files are read directly, anti-joined
-    against the broadcast tombstones, rewritten as one bucket-id-
-    encoded file, and swapped in via the manifest-backed
-    ``publish_replacing`` protocol (crash at any point is recovered
-    by ``recover_inprogress`` at the next maintenance entry).
-    The ``_dels`` drop comes LAST: re-running an interrupted vacuum
-    is idempotent and converges (the anti-join of already-vacuumed
-    buckets is a no-op), so the recovery rule is simply "run it
-    again". Returns the number of distinct vec_ids vacuumed."""
-    import os
-    import shutil
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.compaction import (
-        bucket_id_of,
-        publish_replacing,
-        recover_inprogress,
-        table_location,
-    )
-
-    if not spark.catalog.tableExists(f"{table_prefix}_dels"):
-        return 0
-    dels = (
-        spark.table(f"{table_prefix}_dels")
-        .select("vec_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_dels = dels.count()
-    if n_dels == 0:
-        return 0
-    table = f"{table_prefix}_assign"
-    path = table_location(spark, table)
-    recover_inprogress(path)
-    # the bucket count comes from the CATALOG (what the index was
-    # written with); a caller-supplied value is validated against it
-    cat_n = _catalog_bucket_count(spark, table)
-    if n_buckets is not None and n_buckets != cat_n:
-        raise ValueError(
-            f"{table} was written with {cat_n} buckets, "
-            f"caller claimed {n_buckets}"
-        )
-    n_buckets = cat_n
-    # buckets holding tombstoned rows: pmod(murmur3(cluster_id), n) is
-    # exactly HashPartitioning.partitionIdExpression — computed on the
-    # table's own cluster_id column so the hash sees the stored type
-    affected = {
-        r.b
-        for r in spark.table(table)
-        .select("vec_id", "cluster_id")
-        .join(F.broadcast(dels), "vec_id")
-        .select(
-            F.pmod(F.hash("cluster_id"), F.lit(n_buckets)).alias("b")
-        )
-        .distinct()
-        .collect()
-    }
-    by_bucket: dict = {}
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            b = bucket_id_of(f)
-            if b is not None:
-                by_bucket.setdefault(b, []).append(os.path.join(path, f))
-    tmp_root = path + ".vacuum.tmp"
-    shutil.rmtree(tmp_root, ignore_errors=True)
-
-    def _rewrite(b: int) -> None:
-        group = sorted(by_bucket[b])
-        out_dir = os.path.join(tmp_root, f"b{b:05d}")
-        (
-            spark.read.parquet(*group)
-            .join(F.broadcast(dels), "vec_id", "left_anti")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        outs = [f for f in os.listdir(out_dir) if f.endswith(".parquet")]
-        assert len(outs) == 1, outs
-        publish_replacing(
-            path,
-            os.path.join(out_dir, outs[0]),
-            group,
-            f"part-00000-{uuid.uuid4().hex}_{b:05d}.c000.snappy.parquet",
-        )
-
-    jobs = sorted(b for b in affected if b in by_bucket)
-    if jobs:
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            list(ex.map(_rewrite, jobs))
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    spark.sql(f"REFRESH TABLE {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_dels")
-    return n_dels
+def vacuum_ivf_index(spark, table_prefix: str) -> int:
+    """Fold the tombstones into ``_assign``
+    (``operators.compaction.vacuum_index``). Each vector lives in ONE
+    cluster bucket, so only the buckets holding tombstoned rows are
+    rewritten and every other inverted list stays byte-identical
+    (pinned in test_similarity) — a vacuum proportional to the
+    retraction set's lists, not to the index. Returns the number of
+    vec_ids vacuumed."""
+    return vacuum_index(spark, table_prefix, (f"{table_prefix}_assign",), "vec_id")
 
 
 def knn_ivf_indexed(
@@ -331,7 +187,6 @@ def knn_ivf_indexed(
     top_k: int = 10,
     nprobe: int = 2,
     vec_col: str = "embedding",
-    tombstones: bool = False,
 ) -> DataFrame:
     """Query the materialized IVF index. Driver-side work is bounded
     by the index size, never the corpus: the centroid table (nlist
@@ -340,6 +195,8 @@ def knn_ivf_indexed(
     scan gets a ``cluster_id IN (...)`` filter it can bucket-prune —
     a join, even broadcast, would read every bucket. The resulting
     probe plan is a pruned scan + TakeOrdered: zero exchanges.
+    Tombstoned vectors are never returned (``live_rows``), and a
+    tombstoned query vector raises KeyError.
 
     Same output as ``knn_ivf`` run inline (pinned by parity test)."""
     # Spark's auto-bucketed-scan heuristic disables bucketed reads
@@ -354,13 +211,7 @@ def knn_ivf_indexed(
     from ..operators.confscope import build_with_conf
 
     def _probe() -> DataFrame:
-        assign = spark.table(f"{table_prefix}_assign")
-        if tombstones:
-            # broadcast anti-join of the tiny _dels table — map-side,
-            # so the pruned exchange-free probe plan survives; a
-            # deleted query vector correctly raises KeyError below.
-            dels = spark.table(f"{table_prefix}_dels").select("vec_id")
-            assign = assign.join(F.broadcast(dels), "vec_id", "left_anti")
+        assign = live_rows(spark, f"{table_prefix}_assign", table_prefix, "vec_id")
         qrow = (
             assign.filter(F.col("vec_id") == query_vec_id)
             .select(vec.as_double(F.col(vec_col)).alias("qv"))

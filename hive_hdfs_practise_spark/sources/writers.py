@@ -41,8 +41,6 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     # Cluster rows by the bucket hash BEFORE the write (guide §6
     # small files / §2.4 one-exchange layout): repartition(n, cols)
@@ -54,15 +52,13 @@ def write_bucketed(
     # blowup is what compaction exists to undo). Write parallelism
     # equals n_buckets, which a deployment sizes to the corpus
     # (the nlist ∝ √n rule) exactly like the probe side.
-    w = (
+    (
         df.repartition(n_buckets, *bucket_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
+        .saveAsTable(table)
     )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
 
 
 def compact(df: DataFrame, path: str, target_files: int, mode: str = "overwrite") -> None:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_DIR
 from hive_hdfs_practise_spark.dedup.minhash import lsh_bands, minhash_signature_df
 from hive_hdfs_practise_spark.functions import text as tx
 from hive_hdfs_practise_spark import plans
@@ -1477,11 +1478,13 @@ class TestMinhashIndexed:
         assert got_sigs == want_sigs and got_sigs
 
     def test_append_write_sized_to_delta(self, spark):
-        """A small-delta append writes one file per touched bucket,
-        each holding only rows whose (band, band_key) hash is its
-        bucket id, from a write stage of k tasks, k | n_buckets and
-        no more than the delta signatures' partitions (here at most
-        the session's 8 shuffle partitions) — not n_buckets tasks."""
+        """A small-delta append, on either index family and at any
+        bucket count, writes one file per touched bucket, each holding
+        only rows whose bucket-column hash is its bucket id, from a
+        write stage of k tasks, k | n_buckets and no more than the
+        delta's partitions (here at most the session's 8 shuffle
+        partitions) — not n_buckets tasks. The append is given no
+        bucket count: it reads the table's from the catalog."""
         import os
         import random
         import re
@@ -1491,6 +1494,10 @@ class TestMinhashIndexed:
         from hive_hdfs_practise_spark.operators.compaction import (
             table_location,
         )
+        from hive_hdfs_practise_spark.similarity.knn import (
+            append_ivf_index,
+            write_ivf_index,
+        )
 
         rng = random.Random(3)
         words = ["alpha", "beta", "gamma", "delta", "omega", "kappa", "sigma"]
@@ -1498,50 +1505,74 @@ class TestMinhashIndexed:
             [(i, " ".join(rng.choice(words) for _ in range(30))) for i in range(60)],
             "doc_id long, text string",
         )
-        prefix = "minhash_append_layout_idx"
-        mh.write_minhash_index(
-            spark, docs.filter("doc_id < 40"), prefix, downsample=4, family="md5"
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 5), float(i % 7), 1.0]) for i in range(60)],
+            "vec_id long, embedding array<double>",
         )
-        root = table_location(spark, f"{prefix}_bands")
-
-        def files():
-            return {f for f in os.listdir(root) if f.endswith(".parquet")}
-
-        before = files()
+        mh_prefix = "minhash_append_layout_idx"
+        ivf_prefix = "ivf_append_layout_idx"
+        cases = [
+            (
+                f"{mh_prefix}_bands", ["band", "band_key"], 16,
+                lambda: mh.write_minhash_index(
+                    spark, docs.filter("doc_id < 40"), mh_prefix,
+                    downsample=4, family="md5", n_buckets=16,
+                ),
+                lambda: mh.append_minhash_index(
+                    spark, docs.filter("doc_id >= 40"), mh_prefix,
+                    downsample=4, family="md5",
+                ),
+            ),
+            (
+                f"{ivf_prefix}_assign", ["cluster_id"], 8,
+                lambda: write_ivf_index(
+                    spark, vecs.filter("vec_id < 40"), ivf_prefix, iters=1
+                ),
+                lambda: append_ivf_index(
+                    spark, vecs.filter("vec_id >= 40"), ivf_prefix
+                ),
+            ),
+        ]
         sc = spark.sparkContext
-        sc.setJobGroup("append-layout-pin", "append")
-        try:
-            mh.append_minhash_index(
-                spark, docs.filter("doc_id >= 40"), prefix, downsample=4,
-                family="md5",
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
         st = sc.statusTracker()
-        write_job = max(st.getJobIdsForGroup("append-layout-pin"))
-        write_stage = max(st.getJobInfo(write_job).stageIds)
-        tasks = st.getStageInfo(write_stage).numTasks
-        assert tasks <= 8 and 32 % tasks == 0, tasks
+        for table, cols, n, build, append in cases:
+            build()
+            root = table_location(spark, table)
 
-        new = sorted(files() - before)
-        assert new
-        bucket_of = {
-            f: int(re.search(r"_(\d{5})\.c\d+", f).group(1)) for f in new
-        }
-        assert max(Counter(bucket_of.values()).values()) == 1
-        hashed = (
-            spark.read.parquet(*[os.path.join(root, f) for f in new])
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.collect_set(
-                    F.pmod(F.hash("band", "band_key"), F.lit(32))
-                ).alias("b")
+            def files():
+                return {f for f in os.listdir(root) if f.endswith(".parquet")}
+
+            before = files()
+            group = f"append-layout-pin-{table}"
+            sc.setJobGroup(group, "append")
+            try:
+                append()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            write_job = max(st.getJobIdsForGroup(group))
+            write_stage = max(st.getJobInfo(write_job).stageIds)
+            tasks = st.getStageInfo(write_stage).numTasks
+            assert tasks <= 8 and n % tasks == 0, (table, tasks)
+
+            new = sorted(files() - before)
+            assert new, table
+            bucket_of = {
+                f: int(re.search(r"_(\d{5})\.c\d+", f).group(1)) for f in new
+            }
+            assert max(Counter(bucket_of.values()).values()) == 1, table
+            hashed = (
+                spark.read.parquet(*[os.path.join(root, f) for f in new])
+                .groupBy(F.input_file_name().alias("f"))
+                .agg(
+                    F.collect_set(
+                        F.pmod(F.hash(*cols), F.lit(n))
+                    ).alias("b")
+                )
+                .collect()
             )
-            .collect()
-        )
-        assert len(hashed) == len(new)
-        for r in hashed:
-            assert r.b == [bucket_of[os.path.basename(r.f)]], r.f
+            assert len(hashed) == len(new), table
+            for r in hashed:
+                assert r.b == [bucket_of[os.path.basename(r.f)]], r.f
 
     def test_auto_bucketed_scan_conf_restored(self, spark):
         """r9 advice fix: the indexed query pins autoBucketedScan=false
@@ -1849,9 +1880,7 @@ class TestIndexDelete:
         # (a) bands/sigs byte-stable — a delete rewrites nothing
         assert snap("_bands") == before_b and snap("_sigs") == before_s
         # (b) probe excludes exactly the deleted docs
-        pairs = _indexed_pairs(
-            spark, sf, "minhash_del_test_idx", tombstones=True
-        )
+        pairs = _indexed_pairs(spark, sf, "minhash_del_test_idx")
         got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
         want = {
             (r.doc_a, r.doc_b)
@@ -1888,6 +1917,48 @@ class TestIndexDelete:
         assert not spark.catalog.tableExists("minhash_del_test_idx_dels")
 
 
+    def test_probe_skips_tombstoned_corpus_docs(self, spark):
+        """The ingestion probe (probe_minhash_index) must not report a
+        tombstoned corpus doc as a near-duplicate of a new doc, before
+        any vacuum."""
+        from hive_hdfs_practise_spark import plans as P
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.plans.constants import (
+            N_BANDS,
+            N_PERM,
+            ROWS_PER_BAND,
+            SHINGLE_K,
+        )
+        from hive_hdfs_practise_spark.plans.dedup import probe_minhash_index
+        from hive_hdfs_practise_spark.sources.catalog import wide_table
+
+        sf = SF_DIR
+        a, b = min(
+            (r.doc_a, r.doc_b)
+            for r in P.QUERIES["dedup_minhash_lsh"](spark, sf).collect()
+        )
+        d = wide_table(spark, sf, "documents").select("doc_id", "text")
+        prefix = "minhash_probe_del_test_idx"
+        mh.write_minhash_index(
+            spark, d.filter(F.col("doc_id") != a), prefix, k=SHINGLE_K,
+            n_perm=N_PERM, n_bands=N_BANDS, rows_per_band=ROWS_PER_BAND,
+            downsample=4, family="md5",
+        )
+
+        def probe():
+            new = d.filter(F.col("doc_id") == a)
+            return {
+                (r.doc_new, r.doc_corpus)
+                for r in probe_minhash_index(spark, new, prefix, d, "md5").collect()
+            }
+
+        assert (a, b) in probe()
+        mh.delete_from_minhash_index(
+            spark, d.filter(F.col("doc_id") == b).select("doc_id"), prefix
+        )
+        assert b not in {c for _, c in probe()}
+
+
 class TestIndexVacuum:
     """r11: vacuum folds the tombstones into a rewrite — the
     space-reclaim half of the delete story (lifecycle now
@@ -1922,7 +1993,7 @@ class TestIndexVacuum:
         before = {
             (r.doc_a, r.doc_b)
             for r in _indexed_pairs(
-                spark, sf, "minhash_vac_test_idx", tombstones=True
+                spark, sf, "minhash_vac_test_idx"
             ).collect()
         }
         n = mh.vacuum_minhash_index(spark, "minhash_vac_test_idx")
@@ -1961,6 +2032,68 @@ class TestIndexVacuum:
             )
         # (d) idempotent: a second vacuum is a no-op
         assert mh.vacuum_minhash_index(spark, "minhash_vac_test_idx") == 0
+
+
+    def test_vacuum_rewrites_only_affected_groups(self, spark):
+        """The vacuum rewrites only the groups holding a tombstoned row
+        — a bucket of ``_bands``, a file of ``_sigs`` — and leaves
+        every other file of both tables byte-identical."""
+        import hashlib
+        import os
+
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators.compaction import (
+            bucket_id_of,
+            table_location,
+        )
+        from hive_hdfs_practise_spark.plans.dedup import _probe_delta_col
+        from hive_hdfs_practise_spark.sources.catalog import wide_table
+
+        sf = SF_DIR
+        d = wide_table(spark, sf, "documents").select("doc_id", "text")
+        prefix = "minhash_vac_groups_test_idx"
+        kw = dict(downsample=4, family="md5")
+        corpus = d.filter(~_probe_delta_col())
+        mh.write_minhash_index(spark, corpus, prefix, **kw)
+        mh.append_minhash_index(spark, d.filter(_probe_delta_col()), prefix, **kw)
+        gone = corpus.agg(F.min("doc_id").alias("doc_id"))
+        gone_id = gone.collect()[0].doc_id
+        mh.delete_from_minhash_index(spark, gone, prefix)
+
+        def group(f):
+            b = bucket_id_of(f)
+            return f if b is None else b
+
+        tables = (f"{prefix}_bands", f"{prefix}_sigs")
+        before, hit = {}, {}
+        for t in tables:
+            root = table_location(spark, t)
+            before[t] = {}
+            for f in os.listdir(root):
+                if f.endswith(".parquet"):
+                    with open(os.path.join(root, f), "rb") as fh:
+                        before[t][f] = hashlib.md5(fh.read()).hexdigest()
+            hit[t] = {
+                group(r.f)
+                for r in spark.table(t)
+                .where(F.col("doc_id") == gone_id)
+                .select(F.col("_metadata.file_name").alias("f"))
+                .collect()
+            }
+            assert hit[t], t
+        assert mh.vacuum_minhash_index(spark, prefix) == 1
+        for t in tables:
+            root = table_location(spark, t)
+            after = {f for f in os.listdir(root) if f.endswith(".parquet")}
+            kept = [f for f in before[t] if group(f) not in hit[t]]
+            assert kept, t
+            for f in kept:
+                with open(os.path.join(root, f), "rb") as fh:
+                    assert hashlib.md5(fh.read()).hexdigest() == before[t][f], f
+            for f in set(before[t]) - set(kept):
+                assert f not in after, f
+            ids = {r.doc_id for r in spark.table(t).select("doc_id").collect()}
+            assert gone_id not in ids and ids
 
 
 class TestChunkFuzzyPartialOverlap:

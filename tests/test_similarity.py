@@ -879,7 +879,7 @@ class TestIvfIndexAppend:
             return out
 
         before = snap()
-        append_ivf_index(spark, delta, "ivf_append_test_idx", nlist=8)
+        append_ivf_index(spark, delta, "ivf_append_test_idx")
         after = snap()
         for path, digest in before.items():
             assert after.get(path) == digest, path
@@ -940,10 +940,7 @@ class TestIvfIndexCompact:
             spark, e.filter(nib != "0"), "ivf_cpt_test_idx",
             nlist=IVF_NLIST, iters=IVF_ITERS,
         )
-        append_ivf_index(
-            spark, e.filter(nib == "0"), "ivf_cpt_test_idx",
-            nlist=IVF_NLIST,
-        )
+        append_ivf_index(spark, e.filter(nib == "0"), "ivf_cpt_test_idx")
         table = "ivf_cpt_test_idx_assign"
         before = {
             (r.vec_id, r.cluster_id)
@@ -1031,8 +1028,7 @@ class TestIvfIndexDelete:
         # probing with a deleted query vector raises; probes from any
         # kept query never return a deleted id
         df = knn_ivf_indexed(
-            spark, "ivf_del_test_idx", 0, 50,
-            nprobe=IVF_NLIST, tombstones=True,
+            spark, "ivf_del_test_idx", 0, 50, nprobe=IVF_NLIST,
         )
         got = {r.vec_id for r in df.collect()}
         assert got and not (got & del_ids)
@@ -1041,13 +1037,12 @@ class TestIvfIndexDelete:
 
         with _pytest.raises(KeyError):
             knn_ivf_indexed(
-                spark, "ivf_del_test_idx", some_deleted, 5, tombstones=True
+                spark, "ivf_del_test_idx", some_deleted, 5
             )
         # plan: pruned + exchange-free with the tombstone anti-join on
         plan = (
             knn_ivf_indexed(
-                spark, "ivf_del_test_idx", 0,
-                nprobe=IVF_NPROBE, tombstones=True,
+                spark, "ivf_del_test_idx", 0, nprobe=IVF_NPROBE,
             )
             ._jdf.queryExecution()
             .executedPlan()
@@ -1120,12 +1115,11 @@ class TestIvfIndexVacuum:
         before_probe = {
             (r.vec_id, r.cosine)
             for r in knn_ivf_indexed(
-                spark, "ivf_vac_test_idx", 0, 50,
-                nprobe=IVF_NLIST, tombstones=True,
+                spark, "ivf_vac_test_idx", 0, 50, nprobe=IVF_NLIST,
             ).collect()
         }
         before_files = snap()
-        n = vacuum_ivf_index(spark, "ivf_vac_test_idx", n_buckets=IVF_NLIST)
+        n = vacuum_ivf_index(spark, "ivf_vac_test_idx")
         assert n == len(del_ids) > 0
         assert not spark.catalog.tableExists("ivf_vac_test_idx_dels")
         after_files = snap()
@@ -1153,7 +1147,7 @@ class TestIvfIndexVacuum:
         }
         assert after_probe == before_probe and after_probe
         # (e) idempotent; (f) plan still pruned + exchange-free
-        assert vacuum_ivf_index(spark, "ivf_vac_test_idx", IVF_NLIST) == 0
+        assert vacuum_ivf_index(spark, "ivf_vac_test_idx") == 0
         plan = (
             knn_ivf_indexed(
                 spark, "ivf_vac_test_idx", 0, nprobe=IVF_NPROBE

@@ -1546,9 +1546,7 @@ class TestStreamIvfIndexAppend:
             if n == 0:
                 return
             batches.append(n)
-            append_ivf_index(
-                spark, bdf, "ivf_strm_test_idx", nlist=IVF_NLIST
-            )
+            append_ivf_index(spark, bdf, "ivf_strm_test_idx")
 
         q = (
             stream.writeStream.foreachBatch(_append)
