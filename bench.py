@@ -56,7 +56,7 @@ BENCH_QUERIES = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     # dedup_simhash_bucketed is deliberately NOT benched: the
-    # crossover study (SCALING.md, tools/simhash_crossover.py) shows
+    # crossover study recorded in SCALING.md shows
     # the brute pair stage wins through at least 200k docs; the
     # bucketed form is the documented asymptotic path, test-pinned.
     "knn_brute_cosine",

@@ -1,1 +1,1 @@
-from .minhash import lsh_bands, minhash_signature_df  # noqa: F401
+from .minhash import lsh_bands  # noqa: F401

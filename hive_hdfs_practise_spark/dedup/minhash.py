@@ -1,5 +1,13 @@
 """MinHash signatures + LSH banding.
 
+The LSH shape is fixed and defined here, once: 5-char shingles
+(``SHINGLE_K``), 128 permutations (``N_PERM``), 16 bands × 8 rows
+(``N_BANDS`` × ``ROWS_PER_BAND``). Every index, query, stream twin
+and SQL oracle uses this one configuration (``plans/constants.py``
+re-exports it), so no function takes a shape argument: a signature
+or band key built anywhere matches one built anywhere else. Only the
+per-shingle hash ``family`` and the ``downsample`` factor vary.
+
 Performance shape (the thing that matters at 100 TB): each shingle
 string is hashed ONCE (xxhash64 → 32-bit residue); the k-permutation
 hash family is pure integer arithmetic, h_i(x) = (a_i·x + b_i) mod P.
@@ -49,6 +57,16 @@ from ..sources.writers import write_bucketed
 
 P32 = 4_294_967_291  # largest prime < 2^32
 
+# The one MinHash-LSH configuration (module docstring). r=8 rows per
+# band matters as much as recall: r=4 was measured to EXPLODE candidate
+# counts 1000× on a shared-vocabulary corpus (mid-Jaccard pairs
+# collide at j^4 per band), while r=8 keeps buckets near-singleton;
+# detection probability 1-(1-j^8)^16 ≈ 0.9999 at j=0.9.
+SHINGLE_K = 5
+N_PERM = 128
+N_BANDS = 16
+ROWS_PER_BAND = N_PERM // N_BANDS
+
 _FAMILY_ENV = "SPARK_GRAFT_MINHASH_FAMILY"
 # documents.parquet size at/below which the md5 (oracle-restatable)
 # family is the default: covers the correctness-gate corpora
@@ -96,10 +114,9 @@ def minhash_family(sf_dir: str) -> str:
     return "md5" if size <= _MD5_FAMILY_MAX_BYTES else "xxhash"
 
 _rng = random.Random(42)
-_N_PERM_DEFAULT = 128
 _COEFFS = [
     (_rng.randrange(1, 1 << 31), _rng.randrange(0, 1 << 31))
-    for _ in range(_N_PERM_DEFAULT)
+    for _ in range(N_PERM)
 ]
 
 
@@ -157,9 +174,7 @@ def perm_min_sql(i: int, h: str = "h") -> str:
     return f"min((CAST({a} AS BIGINT) * {h} + {b}) % {P32})"
 
 
-def _signature(
-    exploded: DataFrame, id_cols: list[str], n_perm: int, downsample: int
-) -> DataFrame:
+def _signature(exploded: DataFrame, id_cols: list[str], downsample: int) -> DataFrame:
     """(id_cols..., sig) from ``_h`` rows: downsample filter, then ONE
     aggregate expression (module docstring). An empty doc's NULL
     marker row passes the filter and gets the all-P32 sentinel.
@@ -177,23 +192,27 @@ def _signature(
         )
     slots = ", ".join(
         f"coalesce({perm_min_sql(i, '_h')}, CAST({P32} AS BIGINT))"
-        for i in range(n_perm)
+        for i in range(N_PERM)
     )
     return exploded.groupBy(*id_cols).agg(F.expr(f"array({slots})").alias("sig"))
 
 
-def minhash_signature_df(
+def minhash_signature_from_text(
     df: DataFrame,
     id_cols: list[str],
-    shingles_col: str = "shingles",
-    n_perm: int = _N_PERM_DEFAULT,
     downsample: int = 1,
     family: str = "xxhash",
 ) -> DataFrame:
-    """(id_cols..., sig: array<bigint>[n_perm]) per input row.
+    """(id_cols..., sig: array<bigint>[N_PERM]) per ``text`` row,
+    straight from text — no shingle ARRAY is ever built.
 
-    Documents with an empty shingle set keep an all-P32 sentinel
-    signature (outer-join back) so they never band-collide.
+    MinHash over a multiset equals MinHash over the set (duplicate
+    shingles cannot change a minimum), so distinct shingle arrays are
+    pure overhead for signatures. This path explodes shingle
+    POSITIONS and keeps everything — substring, hash, permutations,
+    mins — inside whole-stage codegen. Exact-Jaccard verification
+    still needs distinct shingle arrays; it builds them only for
+    candidate pairs.
 
     ``downsample=d`` keeps only shingles whose hash ≡ 0 (mod d)
     before the permutation mins — winnowing-style sketch-of-a-sketch
@@ -204,37 +223,6 @@ def minhash_signature_df(
     because they share the same sampled subset. Candidates are
     exact-verified downstream either way.
 
-    The hash is guarded so the NULL marker row of an empty shingle
-    array stays NULL (``xxhash64(NULL)`` is 42, not NULL): signatures
-    equal ``minhash_signature_from_text``'s for both families."""
-    s = F.col("_shingle")
-    h = F.when(s.isNotNull(), shingle_hash(s, family))
-    exploded = df.select(
-        *id_cols, F.explode_outer(F.col(shingles_col)).alias("_shingle")
-    ).withColumn("_h", h)
-    return _signature(exploded, id_cols, n_perm, downsample)
-
-
-def minhash_signature_from_text(
-    df: DataFrame,
-    id_cols: list[str],
-    text_col: str = "text",
-    k: int = 5,
-    n_perm: int = _N_PERM_DEFAULT,
-    downsample: int = 1,
-    family: str = "xxhash",
-) -> DataFrame:
-    """Signature straight from text — no shingle ARRAY is ever built.
-
-    MinHash over a multiset equals MinHash over the set (duplicate
-    shingles cannot change a minimum), so the array_distinct +
-    array-materialization step of the array-input path is pure
-    overhead for signatures. This path explodes shingle POSITIONS
-    and keeps everything — substring, hash, permutations, mins —
-    inside whole-stage codegen. Exact-Jaccard verification still
-    needs distinct shingle arrays; it builds them only for candidate
-    pairs.
-
     Cardinality contract: with ``downsample=1`` the signature table
     has EXACTLY one row per input doc (empty docs get a sentinel
     signature via the NULL marker; pinned in tests). With
@@ -244,31 +232,27 @@ def minhash_signature_from_text(
     LSH candidate generation — acceptable under the probabilistic-
     recall contract, since downsampling already trades recall for
     throughput on long-doc corpora where s is large."""
-    n = F.length(F.col(text_col)) - F.lit(k - 1)
+    text = F.col("text")
+    n = F.length(text) - F.lit(SHINGLE_K - 1)
     pos = F.explode_outer(
         F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(F.array().cast("array<int>"))
     )
-    exploded = df.select(*id_cols, F.col(text_col), pos.alias("_i")).select(
+    exploded = df.select(*id_cols, text, pos.alias("_i")).select(
         *id_cols,
         F.when(
             F.col("_i").isNotNull(),
-            shingle_hash(F.col(text_col).substr(F.col("_i"), F.lit(k)), family),
+            shingle_hash(text.substr(F.col("_i"), F.lit(SHINGLE_K)), family),
         ).alias("_h"),
     )
-    return _signature(exploded, id_cols, n_perm, downsample)
+    return _signature(exploded, id_cols, downsample)
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame,
-    n_bands: int,
-    rows_per_band: int,
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = (),
-    family: str = "xxhash",
+    sigs: DataFrame, block_cols: tuple[str, ...] = (), family: str = "xxhash"
 ) -> DataFrame:
     """Distinct candidate (doc_a, doc_b) pairs (doc_a < doc_b) from a
-    signature table: posexplode bands → one shuffle on (block, band,
-    key) → per-bucket combinations.
+    (doc_id, *block_cols, sig) table: ``_band_rows`` → one shuffle on
+    (block, band, key) → per-bucket combinations.
 
     Pairs come from COMBINATIONS WITHIN each bucket's collected id
     set, not a self-join on the band key — a self-join would replay
@@ -278,14 +262,8 @@ def lsh_candidate_pairs(
     (ids, band keys) ever shuffle, never text. ``block_cols``
     restricts pairs to equal blocking keys (e.g. lang) by folding
     them into the bucket key."""
-    banded = sigs.select(
-        id_col,
-        *block_cols,
-        F.posexplode(lsh_bands(F.col("sig"), n_bands, rows_per_band, family)).alias(
-            "band", "band_key"
-        ),
-    )
-    return pairs_within_buckets(banded, id_col, [*block_cols, "band", "band_key"])
+    banded = _band_rows(sigs, block_cols, family)
+    return pairs_within_buckets(banded, "doc_id", [*block_cols, "band", "band_key"])
 
 
 # Ids per chunk in the skew-guarded pair expansion. A bucket whose
@@ -393,10 +371,8 @@ def pairs_within_buckets(
     )
 
 
-def lsh_bands(
-    sig: Column, n_bands: int, rows_per_band: int, family: str = "xxhash"
-) -> Column:
-    """Array of band keys; explode + groupBy on (band index, key)
+def lsh_bands(sig: Column, family: str = "xxhash") -> Column:
+    """Array of the N_BANDS band keys (ROWS_PER_BAND slots each); explode + groupBy on (band index, key)
     gives the LSH buckets; only (doc_id, band_key) ever shuffles.
 
     - ``xxhash``: murmur hash of each signature slice (bigint key,
@@ -408,28 +384,30 @@ def lsh_bands(
       is identical because the key is injective on slices, where a
       murmur key could (with prob ~2^-32 per bucket pair) merge two
       buckets and admit extra candidates."""
+    r = ROWS_PER_BAND
     if family == "md5":
         return F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
+            F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
             lambda b: F.array_join(
-                F.slice(sig, b * rows_per_band + 1, rows_per_band).cast("array<string>"),
-                ",",
+                F.slice(sig, b * r + 1, r).cast("array<string>"), ","
             ),
         )
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.hash(F.slice(sig, b * rows_per_band + 1, rows_per_band)).cast("bigint"),
+        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
+        lambda b: F.hash(F.slice(sig, b * r + 1, r)).cast("bigint"),
     )
 
 
-def _band_rows(sigs, extra_cols, n_bands, rows_per_band, family) -> DataFrame:
-    """(band, band_key, doc_id, *extra_cols): the band-index rows."""
+def _band_rows(sigs: DataFrame, extra_cols=(), family: str = "xxhash") -> DataFrame:
+    """(doc_id, *extra_cols, band, band_key) from a (doc_id, *extra_cols,
+    sig) table: the one band-row builder, shared by the index writes,
+    the inline candidate pairs, the index probe and the cost report.
+    The generated columns come last, where ``Generate`` emits them, so
+    no reordering ``Project`` sits under the bucket aggregate."""
     return sigs.select(
-        F.posexplode(
-            lsh_bands(F.col("sig"), n_bands, rows_per_band, family)
-        ).alias("band", "band_key"),
         "doc_id",
         *extra_cols,
+        F.posexplode(lsh_bands(F.col("sig"), family)).alias("band", "band_key"),
     )
 
 
@@ -437,10 +415,6 @@ def write_minhash_index(
     spark,
     docs: DataFrame,
     table_prefix: str,
-    k: int = 5,
-    n_perm: int = _N_PERM_DEFAULT,
-    n_bands: int = 16,
-    rows_per_band: int = 8,
     downsample: int = 1,
     family: str = "md5",
     n_buckets: int = 32,
@@ -467,16 +441,16 @@ def write_minhash_index(
     (band, band_key) hash layout co-locates every superset group."""
     reset_index(spark, table_prefix, ("_bands", "_sigs"))
     sigs = minhash_signature_from_text(
-        docs, ["doc_id", *extra_cols], "text", k, n_perm,
-        downsample=downsample, family=family,
+        docs, ["doc_id", *extra_cols], downsample=downsample, family=family
     )
     sigs.write.mode("overwrite").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )
+    # the bands table keeps its (band, band_key, doc_id, *extra_cols)
+    # column order; appends match columns by name
     write_bucketed(
-        _band_rows(
-            spark.table(f"{table_prefix}_sigs"), extra_cols, n_bands,
-            rows_per_band, family,
+        _band_rows(spark.table(f"{table_prefix}_sigs"), extra_cols, family).select(
+            "band", "band_key", "doc_id", *extra_cols
         ),
         f"{table_prefix}_bands",
         ["band", "band_key"],
@@ -488,10 +462,6 @@ def append_minhash_index(
     spark,
     docs: DataFrame,
     table_prefix: str,
-    k: int = 5,
-    n_perm: int = _N_PERM_DEFAULT,
-    n_bands: int = 16,
-    rows_per_band: int = 8,
     downsample: int = 1,
     family: str = "md5",
     extra_cols: tuple[str, ...] = (),
@@ -499,24 +469,23 @@ def append_minhash_index(
     """Append a delta batch to an ALREADY-WRITTEN index: signatures
     and band rows are computed for the DELTA ONLY and appended
     (``append_bucketed`` for the bands); nothing already in the index
-    is read or rewritten. The signature parameters MUST match the
-    build: signatures/bands are per-doc deterministic, so the appended
-    index equals a from-scratch build row for row (pinned by
-    dedup_minhash_index_append's oracle and the untouched-files
-    test)."""
-    # delta signatures are tiny (batch × n_perm longs) and feed both
+    is read or rewritten. ``downsample``, ``family`` and
+    ``extra_cols`` MUST match the build: signatures/bands are per-doc
+    deterministic, so the appended index equals a from-scratch build
+    row for row (pinned by dedup_minhash_index_append's oracle and the
+    untouched-files test)."""
+    # delta signatures are tiny (batch × N_PERM longs) and feed both
     # the sigs append and the banding — checkpoint so the delta text
     # is scanned once (and the band rows' plan has no exchange)
     dsigs = minhash_signature_from_text(
-        docs, ["doc_id", *extra_cols], "text", k, n_perm,
-        downsample=downsample, family=family,
+        docs, ["doc_id", *extra_cols], downsample=downsample, family=family
     ).localCheckpoint(eager=True)
     dsigs.write.mode("append").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )
     append_bucketed(
         spark,
-        _band_rows(dsigs, extra_cols, n_bands, rows_per_band, family),
+        _band_rows(dsigs, extra_cols, family),
         f"{table_prefix}_bands",
     )
 

@@ -5,16 +5,15 @@ configuration (mining.py's prefix join, pipeline.py) can import it
 WITHOUT triggering dedup's query registrations — the registry import
 order in plans/__init__.py is load-bearing for the driver's sampling
 budget, and a cross-module constant import must not reorder it.
+
+The MinHash-LSH shape (5-char shingles, 128 permutations in 16 bands ×
+8 rows) is defined in ``dedup/minhash.py`` and re-exported here, so
+plan modules and the SQL oracles import one configuration from one
+place. ``dedup/minhash.py`` must never import this package: that runs
+``plans/__init__``, which imports ``mining.py``, which imports
+``dedup.minhash`` at module level.
 """
 
-SHINGLE_K = 5
-JACCARD_THRESHOLD = 0.7
+from ..dedup.minhash import N_BANDS, N_PERM, ROWS_PER_BAND, SHINGLE_K  # noqa: F401
 
-# MinHash-LSH family configuration (128 permutations in 16 bands ×
-# 8 rows — see plans/dedup.py's banding commentary for the r=8
-# candidate-explosion rationale). Shared by dedup.py, mining.py's
-# containment sketch, and pipeline.py; lives here so importing it
-# can never reorder the registry (see module docstring).
-N_PERM = 128
-N_BANDS = 16
-ROWS_PER_BAND = N_PERM // N_BANDS
+JACCARD_THRESHOLD = 0.7

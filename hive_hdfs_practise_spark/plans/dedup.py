@@ -155,15 +155,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# 128 permutations in 16 bands × 8 rows (values in plans/constants.py
-# — registration-free, per the cross-module-constants rule; mining.py
-# and pipeline.py share them). Detection probability
-# 1-(1-j^8)^16 ≈ 0.9999 at j=0.9. Band length r=8 matters as much as
-# recall: r=4 was measured to EXPLODE candidate counts 1000× on a
-# shared-vocabulary corpus (mid-Jaccard pairs collide at j^4 per
-# band → quadratic bucket joins); r=8 keeps buckets near-singleton
-# while exact verification downstream removes any false positives.
-from .constants import N_BANDS, N_PERM, ROWS_PER_BAND  # noqa: E402
+# 128 permutations in 16 bands × 8 rows: the one LSH shape, defined
+# (with the r=8 rationale) in dedup/minhash.py.
+from .constants import N_BANDS, N_PERM  # noqa: E402
 # Signature-agreement prefilter cutoff, as an integer match count:
 # est = matches/128 ≥ (0.7 - 0.15) ⇔ matches ≥ 71 (the division by
 # a power of two is exact, so the double and integer filters are
@@ -286,7 +280,7 @@ def _minhash_lsh_pairs(
     # signatures produce fewer mid-Jaccard band collisions — the
     # candidate count, not the signature scan, dominates this query.
     sigs = mh.minhash_signature_from_text(
-        d, ["doc_id"], "text", SHINGLE_K, N_PERM, downsample=4, family=family
+        d, ["doc_id"], downsample=4, family=family
     ).localCheckpoint(eager=True)
     # skip sentinel (all-P32) signatures before banding (r11 advice):
     # empty/fully-winnowed docs would collide in EVERY band — pure
@@ -296,7 +290,7 @@ def _minhash_lsh_pairs(
     # sentinel skip and documents_dedup_cost_report's n_docs_signed
     # faithful to this pipeline.
     live = sigs.filter(F.element_at("sig", 1) != mh.P32)
-    cand = mh.lsh_candidate_pairs(live, N_BANDS, ROWS_PER_BAND, family=family)
+    cand = mh.lsh_candidate_pairs(live, family=family)
     # estimate-prefilter: signature agreement ≈ Jaccard (σ≈1/√128).
     # Candidates whose estimate is far below threshold skip exact
     # verification entirely — band collisions admit many mid-Jaccard
@@ -394,10 +388,6 @@ def dedup_minhash_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         d,
         "minhash_doc_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -518,10 +508,6 @@ def dedup_minhash_probe_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         corpus,
         "minhash_probe_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -547,15 +533,9 @@ def probe_minhash_index(
     # AND the prefilter — checkpoint so neither consumer replays the
     # delta text scan
     dsigs = mh.minhash_signature_from_text(
-        delta, ["doc_id"], "text", SHINGLE_K, N_PERM, downsample=4,
-        family=family,
+        delta, ["doc_id"], downsample=4, family=family
     ).localCheckpoint(eager=True)
-    dbands = dsigs.select(
-        F.col("doc_id").alias("doc_new"),
-        F.posexplode(
-            mh.lsh_bands(F.col("sig"), N_BANDS, ROWS_PER_BAND, family)
-        ).alias("band", "band_key"),
-    )
+    dbands = mh._band_rows(dsigs, family=family).withColumnRenamed("doc_id", "doc_new")
     idx = live_rows(spark, f"{table_prefix}_bands", table_prefix, "doc_id")
     # the delta's banded rows broadcast; the index streams map-side —
     # no shuffle of the (much larger) index ever happens; tombstoned
@@ -610,10 +590,6 @@ def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         corpus,
         "minhash_append_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -621,10 +597,6 @@ def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         delta,
         "minhash_append_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -663,10 +635,6 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         corpus,
         "minhash_compact_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -674,10 +642,6 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         delta,
         "minhash_compact_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -729,10 +693,6 @@ def dedup_minhash_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         d,
         "minhash_del_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -842,16 +802,11 @@ def documents_dedup_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     family = mh.minhash_family(sf_dir)
     d = wide_table(spark, sf_dir, "documents").select("doc_id", "text")
     sigs = mh.minhash_signature_from_text(
-        d, ["doc_id"], "text", SHINGLE_K, N_PERM, downsample=4, family=family
+        d, ["doc_id"], downsample=4, family=family
     ).localCheckpoint(eager=True)
     # non-sentinel docs: a kept shingle exists ⇔ slot 0 < P32
     live = sigs.filter(F.element_at("sig", 1) != P32)
-    bands = live.select(
-        "doc_id",
-        F.posexplode(
-            mh.lsh_bands(F.col("sig"), N_BANDS, ROWS_PER_BAND, family)
-        ).alias("band", "band_key"),
-    )
+    bands = mh._band_rows(live, family=family)
     bux = bands.groupBy("band", "band_key").agg(
         F.count(F.lit(1)).alias("m")
     )
@@ -1010,8 +965,8 @@ def exact_jaccard_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
     the join condition inlined once per reference — the old form
     re-built each doc's shingle array ~5× per candidate row inside the
     join condition (plans/r13/dedup_cross_source_matrix_before.txt;
-    measured 6.3 → 3.8 s on the 10× verify stage,
-    tools/probe_verify_inline.py; output parity exact)."""
+    measured 6.3 → 3.8 s on the 10× verify stage, recorded in
+    OPTIMIZATION_r13.md; output parity exact)."""
     txt_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     txt_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     sh_a = tx.char_shingles(F.col("text_a"), SHINGLE_K)
@@ -1143,10 +1098,6 @@ def dedup_cross_source_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         d,
         "minhash_doc_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=4,
         family=family,
     )
@@ -1621,28 +1572,20 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = mh.minhash_signature_from_text(
         d.select("doc_id", "lang", "text"),
         ["doc_id", "lang"],
-        "text",
-        SHINGLE_K,
-        N_PERM,
         family=family,
     ).localCheckpoint(eager=True)
-    cand = mh.lsh_candidate_pairs(
-        sigs, N_BANDS, ROWS_PER_BAND, block_cols=("lang",), family=family
-    )
-    return _verify_pairs_full_shingles(spark, sf_dir, cand)
+    cand = mh.lsh_candidate_pairs(sigs, block_cols=("lang",), family=family)
+    return _verify_pairs_full_shingles(d, cand)
 
 
-def _candidate_jaccard(
-    spark: SparkSession, sf_dir: str, cand: DataFrame
-) -> DataFrame:
+def _candidate_jaccard(docs: DataFrame, cand: DataFrame) -> DataFrame:
     """(doc_a, doc_b, ni, nu) for every candidate pair, against a
-    CHECKPOINTED full-corpus shingle table — the downsample=1
-    family's verify input (its candidate stream is wide enough that
-    the one-pass shingle materialization beats per-candidate
-    shingling). Shared by the thresholded verify AND the J-band
-    spectrum so the two cannot drift (r9 review catch)."""
-    d = wide_table(spark, sf_dir, "documents")
-    shingled = d.select(
+    CHECKPOINTED shingle table of ``docs(doc_id, text)`` — the
+    downsample=1 family's verify input (its candidate stream is wide
+    enough that the one-pass shingle materialization beats
+    per-candidate shingling). Shared by the thresholded verify AND the
+    J-band spectrum so the two cannot drift (r9 review catch)."""
+    shingled = docs.select(
         "doc_id", tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles")
     ).localCheckpoint(eager=True)
     sh_a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -1680,13 +1623,12 @@ def _candidate_jaccard(
     )
 
 
-def _verify_pairs_full_shingles(
-    spark: SparkSession, sf_dir: str, cand: DataFrame
-) -> DataFrame:
-    """Exact-Jaccard verify of (doc_a, doc_b) candidates (see
-    ``_candidate_jaccard``); shared by the inline pair front end and
-    dedup_survivors_indexed so the two cannot drift."""
-    v = _candidate_jaccard(spark, sf_dir, cand)
+def _verify_pairs_full_shingles(docs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact-Jaccard verify of (doc_a, doc_b) candidates against
+    ``docs(doc_id, text)`` (see ``_candidate_jaccard``); shared by the
+    inline pair front end, dedup_survivors_indexed and both LSH
+    curation pipelines so they cannot drift."""
+    v = _candidate_jaccard(docs, cand)
     return v.filter(
         (F.col("nu") > 0)
         & (
@@ -2321,7 +2263,7 @@ def _duplicate_span_table(
     # only on true equals). Measured best-of-2 at 40×: 78.3 s (r7
     # join form) → 14.0 s; the all-string-key fused form sat at
     # 25.2 s — the sort key, not the pass count alone, is the lever
-    # (tools/probe_spans.py).
+    # (probe matrix recorded in SCALING.md).
     gh = F.expr("cast(conv(substring(md5(gram), 1, 15), 16, 10) as bigint)")
     wg = Window.partitionBy("gh", "gram")
     pos = (
@@ -3586,15 +3528,10 @@ def dedup_minhash_j_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = mh.minhash_signature_from_text(
         d.select("doc_id", "lang", "text"),
         ["doc_id", "lang"],
-        "text",
-        SHINGLE_K,
-        N_PERM,
         family=family,
     ).localCheckpoint(eager=True)
-    cand = mh.lsh_candidate_pairs(
-        sigs, N_BANDS, ROWS_PER_BAND, block_cols=("lang",), family=family
-    )
-    v = _candidate_jaccard(spark, sf_dir, cand).filter(F.col("nu") > 0)
+    cand = mh.lsh_candidate_pairs(sigs, block_cols=("lang",), family=family)
+    v = _candidate_jaccard(d, cand).filter(F.col("nu") > 0)
     return (
         v.select(
             F.expr(f"CAST(ni * {J_SPECTRUM_BANDS} div nu AS INT)").alias(

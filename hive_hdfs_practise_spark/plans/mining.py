@@ -1408,18 +1408,16 @@ def documents_containment_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     candidate stream stays near the true-pair mass (banding, not
     single-hash buckets). Builder runs jobs at plan time (signature
     checkpoint): BUILD_EXECUTES."""
-    from .constants import N_BANDS, N_PERM, ROWS_PER_BAND
+    from .constants import N_PERM
 
     family = minhash_family(sf_dir)
     d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     # signatures feed banding AND the agreement count — checkpoint
     # (tiny: n_docs × 128 longs), else each consumer replays the scan
     sigs = minhash_signature_from_text(
-        d, ["doc_id", "lang"], "text", SHINGLE_K, N_PERM, downsample=4, family=family
+        d, ["doc_id", "lang"], downsample=4, family=family
     ).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(
-        sigs, N_BANDS, ROWS_PER_BAND, block_cols=("lang",), family=family
-    )
+    cand = lsh_candidate_pairs(sigs, block_cols=("lang",), family=family)
     # exact distinct-shingle sizes (the estimator's |A|, |B|); docs
     # shorter than a shingle have no row here, so the inner joins
     # below also drop the sentinel-signature band collisions — same

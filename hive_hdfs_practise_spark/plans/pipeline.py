@@ -230,7 +230,7 @@ def pipeline_training_data_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the oracle-checked pipeline_training_data: the swap changes
     cost, not results)."""
     from ..dedup import minhash as mh
-    from .constants import N_BANDS, N_PERM, ROWS_PER_BAND
+    from .dedup import _verify_pairs_full_shingles
 
     # checkpoint ONCE (r12 optimization): uniq feeds the signature
     # chain, the verify-side shingle table, AND _pipeline_tail — each
@@ -247,31 +247,10 @@ def pipeline_training_data_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = mh.minhash_signature_from_text(
         uniq.select("doc_id", "lang", "text"),
         ["doc_id", "lang"],
-        "text",
-        SHINGLE_K,
-        N_PERM,
         family=family,
     ).localCheckpoint(eager=True)
-    cand = mh.lsh_candidate_pairs(
-        sigs, N_BANDS, ROWS_PER_BAND, block_cols=("lang",), family=family
-    )
-    shingled = uniq.select(
-        "doc_id", tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles")
-    ).localCheckpoint(eager=True)
-    sh_a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    pairs = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .filter(
-            (n_union > 0)
-            & (F.round(n_inter.cast("double") / n_union, 6) >= JACCARD_THRESHOLD)
-        )
-        .select("doc_a", "doc_b")
-    )
-    return _pipeline_tail(uniq, pairs)
+    cand = mh.lsh_candidate_pairs(sigs, block_cols=("lang",), family=family)
+    return _pipeline_tail(uniq, _verify_pairs_full_shingles(uniq, cand))
 
 
 @register(
@@ -290,7 +269,7 @@ def documents_dedup_pipeline_indexed(
     inline. Candidate grouping on (lang, band, band_key) — a superset
     of the (band, band_key) bucket columns — rides the bucketed
     layout with ZERO exchange (plan-pinned in test_pipeline);
-    verification is the pipeline's exact shingle Jaccard verbatim.
+    verification is the pipeline's shared exact shingle Jaccard.
     Same output, same recursive-CTE oracle — a green row certifies
     the WRITTEN index inside the end-to-end line, the regime where a
     curation pipeline runs repeatedly against a maintained index
@@ -298,7 +277,7 @@ def documents_dedup_pipeline_indexed(
     index at plan time: BUILD_EXECUTES."""
     from ..dedup import minhash as mh
     from ..operators.confscope import build_with_conf
-    from .constants import N_BANDS, N_PERM, ROWS_PER_BAND
+    from .dedup import _verify_pairs_full_shingles
 
     family = mh.minhash_family(sf_dir)
     # materialize once: the index write, the verify side, and the
@@ -309,10 +288,6 @@ def documents_dedup_pipeline_indexed(
         spark,
         uniq,
         "pipeline_dedup_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=1,
         family=family,
         extra_cols=("lang",),
@@ -323,35 +298,11 @@ def documents_dedup_pipeline_indexed(
         cand = mh.pairs_within_buckets(
             banded, "doc_id", ["lang", "band", "band_key"]
         )
-        shingled = uniq.select(
-            "doc_id",
-            tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles"),
-        ).localCheckpoint(eager=True)
-        sh_a = shingled.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        sh_b = shingled.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-        )
-        n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-        return (
-            cand.join(sh_a, "doc_a")
-            .join(sh_b, "doc_b")
-            .filter(
-                (n_union > 0)
-                & (
-                    F.round(n_inter.cast("double") / n_union, 6)
-                    >= JACCARD_THRESHOLD
-                )
-            )
-            .select("doc_a", "doc_b")
-            # materialize INSIDE the conf scope: the closure's
-            # checkpoints would otherwise recompile this plan under
-            # the restored conf and silently lose the bucketed-scan
-            # pin (the r10 build_with_conf lesson)
-            .localCheckpoint(eager=True)
-        )
+        # materialize INSIDE the conf scope: the closure's
+        # checkpoints would otherwise recompile this plan under the
+        # restored conf and silently lose the bucketed-scan pin (the
+        # r10 build_with_conf lesson)
+        return _verify_pairs_full_shingles(uniq, cand).localCheckpoint(eager=True)
 
     pairs = build_with_conf(
         spark,

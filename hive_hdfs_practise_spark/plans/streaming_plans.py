@@ -961,18 +961,9 @@ def stream_minhash_index_append(
     Runs the stream + index writes at plan time: BUILD_EXECUTES."""
     from ..dedup import minhash as mh
     from ..streaming.windows import run_foreach_batch
-    from .constants import N_BANDS, N_PERM, ROWS_PER_BAND, SHINGLE_K
     from .dedup import _indexed_pairs, _probe_delta_col
 
-    family = mh.minhash_family(sf_dir)
-    kw = dict(
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
-        downsample=4,
-        family=family,
-    )
+    kw = dict(downsample=4, family=mh.minhash_family(sf_dir))
     # wide_table, not table: the corpus can arrive as ONE part file,
     # and signature building is exactly the compute-dense per-row
     # work the round-robin spread exists for (a 40× build measured

@@ -269,7 +269,6 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup import minhash as mh
     from ..dedup.clusters import connected_components
     from ..operators.confscope import build_with_conf
-    from .constants import N_BANDS, N_PERM, ROWS_PER_BAND, SHINGLE_K
     from .dedup import _verify_pairs_full_shingles
 
     family = mh.minhash_family(sf_dir)
@@ -278,10 +277,6 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         d.select("doc_id", "lang", "text"),
         "minhash_fam_idx",
-        k=SHINGLE_K,
-        n_perm=N_PERM,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         downsample=1,
         family=family,
         extra_cols=("lang",),
@@ -292,7 +287,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = mh.pairs_within_buckets(
             banded, "doc_id", ["lang", "band", "band_key"]
         )
-        pairs = _verify_pairs_full_shingles(spark, sf_dir, cand)
+        pairs = _verify_pairs_full_shingles(d, cand)
         cl = connected_components(pairs)
         q = text_quality_score(spark, sf_dir)
         w = Window.partitionBy("cluster_id").orderBy(

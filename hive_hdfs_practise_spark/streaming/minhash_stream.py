@@ -35,7 +35,6 @@ md5 band-key text idiom) to keep the state schema flat.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterable
 
 import numpy as np
@@ -98,25 +97,9 @@ STATE_SCHEMA = T.StructType(
 # replay (the bench/driver contract: few large batches — the dispatch
 # count dominated, 8× at 10×); a TRICKLE deployment (1-doc triggers
 # against a large accumulated state) pays O(state/shard) per touched
-# shard per trigger and should raise the shard count (env below) toward
+# shard per trigger and would want a larger shard count, toward
 # per-bucket granularity — the trade is dispatch count vs row size.
-def _state_shards() -> int:
-    """``SPARK_GRAFT_STREAM_STATE_SHARDS`` (default 256), validated: 0
-    would make the shard key ``pmod(x, 0)`` and a negative count gives
-    negative shard keys, so both are rejected along with non-integers."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_SHARDS", "") or "256"
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if n <= 0:
-        raise ValueError(
-            f"SPARK_GRAFT_STREAM_STATE_SHARDS must be a positive integer, got {raw!r}"
-        )
-    return n
-
-
-N_STATE_SHARDS = _state_shards()
+N_STATE_SHARDS = 256
 
 _A = np.array([a for a, _ in _COEFFS[:N_PERM]], dtype=np.int64)[:, None]
 _B = np.array([b for _, b in _COEFFS[:N_PERM]], dtype=np.int64)[:, None]

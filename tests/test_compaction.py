@@ -343,7 +343,7 @@ class TestCrashPointWalk:
             "doc_id long, text string",
         )
         prefix = "crash_walk_mh_idx"
-        kw = dict(k=3, n_perm=8, n_bands=2, rows_per_band=4, family="md5")
+        kw = dict(family="md5")
         mh.write_minhash_index(
             spark, docs.filter("doc_id < 40"), prefix, n_buckets=2, **kw
         )

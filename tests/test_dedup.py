@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
-from hive_hdfs_practise_spark.dedup.minhash import lsh_bands, minhash_signature_df
+from hive_hdfs_practise_spark.dedup.minhash import lsh_bands, minhash_signature_from_text
 from hive_hdfs_practise_spark.functions import text as tx
 from hive_hdfs_practise_spark import plans
 
@@ -56,8 +56,10 @@ class TestExact:
 
 class TestMinHash:
     def test_identical_docs_identical_signatures(self, docs):
-        d = docs.select("doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles"))
-        sigs = {r.doc_id: r.sig for r in minhash_signature_df(d, ["doc_id"]).collect()}
+        sigs = {
+            r.doc_id: r.sig
+            for r in minhash_signature_from_text(docs, ["doc_id"]).collect()
+        }
         assert sigs[0] == sigs[1]
         assert sigs[0] != sigs[3]
         # near-dup signatures agree on most permutations (j≈0.95)
@@ -65,13 +67,10 @@ class TestMinHash:
         assert agree > 0.7
 
     def test_bands_collide_for_near_dups(self, docs):
-        d = docs.select("doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles"))
-        sigs = minhash_signature_df(d, ["doc_id"])
+        sigs = minhash_signature_from_text(docs, ["doc_id"])
         bands = {
             r.doc_id: r.b
-            for r in sigs.select(
-                "doc_id", lsh_bands(F.col("sig"), 16, 8).alias("b")
-            ).collect()
+            for r in sigs.select("doc_id", lsh_bands(F.col("sig")).alias("b")).collect()
         }
         assert any(x == y for x, y in zip(bands[0], bands[2]))  # ≥1 shared band
         assert not any(x == y for x, y in zip(bands[0], bands[3]))
@@ -82,33 +81,23 @@ class TestMinHash:
         # empty/short ones — gets exactly one signature row; at
         # downsample>1 short docs may drop out (probabilistic-recall
         # contract), so the table is never LARGER than the corpus.
-        from hive_hdfs_practise_spark.dedup.minhash import minhash_signature_from_text
-
         docs = spark.createDataFrame(
             [(1, "abcdefghij"), (2, ""), (3, "abc"), (4, None), (5, "xy")],
             "doc_id long, text string",
         )
-        sigs = minhash_signature_from_text(docs, ["doc_id"], k=5, n_perm=8)
+        sigs = minhash_signature_from_text(docs, ["doc_id"])
         assert sorted(r.doc_id for r in sigs.collect()) == [1, 2, 3, 4, 5]
-        down = minhash_signature_from_text(
-            docs, ["doc_id"], k=5, n_perm=8, downsample=4
-        )
+        down = minhash_signature_from_text(docs, ["doc_id"], downsample=4)
         ids = [r.doc_id for r in down.collect()]
         assert len(ids) == len(set(ids)) <= 5
 
     # (family, downsample, input path) -> (md5 of the sorted
     # (doc_id, sig) rows, row count), captured on the per-slot
-    # Column builder the one-expression aggregate replaced; the two
-    # xxhash shingles-path pins re-pinned to the text path's values
-    # when the empty-doc marker row stopped hashing to xxhash64(NULL)
+    # Column builder the one-expression aggregate replaced
     SIG_CHECKSUMS = {
-        ("md5", 1, "shingles"): ("a032b08f4807124f", 13),
         ("md5", 1, "text"): ("a032b08f4807124f", 13),
-        ("md5", 4, "shingles"): ("8c7d819f50a097c2", 11),
         ("md5", 4, "text"): ("8c7d819f50a097c2", 11),
-        ("xxhash", 1, "shingles"): ("e0fa06cc682166af", 13),
         ("xxhash", 1, "text"): ("e0fa06cc682166af", 13),
-        ("xxhash", 4, "shingles"): ("8c821f35f5119eae", 11),
         ("xxhash", 4, "text"): ("8c821f35f5119eae", 11),
     }
 
@@ -124,36 +113,21 @@ class TestMinHash:
 
     @pytest.mark.parametrize("family", ["md5", "xxhash"])
     @pytest.mark.parametrize("downsample", [1, 4])
-    @pytest.mark.parametrize("path", ["shingles", "text"])
+    @pytest.mark.parametrize("path", ["text"])
     def test_signature_checksums_pinned(self, spark, family, downsample, path):
         """Signatures are byte-identical to the per-slot builder on a
         corpus with empty, NULL, whitespace-only and shorter-than-k
-        docs, for both families, both input paths, with and without
-        downsampling."""
+        docs, for both families, with and without downsampling. Text
+        is the one signature input path; ``path`` keeps the test ids."""
         import hashlib
 
-        from hive_hdfs_practise_spark.dedup.minhash import (
-            minhash_signature_from_text,
-        )
-
         docs = self._degenerate_docs(spark)
-        if path == "text":
-            sigs = minhash_signature_from_text(
-                docs, ["doc_id"], "text", 5, downsample=downsample, family=family
-            )
-        else:
-            arr = docs.select(
-                "doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles")
-            )
-            sigs = minhash_signature_df(
-                arr, ["doc_id"], downsample=downsample, family=family
-            )
+        sigs = minhash_signature_from_text(
+            docs, ["doc_id"], downsample=downsample, family=family
+        )
         rows = sorted((r.doc_id, tuple(r.sig)) for r in sigs.collect())
         got = (hashlib.md5(repr(rows).encode()).hexdigest()[:16], len(rows))
         assert got == self.SIG_CHECKSUMS[(family, downsample, path)]
-        # both input paths sign the same shingle sets, empty docs too
-        other = "text" if path == "shingles" else "shingles"
-        assert got == self.SIG_CHECKSUMS[(family, downsample, other)]
 
     def test_signature_plan_gateway_calls_bounded(self, spark, monkeypatch):
         """Building a 128-perm signature plan must stay a few hundred
@@ -162,14 +136,7 @@ class TestMinHash:
         instead of timing them."""
         from py4j import clientserver
 
-        from hive_hdfs_practise_spark.dedup.minhash import (
-            minhash_signature_from_text,
-        )
-
         docs = self._degenerate_docs(spark)
-        arr = docs.select(
-            "doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles")
-        )
         calls = [0]
         send = clientserver.ClientServerConnection.send_command
 
@@ -182,13 +149,8 @@ class TestMinHash:
         )
         for family in ("md5", "xxhash"):
             calls[0] = 0
-            minhash_signature_from_text(
-                docs, ["doc_id"], "text", 5, 128, downsample=4, family=family
-            )
+            minhash_signature_from_text(docs, ["doc_id"], downsample=4, family=family)
             assert calls[0] < 1000, (family, "text", calls[0])
-            calls[0] = 0
-            minhash_signature_df(arr, ["doc_id"], n_perm=128, family=family)
-            assert calls[0] < 1000, (family, "shingles", calls[0])
 
     def test_lsh_pairs_subset_of_bruteforce(self, spark, tmp_path):
         # LSH candidates (verified ≥ threshold) ⊆ brute-force pairs on
@@ -767,12 +729,6 @@ class TestFamilyPlantedCollisions:
 
     def test_candidates_differ_both_directions(self, spark, crafted_dir):
         from hive_hdfs_practise_spark.dedup import minhash as mh
-        from hive_hdfs_practise_spark.plans.dedup import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
 
         docs = spark.read.parquet(f"{crafted_dir}/documents.parquet").select(
             "doc_id", "text"
@@ -780,14 +736,11 @@ class TestFamilyPlantedCollisions:
 
         def candidates(family):
             sigs = mh.minhash_signature_from_text(
-                docs, ["doc_id"], "text", SHINGLE_K, N_PERM,
-                downsample=4, family=family,
+                docs, ["doc_id"], downsample=4, family=family
             )
             return {
                 (r.doc_a, r.doc_b)
-                for r in mh.lsh_candidate_pairs(
-                    sigs, N_BANDS, ROWS_PER_BAND, family=family
-                ).collect()
+                for r in mh.lsh_candidate_pairs(sigs, family=family).collect()
             }
 
         cm, cx = candidates("md5"), candidates("xxhash")
@@ -1609,25 +1562,12 @@ class TestIndexCompact:
             compact_bucketed_table,
             table_location,
         )
-        from hive_hdfs_practise_spark.plans.constants import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
         from hive_hdfs_practise_spark.plans.dedup import _probe_delta_col
         from hive_hdfs_practise_spark.sources.catalog import wide_table
 
         sf = "/root/testdata/sf0.001"
         d = wide_table(spark, sf, "documents").select("doc_id", "text")
-        kw = dict(
-            k=SHINGLE_K,
-            n_perm=N_PERM,
-            n_bands=N_BANDS,
-            rows_per_band=ROWS_PER_BAND,
-            downsample=4,
-            family="md5",
-        )
+        kw = dict(downsample=4, family="md5")
         mh.write_minhash_index(
             spark, d.filter(~_probe_delta_col()), "minhash_cpt_test_idx",
             **kw,
@@ -1835,12 +1775,6 @@ class TestIndexDelete:
         from hive_hdfs_practise_spark.operators.compaction import (
             table_location,
         )
-        from hive_hdfs_practise_spark.plans.constants import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
         from hive_hdfs_practise_spark.plans.dedup import (
             DELETE_NIBBLE,
             _indexed_pairs,
@@ -1849,10 +1783,7 @@ class TestIndexDelete:
 
         sf = "/root/testdata/sf0.001"
         d = wide_table(spark, sf, "documents").select("doc_id", "text")
-        kw = dict(
-            k=SHINGLE_K, n_perm=N_PERM, n_bands=N_BANDS,
-            rows_per_band=ROWS_PER_BAND, downsample=4, family="md5",
-        )
+        kw = dict(downsample=4, family="md5")
         mh.write_minhash_index(spark, d, "minhash_del_test_idx", **kw)
 
         def snap(suffix):
@@ -1923,12 +1854,6 @@ class TestIndexDelete:
         any vacuum."""
         from hive_hdfs_practise_spark import plans as P
         from hive_hdfs_practise_spark.dedup import minhash as mh
-        from hive_hdfs_practise_spark.plans.constants import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
         from hive_hdfs_practise_spark.plans.dedup import probe_minhash_index
         from hive_hdfs_practise_spark.sources.catalog import wide_table
 
@@ -1940,8 +1865,7 @@ class TestIndexDelete:
         d = wide_table(spark, sf, "documents").select("doc_id", "text")
         prefix = "minhash_probe_del_test_idx"
         mh.write_minhash_index(
-            spark, d.filter(F.col("doc_id") != a), prefix, k=SHINGLE_K,
-            n_perm=N_PERM, n_bands=N_BANDS, rows_per_band=ROWS_PER_BAND,
+            spark, d.filter(F.col("doc_id") != a), prefix,
             downsample=4, family="md5",
         )
 
@@ -1966,12 +1890,6 @@ class TestIndexVacuum:
 
     def test_vacuum_parity_and_cleanup(self, spark):
         from hive_hdfs_practise_spark.dedup import minhash as mh
-        from hive_hdfs_practise_spark.plans.constants import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
         from hive_hdfs_practise_spark.plans.dedup import (
             DELETE_NIBBLE,
             _indexed_pairs,
@@ -1980,10 +1898,7 @@ class TestIndexVacuum:
 
         sf = "/root/testdata/sf0.001"
         d = wide_table(spark, sf, "documents").select("doc_id", "text")
-        kw = dict(
-            k=SHINGLE_K, n_perm=N_PERM, n_bands=N_BANDS,
-            rows_per_band=ROWS_PER_BAND, downsample=4, family="md5",
-        )
+        kw = dict(downsample=4, family="md5")
         mh.write_minhash_index(spark, d, "minhash_vac_test_idx", **kw)
         nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         deleted = d.where(nib == DELETE_NIBBLE).select("doc_id")

@@ -12,7 +12,7 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from hive_hdfs_practise_spark.dedup.minhash import minhash_signature_df
+from hive_hdfs_practise_spark.dedup.minhash import SHINGLE_K, minhash_signature_from_text
 from hive_hdfs_practise_spark.functions import text as tx
 from hive_hdfs_practise_spark.operators.asof import asof_join
 
@@ -37,12 +37,12 @@ class TestMinhashEstimate:
     def test_signature_agreement_tracks_jaccard(self, spark, pair):
         a, b = pair
         df = spark.createDataFrame([(0, a), (1, b)], "doc_id LONG, text STRING")
-        sh = df.select("doc_id", tx.char_shingles(F.col("text"), 4).alias("shingles"))
+        sh = df.select("doc_id", tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles"))
         rows = {r.doc_id: set(r.shingles) for r in sh.collect()}
         inter = len(rows[0] & rows[1])
         union = len(rows[0] | rows[1]) or 1
         true_j = inter / union
-        sigs = {r.doc_id: r.sig for r in minhash_signature_df(sh, ["doc_id"]).collect()}
+        sigs = {r.doc_id: r.sig for r in minhash_signature_from_text(df, ["doc_id"]).collect()}
         est = sum(x == y for x, y in zip(sigs[0], sigs[1])) / len(sigs[0])
         # 128 perms → std ≈ sqrt(j(1-j)/128) ≤ 0.045; allow 4σ
         assert abs(est - true_j) < 0.2

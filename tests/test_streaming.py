@@ -485,7 +485,7 @@ class TestStreamMinhashDedup:
         jvm = {
             r.doc_id: list(r.sig)
             for r in mh.minhash_signature_from_text(
-                d, ["doc_id"], "text", 5, 128, downsample=4, family="md5"
+                d, ["doc_id"], downsample=4, family="md5"
             ).collect()
         }
         texts = {r.doc_id: r.text for r in d.collect()}
@@ -601,29 +601,6 @@ class TestStreamMinhashDedup:
         # the split is only meaningful if some verified pair straddles
         # the trigger boundary
         assert any(a <= split_at < b for a, b, _ in got)
-
-    @pytest.mark.parametrize("raw", ["0", "-4", "abc", "2.5"])
-    def test_invalid_state_shards_rejected(self, monkeypatch, raw):
-        """0 would make the shard key pmod(x, 0) and a negative count
-        negative shard keys: the knob is rejected by name."""
-        from hive_hdfs_practise_spark.streaming.minhash_stream import (
-            _state_shards,
-        )
-
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", raw)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_SHARDS"):
-            _state_shards()
-
-    def test_state_shards_default_and_override(self, monkeypatch):
-        from hive_hdfs_practise_spark.streaming.minhash_stream import (
-            _state_shards,
-        )
-
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_SHARDS", raising=False)
-        assert _state_shards() == 256
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", "1024")
-        assert _state_shards() == 1024
-
 
 class TestStreamKmvDistinct:
     """r8: stream_kmv_distinct_users — the streaming KMV estimate
@@ -1381,21 +1358,12 @@ class TestStreamIndexAppend:
         from hive_hdfs_practise_spark.operators.compaction import (
             table_location,
         )
-        from hive_hdfs_practise_spark.plans.constants import (
-            N_BANDS,
-            N_PERM,
-            ROWS_PER_BAND,
-            SHINGLE_K,
-        )
         from hive_hdfs_practise_spark.plans.dedup import (
             _indexed_pairs,
             _probe_delta_col,
         )
 
-        kw = dict(
-            k=SHINGLE_K, n_perm=N_PERM, n_bands=N_BANDS,
-            rows_per_band=ROWS_PER_BAND, downsample=4, family="md5",
-        )
+        kw = dict(downsample=4, family="md5")
         d = table(spark, SF, "documents").select("doc_id", "text")
         corpus = d.filter(~_probe_delta_col())
         delta = d.filter(_probe_delta_col())
