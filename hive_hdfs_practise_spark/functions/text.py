@@ -56,22 +56,6 @@ def char_shingles(col: Column, k: int = 5) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct word k-grams (space-joined); fewer than k tokens →
-    empty array (same sequence(1,0) guard as char_shingles)."""
-    toks = tokens(col)
-    n = F.size(toks) - F.lit(k - 1)
-    return F.when(
-        n >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 # Quality / stats -------------------------------------------------------------
 
 # Public-domain-style English stopword core (used for quality ratio + lang id).
@@ -87,10 +71,6 @@ def punct_ratio(col: Column) -> Column:
 
 def digit_ratio(col: Column) -> Column:
     return F.when(F.length(col) > 0, F.regexp_count(col, F.lit(r"[0-9]")) / F.length(col)).otherwise(F.lit(0.0))
-
-
-def upper_ratio(col: Column) -> Column:
-    return F.when(F.length(col) > 0, F.regexp_count(col, F.lit(r"[A-Z]")) / F.length(col)).otherwise(F.lit(0.0))
 
 
 def stopword_ratio(col: Column) -> Column:

@@ -74,24 +74,6 @@ def pil_image_resizer() -> Callable[[bytes, int, int], bytes] | None:
 
     return resize
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("n_bytes", T.LongType(), True),
-                    T.StructField("source", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

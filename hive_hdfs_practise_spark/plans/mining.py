@@ -570,7 +570,6 @@ def part_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frequent word trigram (data-derived, so the query is meaningful and
 # non-empty at every sf), then its per-document occurrence counts —
 # the positional-postings join that phrase search engines run.
-PHRASE_LEN = 3
 
 
 @register(

@@ -169,38 +169,6 @@ def order_detail_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_detail_nested_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """query_movie detail analog, nested form: the join result is
-    re-nested as an ordered array of line structs — the reference
-    nests reviews into the movie dict (``DatabaseAccessor.py:44-47``
-    via the ORM relationship).
-
-    ``collect_list`` inside a group is unordered in Spark (partition
-    arrival order); ``array_sort`` on the struct (first field =
-    l_linenumber) makes it deterministic. This library form returns
-    the true nested ``array<struct>`` column; the *registered*
-    ``order_detail_nested`` below serializes it to JSON so the
-    driver's canonicalizer (pandas sort + hash) can handle the row —
-    lists are unhashable in pandas, so the raw nested form cannot be
-    value-checked.
-    """
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey").between(1000, 1100))
-    li = table(spark, sf_dir, "lineitem")
-    lines = F.array_sort(
-        F.collect_list(
-            F.struct(
-                "l_linenumber", "l_partkey", "l_quantity", "l_extendedprice"
-            )
-        )
-    )
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left")
-        .groupBy("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate")
-        .agg(lines.alias("lines"))
-        .withColumn("n_lines", F.size("lines"))
-    )
-
-
 @register(
     "order_detail_nested",
     oracle="""

@@ -611,7 +611,6 @@ def documents_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 # precedent): sqrt is IEEE-exact in both engines and the 9-dp
 # rounding kills merge-order ulp noise long before the integer
 # boundary.
-LANG_ALPHA_NOTE = "alpha = 0.5 (sqrt smoothing)"
 
 
 @register(

@@ -21,7 +21,7 @@ from . import event_oracles as EO
 from .registry import register
 
 
-def _stage_stream_dir(sf_dir: str, table_name: str, suffix: str = "") -> str:
+def _stage_stream_dir(sf_dir: str, table_name: str) -> str:
     """Directory a file-stream source can read ``table_name`` from.
 
     The source lists FILES under a directory (no recursion into
@@ -33,7 +33,8 @@ def _stage_stream_dir(sf_dir: str, table_name: str, suffix: str = "") -> str:
     silently sees zero input files (caught by the 10x scaling study,
     where streams read empty input and the upsert sink never
     materialized). Stale links from a previous run pointing at a
-    different path are replaced."""
+    different path are replaced. Each table gets its own stage
+    directory: the source reads every file in it."""
     import os
 
     target = f"{sf_dir}/{table_name}.parquet"
@@ -41,7 +42,7 @@ def _stage_stream_dir(sf_dir: str, table_name: str, suffix: str = "") -> str:
         return target
     stage = (
         "/tmp/spark_graft_stream/"
-        f"{os.path.basename(os.path.normpath(sf_dir))}{suffix}"
+        f"{os.path.basename(os.path.normpath(sf_dir))}_{table_name}"
     )
     os.makedirs(stage, exist_ok=True)
     link = f"{stage}/{table_name}.parquet"
@@ -52,12 +53,18 @@ def _stage_stream_dir(sf_dir: str, table_name: str, suffix: str = "") -> str:
     return stage
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _stage_stream_dir(sf_dir, "events")
-    raw = spark.readStream.schema(_EVENTS_RAW_SCHEMA).parquet(src)
-    return raw.withColumn(
-        "ts", F.timestamp_micros(events_ts_micros(events_ts_unit(sf_dir)))
-    )
+def _file_stream(spark: SparkSession, sf_dir: str, table_name: str) -> DataFrame:
+    """``table_name`` as a bounded file stream. Events are read with
+    the raw INT64 ``ts`` schema and converted like the batch reader in
+    ``sources/catalog.py``; other tables take the batch file's schema."""
+    src = _stage_stream_dir(sf_dir, table_name)
+    if table_name == "events":
+        raw = spark.readStream.schema(_EVENTS_RAW_SCHEMA).parquet(src)
+        return raw.withColumn(
+            "ts", F.timestamp_micros(events_ts_micros(events_ts_unit(sf_dir)))
+        )
+    schema = spark.read.parquet(f"{sf_dir}/{table_name}.parquet").schema
+    return spark.readStream.schema(schema).parquet(src)
 
 
 @register("stream_hourly_tumbling", oracle=EO.HOURLY_TUMBLING)
@@ -66,7 +73,7 @@ def stream_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENGINE: readStream → watermark → window agg → availableNow →
     memory sink. On bounded input this must equal the batch twin
     (asserted in tests/test_streaming.py)."""
-    stream = _events_stream(spark, sf_dir)
+    stream = _file_stream(spark, sf_dir, "events")
     out = tumbling_counts(stream, "1 hour", "2 hours")
     return run_available_now(out, "stream_hourly_tumbling", "complete").select(
         "window_start", "event_type", "n_events", "total_value"
@@ -106,10 +113,10 @@ def stream_liveness_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states. (Multi-file sources stay single-batch under the
     default maxFilesPerTrigger=1000; a >1000-file directory would
     split batches and partial Alive counts would differ.)"""
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("node"), F.col("ts").alias("event_ts")
     )
-    out = liveness_transitions(stream, timeout_ms=72 * 3600 * 1000, time_mode="event")
+    out = liveness_transitions(stream, timeout_ms=72 * 3600 * 1000)
     return run_available_now(out, "stream_liveness_transitions", "append")
 
 
@@ -120,7 +127,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the KEY COLUMNS ONLY so the result is deterministic on
     bounded input (which physical row arrives first is not); equals
     the batch distinct of the same keys — asserted in tests."""
-    stream = _events_stream(spark, sf_dir).select("user_id", "event_type")
+    stream = _file_stream(spark, sf_dir, "events").select("user_id", "event_type")
     out = stream.dropDuplicates(["user_id", "event_type"])
     return run_available_now(out, "stream_dedup_keys", "append")
 
@@ -132,7 +139,7 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded streaming form of events_click_purchase_join. On bounded
     input the result set equals the batch twin (asserted in tests).
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = _file_stream(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(
@@ -177,7 +184,7 @@ def stream_enriched_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin events_enriched_nation (asserted in tests)."""
     from ..sources.catalog import table
 
-    ev = _events_stream(spark, sf_dir)
+    ev = _file_stream(spark, sf_dir, "events")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     joined = (
@@ -209,7 +216,7 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import run_upsert_stream
 
     work = tempfile.mkdtemp(prefix="stream_upsert_")
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     run_upsert_stream(stream, f"{work}/state", f"{work}/ckpt")
@@ -260,7 +267,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     restatement (also asserted in tests)."""
     from ..streaming.windows import session_aggregate
 
-    stream = _events_stream(spark, sf_dir)
+    stream = _file_stream(spark, sf_dir, "events")
     out = session_aggregate(stream, "30 minutes", "2 hours")
     return run_available_now(out, "stream_session_windows", "complete").select(
         "session_start", "session_end", "user_id", "n_events"
@@ -298,7 +305,7 @@ def stream_sliding_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete mode on bounded input."""
     from ..streaming.windows import sliding_rate
 
-    stream = _events_stream(spark, sf_dir)
+    stream = _file_stream(spark, sf_dir, "events")
     out = sliding_rate(stream, "1 hour", "15 minutes", "2 hours")
     return run_available_now(out, "stream_sliding_rate", "complete").select(
         "window_start", "event_type", "n_events"
@@ -318,19 +325,11 @@ def stream_pattern_browse_buy(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a time boundary, exercising state carried across batches)."""
     from ..streaming.patterns import browse_buy_matches
 
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
     out = browse_buy_matches(stream)
     return run_available_now(out, "stream_pattern_browse_buy", "append")
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a bounded file stream (see
-    ``_stage_stream_dir`` for the single-file staging dance)."""
-    src = _stage_stream_dir(sf_dir, "documents", suffix="_documents")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return spark.readStream.schema(schema).parquet(src)
 
 
 def _stream_url_dedup_oracle() -> str:
@@ -356,7 +355,7 @@ def stream_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/urls.py — shared verbatim, the two cannot drift)."""
     from ..functions.urls import canonical_urls, synth_url_col
 
-    stream = _documents_stream(spark, sf_dir).select("doc_id", "source")
+    stream = _file_stream(spark, sf_dir, "documents").select("doc_id", "source")
     keys = canonical_urls(stream.select("doc_id", synth_url_col().alias("url")))
     out = keys.select("canonical_url").dropDuplicates(["canonical_url"])
     return run_available_now(out, "stream_url_dedup", "append")
@@ -404,7 +403,7 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.kmv_stream import kmv_running_state
     from .distinct import KMV_K, _KMV_H
 
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         "event_type", F.expr(_KMV_H.replace("VARCHAR", "STRING")).alias("hv")
     )
     snaps = kmv_running_state(stream, KMV_K)
@@ -445,7 +444,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.minhash_stream import minhash_candidates
     from .dedup import exact_jaccard_pairs
 
-    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = _file_stream(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = minhash_candidates(stream)
     sunk = run_available_now(pairs, "stream_dedup_minhash", "append")
     cand = sunk.select("doc_a", "doc_b").distinct()
@@ -484,7 +483,7 @@ def stream_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cascade_funnel,
     )
 
-    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = _file_stream(spark, sf_dir, "documents").select("doc_id", "text")
     agg = cascade_flag_counts(stream)
     sunk = run_available_now(agg, "stream_filter_cascade", "complete")
     return _cascade_funnel(spark, sunk)
@@ -592,7 +591,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.transitions import transition_pairs
 
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
     pairs = transition_pairs(stream)
@@ -649,7 +648,7 @@ def stream_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     so on bounded input the counts EQUAL an aggregate over
     documents_gopher_rules — which is exactly what the oracle
     restates."""
-    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = _file_stream(spark, sf_dir, "documents").select("doc_id", "text")
     agg = gopher_rule_counts(stream)
     return run_available_now(agg, "stream_gopher_rules", "complete")
 
@@ -715,17 +714,9 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — the oracle. Quantizer collects at plan time:
     BUILD_EXECUTES."""
     agg = ivf_assign_counts(
-        _embeddings_stream(spark, sf_dir), spark, sf_dir
+        _file_stream(spark, sf_dir, "embeddings"), spark, sf_dir
     )
     return run_available_now(agg, "stream_ivf_assign", "complete")
-
-
-def _embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings.parquet as a bounded file stream (the
-    _documents_stream staging dance)."""
-    src = _stage_stream_dir(sf_dir, "embeddings", suffix="_embeddings")
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    return spark.readStream.schema(schema).parquet(src)
 
 
 def ivf_assign_counts(
@@ -802,7 +793,7 @@ def stream_decontamination_bloom(
     from .sampling_plans import bloom_filter_words
 
     filt = bloom_filter_words(wide_table(spark, sf_dir, "documents"))
-    agg = bloom_decon_counts(_documents_stream(spark, sf_dir), filt)
+    agg = bloom_decon_counts(_file_stream(spark, sf_dir, "documents"), filt)
     return run_available_now(
         agg, "stream_decontamination_bloom", "complete"
     )
@@ -858,7 +849,7 @@ def stream_rate_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_rate_cusum: events table is empty — no hour grid"
         )
     h0, h1 = int(b.h0), int(b.h1)
-    stream = _events_stream(spark, sf_dir).select(
+    stream = _file_stream(spark, sf_dir, "events").select(
         "event_type", F.expr(eh_of).alias("eh")
     )
     out = cusum_running_state(stream, h0, CUSUM_K, CUSUM_H)
@@ -990,7 +981,7 @@ def stream_minhash_index_append(
         )
 
     delta_stream = (
-        _documents_stream(spark, sf_dir)
+        _file_stream(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .where(_probe_delta_col())
     )
@@ -1065,7 +1056,7 @@ def stream_ivf_index_append(
             return
         append_ivf_index(spark, batch_df, "ivf_stream_idx")
 
-    delta_stream = _embeddings_stream(spark, sf_dir).where(nib == "0")
+    delta_stream = _file_stream(spark, sf_dir, "embeddings").where(nib == "0")
     run_foreach_batch(delta_stream, _append, "stream_ivf_index_append")
     spark.sql("REFRESH TABLE ivf_stream_idx_assign")
     return knn_ivf_indexed(

@@ -7,7 +7,7 @@ exceeds H.
 Shape: hour buckets are computed by a stateless engine expression
 (date_trunc-equivalent epoch-hour longs — identical to the batch
 twin's grid key in any session timezone with whole-hour offset);
-``applyInPandasWithState`` keyed by event_type carries (open_h, cs,
+``a ``keyed_state`` fold keyed by event_type carries (open_h, cs,
 mn, pend) — the first NOT-YET-FINALIZED hour, the running sum of
 (n − K) and its prefix minimum through the last finalized hour, and
 the open hour's accumulated count. An hour is finalized only when a
@@ -37,12 +37,10 @@ silently diverging from the batch twin.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import keyed_state
 
 CUSUM_OUT_SCHEMA = T.StructType(
     [
@@ -69,57 +67,53 @@ CUSUM_STATE_SCHEMA = T.StructType(
 )
 
 
-def _walk_factory(h0: int, k: int, thresh: int):
-    def _walk(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
+def cusum_running_state(
+    ehs: DataFrame, h0: int, k: int, thresh: int
+) -> DataFrame:
+    """ehs(event_type, eh) stream → detections + per-batch state
+    snapshots (see module docstring)."""
+
+    def walk(key, rows, state):
         (event_type,) = key
-        open_h, cs, mn, pend, upd, stale = (
-            state.get if state.exists else (h0, 0, 0, 0, 0, 0)
-        )
-        counts: dict[int, int] = {}
-        for pdf in pdfs:
-            # vectorized per-batch hour histogram (r11 review: a
-            # Python per-event loop was the stream's hot path)
-            for h, c in pdf["eh"].value_counts().items():
-                counts[int(h)] = counts.get(int(h), 0) + int(c)
+        open_h, cs, mn, pend, upd, stale = state
+        # vectorized per-batch hour histogram (a Python per-event
+        # loop was the stream's hot path)
+        counts = {int(h): int(c) for h, c in rows["eh"].value_counts().items()}
         out = []
         # events for hours BEFORE the open hour violate the source's
         # monotone-hour contract; count them so a mis-ordered source
         # is observable in the snapshot row instead of silently
-        # diverging from the batch twin (r11 advice)
+        # diverging from the batch twin
         stale += sum(c for h, c in counts.items() if h < open_h)
-        if counts:
-            maxh = max(counts)
-            if maxh > open_h:
-                # finalize open_h .. maxh-1; maxh stays open
-                counts[open_h] = counts.get(open_h, 0) + pend
-                for h in range(open_h, maxh):
-                    n = counts.get(h, 0)
-                    cs += n - k
-                    mn = min(mn, cs)
-                    cusum = cs - min(mn, 0)
-                    if cusum > thresh:
-                        out.append(
-                            {
-                                "event_type": event_type,
-                                "eh": h,
-                                "n": n,
-                                "cusum": cusum,
-                                "pend": 0,
-                                "upd": upd + 1,
-                                "stale": stale,
-                                "is_state": False,
-                            }
-                        )
-                pend = counts.get(maxh, 0)
-                open_h = maxh
-            else:
-                # everything lands in (or before — dropped) the open
-                # hour; the pointer never moves backward
-                pend += counts.get(open_h, 0)
+        maxh = max(counts, default=open_h)  # null-ts rows have no hour
+        if maxh > open_h:
+            # finalize open_h .. maxh-1; maxh stays open
+            counts[open_h] = counts.get(open_h, 0) + pend
+            for h in range(open_h, maxh):
+                n = counts.get(h, 0)
+                cs += n - k
+                mn = min(mn, cs)
+                cusum = cs - min(mn, 0)
+                if cusum > thresh:
+                    out.append(
+                        {
+                            "event_type": event_type,
+                            "eh": h,
+                            "n": n,
+                            "cusum": cusum,
+                            "pend": 0,
+                            "upd": upd + 1,
+                            "stale": stale,
+                            "is_state": False,
+                        }
+                    )
+            pend = counts.get(maxh, 0)
+            open_h = maxh
+        else:
+            # everything lands in (or before — dropped) the open hour;
+            # the pointer never moves backward
+            pend += counts.get(open_h, 0)
         upd += 1
-        state.update((open_h, cs, mn, pend, upd, stale))
         # snapshot row: eh carries open_h, n carries cs, cusum carries
         # mn, pend carries the open hour's count so far (documented
         # column reuse — cusum_finalize is the only reader)
@@ -135,30 +129,13 @@ def _walk_factory(h0: int, k: int, thresh: int):
                 "is_state": True,
             }
         )
-        yield pd.DataFrame(out).astype(
-            {
-                "eh": "int64",
-                "n": "int64",
-                "cusum": "int64",
-                "pend": "int64",
-                "upd": "int64",
-                "stale": "int64",
-                "is_state": "bool",
-            }
-        )
+        return (open_h, cs, mn, pend, upd, stale), out
 
-    return _walk
-
-
-def cusum_running_state(
-    ehs: DataFrame, h0: int, k: int, thresh: int
-) -> DataFrame:
-    """ehs(event_type, eh) stream → detections + per-batch state
-    snapshots (see module docstring)."""
-    return ehs.groupBy("event_type").applyInPandasWithState(
-        _walk_factory(h0, k, thresh),
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        ehs,
+        ["event_type"],
+        walk,
+        CUSUM_OUT_SCHEMA,
+        CUSUM_STATE_SCHEMA,
+        (h0, 0, 0, 0, 0, 0),
     )

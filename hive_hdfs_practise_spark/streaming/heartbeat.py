@@ -7,20 +7,12 @@ node and flips it to Dead after 25 s of silence
 (``Server/managers.py:44-62``), never scheduling work to Dead nodes.
 
 Engine form: a stateful stream over (node, event_ts) heartbeats.
-State per node = last seen timestamp + current status;
-``applyInPandasWithState`` emits Alive→Dead / Dead→Alive
-TRANSITIONS (the actionable events the reference logs), not raw
-state. Arrow-batched — the Python hop is per GROUP per trigger, not
-per row.
-
-Timeout clock choice:
-- ``event`` (default): EventTimeTimeout — Dead fires when the
-  WATERMARK passes last_seen + timeout. Deterministic with respect
-  to the data (same input → same transitions), which is what tests
-  and the driver's bounded availableNow runs need.
-- ``processing``: ProcessingTimeTimeout — wall-clock silence, the
-  live-cluster deployment mode matching the reference's real-time
-  25 s rule. Output depends on wall time by construction.
+State per node = last seen timestamp + beat count + current status;
+a ``keyed_state`` fold emits Alive→Dead / Dead→Alive TRANSITIONS
+(the actionable events the reference logs), not raw state.
+Arrow-batched — the Python hop is per GROUP per trigger, not per
+row. Dead fires on an event-time timeout: when the WATERMARK passes
+last_seen + timeout, so the same input gives the same transitions.
 
 The same classification rule is exposed in batch form below
 (``liveness_snapshot``) and as the oracle-checked
@@ -29,13 +21,12 @@ The same classification rule is exposed in batch form below
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import keyed_state
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -54,91 +45,44 @@ STATE_SCHEMA = T.StructType(
     ]
 )
 
+# event-time slack before the watermark passes a beat; the
+# stream_liveness_transitions oracle restates it as ``- 1000`` ms
+WATERMARK_DELAY = "1 second"
 
-def _track(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    timeout_ms: int,
-    event_time: bool,
-) -> Iterable[pd.DataFrame]:
+
+def _track(key: tuple, rows: pd.DataFrame | None, state: tuple):
     (node,) = key
-    last_us, n_beats, dead = state.get if state.exists else (0, 0, True)
-
-    if state.hasTimedOut:
+    last_us, n_beats, dead = state
+    if rows is None:
         # silence past the threshold → Dead transition (ref: 25 s)
-        state.update((last_us, n_beats, True))
-        yield pd.DataFrame(
-            [
-                {
-                    "node": node,
-                    "status": "Dead",
-                    "last_ts": pd.Timestamp(last_us, unit="us"),
-                    "n_beats": n_beats,
-                }
-            ]
-        )
-        return
-
-    max_ts = None
-    new = 0
-    for pdf in pdfs:
-        if len(pdf):
-            m = pdf["event_ts"].max()
-            max_ts = m if max_ts is None else max(max_ts, m)
-            new += len(pdf)
-    if max_ts is not None:
-        last_us = max(last_us, int(max_ts.value // 1000))
-        n_beats += new
-    was_dead = dead
-    state.update((last_us, n_beats, False))
-    if event_time:
-        state.setTimeoutTimestamp(last_us // 1000 + timeout_ms)
-    else:
-        state.setTimeoutDuration(timeout_ms)
-    if was_dead:
-        yield pd.DataFrame(
-            [
-                {
-                    "node": node,
-                    "status": "Alive",
-                    "last_ts": pd.Timestamp(last_us, unit="us"),
-                    "n_beats": n_beats,
-                }
-            ]
-        )
+        return (last_us, n_beats, True), [_status(node, "Dead", last_us, n_beats)]
+    last_us = max(last_us, int(rows["event_ts"].max().value // 1000))
+    n_beats += len(rows)
+    out = [_status(node, "Alive", last_us, n_beats)] if dead else []
+    return (last_us, n_beats, False), out
 
 
-def liveness_transitions(
-    heartbeats: DataFrame,
-    timeout_ms: int = 25_000,
-    time_mode: str = "event",
-    watermark_delay: str = "1 second",
-) -> DataFrame:
+def _status(node: str, status: str, last_us: int, n_beats: int) -> dict:
+    return {
+        "node": node,
+        "status": status,
+        "last_ts": pd.Timestamp(last_us, unit="us"),
+        "n_beats": n_beats,
+    }
+
+
+def liveness_transitions(heartbeats: DataFrame, timeout_ms: int = 25_000) -> DataFrame:
     """heartbeats(node: string, event_ts: timestamp) → stream of
-    Alive/Dead status transitions. ``time_mode='event'`` is
-    deterministic (timeouts fire via watermark); ``'processing'``
-    uses wall-clock silence like the reference's live monitor."""
-    event_time = time_mode == "event"
-
-    def track(key, pdfs, state):
-        return _track(key, pdfs, state, timeout_ms, event_time)
-
-    src = (
-        heartbeats.withWatermark("event_ts", watermark_delay)
-        if event_time
-        else heartbeats
-    )
-    return src.groupBy("node").applyInPandasWithState(
-        track,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if event_time
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    Alive/Dead status transitions; a node is Dead once the watermark
+    passes its last beat + ``timeout_ms``."""
+    return keyed_state(
+        heartbeats.withWatermark("event_ts", WATERMARK_DELAY),
+        ["node"],
+        _track,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        (0, 0, True),
+        expire_at=lambda st: st[0] // 1000 + timeout_ms,
     )
 
 

@@ -7,7 +7,7 @@ after the last micro-batch equals the batch sketch exactly.
 
 Shape: the (0,1] md5 hash is computed by the SAME JVM expression the
 batch twin uses (a stateless streaming select — bit-identical
-doubles); ``applyInPandasWithState`` keyed by event_type merges each
+doubles); a ``keyed_state`` fold keyed by event_type merges each
 batch's hashes into the sorted min-K state and emits the running
 (n_state, h_k) per touched key with an update counter; downstream of
 the sink the LAST emission per key wins (max_by on the counter) and
@@ -18,12 +18,10 @@ from Spark/DuckDB HALF_UP).
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import keyed_state
 
 KMV_OUT_SCHEMA = T.StructType(
     [
@@ -42,39 +40,22 @@ KMV_STATE_SCHEMA = T.StructType(
 )
 
 
-def _merge_factory(k: int):
-    def _merge(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (event_type,) = key
-        hvs, upd = state.get if state.exists else ([], 0)
-        vals = set(hvs)
-        for pdf in pdfs:
-            vals.update(float(v) for v in pdf["hv"])
-        merged = sorted(vals)[:k]
-        upd += 1
-        state.update((merged, upd))
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "upd": upd,
-                    "n_state": len(merged),
-                    "hk": merged[k - 1] if len(merged) >= k else None,
-                }
-            ]
-        ).astype({"upd": "int64", "n_state": "int64"})
-
-    return _merge
-
-
 def kmv_running_state(hashed: DataFrame, k: int) -> DataFrame:
     """hashed(event_type, hv) stream → stream of per-key running
     sketch snapshots (one per touched key per micro-batch)."""
-    return hashed.groupBy("event_type").applyInPandasWithState(
-        _merge_factory(k),
-        outputStructType=KMV_OUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def merge(key, rows, state):
+        (event_type,) = key
+        hvs, upd = state
+        merged = sorted(set(hvs).union(float(v) for v in rows["hv"]))[:k]
+        out = {
+            "event_type": event_type,
+            "upd": upd + 1,
+            "n_state": len(merged),
+            "hk": merged[k - 1] if len(merged) >= k else None,
+        }
+        return (merged, upd + 1), [out]
+
+    return keyed_state(
+        hashed, ["event_type"], merge, KMV_OUT_SCHEMA, KMV_STATE_SCHEMA, ([], 0)
     )

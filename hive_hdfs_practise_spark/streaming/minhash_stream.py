@@ -7,7 +7,7 @@ Shape: a stateless ``mapInPandas`` computes each arriving doc's
 (vectorized numpy over the SAME md5-nibble base hash, permutation
 coefficients, downsample filter, and band-key text as the batch JVM
 aggregate — bit-identical signatures, pinned by test); then
-``applyInPandasWithState`` keyed by (band, shard-of-band_key) holds
+a ``keyed_state`` fold keyed by (band, shard-of-band_key) holds
 the (band_key, doc_id, signature) sets of every bucket hashing into
 the shard across micro-batches and emits a candidate pair whenever
 an arriving doc collides with a stored same-bucket one (or another
@@ -41,7 +41,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..dedup.minhash import P32, _COEFFS
 from ..plans.constants import (
@@ -51,6 +50,7 @@ from ..plans.constants import (
     ROWS_PER_BAND,
     SHINGLE_K,
 )
+from .state import keyed_state
 
 DOWNSAMPLE = 4  # the batch twin's winnowing factor
 
@@ -207,9 +207,7 @@ def signature_bands(pdfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
             )
 
 
-def _collide(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _collide(key: tuple, rows: pd.DataFrame, state: tuple):
     """Per-SHARD pairing with the batch twin's agreement prefilter.
     One state group holds every bucket of its (band, shard); inside
     it, an arriving doc pairs against every doc already stored under
@@ -221,40 +219,34 @@ def _collide(
     Cross-band duplicate emissions are deduped downstream, exactly
     like the batch pipeline's distinct. Stored signatures parse
     lazily — only buckets an arrival actually hits pay the split."""
-    bkeys, ids, sigs = state.get if state.exists else ([], [], [])
-    bkeys, ids, sigs = list(bkeys), list(ids), list(sigs)
+    bkeys, ids, sigs = (list(col) for col in state)
     buckets: dict[str, list[int]] = {}
     for i, bk in enumerate(bkeys):
         buckets.setdefault(bk, []).append(i)
     mats: list[np.ndarray | None] = [None] * len(ids)
     cutoff = JACCARD_THRESHOLD - 0.15
     out: list[dict] = []
-    for pdf in pdfs:
-        for bk, doc_id, sig_str in zip(
-            pdf["band_key"], pdf["doc_id"], pdf["sig"]
-        ):
-            sv = np.array(sig_str.split(","), dtype=np.int64)
-            members = buckets.setdefault(bk, [])
-            for i in members:
-                other = ids[i]
-                if other == doc_id:
-                    continue
-                om = mats[i]
-                if om is None:
-                    om = np.array(sigs[i].split(","), dtype=np.int64)
-                    mats[i] = om
-                est = int((sv == om).sum()) / N_PERM
-                if est >= cutoff:
-                    a, b = sorted((int(other), int(doc_id)))
-                    out.append({"doc_a": a, "doc_b": b})
-            members.append(len(ids))
-            bkeys.append(str(bk))
-            ids.append(int(doc_id))
-            sigs.append(str(sig_str))
-            mats.append(sv)
-    state.update((bkeys, ids, sigs))
-    if out:
-        yield pd.DataFrame(out).astype({"doc_a": "int64", "doc_b": "int64"})
+    for bk, doc_id, sig_str in zip(rows["band_key"], rows["doc_id"], rows["sig"]):
+        sv = np.array(sig_str.split(","), dtype=np.int64)
+        members = buckets.setdefault(bk, [])
+        for i in members:
+            other = ids[i]
+            if other == doc_id:
+                continue
+            om = mats[i]
+            if om is None:
+                om = np.array(sigs[i].split(","), dtype=np.int64)
+                mats[i] = om
+            est = int((sv == om).sum()) / N_PERM
+            if est >= cutoff:
+                a, b = sorted((int(other), int(doc_id)))
+                out.append({"doc_a": a, "doc_b": b})
+        members.append(len(ids))
+        bkeys.append(str(bk))
+        ids.append(int(doc_id))
+        sigs.append(str(sig_str))
+        mats.append(sv)
+    return (bkeys, ids, sigs), out
 
 
 def minhash_candidates(docs: DataFrame) -> DataFrame:
@@ -276,10 +268,6 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     sharded = banded.withColumn(
         "shard", F.pmod(F.xxhash64("band_key"), F.lit(N_STATE_SHARDS))
     )
-    return sharded.groupBy("band", "shard").applyInPandasWithState(
-        _collide,
-        outputStructType=PAIR_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        sharded, ["band", "shard"], _collide, PAIR_SCHEMA, STATE_SCHEMA, ([], [], [])
     )

@@ -22,12 +22,12 @@ buffer in front (the standard sessionization pre-stage).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import keyed_state
 
 PATTERN_OUTPUT_SCHEMA = T.StructType(
     [
@@ -51,15 +51,10 @@ PATTERN_STATE_SCHEMA = T.StructType(
 )
 
 
-def _match(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _match(key: tuple, rows: pd.DataFrame, state: tuple):
     (user_id,) = key
-    has_click, click_us, n_views, vmicro = (
-        state.get if state.exists else (False, 0, 0, 0)
-    )
+    has_click, click_us, n_views, vmicro = state
     out: list[dict] = []
-    rows = pd.concat(list(pdfs), ignore_index=True)
     rows = rows.sort_values(["ts", "event_id"])
     for ts, event_id, etype, value in zip(
         rows["ts"], rows["event_id"], rows["event_type"], rows["value"]
@@ -101,21 +96,18 @@ def _match(
             has_click, click_us, n_views, vmicro = True, ts_us, 0, 0
         else:  # signup / error: abandon any pending prefix
             has_click, click_us, n_views, vmicro = False, 0, 0, 0
-    state.update((has_click, click_us, n_views, vmicro))
-    if out:
-        yield pd.DataFrame(out).astype(
-            {"n_views": "int32", "user_id": "int64", "end_event_id": "int64"}
-        )
+    return (has_click, click_us, n_views, vmicro), out
 
 
 def browse_buy_matches(events: DataFrame) -> DataFrame:
     """events(user_id, event_id, ts, event_type, value) stream →
     stream of completed click (view)* purchase matches with
     measures."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        ["user_id"],
         _match,
-        outputStructType=PATTERN_OUTPUT_SCHEMA,
-        stateStructType=PATTERN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        PATTERN_OUTPUT_SCHEMA,
+        PATTERN_STATE_SCHEMA,
+        (False, 0, 0, 0),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.upsert import upsert
+from .windows import run_foreach_batch
 
 UPSERT_KEYS = ["user_id", "event_type"]
 
@@ -51,10 +52,4 @@ def run_upsert_stream(
         merged = upsert(base, b, UPSERT_KEYS, "_ver").drop("_ver")
         merged.write.mode("overwrite").parquet(state_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, apply_batch, "upsert_stream", checkpoint_dir)

@@ -20,12 +20,11 @@ would put a watermark + sort buffer in front.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import keyed_state
 
 TRANSITION_OUTPUT_SCHEMA = T.StructType(
     [
@@ -44,18 +43,9 @@ TRANSITION_STATE_SCHEMA = T.StructType(
 )
 
 
-def _transitions(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _transitions(key: tuple, rows: pd.DataFrame, state: tuple):
     (user_id,) = key
-    last_ts_us, last_event_id, last_type = (
-        state.get if state.exists else (None, None, None)
-    )
-    frames = list(pdfs)
-    rows = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
-    if not rows.shape[0]:
-        # total even if a future timeoutConf invokes keys without data
-        return
+    last_ts_us, last_event_id, last_type = state
     rows = rows.sort_values(["ts", "event_id"])
     if last_ts_us is not None:
         head = rows.iloc[0]
@@ -75,26 +65,22 @@ def _transitions(
     from_type[0] = last_type
     mask = pd.notna(from_type)
     tail = rows.iloc[-1]
-    state.update(
-        (int(tail["ts"].value // 1000), int(tail["event_id"]), str(tail["event_type"]))
+    new = (int(tail["ts"].value // 1000), int(tail["event_id"]), str(tail["event_type"]))
+    if not mask.any():
+        return new, []
+    return new, pd.DataFrame(
+        {"user_id": user_id, "from_type": from_type[mask], "to_type": to_type[mask]}
     )
-    if mask.any():
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "from_type": from_type[mask],
-                "to_type": to_type[mask],
-            }
-        ).astype({"user_id": "int64"})
 
 
 def transition_pairs(events: DataFrame) -> DataFrame:
     """events(user_id, event_id, ts, event_type) stream → stream of
     consecutive (from_type, to_type) pairs per user."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        ["user_id"],
         _transitions,
-        outputStructType=TRANSITION_OUTPUT_SCHEMA,
-        stateStructType=TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        TRANSITION_OUTPUT_SCHEMA,
+        TRANSITION_STATE_SCHEMA,
+        (None, None, None),
     )

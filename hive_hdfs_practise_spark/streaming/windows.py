@@ -18,14 +18,13 @@ def tumbling_counts(
     events: DataFrame,
     window_len: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Tumbling window counts/sums with late-data bound. Watermark
     lets Spark expire window state — REQUIRED for unbounded streams
     (state would grow forever without it)."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.groupBy(F.window(ts_col, window_len).alias("win"), "event_type")
+        src.groupBy(F.window("ts", window_len).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -45,12 +44,11 @@ def sliding_rate(
     window_len: str = "1 hour",
     slide: str = "15 minutes",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Sliding-window event rate per type (alerting shape)."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.groupBy(F.window(ts_col, window_len, slide).alias("win"), "event_type")
+        src.groupBy(F.window("ts", window_len, slide).alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -64,13 +62,12 @@ def session_aggregate(
     events: DataFrame,
     gap: str = "30 minutes",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Session windows (inactivity gap) per user — the streaming
     twin of plans/events.py::events_sessionize."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.groupBy(F.session_window(ts_col, gap).alias("win"), "user_id")
+        src.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("session_start"),
@@ -102,20 +99,20 @@ def run_available_now(
     return spark.table(query_name)
 
 
-def run_foreach_batch(stream_df: DataFrame, fn, query_name: str) -> None:
+def run_foreach_batch(
+    stream_df: DataFrame, fn, query_name: str, checkpoint_dir: str | None = None
+) -> None:
     """Execute a streaming plan over all currently-available input
     (Trigger.availableNow), delivering each micro-batch DataFrame to
     ``fn(batch_df, batch_id)`` — the production sink shape for
     external-system writes (index appends, upserts, table
     maintenance): foreachBatch is the Structured Streaming idiom for
     sinks the engine has no native connector for, with the batch_id
-    available for the caller's own idempotence bookkeeping. A
-    temporary checkpoint is used (availableNow bounded runs — the
-    run_available_now pattern)."""
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    available for the caller's own idempotence bookkeeping. Without
+    ``checkpoint_dir`` a temporary checkpoint is used (availableNow
+    bounded runs — the run_available_now pattern); a sink whose
+    progress must survive a restart passes its own."""
+    w = stream_df.writeStream.foreachBatch(fn).queryName(query_name)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    w.trigger(availableNow=True).start().awaitTermination()

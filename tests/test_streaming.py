@@ -66,7 +66,7 @@ class TestLiveness:
         stream = spark.readStream.schema("node STRING, event_ts TIMESTAMP").parquet(
             staged
         )
-        out = liveness_transitions(stream, timeout_ms=25_000, time_mode="event")
+        out = liveness_transitions(stream, timeout_ms=25_000)
         got = run_available_now(out, "t_liveness_fixture", "append").collect()
         by_node = {}
         for r in got:
@@ -1541,3 +1541,34 @@ class TestStreamIvfIndexAppend:
             .collect()
         }
         assert got == want and got
+
+
+def test_one_state_call_site():
+    """Every stateful stream goes through ``streaming/state.py``: it is
+    the only module that calls ``applyInPandasWithState`` or imports
+    from ``pyspark.sql.streaming.state`` (names in docstrings and
+    comments do not count)."""
+    import ast
+    from pathlib import Path
+
+    import hive_hdfs_practise_spark
+
+    root = Path(hive_hdfs_practise_spark.__file__).parent
+    sites = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            calls_state = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "applyInPandasWithState"
+            )
+            imports_state = (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "pyspark.sql.streaming.state"
+            ) or (
+                isinstance(node, ast.Import)
+                and any(a.name == "pyspark.sql.streaming.state" for a in node.names)
+            )
+            if calls_state or imports_state:
+                sites.add(path.relative_to(root).as_posix())
+    assert sites == {"streaming/state.py"}
