@@ -13,12 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
-from hive_hdfs_practise_spark import plans  # noqa: E402
-from hive_hdfs_practise_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 
 # Headline set: scan-agg, multi-join, selective filter, window,
 # dedup (exact + LSH), similarity, text — the operator classes that
@@ -301,43 +299,10 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = -1.0
-    spark = get_spark("bench")
-
-    # warm-up: JVM + codegen + parquet footer caches
-    plans.QUERIES["q1_pricing_summary"](spark, sf_dir).collect()
-    # warm-up: Python worker pool + Arrow serialization path. The
-    # first Arrow-batched query in a session pays worker fork +
-    # Arrow init (~2s measured at sf0.1); that belongs to session
-    # startup, not to whichever mapInPandas query happens to run
-    # first in bench order (r2 attributed it to
-    # knn_brute_cosine_vectorized, reading as a bogus 4x regression).
-    spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long").collect()
-    # warm-up: micro-batch engine + state store init (~6 s measured
-    # on the first streaming query of a session); the stream_* bench
-    # lines should carry their per-query cost, not engine bring-up.
-    plans.QUERIES["stream_dedup_keys"](spark, sf_dir).collect()
-
-    # Best-of-2 per query: this host shows ~15% hypervisor CPU steal
-    # (/proc/stat), which lands as random multi-second stalls on
-    # whichever highly-parallel stage is running when the host
-    # contends — single runs made different queries look 2-4x slower
-    # on different bench invocations. The min of two runs measures
-    # the engine, not the neighbor; both runs execute the full plan
-    # (no caching between them beyond the session's parquet footers,
-    # which every run after the warm-ups shares anyway).
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        fn = plans.QUERIES[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).collect()
-            best = min(best, time.time() - t0)
-            # queries that persist() intermediates (the prefix join)
-            # must not hand their cache to the next run — best-of-2
-            # measures the engine, not the cache
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+    spark = measure.session("bench")
+    measure.warm_up(spark, sf_dir)
+    # best-of-2 wall of build + collect per query (see measure.run)
+    timings = {name: measure.run(spark, name, sf_dir)[0]["wall_s"] for name in BENCH_QUERIES}
 
     total = round(sum(timings.values()), 3)
     line = json.dumps(

@@ -208,29 +208,34 @@ def dtype_skews(spdf, odf) -> list[str]:
     return skews
 
 
+def _materialize(sdf):
+    """The driver's view of a result: nested output columns by schema,
+    and the rows through pandas."""
+    nested = [
+        f.name
+        for f in sdf.schema.fields
+        if f.dataType.typeName() in ("array", "map", "struct")
+    ]
+    return nested, sdf.toPandas()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    # import this checkout's package in the driver AND in the Python
-    # workers (they inherit PYTHONPATH, not sys.path)
-    repo = str(Path(__file__).resolve().parents[1])
-    sys.path.insert(0, repo)
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (repo, os.environ.get("PYTHONPATH")) if p
-    )
+    sys.path.insert(0, str(Path(__file__).resolve().parent))
+    import measure
     from hive_hdfs_practise_spark import plans
 
     if os.environ.get("ORACLE_VANILLA"):
         # simulate the driver: a bare session with none of our confs
         from pyspark.sql import SparkSession
 
+        measure.pin_tree()
         spark = SparkSession.builder.master("local[8]").appName("oracle-vanilla").getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
     else:
-        from hive_hdfs_practise_spark.session import get_spark
-
-        spark = get_spark("oracle-check")
+        spark = measure.session("oracle-check")
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"
@@ -241,21 +246,15 @@ def main() -> int:
 
     failures = []
     results: dict[str, dict] = {}
-    for name, fn in sorted(plans.QUERIES.items()):
+    for name in sorted(plans.QUERIES):
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            nested_schema = [
-                f.name
-                for f in sdf.schema.fields
-                if f.dataType.typeName() in ("array", "map", "struct")
-            ]
-            spdf = sdf.toPandas()
-            # drop any intermediates the builder persist()ed so a
-            # long sweep doesn't accumulate cached blocks
-            spark.catalog.clearCache()
+            record, (nested_schema, spdf) = measure.run(
+                spark, name, sf_dir, runs=1, action=_materialize
+            )
+            cost = record["runs"][0]
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
             results[name] = {"status": "FAIL", "err": f"spark error: {exc}"}
@@ -272,7 +271,7 @@ def main() -> int:
             continue
         oracle = plans.ORACLES.get(name)
         if oracle is None:
-            results[name] = {"status": "rows_only", "spark_rows": len(spdf)}
+            results[name] = {"status": "rows_only", "spark_rows": len(spdf), **cost}
             print(f"ok?   {name}: rows-only ({len(spdf)} rows, {time.time()-t0:.1f}s) [no oracle]")
             continue
         try:
@@ -314,6 +313,7 @@ def main() -> int:
                 "status": "OK",
                 "spark_rows": len(spdf),
                 "secs": round(time.time() - t0, 1),
+                **cost,
             }
             print(f"OK    {name} ({len(spdf)} rows, {time.time()-t0:.1f}s)")
             notes = date_grain_warnings(spdf, odf)

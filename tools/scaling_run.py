@@ -15,16 +15,12 @@ after TIMEOUT_S and records the query as over-budget.
 from __future__ import annotations
 
 import sys
-import threading
-import time
 from pathlib import Path
 
-REPO = str(Path(__file__).resolve().parents[1])
-sys.path.insert(0, REPO)
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from bench import BENCH_QUERIES
-from hive_hdfs_practise_spark import plans
-from hive_hdfs_practise_spark.session import get_spark
+import measure  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 SCALED = "/tmp/testdata/sfx10"
@@ -36,47 +32,9 @@ TIMEOUT_S = 150
 EXPECT_SUPERLINEAR = {"dedup_simhash"}
 
 
-def timed(spark, name: str, sf_dir: str) -> float | None:
-    group = f"scaling-{name}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, name, interruptOnCancel=True)
-    done = threading.Event()
-
-    def watchdog():
-        if not done.wait(TIMEOUT_S):
-            sc.cancelJobGroup(group)
-
-    t = threading.Thread(target=watchdog, daemon=True)
-    t.start()
-    best = None
-    try:
-        # noop sink, NOT .count(): count() lets Catalyst prune every
-        # column the row count doesn't need, which silently erases
-        # pure-projection work (a window-only query like
-        # events_moving_median measured 0.07 s under count() vs its
-        # real 4.5 s) — the same pruning trap CLAUDE.md documents
-        # for aggregate probes. The noop format evaluates every
-        # output column and discards the rows.
-        # Best-of-2 (same rationale as bench.py): ~15% hypervisor CPU
-        # steal on this host lands as random multi-second stalls on
-        # parallel stages; min-of-two measures the engine.
-        for _ in range(2):
-            t0 = time.time()
-            plans.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = round(time.time() - t0, 2)
-            best = dt if best is None else min(best, dt)
-        return best
-    except Exception:  # noqa: BLE001 — cancelled or failed → over budget
-        return best
-    finally:
-        done.set()
-
-
 def main() -> None:
-    spark = get_spark("scaling")
-    plans.QUERIES["q1_pricing_summary"](spark, BASE).count()  # warm-up
+    spark = measure.session("scaling")
+    measure.warm_up(spark, BASE)
 
     rows = []
     # cancellation-prone pair queries LAST so a watchdog kill cannot
@@ -84,8 +42,10 @@ def main() -> None:
     risky = ["dedup_minhash_lsh", "dedup_simhash"]
     ordered = [q for q in BENCH_QUERIES if q not in risky] + risky
     for name in ordered:
-        t_base = timed(spark, name, BASE)
-        t_scaled = timed(spark, name, SCALED)
+        t_base, t_scaled = (
+            measure.run(spark, name, sf, action=measure.noop, timeout_s=TIMEOUT_S)[0]["wall_s"]
+            for sf in (BASE, SCALED)
+        )
         ratio = (
             round(t_scaled / t_base, 1)
             if (t_base and t_scaled and t_base > 0)
@@ -100,7 +60,7 @@ def main() -> None:
         "sf0.1 (600k lineitem / 100k events / 5k docs) vs a 10× synthetic",
         "scale-up (6M / 1M / 50k; dims fixed; replicas key-disjoint and",
         "text-perturbed — see tools/make_scaled.py). Same session,",
-        f"best-of-2 runs each (see timed()), {TIMEOUT_S}s watchdog.",
+        f"best-of-2 runs each (measure.run), {TIMEOUT_S}s watchdog.",
         "Ratio ≈ 10 ⇒ linear scaling;",
         "≪ 10 ⇒ fixed/dimension-bound costs dominate; > 10 or over budget",
         "⇒ super-linear (candidate/output growth) — called out below.",
@@ -115,7 +75,7 @@ def main() -> None:
         lines.append(f"| {name} | {tb_s} | {ts_s} | {r if r else '—'}{note} |")
     # rewrite only the header and table: every section from the first
     # heading on is hand-recorded and kept
-    path = Path(REPO) / "SCALING.md"
+    path = Path(measure.REPO) / "SCALING.md"
     old = path.read_text() if path.exists() else ""
     cut = old.find("\n## ")
     rest = old[cut + 1 :] if cut >= 0 else ""

@@ -11,21 +11,20 @@ import json
 import sys
 from pathlib import Path
 
-REPO = str(Path(__file__).resolve().parents[1])
-sys.path.insert(0, REPO)
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from hive_hdfs_practise_spark import plans
-from hive_hdfs_practise_spark.session import get_spark
+import measure  # noqa: E402
+from hive_hdfs_practise_spark import plans  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    spark = get_spark("schema-snapshot")
+    spark = measure.session("schema-snapshot")
     out = {}
     for name, fn in sorted(plans.QUERIES.items()):
         out[name] = fn(spark, SF).schema.simpleString()
-    with open(f"{REPO}/tests/fixtures/query_schemas.json", "w") as f:
+    with open(f"{measure.REPO}/tests/fixtures/query_schemas.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(f"recorded {len(out)} schemas")
 
