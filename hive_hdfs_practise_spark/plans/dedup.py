@@ -2019,8 +2019,8 @@ def _vq_assigned(
     embeddings_knn_graph_ivf, and embeddings_ivf_cell_stats (the r8
     shared-scorer rule — riders of one quantizer cannot drift):
     corpus-derived CAPPED nlist (min(max({SEM_MIN_NLIST},
-    n // {SEM_TARGET_CLUSTER}), {SEM_MAX_NLIST})), lowest-id seeds,
-    {SEM_ITERS} integer-GEMM Lloyd rounds, one assignment scan, then
+    n // {SEM_TARGET_CLUSTER}), {SEM_MAX_NLIST})), {SEM_ITERS} rounds
+    of the similarity/pq.py trainer, one assignment scan, then
     the in-cell md5-rank shard split (SEM_SHARD_CAP design note
     above — driver state is bounded at nlist x 64 int64 ~ 2 MB
     INDEPENDENT OF n; the shard re-pins per-block pair mass once the
@@ -2028,48 +2028,17 @@ def _vq_assigned(
     (vec_id, xi, nrm, cid, shard) table plus the corpus count and
     derived nlist, so riders never rescan the table or re-derive the
     formula (r10 review)."""
-    import numpy as np
-
-    from ..similarity.pq import (
-        pq_update_pass,
-        quantize_rows,
-        trunc_div,
-        vq_assign_pass,
-    )
+    from ..similarity import pq
 
     e = wide_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = e.count()
     nlist = min(max(SEM_MIN_NLIST, n // SEM_TARGET_CLUSTER), SEM_MAX_NLIST)
-    seed_rows = (
-        e.select("vec_id", "embedding").orderBy("vec_id").limit(nlist).collect()
-    )
-    X0 = quantize_rows([r.embedding for r in seed_rows])
-    cents = {0: (np.arange(nlist, dtype=np.int64), X0)}
-    for _ in range(SEM_ITERS):
-        agg = (
-            pq_update_pass(e, cents, 1, 64)
-            .groupBy("cid", "i")
-            .agg(F.sum("ssum").alias("ts"), F.sum("cnt").alias("tc"))
-            .collect()
-        )
-        comp: dict = {}
-        for r in agg:
-            comp.setdefault(r.cid, {})[r.i] = trunc_div(int(r.ts), int(r.tc))
-        items = sorted(comp.items())
-        cents = {
-            0: (
-                np.array([cid for cid, _ in items], dtype=np.int64),
-                np.array(
-                    [[c[i + 1] for i in range(64)] for _, c in items],
-                    dtype=np.int64,
-                ),
-            )
-        }
+    cents = pq.train(e, pq.seed_rows(e, nlist), 1, SEM_ITERS)[0]
     wsh = Window.partitionBy("cid").orderBy(
         F.md5(F.col("vec_id").cast("string")), "vec_id"
     )
     assigned = (
-        vq_assign_pass(e, cents[0])
+        pq.vq_assign_pass(e, cents)
         .withColumn("_shrn", F.row_number().over(wsh))
         .withColumn(
             "shard",

@@ -1651,94 +1651,6 @@ def _pq_oracle(e_head: str | None = None, disp_div: str = "") -> str:
     return ",\n    ".join(parts)
 
 
-def _pq_train(e: DataFrame, rot=None) -> dict:
-    """Seed (PQ_K lowest vec_ids) + PQ_ITERS integer Lloyd rounds;
-    returns {s: (cids, C)} with cids ascending. ``rot``: optional
-    ±1 rotation applied after quantization (OPQ)."""
-    import numpy as np
-
-    from ..similarity.pq import pq_update_pass, quantize_rows, trunc_div
-
-    seed_rows = (
-        e.select("vec_id", "embedding").orderBy("vec_id").limit(PQ_K).collect()
-    )
-    X0 = quantize_rows([r.embedding for r in seed_rows])
-    if rot is not None:
-        X0 = X0 @ rot.T
-    cents = {
-        sub: (
-            np.arange(PQ_K, dtype=np.int64),
-            X0[:, sub * PQ_SUBDIM : (sub + 1) * PQ_SUBDIM].copy(),
-        )
-        for sub in range(PQ_M)
-    }
-    for _ in range(PQ_ITERS):
-        agg = (
-            pq_update_pass(e, cents, PQ_M, PQ_SUBDIM, rot=rot)
-            .groupBy("s", "cid", "i")
-            .agg(F.sum("ssum").alias("ts"), F.sum("cnt").alias("tc"))
-            .collect()
-        )
-        comp_map: dict = {}
-        for r in agg:
-            # trunc_div, NOT Python // — Spark div and DuckDB //
-            # truncate toward zero on the possibly-negative sums
-            comp_map.setdefault((r.s, r.cid), {})[r.i] = trunc_div(
-                int(r.ts), int(r.tc)
-            )
-        cents = {}
-        for sub in range(PQ_M):
-            items = sorted(
-                (cid, comps)
-                for (ss, cid), comps in comp_map.items()
-                if ss == sub
-            )
-            cents[sub] = (
-                np.array([cid for cid, _ in items], dtype=np.int64),
-                np.array(
-                    [
-                        [comps[i + 1] for i in range(PQ_SUBDIM)]
-                        for _, comps in items
-                    ],
-                    dtype=np.int64,
-                ),
-            )
-    return cents
-
-
-def _pq_query_row(e: DataFrame, sf_dir: str, rot=None):
-    """The query vector, quantized (and optionally rotated) — with a
-    clear error when QUERY_VEC_ID is missing from the corpus."""
-    from ..similarity.pq import quantize_rows
-
-    qrows = (
-        e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .collect()
-    )
-    if not qrows:
-        raise ValueError(
-            f"query vector vec_id={QUERY_VEC_ID} not found in the "
-            f"embeddings table at {sf_dir!r}"
-        )
-    qX = quantize_rows([qrows[0].embedding])
-    if rot is not None:
-        qX = qX @ rot.T
-    return qX[0]
-
-
-def _pq_query_lut(cents: dict, qX) -> dict:
-    """{(s, cid): exact int squared distance} from the query's
-    subvectors to every centroid."""
-    dq: dict = {}
-    for sub in range(PQ_M):
-        cids, C = cents[sub]
-        qs = qX[sub * PQ_SUBDIM : (sub + 1) * PQ_SUBDIM]
-        for idx, cid in enumerate(cids):
-            dq[(sub, int(cid))] = int(((qs - C[idx]) ** 2).sum())
-    return dq
-
-
 @register("knn_pq_adc", oracle=_pq_oracle())
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} nearest neighbors by product quantization:
@@ -1755,80 +1667,22 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     random near-isotropic data is VQ's worst case, which is exactly
     why the operator ships with the re-rank stage.
 
-    Scale shape (similarity/pq.py): each Lloyd round is ONE
-    mapInPandas scan emitting per-partition per-centroid component
-    sums (<= 1024 partial rows per partition — the treeAggregate
-    shape), with the 1024-int codebook carried driver-side like
-    IVF's centroid table; the final pass encodes and ADC-scores in
-    the same scan. The declarative form this replaced (component
-    rows joined to broadcast codebook components, two aggregates per
-    round) shuffled O(n * d * K) rows per round and measured
-    5.4/31.4/125.9 s at 1x/10x/40x; the vectorized passes measure
-    2.5/2.4/3.0 s (SCALING.md round-6). At deployment the codes
-    table (PQ_M bytes per vector) is what an index write would
-    persist; the ADC scan reads codes + the 128-entry lookup table,
-    never the raw vectors — that asymmetry is the entire point of
-    PQ at 100 TB. Builder collects codebook state at plan time:
-    BUILD_EXECUTES."""
-    from ..similarity.pq import pq_score_pass
+    Trainer, LUT, scoring scan and re-rank are similarity/pq.py's
+    (its docstring has the scale shape: 5.4/31.4/125.9 s at
+    1x/10x/40x declaratively vs 2.5/2.4/3.0 s vectorized, SCALING.md
+    round-6). At deployment the codes table (PQ_M bytes per vector)
+    is what an index write would persist; the ADC scan reads codes +
+    the 128-entry lookup table, never the raw vectors — that
+    asymmetry is the entire point of PQ at 100 TB. Builder collects
+    codebook state at plan time: BUILD_EXECUTES."""
+    from ..similarity import pq
 
     e = wide_table(spark, sf_dir, "embeddings")
-    # codebook state is M * K * SUBDIM = 1024 ints — driver-side,
-    # like IVF's centroid table. Seeds: the PQ_K lowest vec_ids.
-    cents = _pq_train(e)
-    qX = _pq_query_row(e, sf_dir)
-    dq = _pq_query_lut(cents, qX)
-    scored = pq_score_pass(e, cents, dq, QUERY_VEC_ID, PQ_M, PQ_SUBDIM)
-    # exact re-rank inputs: quantized component rows (JVM-side
-    # explode — only the 100 shortlisted vectors survive the
-    # semi-join below) and the query components
-    comps = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.posexplode("embedding").alias("p", "xf"))
-        .select(
-            "vec_id",
-            F.expr(f"p div {PQ_SUBDIM}").alias("s"),
-            (F.col("p") % PQ_SUBDIM + 1).alias("i"),
-            F.round(F.col("xf").cast("double") * _COV_SCALE)
-            .cast("bigint")
-            .alias("xi"),
-        )
-    )
-    q = comps.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        "s", "i", F.col("xi").alias("qx")
-    )
-    shortlist = (
-        scored.orderBy("adc_fp", "vec_id")
-        .limit(PQ_RERANK)
-        # referenced twice below (semi-join + final join): cut the
-        # lineage or the whole ADC scan executes twice
-        .localCheckpoint(eager=True)
-    )
-    exact = (
-        comps.join(F.broadcast(shortlist.select("vec_id")), "vec_id")
-        .join(F.broadcast(q), ["s", "i"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                (F.col("xi") - F.col("qx")) * (F.col("xi") - F.col("qx"))
-            )
-            .cast("bigint")
-            .alias("l2sq_fp")
-        )
-    )
-    return (
-        exact.join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "l2sq_fp",
-            F.round(
-                F.col("l2sq_fp").cast("double") / float(_COV_SCALE) / _COV_SCALE,
-                6,
-            ).alias("l2sq"),
-            "adc_fp",
-        )
-        .orderBy("l2sq_fp", "vec_id")
-        .limit(TOP_K)
+    q = pq.query_row(e, QUERY_VEC_ID, sf_dir)
+    cents = pq.train(e, pq.seed_rows(e, PQ_K), PQ_M, PQ_ITERS)
+    scored = pq.pq_score_pass(e, cents, pq.query_lut(cents, q), QUERY_VEC_ID)
+    return pq.exact_rerank(
+        table(spark, sf_dir, "embeddings"), scored, q, PQ_RERANK, TOP_K
     )
 
 
@@ -1896,90 +1750,27 @@ def knn_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks against the unrolled SQL restatement (the rotation
     itself is one GROUP BY of signed integer sums in the oracle).
 
-    Scale shape: the rotation rides INSIDE the existing mapInPandas
-    passes (one 64×64 ±1 GEMM per Arrow batch — similarity/pq.py),
-    so training and scoring remain single-scan treeAggregate-shaped;
-    the exact re-rank rotates ONLY the PQ_RERANK shortlist rows via
-    a broadcast 4096-row sign table (shortlist × d² rows — metadata
-    scale, never the corpus). ‖S(a−b)‖² = 64·‖a−b‖² exactly, so
-    every re-ranked distance is 64× the unrotated pipeline's for the
-    same pair (pinned in test_similarity::TestOpqAdc); the SHORTLISTS
-    may differ — measured at sf0.001 the rotated ADC holds 8/10 of
-    the true top-10 vs plain PQ's 10/10, the honest cost of rotating
-    an already-isotropic corpus (OPQ pays off when variance is
+    The rotation rides the similarity/pq.py passes as their ``rot``
+    (one 64×64 ±1 GEMM per Arrow batch) and the re-rank's.
+    ‖S(a−b)‖² = 64·‖a−b‖² exactly, so every re-ranked distance is 64×
+    the unrotated pipeline's for the same pair (pinned in
+    test_similarity::TestOpqAdc); the SHORTLISTS may differ —
+    measured at sf0.001 the rotated ADC holds 8/10 of the true top-10
+    vs plain PQ's 10/10, the honest cost of rotating an
+    already-isotropic corpus (OPQ pays off when variance is
     concentrated, which random synthetic data is not). Builder
     collects codebook state at plan time: BUILD_EXECUTES."""
-    from ..similarity.pq import opq_rotation, pq_score_pass
+    from ..similarity import pq
 
-    R = opq_rotation(OPQ_DIM)
+    R = pq.opq_rotation(OPQ_DIM)
     e = wide_table(spark, sf_dir, "embeddings")
-    cents = _pq_train(e, rot=R)
-    qX = _pq_query_row(e, sf_dir, rot=R)
-    dq = _pq_query_lut(cents, qX)
-    scored = pq_score_pass(e, cents, dq, QUERY_VEC_ID, PQ_M, PQ_SUBDIM, rot=R)
-    shortlist = (
-        scored.orderBy("adc_fp", "vec_id")
-        .limit(PQ_RERANK)
-        # referenced twice below (semi-join + final join): cut the
-        # lineage or the whole ADC scan executes twice
-        .localCheckpoint(eager=True)
+    q = pq.query_row(e, QUERY_VEC_ID, sf_dir, rot=R)
+    cents = pq.train(e, pq.seed_rows(e, PQ_K), PQ_M, PQ_ITERS, rot=R)
+    scored = pq.pq_score_pass(
+        e, cents, pq.query_lut(cents, q), QUERY_VEC_ID, rot=R
     )
-    # exact re-rank in the rotated domain, over the SHORTLIST only:
-    # semi-join first, THEN rotate — the broadcast join against the
-    # 4096-row sign table touches PQ_RERANK vectors, not the corpus
-    rotdf = spark.createDataFrame(
-        [
-            (int(i), int(j), int(R[i, j]))
-            for i in range(OPQ_DIM)
-            for j in range(OPQ_DIM)
-        ],
-        "i int, j int, sgn long",
-    )
-    raw = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.posexplode("embedding").alias("j", "xf"))
-        .select(
-            "vec_id",
-            "j",
-            F.round(F.col("xf").cast("double") * _COV_SCALE)
-            .cast("bigint")
-            .alias("x0"),
-        )
-    )
-    rotated = (
-        raw.join(F.broadcast(shortlist.select("vec_id")), "vec_id")
-        .join(F.broadcast(rotdf), "j")
-        .groupBy("vec_id", "i")
-        .agg(F.sum(F.col("sgn") * F.col("x0")).cast("bigint").alias("yi"))
-    )
-    qdf = spark.createDataFrame(
-        [(int(i), int(qX[i])) for i in range(OPQ_DIM)], "i int, qy long"
-    )
-    exact = (
-        rotated.join(F.broadcast(qdf), "i")
-        .groupBy("vec_id")
-        .agg(
-            F.sum((F.col("yi") - F.col("qy")) * (F.col("yi") - F.col("qy")))
-            .cast("bigint")
-            .alias("l2sq_fp")
-        )
-    )
-    return (
-        exact.join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "l2sq_fp",
-            F.round(
-                F.col("l2sq_fp").cast("double")
-                / float(_COV_SCALE)
-                / _COV_SCALE
-                / 64,
-                6,
-            ).alias("l2sq"),
-            "adc_fp",
-        )
-        .orderBy("l2sq_fp", "vec_id")
-        .limit(TOP_K)
+    return pq.exact_rerank(
+        table(spark, sf_dir, "embeddings"), scored, q, PQ_RERANK, TOP_K, rot=R
     )
 
 
@@ -2305,160 +2096,31 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables score it, and the {PQ_RERANK}-candidate shortlist
     re-ranks exactly.
 
-    Scale shape: the same treeAggregate passes as knn_pq_adc
-    (similarity/pq.py) — each training round and the final
-    encode+score are ONE mapInPandas scan emitting bounded partials,
-    with coarse + subspace codebooks (8*64 + 1024 ints) carried
-    driver-side. The probed-list filter applies IN the scan here;
-    at deployment it is the bucket-pruned index scan knn_ivf_indexed
-    already demonstrates (codes partitioned by coarse list). Builder
-    collects codebook state at plan time: BUILD_EXECUTES."""
+    Two calls to the similarity/pq.py trainer (the coarse lists as a
+    one-subspace quantizer, then the residual codebooks), one
+    ``query_lut`` per probed list's query residual, and the shared
+    scan and re-rank. The probed-list filter applies IN the scan
+    here; at deployment it is the bucket-pruned index scan
+    knn_ivf_indexed already demonstrates (codes partitioned by
+    coarse list). Builder collects codebook state at plan time:
+    BUILD_EXECUTES."""
     import numpy as np
 
-    from ..similarity.pq import (
-        pq_score_pass,
-        pq_update_pass,
-        quantize_rows,
-        trunc_div,
-    )
+    from ..similarity import pq
 
     e = wide_table(spark, sf_dir, "embeddings")
-    seed_rows = (
-        e.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(max(PQ_K, IVFPQ_NLIST))
-        .collect()
-    )
-    X0 = quantize_rows([r.embedding for r in seed_rows])
-
-    def rounds(init_cents, m, sd, coarse=None, iters=PQ_ITERS):
-        cents = init_cents
-        for _ in range(iters):
-            agg = (
-                pq_update_pass(e, cents, m, sd, coarse=coarse)
-                .groupBy("s", "cid", "i")
-                .agg(F.sum("ssum").alias("ts"), F.sum("cnt").alias("tc"))
-                .collect()
-            )
-            comp_map: dict = {}
-            for r in agg:
-                comp_map.setdefault((r.s, r.cid), {})[r.i] = trunc_div(
-                    int(r.ts), int(r.tc)
-                )
-            cents = {}
-            for sub in range(m):
-                items = sorted(
-                    (cid, comps)
-                    for (ss, cid), comps in comp_map.items()
-                    if ss == sub
-                )
-                cents[sub] = (
-                    np.array([cid for cid, _ in items], dtype=np.int64),
-                    np.array(
-                        [
-                            [comps[i + 1] for i in range(sd)]
-                            for _, comps in items
-                        ],
-                        dtype=np.int64,
-                    ),
-                )
-        return cents
-
-    coarse = rounds(
-        {0: (np.arange(IVFPQ_NLIST, dtype=np.int64), X0[:IVFPQ_NLIST].copy())},
-        1,
-        64,
-        iters=IVFPQ_COARSE_ITERS,
-    )[0]
-    # residual-PQ seeds: residuals of the PQ_K lowest vec_ids under
-    # the trained coarse quantizer, sliced per subspace (driver-side
-    # — same numpy arithmetic as the passes)
-    ccids, C64 = coarse
-    from ..similarity.pq import _assign
-
-    sa, _ = _assign(X0[:PQ_K], C64)
-    R0 = X0[:PQ_K] - C64[sa]
-    cents = {
-        sub: (
-            np.arange(PQ_K, dtype=np.int64),
-            R0[:, sub * PQ_SUBDIM : (sub + 1) * PQ_SUBDIM].copy(),
-        )
-        for sub in range(PQ_M)
-    }
-    cents = rounds(cents, PQ_M, PQ_SUBDIM, coarse=coarse)
-    qrows = (
-        e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .collect()
-    )
-    if not qrows:
-        raise ValueError(
-            f"query vector vec_id={QUERY_VEC_ID} not found in the "
-            f"embeddings table at {sf_dir!r}"
-        )
-    qrow = qrows[0]
-    qX = quantize_rows([qrow.embedding])[0]
-    cdist = sorted(
-        (int(((qX - C64[i]) ** 2).sum()), int(ccids[i]))
-        for i in range(len(ccids))
-    )
-    probe = {cid for _, cid in cdist[:IVFPQ_NPROBE]}
-    dq = {}
-    for L in probe:
-        qres = qX - C64[list(ccids).index(L)]
-        for sub in range(PQ_M):
-            cids, C = cents[sub]
-            qs = qres[sub * PQ_SUBDIM : (sub + 1) * PQ_SUBDIM]
-            for idx, cid in enumerate(cids):
-                dq[(L, sub, int(cid))] = int(((qs - C[idx]) ** 2).sum())
-    scored = pq_score_pass(
-        e, cents, dq, QUERY_VEC_ID, PQ_M, PQ_SUBDIM,
-        coarse=coarse, probe_lists=probe,
-    )
-    shortlist = (
-        scored.orderBy("adc_fp", "vec_id")
-        .limit(PQ_RERANK)
-        .localCheckpoint(eager=True)
-    )
-    comps = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.posexplode("embedding").alias("p", "xf"))
-        .select(
-            "vec_id",
-            F.round(F.col("xf").cast("double") * _COV_SCALE)
-            .cast("bigint")
-            .alias("xi"),
-            "p",
-        )
-    )
-    q = comps.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        "p", F.col("xi").alias("qx")
-    )
-    exact = (
-        comps.join(F.broadcast(shortlist.select("vec_id")), "vec_id")
-        .join(F.broadcast(q), "p")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                (F.col("xi") - F.col("qx")) * (F.col("xi") - F.col("qx"))
-            )
-            .cast("bigint")
-            .alias("l2sq_fp")
-        )
-    )
-    return (
-        exact.join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "l2sq_fp",
-            F.round(
-                F.col("l2sq_fp").cast("double") / float(_COV_SCALE) / _COV_SCALE,
-                6,
-            ).alias("l2sq"),
-            "adc_fp",
-        )
-        .orderBy("l2sq_fp", "vec_id")
-        .limit(TOP_K)
+    q = pq.query_row(e, QUERY_VEC_ID, sf_dir)
+    X0 = pq.seed_rows(e, max(PQ_K, IVFPQ_NLIST))
+    coarse = pq.train(e, X0[:IVFPQ_NLIST], 1, IVFPQ_COARSE_ITERS)[0]
+    cents = pq.train(e, X0[:PQ_K], PQ_M, PQ_ITERS, coarse=coarse)
+    # nprobe nearest lists, ties to the lower list id
+    ccids, C = coarse
+    cdist = pq.query_lut({0: coarse}, q)[0]
+    probe = np.lexsort((ccids, cdist))[:IVFPQ_NPROBE]
+    luts = {int(ccids[i]): pq.query_lut(cents, q - C[i]) for i in probe}
+    scored = pq.pq_score_pass(e, cents, luts, QUERY_VEC_ID, coarse=coarse)
+    return pq.exact_rerank(
+        table(spark, sf_dir, "embeddings"), scored, q, PQ_RERANK, TOP_K
     )
 
 

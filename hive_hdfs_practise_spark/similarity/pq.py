@@ -1,24 +1,41 @@
-"""Arrow-vectorized product-quantization passes.
+"""The integer vector quantizer behind every PQ kNN query and the
+SemDeDup front end, and its Arrow-vectorized passes.
 
-The declarative Lloyd assignment (component rows joined to broadcast
-codebook components, two aggregates per round) shuffles
+One owner per stage; the builders only configure them:
+
+- ``train`` — THE Lloyd trainer: seed codebooks from ``seed_rows``
+  (the k lowest vec_ids, quantized), then ``iters`` rounds of
+  ``pq_update_pass`` -> per-(subspace, cid, component) sums ->
+  collect -> truncating centroid update. ``coarse`` trains on
+  coarse-quantizer residuals (IVFPQ), ``rot`` on rotated vectors
+  (OPQ); ``m=1`` is a plain full-dimension VQ (IVFPQ's coarse lists,
+  SemDeDup's cells).
+- ``query_row`` + ``query_lut`` — the quantized query vector and its
+  per-subspace distance table; IVFPQ applies the same ``query_lut``
+  to the query's residual in each probed list.
+- ``pq_score_pass`` — final encode + ADC sum in one scan.
+- ``exact_rerank`` — the second stage of the two-stage top-k: the
+  ADC shortlist re-ranked by exact int64 L2 to the query.
+
+Scale shape: the declarative Lloyd assignment (component rows joined
+to broadcast codebook components, two aggregates per round) shuffled
 O(n * d * K) rows per round: measured 5.4 / 31.4 / 125.9 s at
 1x/10x/40x for knn_pq_adc with the three assignment rounds dominant.
-Each pass here replaces one round with a single ``mapInPandas`` scan
-emitting per-partition per-centroid component sums (<= M * K * SUBDIM
-rows per partition) — the same treeAggregate shape as
+Each pass here is a single ``mapInPandas`` scan emitting
+per-partition per-centroid component sums (<= M * K * SUBDIM rows per
+partition) — the same treeAggregate shape as
 ``similarity/comoment.py``, with the codebook carried in the closure
-(it is M * K * SUBDIM = 1024 ints — driver-state, like IVF's
-centroid table).
+(driver-state, like IVF's centroid table).
 
-Exactness contract (what lets the SQL oracle stay unchanged):
+Exactness contract (what lets the SQL oracles stay unchanged):
 components quantize HALF_UP to 1e6-scaled int64; distances are exact
 int64 (expansion form, every term <= 8 * (2e6)^2); ``argmin`` takes
 the FIRST minimum, which with centroid rows sorted by cid is exactly
 the engines' ``min(struct(dist, cid))`` tie rule; centroid updates
 divide with TRUNCATION toward zero (Spark ``div`` and DuckDB ``//``
 both truncate; Python ``//`` floors and must NOT be used on the
-possibly-negative sums)."""
+possibly-negative sums); a centroid with no members drops out of the
+next round, as in the oracles' ``c{k}`` CTEs."""
 
 from __future__ import annotations
 
@@ -27,14 +44,17 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 COMOMENT_SCALE = 1_000_000
 
 
-def _quantize(col) -> "object":
+def quantize_rows(vectors) -> "object":
+    """HALF_UP 1e6 quantization of a sequence of float vectors (a
+    list of Row embeddings or an Arrow batch's column) to int64."""
     import numpy as np
 
-    X = np.stack(col.to_numpy()).astype(np.float64) * COMOMENT_SCALE
+    X = np.array(list(vectors), dtype=np.float64) * COMOMENT_SCALE
     return np.where(X >= 0, np.floor(X + 0.5), np.ceil(X - 0.5)).astype(
         np.int64
     )
@@ -65,69 +85,61 @@ def _residualize(X, coarse):
     return X - C[a], a
 
 
+def _encode_input(pdf: pd.DataFrame, coarse, rot):
+    """A batch's vectors as the codebooks see them: quantized, then
+    rotated (OPQ), then residualized (IVFPQ; also returns the coarse
+    code, else None)."""
+    X = quantize_rows(pdf["embedding"])
+    if rot is not None:
+        X = X @ rot.T
+    if coarse is None:
+        return X, None
+    return _residualize(X, coarse)
+
+
 def pq_update_pass(
-    emb: DataFrame,
-    cents: dict,
-    m: int,
-    sd: int,
-    coarse: tuple | None = None,
-    rot: "object | None" = None,
+    emb: DataFrame, cents: dict, coarse: tuple | None = None, rot=None
 ) -> DataFrame:
     """One Lloyd round: per-partition member-component sums + counts
-    per (subspace, cid). ``cents``: {s: (cids int64[k], C int64[k,sd])}
-    with cids ascending. With ``coarse``, the subspace codebooks
-    train on coarse-quantizer RESIDUALS (IVFPQ). With ``rot`` (a
-    d x d +-1 integer matrix), rows rotate X @ rot.T right after
-    quantization (OPQ) — exact int64: |x| <= 2e6 per component, d=64
-    signed terms, |y| <= 1.28e8."""
+    per (subspace, cid), clusters with members only. ``cents``:
+    {s: (cids int64[k], C int64[k, sd])} with cids ascending; the
+    subspace count and width are ``len(cents)`` and ``C.shape[1]``.
+    With ``coarse``, the subspace codebooks train on coarse-quantizer
+    RESIDUALS (IVFPQ). With ``rot`` (a d x d +-1 integer matrix), rows
+    rotate X @ rot.T right after quantization (OPQ) — exact int64:
+    |x| <= 2e6 per component, d=64 signed terms, |y| <= 1.28e8."""
+    sd = cents[0][1].shape[1]
 
     def f(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        sums: dict = {}
-        cnts: dict = {}
+        sums = {s: np.zeros_like(C) for s, (_, C) in cents.items()}
+        cnts = {s: np.zeros(len(C), dtype=np.int64) for s, (_, C) in cents.items()}
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _quantize(pdf["embedding"])
-            if rot is not None:
-                X = X @ rot.T
-            if coarse is not None:
-                X, _ = _residualize(X, coarse)
-            for s in range(m):
+            X, _ = _encode_input(pdf, coarse, rot)
+            for s, (_, C) in cents.items():
                 Xs = X[:, s * sd : (s + 1) * sd]
-                cids, C = cents[s]
                 a, _ = _assign(Xs, C)
-                for idx in range(len(cids)):
-                    mask = a == idx
-                    c = int(mask.sum())
-                    if not c:
-                        continue
-                    key = (s, int(cids[idx]))
-                    sv = Xs[mask].sum(axis=0)
-                    if key in sums:
-                        sums[key] = sums[key] + sv
-                        cnts[key] += c
-                    else:
-                        sums[key] = sv.copy()
-                        cnts[key] = c
-        if not sums:
+                np.add.at(sums[s], a, Xs)
+                cnts[s] += np.bincount(a, minlength=len(C))
+        cols: dict = {"s": [], "cid": [], "i": [], "ssum": [], "cnt": []}
+        for s, (cids, _) in cents.items():
+            nz = np.flatnonzero(cnts[s])
+            cols["s"].append(np.full(len(nz) * sd, s))
+            cols["cid"].append(np.repeat(cids[nz], sd))
+            cols["i"].append(np.tile(np.arange(1, sd + 1), len(nz)))
+            cols["ssum"].append(sums[s][nz].ravel())
+            cols["cnt"].append(np.repeat(cnts[s][nz], sd))
+        if not sum(len(c) for c in cols["s"]):
             return
-        rs, rc, ri, rsum, rcnt = [], [], [], [], []
-        for (s, cid), sv in sums.items():
-            for i in range(sd):
-                rs.append(s)
-                rc.append(cid)
-                ri.append(i + 1)
-                rsum.append(int(sv[i]))
-                rcnt.append(cnts[(s, cid)])
         yield pd.DataFrame(
             {
-                "s": pd.Series(rs, dtype="int32"),
-                "cid": pd.Series(rc, dtype="int32"),
-                "i": pd.Series(ri, dtype="int32"),
-                "ssum": pd.Series(rsum, dtype="int64"),
-                "cnt": pd.Series(rcnt, dtype="int64"),
+                k: np.concatenate(v).astype(
+                    "int64" if k in ("ssum", "cnt") else "int32"
+                )
+                for k, v in cols.items()
             }
         )
 
@@ -136,24 +148,108 @@ def pq_update_pass(
     )
 
 
+def seed_rows(e: DataFrame, k: int) -> "object":
+    """The quantized embeddings of the k lowest vec_ids of ``e`` —
+    every codebook's seed, as in the oracles' ``seed`` CTEs. An empty
+    corpus seeds an empty (0 x 0) codebook, and every scan over it
+    emits nothing."""
+    import numpy as np
+
+    rows = e.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+    if not rows:
+        return np.zeros((0, 0), dtype=np.int64)
+    return quantize_rows([r.embedding for r in rows])
+
+
+def train(
+    e: DataFrame,
+    X0,
+    m: int,
+    iters: int,
+    coarse: tuple | None = None,
+    rot=None,
+) -> dict:
+    """The one integer Lloyd trainer: codebooks seeded from ``X0``
+    (``seed_rows``; cids 0..len-1, rotated with ``rot`` and
+    residualized against ``coarse`` like every scanned row), split
+    into ``m`` subspaces, then ``iters`` rounds of ``pq_update_pass``
+    over ``e``. Returns {s: (cids, C)} with cids ascending; a centroid
+    that lost all members is absent."""
+    import numpy as np
+
+    if rot is not None:
+        X0 = X0 @ rot.T
+    if coarse is not None:
+        X0, _ = _residualize(X0, coarse)
+    sd = X0.shape[1] // m
+    cids0 = np.arange(len(X0), dtype=np.int64)
+    cents = {s: (cids0, X0[:, s * sd : (s + 1) * sd].copy()) for s in range(m)}
+    for _ in range(iters):
+        agg = (
+            pq_update_pass(e, cents, coarse, rot)
+            .groupBy("s", "cid", "i")
+            .agg(F.sum("ssum").alias("ts"), F.sum("cnt").alias("tc"))
+            .collect()
+        )
+        comps: dict = {s: {} for s in range(m)}
+        for r in agg:
+            # trunc_div, NOT Python // — Spark div and DuckDB //
+            # truncate toward zero on the possibly-negative sums
+            comps[r.s].setdefault(r.cid, [0] * sd)[r.i - 1] = trunc_div(
+                int(r.ts), int(r.tc)
+            )
+        cents = {
+            s: (
+                np.array(sorted(c), dtype=np.int64),
+                np.array([c[cid] for cid in sorted(c)], dtype=np.int64).reshape(
+                    len(c), sd
+                ),
+            )
+            for s, c in comps.items()
+        }
+    return cents
+
+
+def query_row(e: DataFrame, vec_id: int, sf_dir: str, rot=None) -> "object":
+    """The quantized (and, with ``rot``, rotated) embedding of
+    ``vec_id`` — with a clear error when it is missing from the
+    corpus."""
+    rows = e.filter(F.col("vec_id") == vec_id).select("embedding").collect()
+    if not rows:
+        raise ValueError(
+            f"query vector vec_id={vec_id} not found in the "
+            f"embeddings table at {sf_dir!r}"
+        )
+    q = quantize_rows([rows[0].embedding])
+    return (q if rot is None else q @ rot.T)[0]
+
+
+def query_lut(cents: dict, q) -> dict:
+    """{s: int64[k]}: exact squared distance from the query's
+    subvector s to every centroid of subspace s, in cid order."""
+    sd = cents[0][1].shape[1]
+    return {
+        s: ((C - q[s * sd : (s + 1) * sd]) ** 2).sum(axis=1)
+        for s, (_, C) in cents.items()
+    }
+
+
 def pq_score_pass(
     emb: DataFrame,
     cents: dict,
-    dq: dict,
+    lut: dict,
     query_vec_id: int,
-    m: int,
-    sd: int,
     coarse: tuple | None = None,
-    probe_lists: "set | None" = None,
-    rot: "object | None" = None,
+    rot=None,
 ) -> DataFrame:
     """Final encode + ADC in one scan: per vector, the exact integer
     sum over subspaces of the query-to-centroid distance of its
-    code. Plain PQ: ``dq`` = {(s, cid): dist}. IVFPQ (``coarse`` +
-    ``probe_lists`` set): vectors encode as residuals, only rows in
-    probed coarse lists survive (the inline form of the bucket-pruned
-    index scan), and ``dq`` = {(list, s, cid): dist} — the query
-    residual differs per list."""
+    code. Plain PQ: ``lut`` = ``query_lut(cents, q)``. IVFPQ
+    (``coarse``): ``lut`` = {list: query_lut of the query's residual
+    in that list} over the probed lists; vectors encode as residuals
+    and only rows in a probed list survive (the inline form of the
+    bucket-pruned index scan)."""
+    sd = cents[0][1].shape[1]
 
     def f(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -161,35 +257,23 @@ def pq_score_pass(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _quantize(pdf["embedding"])
-            if rot is not None:
-                X = X @ rot.T
+            X, ca = _encode_input(pdf, coarse, rot)
             vids = pdf["vec_id"].to_numpy()
             if coarse is not None:
-                X, ca = _residualize(X, coarse)
                 clist = coarse[0][ca]
-                keep0 = np.isin(clist, list(probe_lists))
-                X, vids, clist = X[keep0], vids[keep0], clist[keep0]
+                probed = np.isin(clist, list(lut))
+                X, vids, clist = X[probed], vids[probed], clist[probed]
                 if not len(vids):
                     continue
             adc = np.zeros(len(vids), dtype=np.int64)
-            for s in range(m):
-                Xs = X[:, s * sd : (s + 1) * sd]
-                cids, C = cents[s]
-                a, _ = _assign(Xs, C)
+            for s, (_, C) in cents.items():
+                a, _ = _assign(X[:, s * sd : (s + 1) * sd], C)
                 if coarse is None:
-                    lut = np.array(
-                        [dq[(s, int(cid))] for cid in cids], dtype=np.int64
-                    )
-                    adc += lut[a]
-                else:
-                    for L in probe_lists:
-                        lut = np.array(
-                            [dq[(L, s, int(cid))] for cid in cids],
-                            dtype=np.int64,
-                        )
-                        mask = clist == L
-                        adc[mask] += lut[a[mask]]
+                    adc += lut[s][a]
+                    continue
+                for L, list_lut in lut.items():
+                    mask = clist == L
+                    adc[mask] += list_lut[s][a[mask]]
             keep = vids != query_vec_id
             yield pd.DataFrame(
                 {
@@ -200,6 +284,62 @@ def pq_score_pass(
 
     return emb.select("vec_id", "embedding").mapInPandas(
         f, "vec_id long, adc_fp long"
+    )
+
+
+def exact_rerank(
+    emb: DataFrame, scored: DataFrame, q, n: int, top_k: int, rot=None
+) -> DataFrame:
+    """Second stage of the two-stage top-k: the ``n`` best ADC
+    candidates of ``scored`` (vec_id, adc_fp) re-ranked by exact int64
+    squared L2 to the quantized query ``q`` -> top_k rows (vec_id,
+    l2sq_fp, l2sq, adc_fp) ordered by (l2sq_fp, vec_id). ``emb``: the
+    raw embeddings table; only the shortlist's rows are exploded and
+    quantized (JVM-side), and ``q`` enters the plan as one array
+    literal. With ``rot`` the shortlist rotates through a broadcast
+    d*d sign table (metadata scale, never the corpus) and ``q`` must
+    be rotated too; the display ``l2sq`` then also divides by d
+    (SᵀS = d·I)."""
+    shortlist = (
+        scored.orderBy("adc_fp", "vec_id")
+        .limit(n)
+        # referenced twice below (semi-join + final join): cut the
+        # lineage or the whole ADC scan executes twice
+        .localCheckpoint(eager=True)
+    )
+    x = (
+        emb.select("vec_id", F.posexplode("embedding").alias("j", "xf"))
+        .select(
+            "vec_id",
+            "j",
+            F.round(F.col("xf").cast("double") * COMOMENT_SCALE)
+            .cast("bigint")
+            .alias("x"),
+        )
+        .join(F.broadcast(shortlist.select("vec_id")), "vec_id")
+    )
+    l2sq = F.col("l2sq_fp").cast("double") / float(COMOMENT_SCALE) / COMOMENT_SCALE
+    if rot is not None:
+        d = len(rot)
+        signs = emb.sparkSession.createDataFrame(
+            [(i, j, int(rot[i, j])) for i in range(d) for j in range(d)],
+            "i int, j int, sgn long",
+        )
+        x = (
+            x.join(F.broadcast(signs), "j")
+            .groupBy("vec_id", F.col("i").alias("j"))
+            .agg(F.sum(F.col("sgn") * F.col("x")).cast("bigint").alias("x"))
+        )
+        l2sq = l2sq / d
+    diff = F.col("x") - F.lit(q)[F.col("j")]
+    exact = x.groupBy("vec_id").agg(
+        F.sum(diff * diff).cast("bigint").alias("l2sq_fp")
+    )
+    return (
+        exact.join(F.broadcast(shortlist), "vec_id")
+        .select("vec_id", "l2sq_fp", F.round(l2sq, 6).alias("l2sq"), "adc_fp")
+        .orderBy("l2sq_fp", "vec_id")
+        .limit(top_k)
     )
 
 
@@ -238,17 +378,6 @@ def opq_rotation(d: int) -> "object":
     return H * sign[None, :]
 
 
-def quantize_rows(vectors) -> "object":
-    """Driver-side HALF_UP quantization of a list of float vectors —
-    same formula as the per-batch `_quantize`."""
-    import numpy as np
-
-    X = np.array(vectors, dtype=np.float64) * COMOMENT_SCALE
-    return np.where(X >= 0, np.floor(X + 0.5), np.ceil(X - 0.5)).astype(
-        np.int64
-    )
-
-
 def vq_assign_pass(emb: DataFrame, cents: tuple) -> DataFrame:
     """Plain vector-quantizer assignment in ONE Arrow scan:
     (vec_id, cid, xi) where cid is the exact-integer-distance argmin
@@ -267,7 +396,7 @@ def vq_assign_pass(emb: DataFrame, cents: tuple) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _quantize(pdf["embedding"])
+            X = quantize_rows(pdf["embedding"])
             a, _ = _assign(X, C)
             yield pd.DataFrame(
                 {

@@ -537,11 +537,14 @@ class TestIvfPq:
         shortlisting + exact re-rank must surface the true top-k
         (10/10 measured on this corpus), and the re-rank distances
         are exact quantized L2 — bit-equal to numpy integers."""
+        from hive_hdfs_practise_spark.similarity.pq import quantize_rows
+
         got = plans.QUERIES["knn_ivfpq_adc"](spark, SF).collect()
         rows = emb.collect()
+        # quantize_rows, NOT np.round (numpy is half-even; the
+        # pipeline is HALF_UP)
         X = {
-            r.vec_id: np.round(np.array(r.embedding, dtype=float) * 1e6)
-            for r in rows
+            r.vec_id: quantize_rows([r.embedding])[0] for r in rows
         }
         q = X[0]
         true = sorted(
@@ -605,6 +608,159 @@ class TestDegenerateEmbeddings:
             rows = plans.QUERIES["knn_ivfpq_adc"](spark, path).collect()
             assert [r.vec_id for r in rows] == list(range(1, 11))
             assert all(r.l2sq_fp == 0 for r in rows)
+
+    @pytest.mark.parametrize("name", ["knn_opq_adc", "dedup_semdedup"])
+    def test_cross_engine(self, spark, corpora, name):
+        """Every vector collapses into cid 0 after the first Lloyd
+        round, so the other seeds' empty centroids must drop out of
+        the next round on both engines alike."""
+        import duckdb
+
+        for corpus, path in corpora.items():
+            got = sorted(
+                tuple(r) for r in plans.QUERIES[name](spark, path).collect()
+            )
+            con = duckdb.connect()
+            con.execute(
+                "CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{path}/embeddings.parquet/*.parquet')"
+            )
+            want = sorted(
+                tuple(r) for r in con.execute(plans.ORACLES[name]).fetchall()
+            )
+            assert got == want, (name, corpus)
+            if name == "knn_opq_adc":
+                assert [r[0] for r in got] == list(range(1, 11))
+            else:
+                # zero vectors have no cosine: no pairs; a constant
+                # corpus pairs everything in the one cell
+                assert len(got) == (0 if corpus == "zeros" else 40 * 39 // 2)
+
+
+class TestCodebookChecksums:
+    """Every trained codebook at sf0.001, as it enters the scoring or
+    assignment scan: sha256 of its (cids, centroids) int64 bytes,
+    subspaces in order. Captured on the per-builder Lloyd loops the
+    shared trainer in similarity/pq.py replaced."""
+
+    SHA256 = {
+        "knn_pq_adc": "28d4422b26d8c65e",
+        "knn_opq_adc": "994f9490d86b6480",
+        "knn_ivfpq_adc": "02dd81dc18ae001a",
+        "knn_ivfpq_adc:coarse": "e9ac6ae219fd3cbd",
+        "dedup_semdedup": "e9ac6ae219fd3cbd",
+    }
+
+    @staticmethod
+    def _digest(books) -> str:
+        import hashlib
+
+        h = hashlib.sha256()
+        for cids, C in books:
+            h.update(np.ascontiguousarray(cids, dtype=np.int64).tobytes())
+            h.update(np.ascontiguousarray(C, dtype=np.int64).tobytes())
+        return h.hexdigest()[:16]
+
+    def test_codebooks_pinned(self, spark, monkeypatch):
+        import inspect
+
+        from hive_hdfs_practise_spark.similarity import pq
+
+        seen = {}
+        score, assign = pq.pq_score_pass, pq.vq_assign_pass
+
+        def spy_score(*args, **kwargs):
+            a = inspect.signature(score).bind(*args, **kwargs).arguments
+            seen["score"] = (a["cents"], a.get("coarse"))
+            return score(*args, **kwargs)
+
+        def spy_assign(*args, **kwargs):
+            a = inspect.signature(assign).bind(*args, **kwargs).arguments
+            seen["vq"] = a["cents"]
+            return assign(*args, **kwargs)
+
+        monkeypatch.setattr(pq, "pq_score_pass", spy_score)
+        monkeypatch.setattr(pq, "vq_assign_pass", spy_assign)
+        got = {}
+        for name in ("knn_pq_adc", "knn_opq_adc", "knn_ivfpq_adc"):
+            plans.QUERIES[name](spark, SF)
+            cents, coarse = seen.pop("score")
+            got[name] = self._digest(cents[s] for s in sorted(cents))
+            if coarse is not None:
+                got[f"{name}:coarse"] = self._digest([coarse])
+        plans.QUERIES["dedup_semdedup"](spark, SF)
+        got["dedup_semdedup"] = self._digest([seen["vq"]])
+        spark.catalog.clearCache()
+        assert got == self.SHA256
+
+
+def test_update_pass_matches_mask_loop(spark):
+    """The vectorized per-subspace accumulation in ``pq_update_pass``
+    equals the per-centroid mask loop it replaced, summed over
+    partitions; a centroid nobody is nearest to emits no row."""
+    from hive_hdfs_practise_spark.similarity.pq import (
+        _assign,
+        pq_update_pass,
+        quantize_rows,
+    )
+
+    rng = np.random.RandomState(8)
+    vecs = rng.uniform(-1, 1, (60, 64)).astype("float32")
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    ).repartition(3)
+    X = quantize_rows(vecs)
+    cents = {}
+    for s in range(8):
+        C = X[:4, s * 8 : (s + 1) * 8].copy()
+        C[3] = 10**8  # far from every row: no members
+        cents[s] = (np.array([0, 2, 5, 7], dtype=np.int64), C)
+    want = {}
+    for s, (cids, C) in cents.items():
+        Xs = X[:, s * 8 : (s + 1) * 8]
+        a, _ = _assign(Xs, C)
+        for idx in range(len(cids)):
+            mask = a == idx
+            for i in range(8):
+                if mask.any():
+                    want[(s, int(cids[idx]), i + 1)] = (
+                        int(Xs[mask, i].sum()),
+                        int(mask.sum()),
+                    )
+    got = {
+        (r.s, r.cid, r.i): (r.ts, r.tc)
+        for r in pq_update_pass(emb, cents)
+        .groupBy("s", "cid", "i")
+        .agg(F.sum("ssum").alias("ts"), F.sum("cnt").alias("tc"))
+        .collect()
+    }
+    assert got == want
+    assert not any(cid == 7 for _, cid, _ in got)
+
+
+def test_one_lloyd_loop():
+    """similarity/pq.py owns the integer Lloyd loop: it is the only
+    module that calls ``pq_update_pass`` (names in docstrings and
+    comments do not count)."""
+    import ast
+    from pathlib import Path
+
+    import hive_hdfs_practise_spark
+
+    root = Path(hive_hdfs_practise_spark.__file__).parent
+    sites = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and (
+                (isinstance(node.func, ast.Name) and node.func.id == "pq_update_pass")
+                or (
+                    isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "pq_update_pass"
+                )
+            ):
+                sites.add(path.relative_to(root).as_posix())
+    assert sites == {"similarity/pq.py"}
 
 
 class TestClusterBalancedSample:
