@@ -47,6 +47,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..operators.compaction import (
     append_bucketed,
     delete_ids,
@@ -138,20 +139,14 @@ def shingle_hash(col: Column, family: str) -> Column:
     if family == "xxhash":
         return F.pmod(F.xxhash64(col), F.lit(P32))
     if family == "md5":
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % F.lit(P32)
+        return hex_int(F.md5(col)) % F.lit(P32)
     raise ValueError(f"unknown minhash family: {family}")
 
 
 def md5_shingle_hash_sql(expr: str) -> str:
-    """DuckDB twin of ``shingle_hash(_, 'md5')``: nibble-sum of the
-    first 8 md5 hex chars (== Spark's conv(substring(md5,1,8),16,10)),
-    mod P32. Dialect-neutral instr/substring arithmetic."""
-    u32 = " + ".join(
-        f"CAST(instr('0123456789abcdef', substring(md5({expr}), {p + 1}, 1)) - 1 "
-        f"AS BIGINT) * {1 << (4 * (7 - p))}"
-        for p in range(8)
-    )
-    return f"(({u32}) % {P32})"
+    """SQL twin of ``shingle_hash(_, 'md5')``: the first 8 md5 hex
+    digits of ``expr`` mod P32, valid in Spark SQL and DuckDB."""
+    return f"({hex_int_sql(f'md5({expr})')} % {P32})"
 
 
 def perm_min_sql(i: int, h: str = "h") -> str:

@@ -16,7 +16,8 @@ shifts; no UDFs, no explode.
 
 from __future__ import annotations
 
-HEX = "0123456789abcdef"
+from .hexdigest import hex_int_sql
+
 BITS = 32
 
 
@@ -28,12 +29,11 @@ def tokens_expr(dialect: str, text: str = "text") -> str:
 
 
 def token_sig_term(h: str, bits: int = BITS) -> str:
-    """Scalar ``bits``-wide signature of one md5-hex expression
-    (dialect-neutral: instr/substring/CAST behave identically).
+    """Scalar ``bits``-wide signature of one md5-hex expression,
+    little-endian: hex digit p weighs 16^p (dialect-neutral).
     bits ≤ 60 keeps the nibble sum inside signed-64 range."""
     return " + ".join(
-        f"(CAST(instr('{HEX}', substring({h}, {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * p)})"
-        for p in range(bits // 4)
+        f"({hex_int_sql(h, p + 1, 1)} * {1 << (4 * p)})" for p in range(bits // 4)
     )
 
 

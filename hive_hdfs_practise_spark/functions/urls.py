@@ -18,11 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .hexdigest import hex_int, hex_int_sql
+
 
 def url_nib_sql(k: int) -> str:
-    return (
-        f"(instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), {k}, 1)) - 1)"
-    )
+    return hex_int_sql("md5(CAST(doc_id AS VARCHAR))", k, 1)
 
 
 URL_SYNTH_SQL = f"""
@@ -98,10 +98,7 @@ def url_canon_ctes(src: str) -> str:
 
 def synth_url_col() -> Column:
     """Spark twin of URL_SYNTH_SQL (expects doc_id + source cols)."""
-    nib = lambda k: (  # noqa: E731
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), k, 1), 16, 10)
-        .cast("int")
-    )
+    nib = lambda k: hex_int(F.md5(F.col("doc_id").cast("string")), k, 1)  # noqa: E731
     scheme = F.when(nib(1) % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
     www = F.when(nib(2) % 2 == 0, F.lit("WWW.")).otherwise(F.lit(""))
     port = F.when(

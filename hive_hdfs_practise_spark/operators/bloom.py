@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hexdigest import hex_int
+
 
 def _shl1(nbits: Column) -> Column:
     # shiftleft's Python signature wants a literal int for numBits;
@@ -37,7 +39,7 @@ def _positions(key: Column) -> list[Column]:
     string form: position i = int(hex[8i:8i+8], 16) mod M_BITS."""
     h = F.md5(key.cast("string"))
     return [
-        F.pmod(F.conv(F.substring(h, 8 * i + 1, 8), 16, 10).cast("long"), F.lit(M_BITS))
+        F.pmod(hex_int(h, 8 * i + 1), F.lit(M_BITS))
         for i in range(K_HASHES)
     ]
 

@@ -19,17 +19,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-HEX = "0123456789abcdef"
+from ..functions.hexdigest import hex_int
 
 
-def md5_bucket(key: Column, n_buckets: int = 256) -> Column:
-    """Deterministic bucket in [0, n_buckets) from the first two md5
-    hex digits of the key's string form (n_buckets ≤ 256)."""
-    h = F.md5(key.cast("string"))
-    b = (F.instr(F.lit(HEX), F.substring(h, 1, 1)) - 1) * 16 + (
-        F.instr(F.lit(HEX), F.substring(h, 2, 1)) - 1
-    )
-    return F.pmod(b, F.lit(n_buckets))
+def md5_bucket(key: Column) -> Column:
+    """Deterministic bucket in [0, 256) from the first two md5 hex
+    digits of the key's string form."""
+    return hex_int(F.md5(key.cast("string")), 1, 2)
 
 
 def hash_sample(df: DataFrame, key: str, pct: int) -> DataFrame:

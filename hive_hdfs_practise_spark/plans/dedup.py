@@ -37,6 +37,7 @@ from ..dedup import minhash as mh
 from ..functions import simhash as sh
 from ..functions import text as tx
 from ..functions import vectors as vec
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..operators.compaction import live_rows
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K  # noqa: F401  (re-export)
@@ -1249,9 +1250,7 @@ _U32_SPAN = 1 << 32
 
 
 def _spectrum_oracle() -> str:
-    from .similarity import _md5_u32_sql
-
-    u32 = _md5_u32_sql("CAST(h.doc_id AS VARCHAR)")
+    u32 = hex_int_sql("md5(CAST(h.doc_id AS VARCHAR))")
     return f"""
     WITH toks AS (
         SELECT doc_id, lang, {sh.tokens_expr('duckdb')} AS tokens FROM documents
@@ -1299,11 +1298,9 @@ def dedup_simhash_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — this registered form is the calibration tool,
     same corpus contract as the recall audit. Signature checkpoint
     at plan time: BUILD_EXECUTES."""
-    from .similarity import md5_u32_col
-
     d = wide_table(spark, sf_dir, "documents")
     hashes = _simhash_signatures(d, sh.BITS).localCheckpoint(eager=True)
-    u32 = md5_u32_col(F.col("doc_id"))
+    u32 = hex_int(F.md5(F.col("doc_id").cast("string")))
     ln = hashes.groupBy("lang").agg(F.count(F.lit(1)).alias("nl"))
     sampled = (
         hashes.join(F.broadcast(ln), "lang")
@@ -1651,9 +1648,7 @@ def _emb_lsh_cand_sql(n_bands: int, ppb: int) -> str:
     """The WITH-clause body shared by every banded hyperplane-LSH
     oracle: md5-derived planes, per-band sign-bit buckets, distinct
     a<b pairs sharing any (band, bucket)."""
-    from .similarity import _md5_u32_sql
-
-    u32 = _md5_u32_sql("concat(p.plane_id, ':', c.c)")
+    u32 = hex_int_sql("md5(concat(p.plane_id, ':', c.c))")
     n_planes = n_bands * ppb
     return f"""
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -2233,7 +2228,7 @@ def _duplicate_span_table(
     # join form) → 14.0 s; the all-string-key fused form sat at
     # 25.2 s — the sort key, not the pass count alone, is the lever
     # (probe matrix recorded in SCALING.md).
-    gh = F.expr("cast(conv(substring(md5(gram), 1, 15), 16, 10) as bigint)")
+    gh = hex_int(F.md5(F.col("gram")), 1, 15)
     wg = Window.partitionBy("gh", "gram")
     pos = (
         g.select("doc_id", "i", "gram", gh.alias("gh"))
@@ -3185,9 +3180,7 @@ def _cdc_chunks(d: DataFrame, mod: int) -> DataFrame:
             f" i -> struct(i AS i, substring(text, i, {CDC_K}) AS g)))"
         ).alias("pg"),
     )
-    u32 = F.conv(F.substring(F.md5(F.col("pg.g")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    u32 = hex_int(F.md5(F.col("pg.g")))
     cuts = (
         grams.withColumn("e", F.col("pg.i") + (CDC_K - 1))
         .filter((u32 % mod == 0) & (F.col("e") < F.col("n")))
@@ -3225,9 +3218,7 @@ def _cdc_chunks(d: DataFrame, mod: int) -> DataFrame:
 
 
 def _cdc_oracle() -> str:
-    from .similarity import _md5_u32_sql
-
-    u32 = _md5_u32_sql(f"substring(text, x, {CDC_K})")
+    u32 = hex_int_sql(f"md5(substring(text, x, {CDC_K}))")
     return f"""
     WITH d AS (SELECT doc_id, text, len(text) AS n FROM documents),
     segs AS (
@@ -3323,9 +3314,7 @@ def _agree_sdocs_sql() -> str:
     """The count-derived md5 doc-sample CTEs feeding both detectors
     (SPECTRUM_BLOCK_CAP design note; corpus-level cap here since the
     minhash side is unblocked)."""
-    from .similarity import _md5_u32_sql
-
-    u32 = _md5_u32_sql("CAST(d.doc_id AS VARCHAR)")
+    u32 = hex_int_sql("md5(CAST(d.doc_id AS VARCHAR))")
     return f"""nn AS (
         SELECT ({AGREE_DOC_CAP} * {_U32_SPAN}) // count(*) AS cut
         FROM documents
@@ -3381,15 +3370,13 @@ def dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample each pipeline keeps its own shape (banded LSH; simhash
     blocked brute), and the comparison joins pair-id sets —
     output-mass-sized. All exact integers."""
-    from .similarity import md5_u32_col
-
     d = wide_table(spark, sf_dir, "documents")
     nn = d.agg(
         F.expr(
             f"CAST(({AGREE_DOC_CAP} * {_U32_SPAN}) div count(*) AS BIGINT)"
         ).alias("cut")
     )
-    u32 = md5_u32_col(F.col("doc_id"))
+    u32 = hex_int(F.md5(F.col("doc_id").cast("string")))
     sdocs = d.crossJoin(F.broadcast(nn)).where(u32 < F.col("cut")).drop("cut")
     # checkpoint each detector's pair set ONCE (r12 optimization):
     # m and sp each feed two consumers (their own count + the
@@ -3532,9 +3519,7 @@ CHUNK_ID_BASE = 1 << 20  # chunk index bound: a 2^20-chunk doc ≈ 268 MB
 
 
 def _chunk_docs_ctes() -> str:
-    from .similarity import _md5_u32_sql
-
-    u32 = _md5_u32_sql(f"substring(text, x, {CDC_K})")
+    u32 = hex_int_sql(f"md5(substring(text, x, {CDC_K}))")
     return f"""cd AS (SELECT doc_id, text, len(text) AS n FROM documents),
     csegs AS (
         SELECT doc_id, text, n,

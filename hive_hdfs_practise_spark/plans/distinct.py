@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.hexdigest import hex_int_sql
 from ..sources.catalog import table
 from .registry import register
 
@@ -56,14 +57,7 @@ def _kmv_hash_sql(col: str) -> str:
     """Uniform (0,1] hash of ``col`` from the first 8 md5 nibbles —
     the dialect-neutral idiom (md5 is the only hash whose hex output
     matches bit-for-bit across Spark and DuckDB)."""
-    return (
-        "(("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substring(md5(CAST({col} AS VARCHAR)), {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-            for p in range(8)
-        )
-        + " + 1) / 4294967296.0)"
-    )
+    return f"(({hex_int_sql(f'md5(CAST({col} AS VARCHAR))')} + 1) / 4294967296.0)"
 
 
 _KMV_H = _kmv_hash_sql("user_id")

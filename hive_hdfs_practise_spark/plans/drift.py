@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -727,10 +728,7 @@ def lineitem_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds through DOUBLE). ln() never enters the check.
 VOCAB_DRIFT_TOPK = 30
 _VD_SCALE = 1_000_000
-_VD_BUCKET = (
-    "((instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1))"
-)
+_VD_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
 
 
 @register(
@@ -789,15 +787,7 @@ def documents_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.when(
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2),
-                16,
-                10,
-            ).cast("int")
-            < 128,
-            1,
-        )
+        F.when(hex_int(F.md5(F.col("doc_id").cast("string")), 1, 2) < 128, 1)
         .otherwise(0)
         .alias("in_a"),
         F.array_distinct(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from ..functions.hexdigest import hex_int_sql
 from ..multimodal.binary_ops import (
     FEATURE_DIM,
     PHASH_BLOCKS,
@@ -27,11 +28,10 @@ from ..multimodal.binary_ops import (
 from ..sources.catalog import table, wide_table
 from .registry import register
 
-# hex digit value via instr (shared cross-engine idiom, see
-# functions/simhash.py): byte k of the digest = 16*nib(2k+1)+nib(2k+2)
-_NIB = "(instr('0123456789abcdef', substring(sha256(text), {pos}, 1)) - 1)"
-_B0 = f"(16 * {_NIB.format(pos=1)} + {_NIB.format(pos=2)})"
-_B1 = f"(16 * {_NIB.format(pos=3)} + {_NIB.format(pos=4)})"
+
+def _sha256_byte(k: int) -> str:
+    """Byte k of sha256(text), the digest the fake decoders read."""
+    return hex_int_sql("sha256(text)", 2 * k + 1, 2)
 
 
 @register(
@@ -40,8 +40,8 @@ _B1 = f"(16 * {_NIB.format(pos=3)} + {_NIB.format(pos=4)})"
     SELECT doc_id AS media_id,
            CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
            sha256(text) AS sha256,
-           CAST(16 + {_B0} % 240 AS INTEGER) AS width,
-           CAST(16 + {_B1} % 240 AS INTEGER) AS height
+           CAST(16 + {_sha256_byte(0)} % 240 AS INTEGER) AS width,
+           CAST(16 + {_sha256_byte(1)} % 240 AS INTEGER) AS height
     FROM documents
     """,
 )
@@ -108,17 +108,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(media, FRAME_CHARS, FRAME_EVERY)
 
 
-_FEAT_BYTE = (
-    "(16 * (instr('0123456789abcdef', substring(sha256(text), {p1}, 1)) - 1)"
-    " + (instr('0123456789abcdef', substring(sha256(text), {p2}, 1)) - 1))"
-)
-
-
 @register(
     "multimodal_feature_extract",
     oracle="SELECT doc_id AS media_id, "
     + ", ".join(
-        f"round({_FEAT_BYTE.format(p1=2 * k + 1, p2=2 * k + 2)} / 255.0, 6) AS f{k}"
+        f"round({_sha256_byte(k)} / 255.0, 6) AS f{k}"
         for k in range(FEATURE_DIM)
     )
     + " FROM documents",

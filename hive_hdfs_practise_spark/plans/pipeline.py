@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..dedup.clusters import connected_components
 from ..functions import text as tx
+from ..functions.hexdigest import hex_int_sql
 from ..operators.sampling import dataset_split
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K
@@ -34,12 +35,7 @@ from .text import _lang_oracle, _quality_oracle, _token_agg
 
 QUALITY_MIN = 0.6
 
-# The split-bucket SQL fragment (kept in lockstep with
-# operators/sampling.py::md5_bucket via the shared constants).
-_BUCKET = (
-    "((instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1))"
-)
+_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
 
 
 def _pipeline_oracle(lsh_pairs: bool = False) -> str:

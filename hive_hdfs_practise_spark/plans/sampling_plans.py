@@ -13,14 +13,12 @@ from pyspark.sql.window import Window
 
 from ..dedup import minhash as mh
 from ..functions import text as tx
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..operators.sampling import dataset_split, hash_sample
 from ..sources.catalog import table, wide_table
 from .registry import register
 
-_BUCKET = (
-    "((instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1))"
-)
+_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
 
 
 @register(
@@ -311,7 +309,7 @@ def split_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     trd AS (
         SELECT d.doc_id, d.source
         FROM documents d
-        WHERE ({_BUCKET.replace('doc_id', 'd.doc_id')}) % 256 < 205
+        WHERE {hex_int_sql("md5(CAST(d.doc_id AS VARCHAR))", 1, 2)} % 256 < 205
     )
     SELECT trd.source,
            CAST(count(*) AS BIGINT) AS n_train_docs,
@@ -392,29 +390,14 @@ DECON_BLOOM_M = 1 << 20  # filter bits (16K sparse int64 words, <=128 KB)
 _DECON_SLICES = (1, 9, 17, 25)  # md5 hex offsets → k=4 hashes
 
 
-def _md5_u32_sql(expr: str, start: int) -> str:
-    """DuckDB twin of Spark's conv(substring(md5(e), start, 8), 16,
-    10): nibble-sum of 8 hex chars at ``start`` (the
-    md5_shingle_hash_sql idiom, offset-parameterized)."""
-    return (
-        "("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substring(md5({expr}), {start + p}, 1)) - 1 "
-            f"AS BIGINT) * {1 << (4 * (7 - p))}"
-            for p in range(8)
-        )
-        + ")"
-    )
-
-
 def _bloom_decon_oracle() -> str:
     m = DECON_BLOOM_M
     pos_arms = " ".join(
-        f"WHEN {j} THEN {_md5_u32_sql('g', s)} % {m}"
+        f"WHEN {j} THEN {hex_int_sql('md5(g)', s)} % {m}"
         for j, s in enumerate(_DECON_SLICES)
     )
     te_pos_union = "\n        UNION ALL ".join(
-        f"SELECT {_md5_u32_sql('g', s)} % {m} AS pos FROM te_g"
+        f"SELECT {hex_int_sql('md5(g)', s)} % {m} AS pos FROM te_g"
         for s in _DECON_SLICES
     )
     return rf"""
@@ -490,10 +473,7 @@ def split_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bloom_u32(s: int):
     """Slice ``s`` of the materialized md5 column ``h`` as a filter
     position."""
-    return (
-        F.conv(F.substring(F.col("h"), s, 8), 16, 10).cast("bigint")
-        % DECON_BLOOM_M
-    )
+    return hex_int(F.col("h"), s) % DECON_BLOOM_M
 
 
 def bloom_filter_words(d: DataFrame) -> DataFrame:
@@ -691,15 +671,6 @@ def documents_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold. md5-derived u makes membership deterministic across
 # engines, runs, and partitionings.
 WSAMPLE_K = 50
-_U32 = (
-    "("
-    + " + ".join(
-        "CAST(instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)),"
-        f" {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-        for p in range(8)
-    )
-    + ")"
-)
 
 
 @register(
@@ -710,7 +681,8 @@ _U32 = (
            round(least(1.0, {WSAMPLE_K} * CAST(n_chars AS DOUBLE) / w_total), 6)
                AS p_include
     FROM documents, tot
-    WHERE CAST({_U32} AS DECIMAL(38,0)) * CAST(w_total AS DECIMAL(38,0))
+    WHERE CAST({hex_int_sql("md5(CAST(doc_id AS VARCHAR))")} AS DECIMAL(38,0))
+          * CAST(w_total AS DECIMAL(38,0))
           < CAST({WSAMPLE_K} AS DECIMAL(38,0))
             * CAST(n_chars AS DECIMAL(38,0)) * CAST(4294967296 AS DECIMAL(38,0))
     """,
@@ -725,9 +697,7 @@ def dataset_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10²⁴ at 100 TB — past BIGINT, nowhere near DECIMAL(38))."""
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     tot = d.agg(F.sum("n_chars").cast("bigint").alias("w_total"))
-    u32 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    u32 = hex_int(F.md5(F.col("doc_id").cast("string")))
     dec = lambda c: c.cast("decimal(38,0)")
     return (
         d.join(F.broadcast(tot))

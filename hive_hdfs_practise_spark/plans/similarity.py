@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vectors as vec
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -140,13 +141,7 @@ def _hyperplanes_from(
     time, so plan construction stays metadata-only and the
     correctness gate never pays an extra Spark job per build."""
     comp = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("plane_id"), F.col("c"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex_int(F.md5(F.concat_ws(":", F.col("plane_id"), F.col("c"))))
         / F.lit(float(1 << 31))
         - F.lit(1.0)
     )
@@ -171,36 +166,11 @@ def _hyperplanes_from(
     )
 
 
-def md5_u32_col(col) -> "F.Column":
-    """Spark twin of ``_md5_u32_sql``: first 8 md5 hex chars of the
-    (string-cast) column as an unsigned-32 BIGINT. The ONE helper for
-    every Spark-side site that must stay bit-identical to the SQL
-    generator below (r11 review — the calibration gates' entire
-    cross-engine surface is this expression)."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-
-
-def _md5_u32_sql(expr: str) -> str:
-    """First 8 md5 hex nibbles of ``expr`` as a 32-bit unsigned int
-    (dialect-neutral; matches Spark's conv(substring(md5(..),1,8),
-    16,10) — ``md5_u32_col`` is the Spark twin)."""
-    return (
-        "("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substring(md5({expr}), {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-            for p in range(8)
-        )
-        + ")"
-    )
-
-
 def _lsh_bucket_ctes() -> str:
     """Shared CTE prefix: deterministic md5-derived hyperplanes,
     per-vector sign bits, bucket ids — the SQL restatement of
     ``_hyperplanes_from`` + the bucket fold."""
-    u32 = _md5_u32_sql("concat(p.plane_id, ':', c.c)")
+    u32 = hex_int_sql("md5(concat(p.plane_id, ':', c.c))")
     comp = f"{u32} / 2147483648.0 - 1.0"
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -2142,10 +2112,7 @@ DRIFT_SCALE = 1_000_000
 
 
 def _drift_oracle() -> str:
-    bucket = (
-        "((instr('0123456789abcdef', substring(md5(CAST(vec_id AS VARCHAR)), 1, 1)) - 1) * 16"
-        " + (instr('0123456789abcdef', substring(md5(CAST(vec_id AS VARCHAR)), 2, 1)) - 1))"
-    )
+    bucket = hex_int_sql("md5(CAST(vec_id AS VARCHAR))", 1, 2)
     return f"""
     WITH eb AS (
         SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v,
@@ -2751,11 +2718,9 @@ JL_DIM = 16
 
 def _jl_audit_oracle() -> str:
     ids = ", ".join(str(v) for v in AUDIT_QVECS)
-    sign = (
-        "(CASE WHEN instr('0123456789abcdef', substring(md5("
-        "CAST(j AS VARCHAR) || ':' || CAST(t.i AS VARCHAR)), 1, 1)) - 1 < 8 "
-        "THEN 1 ELSE -1 END)"
-    )
+    ji = "CAST(j AS VARCHAR) || ':' || CAST(t.i AS VARCHAR)"
+    digit = hex_int_sql(f"md5({ji})", 1, 1)
+    sign = f"(CASE WHEN {digit} < 8 THEN 1 ELSE -1 END)"
     return f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -2827,15 +2792,7 @@ def embeddings_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFram
         F.round(F.col("c") * 1_000_000).cast("bigint").alias("q"),
     )
     sign = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("j"), F.col("i"))), 1, 1
-            ),
-            16,
-            10,
-        ).cast("int")
-        < 8,
-        1,
+        hex_int(F.md5(F.concat_ws(":", F.col("j"), F.col("i"))), 1, 1) < 8, 1
     ).otherwise(-1)
     proj = (
         comp.select(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.hexdigest import hex_int, hex_int_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -302,17 +303,6 @@ def lineitem_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and merge order, so two engines (or two clusters) agree bit-for-bit
 # iff the row sets match. Value columns are folded in as integer
 # cents so float formatting can't enter the canonical string.
-_CKSUM_U32 = (
-    "("
-    + " + ".join(
-        "CAST(instr('0123456789abcdef', substring({h}, "
-        f"{p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-        for p in range(8)
-    )
-    + ")"
-)
-
-
 @register(
     "lineitem_checksum",
     oracle=f"""
@@ -324,7 +314,7 @@ _CKSUM_U32 = (
         FROM lineitem
     )
     SELECT count(*) AS n_rows,
-           CAST(sum({_CKSUM_U32.format(h='h')}) AS BIGINT) AS checksum
+           CAST(sum({hex_int_sql('h')}) AS BIGINT) AS checksum
     FROM c
     """,
 )
@@ -343,10 +333,9 @@ def lineitem_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linenumber").cast("string"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").cast("string"),
     )
-    u32 = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("long")
     return l.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(u32).cast("bigint").alias("checksum"),
+        F.sum(hex_int(F.md5(canon))).cast("bigint").alias("checksum"),
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as tx
+from ..functions.hexdigest import hex_int_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -614,10 +615,7 @@ CMS_WIDTH = 256
 
 def _cms_pos(j: int, h: str) -> str:
     """Dialect-neutral SQL: byte j of md5-hex expression ``h``."""
-    nib = "(instr('0123456789abcdef', substring({h}, {p}, 1)) - 1)"
-    return (
-        f"(16 * {nib.format(h=h, p=2 * j + 1)} + {nib.format(h=h, p=2 * j + 2)})"
-    )
+    return hex_int_sql(h, 2 * j + 1, 2)
 
 
 @register(

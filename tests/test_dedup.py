@@ -1693,13 +1693,13 @@ class TestCalibrationGate:
             SPECTRUM_BLOCK_CAP,
             _U32_SPAN,
         )
-        from hive_hdfs_practise_spark.plans.similarity import (
-            _md5_u32_sql,
-            md5_u32_col,
+        from hive_hdfs_practise_spark.functions.hexdigest import (
+            hex_int,
+            hex_int_sql,
         )
 
         d = spark.read.parquet(f"{gate_dir}/documents.parquet")
-        u32 = md5_u32_col(F.col("doc_id"))
+        u32 = hex_int(F.md5(F.col("doc_id").cast("string")))
         nn = d.agg(
             F.expr(
                 f"CAST(({SPECTRUM_BLOCK_CAP} * {_U32_SPAN}) div count(*)"
@@ -1718,7 +1718,7 @@ class TestCalibrationGate:
             "CREATE VIEW documents AS SELECT * FROM "
             f"read_parquet('{gate_dir}/documents.parquet')"
         )
-        u32sql = _md5_u32_sql("CAST(d.doc_id AS VARCHAR)")
+        u32sql = hex_int_sql("md5(CAST(d.doc_id AS VARCHAR))")
         want = {
             r[0]
             for r in con.execute(
