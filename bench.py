@@ -58,7 +58,6 @@ BENCH_QUERIES = [
     # the brute pair stage wins through at least 200k docs; the
     # bucketed form is the documented asymptotic path, test-pinned.
     "knn_brute_cosine",
-    "knn_brute_cosine_vectorized",
     "text_quality_score",
     "text_lang_id",
     "word_freq_topk",

@@ -9,7 +9,9 @@ primitives with identical semantics in Spark SQL and DuckDB
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tokenization ----------------------------------------------------------------
@@ -37,6 +39,17 @@ def bpe_ish_token_count(col: Column) -> Column:
 
 
 # Shingles --------------------------------------------------------------------
+#
+# The one definition of "a doc's shingle set" and "Jaccard over two of
+# them", in a Spark form and a SQL form each (the SQL text is valid in
+# DuckDB, where the oracles run):
+#
+# - the set: ``char_shingles`` (one array per doc) and
+#   ``shingle_postings`` (distinct (doc, s) rows) / ``shingle_set_sql``;
+# - the counts: ``shingle_overlap`` materializes |a∩b| and |a∪b| per
+#   pair / ``shingle_overlap_sql`` states them as select items;
+# - the ratio: ``jaccard`` / ``jaccard_sql``, 6 decimals, NULL on an
+#   empty union (ANSI mode raises on 0/0, so the guard is a CASE).
 
 
 def char_shingles(col: Column, k: int = 5) -> Column:
@@ -54,6 +67,80 @@ def char_shingles(col: Column, k: int = 5) -> Column:
             F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(col, i, k))
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def shingle_set_sql(text: str = "text", k: int = 5) -> str:
+    """SQL twin of ``char_shingles``: the distinct k-grams of the SQL
+    expression ``text`` (``generate_series(1, 0)`` is empty in DuckDB,
+    so short texts need no guard there)."""
+    return (
+        f"list_distinct([substring({text}, x, {k}) for x in "
+        f"generate_series(1, greatest(len({text}) - {k - 1}, 0))])"
+    )
+
+
+def shingle_positions(df: DataFrame, cols: Sequence[str], k: int = 5) -> DataFrame:
+    """``cols`` + one row per k-gram position ``s`` of ``df.text`` —
+    an explode of codegen'd ``substring`` calls, not the interpreted
+    ``transform`` of ``char_shingles``, for corpus-sized passes. The
+    length guard stands in for Spark's descending ``sequence(1, 0)``."""
+    return (
+        df.where(F.length("text") >= k)
+        .select(
+            *cols,
+            F.explode(F.sequence(F.lit(1), F.length("text") - F.lit(k - 1))).alias("i"),
+            "text",
+        )
+        .select(*cols, F.expr(f"substring(text, i, {k})").alias("s"))
+    )
+
+
+def shingle_postings(df: DataFrame, cols: Sequence[str], k: int = 5) -> DataFrame:
+    """Distinct (``cols``, ``s``) shingle postings of ``df.text``: the
+    exploded form of ``char_shingles``."""
+    return shingle_positions(df, cols, k).distinct()
+
+
+def shingle_overlap(pairs: DataFrame, a: Column, b: Column) -> DataFrame:
+    """(doc_a, doc_b, ni, sab) — ni = |a∩b| and sab = |a| + |b| of the
+    shingle arrays ``a`` and ``b`` on every row of ``pairs``; the
+    union is ``sab - ni``.
+
+    The counts go through a Generate node (explode of a one-element
+    array): a later filter on an alias of ``array_intersect`` is
+    otherwise pushed into the join condition below it with the
+    intersect inlined once per reference (three per pair)."""
+    c = pairs.select(
+        "doc_a",
+        "doc_b",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.size(F.array_intersect(a, b)).alias("ni"),
+                    (F.size(a) + F.size(b)).alias("sab"),
+                )
+            )
+        ).alias("_c"),
+    )
+    return c.select("doc_a", "doc_b", F.col("_c.ni").alias("ni"), F.col("_c.sab").alias("sab"))
+
+
+def jaccard(ni: Column, nu: Column) -> Column:
+    """ni / nu rounded to 6 decimals; NULL when the union is empty."""
+    return F.when(nu > 0, F.round(ni.cast("double") / nu, 6))
+
+
+def jaccard_sql(ni: str, nu: str) -> str:
+    """SQL twin of ``jaccard``."""
+    return f"CASE WHEN {nu} > 0 THEN round(CAST({ni} AS DOUBLE) / {nu}, 6) END"
+
+
+def shingle_overlap_sql(a: str, b: str) -> str:
+    """SQL form of ``shingle_overlap``: the select items ``ni`` =
+    |a∩b| and ``nu`` = |a∪b| of the shingle lists ``a`` and ``b``
+    (BIGINT in DuckDB)."""
+    ni = f"len(list_intersect({a}, {b}))"
+    return f"{ni} AS ni, len({a}) + len({b}) - {ni} AS nu"
 
 
 # Quality / stats -------------------------------------------------------------

@@ -19,13 +19,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hexdigest import hex_int
+from ..functions.hexdigest import hex_int, hex_int_sql
 
 
 def md5_bucket(key: Column) -> Column:
     """Deterministic bucket in [0, 256) from the first two md5 hex
     digits of the key's string form."""
     return hex_int(F.md5(key.cast("string")), 1, 2)
+
+
+def md5_bucket_sql(key: str) -> str:
+    """SQL twin of ``md5_bucket`` over the SQL expression ``key``
+    (valid in Spark SQL and DuckDB)."""
+    return hex_int_sql(f"md5(CAST({key} AS STRING))", 1, 2)
 
 
 def hash_sample(df: DataFrame, key: str, pct: int) -> DataFrame:

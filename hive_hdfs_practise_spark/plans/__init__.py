@@ -41,56 +41,56 @@ from . import tpch  # noqa: F401,E402
 # driver evidence is OLDEST (r01/r02/r03-era), so every name's green
 # stays fresh across rounds. Re-derive each round.
 _FRONT = [
-    "monthly_sales_ranked",  # green ['r01', 'r06', 'r07']
-    "sales_pivot_status",  # green ['r01', 'r06', 'r07']
-    "customer_count",  # green ['r01', 'r06', 'r07']
-    "paginate_by_window",  # green ['r01', 'r06', 'r07']
-    "set_ops_status_customers",  # green ['r01', 'r06', 'r07']
-    "semi_anti_join_customers",  # green ['r01', 'r06', 'r07']
-    "customer_value_deciles",  # green ['r01', 'r06', 'r07']
-    "sales_pivot_by_status",  # green ['r05', 'r06', 'r07']
-    "customer_rfm_segments",  # green ['r05', 'r06', 'r07']
-    "orders_frequent_part_pairs",  # green ['r05', 'r06', 'r07']
-    "orders_association_rules",  # green ['r06', 'r07']
-    "sales_mom_growth",  # green ['r05', 'r06', 'r07']
-    "sales_seasonal_decomposition",  # green ['r05', 'r06', 'r07']
-    "sales_incremental_refresh",  # green ['r05', 'r06', 'r07']
-    "supplier_abc_classification",  # green ['r05', 'r06', 'r07']
-    "supplier_top_parts",  # green ['r06', 'r07']
-    "lineitem_measures_unpivot",  # green ['r06', 'r07']
-    "part_similar_items",  # green ['r05', 'r06', 'r07']
-    "chunks_ordered_reassembly",  # green ['r02', 'r06', 'r07']
-    "replication_audit",  # green ['r02', 'r06', 'r07']
-    "placement_balance",  # green ['r02', 'r06', 'r07']
-    "dedup_exact",  # green ['r01', 'r03', 'r06', 'r07']
-    "dedup_exact_normalized",  # green ['r01', 'r03', 'r06', 'r07']
-    "dedup_ngram_jaccard",  # green ['r03', 'r06', 'r07']
-    "dedup_minhash_lsh",  # green ['r06', 'r07']
-    "dedup_simhash",  # green ['r03', 'r06', 'r07']
-    "dedup_simhash_bucketed",  # green ['r03', 'r06', 'r07']
-    "documents_duplicate_spans_summary",  # green ['r07']
-    "documents_winnowing_top_pairs",  # green ['r07']
-    "documents_url_dedup",  # green ['r07']
-    "documents_remove_duplicate_spans",  # green ['r07']
-    "documents_containment_minhash",  # green ['r07']
-    "graph_link_prediction_minhash",  # green ['r07']
-    "documents_kn_perplexity",  # green ['r07']
-    "pipeline_training_data_lsh",  # green ['r07']
-    "split_decontamination_bloom",  # green ['r07']
-    "stream_url_dedup",  # green ['r07']
-    "documents_hybrid_rrf",  # green ['r08']
-    "dedup_minhash_indexed",  # green ['r08']
-    "dedup_cross_source_matrix",  # green ['r08']
-    "knn_brute_cosine",  # green ['r02', 'r03', 'r08']
-    "knn_brute_cosine_vectorized",  # green ['r02', 'r03', 'r08']
-    "knn_lsh_bucketed",  # green ['r03', 'r08']
-    "knn_ivf",  # green ['r03', 'r08']
-    "knn_recall_audit",  # green ['r08']
-    "embedding_centroids",  # green ['r03', 'r08']
-    "embeddings_drift_by_label",  # green ['r08']
-    "json_roundtrip",  # green ['r02', 'r08']
-    "events_salted_agg",  # green ['r02', 'r08']
-    "events_props_map",  # green ['r02', 'r08']
+    "events_props_variant",  # green ['r02', 'r08']
+    "multimodal_decode_stub",  # green ['r02', 'r08']
+    "multimodal_resize_stub",  # green ['r02', 'r08']
+    "multimodal_frame_sample",  # green ['r02', 'r08']
+    "multimodal_feature_extract",  # green ['r02', 'r08']
+    "dedup_survivors_quality",  # green ['r08']
+    "documents_pack_efficiency",  # green ['r08']
+    "documents_filter_cascade",  # green ['r08']
+    "documents_tokenizer_fertility",  # green ['r08']
+    "documents_kn_trigram_perplexity",  # green ['r08']
+    "order_detail_nested",  # green ['r02', 'r08']
+    "next_order_id",  # green ['r01', 'r02', 'r08']
+    "events_json_extract",  # green ['r01', 'r02', 'r08']
+    "customer_projection",  # green ['r01', 'r02', 'r08']
+    "split_contamination_by_source",  # green ['r08']
+    "documents_temperature_mix",  # green ['r08']
+    "scalar_functions",  # green ['r02', 'r08']
+    "stream_kmv_distinct_users",  # green ['r08']
+    "stream_dedup_minhash",  # green ['r08']
+    "q1_pricing_summary",  # green ['r01', 'r08']
+    "q3_shipping_priority",  # green ['r01', 'r08']
+    "q5_local_supplier_volume",  # green ['r01', 'r08']
+    "q6_forecast_revenue",  # green ['r01', 'r08']
+    "q10_returned_items",  # green ['r01', 'r08']
+    "q18_large_volume_customer",  # green ['r01', 'r08']
+    "q4_order_priority",  # green ['r01', 'r08']
+    "q7_volume_shipping",  # green ['r01', 'r08']
+    "q14_promo_revenue",  # green ['r01', 'r08']
+    "q19_disjunctive_revenue",  # green ['r01', 'r08']
+    "q22_global_sales_opportunity",  # green ['r01', 'r08']
+    "q8_market_share",  # green ['r01', 'r08']
+    "q9_product_profit",  # green ['r01', 'r08']
+    "q13_customer_distribution",  # green ['r01', 'r08']
+    "q15_top_supplier",  # green ['r01', 'r08']
+    "q17_small_quantity_revenue",  # green ['r01', 'r08']
+    "q11_important_parts",  # green ['r01', 'r08']
+    "q16_supplier_counts",  # green ['r01', 'r08']
+    "orders_decile_migration",  # green ['r09']
+    "orders_cohort_ltv",  # green ['r09']
+    "supplier_hhi_concentration",  # green ['r09']
+    "dedup_minhash_probe_delta",  # green ['r09']
+    "dedup_recall_audit",  # green ['r09']
+    "dedup_embedding_lsh",  # green ['r03', 'r09']
+    "embeddings_knn_graph_stats",  # green ['r09']
+    "dedup_minhash_j_spectrum",  # green ['r09']
+    "distinct_counts",  # green ['r02', 'r03', 'r09']
+    "events_kmv_distinct_users",  # green ['r02', 'r03', 'r09']
+    "distinct_counts_approx",  # green ['r03', 'r09']
+    "events_theta_setops",  # green ['r03', 'r09']
+    "documents_vocab_drift",  # green ['r09']
 ]
 
 

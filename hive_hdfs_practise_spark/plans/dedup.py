@@ -41,6 +41,13 @@ from ..functions.hexdigest import hex_int, hex_int_sql
 from ..operators.compaction import live_rows
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K  # noqa: F401  (re-export)
+from .minhash_sql import (
+    cand_overlap_ctes,
+    jaccard_pairs_cte,
+    lang_overlap_ctes,
+    verified_pairs_ctes,
+)
+from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes
 from .registry import register
 
 
@@ -102,23 +109,9 @@ def _ngram_jaccard_oracle() -> str:
     dedup_ngram_jaccard itself and the recall audit, so the audit's
     "truth" cannot drift from the registered ground-truth query."""
     return f"""
-    WITH sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               len(list_intersect(a.shingles, b.shingles)) AS n_inter,
-               len(a.shingles) + len(b.shingles)
-                 - len(list_intersect(a.shingles, b.shingles)) AS n_union
-        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard
-    FROM pairs
-    WHERE n_union > 0 AND round(CAST(n_inter AS DOUBLE) / n_union, 6) >= {JACCARD_THRESHOLD}
+    WITH {lang_overlap_ctes()},
+    {jaccard_pairs_cte()}
+    SELECT doc_a, doc_b, jaccard FROM pairs
     """
 
 
@@ -127,33 +120,30 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ground-truth near-dup pairs: exact Jaccard over character
     5-gram shingle sets, blocked by lang. Quadratic within blocks —
     the verifier, not the scale path (see dedup_minhash_lsh)."""
-    # checkpoint: the self-join would otherwise build shingle arrays
-    # twice (same recompute pattern measured on dedup_simhash).
-    d = wide_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles")
+    d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    return _lang_jaccard_pairs(d).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+
+def _lang_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every same-lang pair of
+    ``docs(doc_id, lang, text)`` — the quadratic ground truth, shared
+    with pipeline_training_data. The shingle table is checkpointed:
+    the self-join would otherwise build every shingle array twice."""
+    d = docs.select(
+        "doc_id", "lang", tx.char_shingles(F.col("text"), SHINGLE_K).alias("sh")
     ).localCheckpoint(eager=True)
-    a = d.alias("a")
-    b = d.alias("b")
-    n_inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
-    n_union = F.size(F.col("a.shingles")) + F.size(F.col("b.shingles")) - n_inter
-    # union = 0 (two sub-shingle-length docs) must never reach the
-    # division: under ANSI mode (Spark 4 default) 0/0 raises instead
-    # of producing a NULL the threshold filter would drop — found by
-    # the adversarial-corpus test. CASE short-circuits, so the guard
-    # holds under any predicate reordering.
-    jac = F.when(n_union > 0, F.round(n_inter.cast("double") / n_union, 6))
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    a = d.select(F.col("doc_id").alias("doc_a"), "lang", F.col("sh").alias("sh_a"))
+    b = d.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("lang").alias("lang_b"),
+        F.col("sh").alias("sh_b"),
     )
+    pairs = a.join(
+        b, (F.col("lang") == F.col("lang_b")) & (F.col("doc_a") < F.col("doc_b"))
+    )
+    v = tx.shingle_overlap(pairs, F.col("sh_a"), F.col("sh_b"))
+    jac = tx.jaccard(F.col("ni"), F.col("sab") - F.col("ni"))
+    return v.select("doc_a", "doc_b", jac.alias("jaccard"))
 
 
 # 128 permutations in 16 bands × 8 rows: the one LSH shape, defined
@@ -164,12 +154,6 @@ from .constants import N_BANDS, N_PERM  # noqa: E402
 # a power of two is exact, so the double and integer filters are
 # identical — the SQL restatement uses the integer form).
 EST_MIN_MATCHES = math.ceil((JACCARD_THRESHOLD - 0.15) * N_PERM)
-
-
-# moved to plans/minhash_sql.py (registration-free — mining.py and
-# pipeline.py import it too); the alias keeps this module's oracles
-# reading as before
-from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes  # noqa: E402
 
 
 def _est_agreement_sql() -> str:
@@ -206,24 +190,8 @@ def _minhash_lsh_oracle(table: str = "documents", pre_ctes: str = "") -> str:
         JOIN mh_sigs sb ON sb.doc_id = c.doc_b
         WHERE {est} >= {EST_MIN_MATCHES}
     ),
-    fsh AS (
-        SELECT doc_id,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM {table}
-    )
-    SELECT e.doc_a, e.doc_b,
-           round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / (len(a.shingles) + len(b.shingles)
-                    - len(list_intersect(a.shingles, b.shingles))), 6) AS jaccard
-    FROM mh_est e
-    JOIN fsh a ON a.doc_id = e.doc_a
-    JOIN fsh b ON b.doc_id = e.doc_b
-    WHERE round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                / (len(a.shingles) + len(b.shingles)
-                   - len(list_intersect(a.shingles, b.shingles))), 6)
-          >= {JACCARD_THRESHOLD}
+    {verified_pairs_ctes("mh_est", table)}
+    SELECT doc_a, doc_b, jaccard FROM pairs
     """
 
 
@@ -446,30 +414,14 @@ def _minhash_probe_oracle() -> str:
           ON d.band = c.band AND d.band_key = c.band_key
     ),
     pr_est AS (
-        SELECT p.doc_new, p.doc_corpus
+        SELECT p.doc_new AS doc_a, p.doc_corpus AS doc_b
         FROM pr_cand p
         JOIN d_sigs sa ON sa.doc_id = p.doc_new
         JOIN c_sigs sb ON sb.doc_id = p.doc_corpus
         WHERE {est} >= {EST_MIN_MATCHES}
     ),
-    fsh AS (
-        SELECT doc_id,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
-    )
-    SELECT e.doc_new, e.doc_corpus,
-           round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / (len(a.shingles) + len(b.shingles)
-                    - len(list_intersect(a.shingles, b.shingles))), 6) AS jaccard
-    FROM pr_est e
-    JOIN fsh a ON a.doc_id = e.doc_new
-    JOIN fsh b ON b.doc_id = e.doc_corpus
-    WHERE round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                / (len(a.shingles) + len(b.shingles)
-                   - len(list_intersect(a.shingles, b.shingles))), 6)
-          >= {JACCARD_THRESHOLD}
+    {verified_pairs_ctes("pr_est")}
+    SELECT doc_a AS doc_new, doc_b AS doc_corpus, jaccard FROM pairs
     """
 
 
@@ -710,7 +662,6 @@ def _dedup_cost_oracle() -> str:
     stage count of the downsample=4 LSH pipeline, incl. the bucket
     pair-mass sum and the verified-pair connected components. The
     verify stanza is the shared verified_pairs_ctes (r10 review)."""
-    from .minhash_sql import verified_pairs_ctes
 
     est = _est_agreement_sql()
     return f"""
@@ -983,33 +934,15 @@ def exact_jaccard_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
             ).alias("_sh"),
         )
     )
-    counted = sh.select(
-        "doc_a",
-        "doc_b",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.size(F.array_intersect("_sh.a", "_sh.b")).alias("ni"),
-                    (F.size("_sh.a") + F.size("_sh.b")).alias("sab"),
-                )
-            )
-        ).alias("_c"),
-    )
     # two sub-shingle-length docs have IDENTICAL (empty-set) minhash
     # signatures, so they band-collide into a candidate pair whose
-    # union is 0 — the CASE guard keeps the ANSI-mode division from
-    # raising (same hazard the adversarial-corpus test caught on the
-    # brute twin). ni/sab are materialized ints here, so the filter's
-    # re-reference of the jaccard alias inlines only integer math.
-    jac = F.when(
-        (F.col("_c.sab") - F.col("_c.ni")) > 0,
-        F.round(
-            F.col("_c.ni").cast("double") / (F.col("_c.sab") - F.col("_c.ni")), 6
-        ),
-    )
-    return (
-        counted.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    # union is 0: ``jaccard`` is NULL there, never an ANSI 0/0. ni/sab
+    # are materialized ints, so the filter's re-reference of the
+    # jaccard alias inlines only integer math.
+    v = tx.shingle_overlap(sh, F.col("_sh.a"), F.col("_sh.b"))
+    jac = tx.jaccard(F.col("ni"), F.col("sab") - F.col("ni"))
+    return v.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
 
@@ -1462,21 +1395,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) > 0
-          AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                    / (len(a.shingles) + len(b.shingles)
-                       - len(list_intersect(a.shingles, b.shingles))), 6)
-              >= {JACCARD_THRESHOLD}
-    ), edges AS (
+    WITH RECURSIVE {lang_overlap_ctes()},
+    {jaccard_pairs_cte()},
+    edges AS (
         SELECT doc_a AS u, doc_b AS v FROM pairs
         UNION
         SELECT doc_b AS u, doc_a AS v FROM pairs
@@ -1510,8 +1431,6 @@ def _clusters_walk_body() -> str:
     dedup_survivors_quality (plans/text.py) so the cluster semantics
     cannot drift. Callers prepend WITH RECURSIVE and select from
     ``walk``."""
-    from .minhash_sql import verified_pairs_ctes
-
     return f"""{_minhash_cand_ctes("documents", downsample=1, lang=True)},
     {verified_pairs_ctes("mh_cand")},
     edges AS (
@@ -1587,37 +1506,10 @@ def _candidate_jaccard(docs: DataFrame, cand: DataFrame) -> DataFrame:
     ).localCheckpoint(eager=True)
     sh_a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sh_b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    # materialize the counts through a Generate node (the r7
-    # dedup_semdedup trick): downstream threshold filters on ni/nu
-    # aliases otherwise get PUSHED INTO THE JOIN CONDITION with the
-    # array_intersect inlined once per reference — the plan showed 3
-    # intersects per candidate row over the FULL (downsample=1)
-    # shingle arrays (r13; same class as exact_jaccard_pairs).
-    return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.explode(
-                F.array(
-                    F.struct(
-                        n_inter.cast("bigint").alias("ni"),
-                        (F.size("sh_a") + F.size("sh_b")).cast("bigint").alias(
-                            "sab"
-                        ),
-                    )
-                )
-            ).alias("_c"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("_c.ni").alias("ni"),
-            (F.col("_c.sab") - F.col("_c.ni")).alias("nu"),
-        )
+    v = tx.shingle_overlap(
+        cand.join(sh_a, "doc_a").join(sh_b, "doc_b"), F.col("sh_a"), F.col("sh_b")
     )
+    return v.select("doc_a", "doc_b", "ni", (F.col("sab") - F.col("ni")).alias("nu"))
 
 
 def _verify_pairs_full_shingles(docs: DataFrame, cand: DataFrame) -> DataFrame:
@@ -1627,11 +1519,7 @@ def _verify_pairs_full_shingles(docs: DataFrame, cand: DataFrame) -> DataFrame:
     curation pipelines so they cannot drift."""
     v = _candidate_jaccard(docs, cand)
     return v.filter(
-        (F.col("nu") > 0)
-        & (
-            F.round(F.col("ni").cast("double") / F.col("nu"), 6)
-            >= JACCARD_THRESHOLD
-        )
+        tx.jaccard(F.col("ni"), F.col("nu")) >= JACCARD_THRESHOLD
     ).select("doc_a", "doc_b")
 
 
@@ -3446,26 +3334,10 @@ J_SPECTRUM_BANDS = 20
     "dedup_minhash_j_spectrum",
     oracle=f"""
     WITH {_minhash_cand_ctes("documents", 1, True)},
-    jsh AS (
-        SELECT doc_id,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                      for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
-    ),
-    jv AS (
-        SELECT CAST(len(list_intersect(a.shingles, b.shingles)) AS BIGINT)
-                   AS ni,
-               CAST(len(a.shingles) + len(b.shingles)
-                    - len(list_intersect(a.shingles, b.shingles))
-                    AS BIGINT) AS nu
-        FROM mh_cand c
-        JOIN jsh a ON a.doc_id = c.doc_a
-        JOIN jsh b ON b.doc_id = c.doc_b
-    )
+    {cand_overlap_ctes("mh_cand")}
     SELECT CAST((ni * {J_SPECTRUM_BANDS}) // nu AS INT) AS j_band,
            count(*) AS n_pairs
-    FROM jv WHERE nu > 0
+    FROM scored WHERE nu > 0
     GROUP BY 1
     """,
 )

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hexdigest import hex_int, hex_int_sql
+from ..functions.hexdigest import hex_int
+from ..operators.sampling import md5_bucket_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -728,7 +729,7 @@ def lineitem_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds through DOUBLE). ln() never enters the check.
 VOCAB_DRIFT_TOPK = 30
 _VD_SCALE = 1_000_000
-_VD_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
+_VD_BUCKET = md5_bucket_sql("doc_id")
 
 
 @register(

@@ -1,13 +1,15 @@
 """SQL restatement of the md5-family MinHash-LSH candidate
-generator, registration-free (the _minhash_cand_ctes generator used
-to live in plans/dedup.py, but dedup.py REGISTERS queries at import
-time, and three other modules need this text — the cross-module rule
-in plans/constants.py's docstring applies to shared functions exactly
-as it does to constants)."""
+generator and of the exact shingle-Jaccard pair stanzas,
+registration-free (the _minhash_cand_ctes generator used to live in
+plans/dedup.py, but dedup.py REGISTERS queries at import time, and
+three other modules need this text — the cross-module rule in
+plans/constants.py's docstring applies to shared functions exactly as
+it does to constants)."""
 
 from __future__ import annotations
 
 from ..dedup import minhash as mh
+from ..functions.text import jaccard_sql, shingle_overlap_sql, shingle_set_sql
 from .constants import (
     JACCARD_THRESHOLD,
     N_BANDS,
@@ -58,9 +60,7 @@ def minhash_cand_ctes(
     chain = f"""
     {p}sh AS (
         SELECT doc_id, {lang_sel}
-               unnest(list_distinct([substring(text, x, {SHINGLE_K})
-                      for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))]))
-               AS s
+               unnest({shingle_set_sql("text", SHINGLE_K)}) AS s
         FROM {src}
     ),
     {p}h AS (SELECT doc_id, {lang_sel} {h} AS h FROM {p}sh {ds}),
@@ -85,28 +85,48 @@ def minhash_cand_ctes(
     )
 
 
-def verified_pairs_ctes(cand: str) -> str:
-    """``fsh`` + ``pairs`` CTE pair: exact shingle-Jaccard
-    verification (union>0 guard, 6dp round, >= JACCARD_THRESHOLD) of
-    a (doc_a, doc_b) candidate CTE ``cand`` — the verify stanza
-    shared by _clusters_walk_body and _dedup_cost_oracle so the
-    formula cannot drift (the r9 _candidate_jaccard rule, SQL
-    side)."""
+def cand_overlap_ctes(cand: str, src: str = "documents") -> str:
+    """``fsh`` + ``scored``: (doc_a, doc_b, ni, nu) shingle overlap
+    counts of a (doc_a, doc_b) candidate CTE ``cand`` against the
+    texts of ``src`` (the SQL side of ``_candidate_jaccard``)."""
     return f"""fsh AS (
-        SELECT doc_id,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
+        SELECT doc_id, {shingle_set_sql("text", SHINGLE_K)} AS shingles FROM {src}
     ),
-    pairs AS (
-        SELECT c.doc_a, c.doc_b
+    scored AS (
+        SELECT c.doc_a, c.doc_b, {shingle_overlap_sql("a.shingles", "b.shingles")}
         FROM {cand} c
         JOIN fsh a ON a.doc_id = c.doc_a
         JOIN fsh b ON b.doc_id = c.doc_b
-        WHERE len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) > 0
-          AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                    / (len(a.shingles) + len(b.shingles)
-                       - len(list_intersect(a.shingles, b.shingles))), 6)
-              >= {JACCARD_THRESHOLD}
     )"""
+
+
+def lang_overlap_ctes(src: str = "documents") -> str:
+    """``sh`` + ``scored``: (doc_a, doc_b, ni, nu) shingle overlap
+    counts of every same-lang doc pair of ``src`` — the quadratic
+    ground truth of dedup_ngram_jaccard and its siblings."""
+    return f"""sh AS (
+        SELECT doc_id, lang, {shingle_set_sql("text", SHINGLE_K)} AS shingles FROM {src}
+    ),
+    scored AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               {shingle_overlap_sql("a.shingles", "b.shingles")}
+        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
+    )"""
+
+
+def jaccard_pairs_cte() -> str:
+    """``pairs``: the (doc_a, doc_b, jaccard) rows of ``scored`` whose
+    Jaccard reaches JACCARD_THRESHOLD."""
+    j = jaccard_sql("ni", "nu")
+    return f"""pairs AS (
+        SELECT doc_a, doc_b, {j} AS jaccard
+        FROM scored WHERE {j} >= {JACCARD_THRESHOLD}
+    )"""
+
+
+def verified_pairs_ctes(cand: str, src: str = "documents") -> str:
+    """``fsh`` + ``scored`` + ``pairs``: exact shingle-Jaccard
+    verification of the candidate CTE ``cand`` — the verify stanza of
+    every LSH oracle, so the formula cannot drift (the SQL side of
+    ``_verify_pairs_full_shingles``)."""
+    return f"{cand_overlap_ctes(cand, src)},\n    {jaccard_pairs_cte()}"

@@ -34,9 +34,11 @@ from ..dedup.minhash import (  # registration-free
     perm_min_sql,
     shingle_hash,
 )
+from ..functions import text as tx
 from ..operators.graph import copurchase_edges, trade_pairs, undirected
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K
+from .minhash_sql import lang_overlap_ctes
 from .registry import register
 
 # Jaccard >= 0.7 as exact integer predicates (10·inter >= 7·union,
@@ -54,26 +56,135 @@ assert abs(_TAU_NUM / 10 - JACCARD_THRESHOLD) < 1e-12
 _BITMAP_MAX_WORDS = 128
 
 
+def _vocab_postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(doc_id, lang, vid) distinct shingle postings of ``documents``
+    over dense vocab ids, and the vocab size — the index the two
+    prefix-filter joins (Jaccard, containment) build their candidates
+    from and verify against.
+
+    Shingling is the compute-dense corpus stage (wide_table + explode,
+    codegen'd substring — no higher-order lambdas). The shingle space
+    of a char-5 shingle saturates (bounded by the underlying word
+    vocabulary — ~2k distinct on this corpus at ANY sf), so the
+    id-assignment window is metadata-scale. Ids follow (document
+    frequency, shingle) order: the global prefix ordering IS ascending
+    vid, and postings/candidates shuffle ints, never shingle strings.
+
+    The shingle table feeds the vocab and every postings consumer (the
+    prefix window, the candidate sides, the verify index), so it is
+    materialized once — persist(), not localCheckpoint(): the SQL
+    cache stores compressed COLUMNAR batches (~10 B/row here) where the
+    checkpoint holds deserialized row objects (~250 B/row) — at the
+    40x scale-up (40.9M postings) the checkpointed form alone held
+    ~10 GB of heap and the candidate-join sorts OOMed even at 24 g.
+    The postings themselves are one broadcast join over it; persisting
+    them as well did not measure faster (interleaved sf0.1 A/B,
+    CHANGES.md). Builders that persist rely on bench.py/check_oracle
+    clearing the cache between runs."""
+    d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    sh = tx.shingle_postings(d, ["doc_id", "lang"], SHINGLE_K).persist()
+    sh.count()
+    vocab = (
+        sh.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("dfreq"))
+        .withColumn("vid", F.row_number().over(Window.orderBy("dfreq", "s")) - 1)
+        .select("s", "vid")
+        .localCheckpoint(eager=True)
+    )
+    n_vocab = vocab.count()
+    post = sh.join(F.broadcast(vocab), "s").select("doc_id", "lang", "vid")
+    return post, n_vocab
+
+
+def _prefix(post: DataFrame, tau_num: int) -> DataFrame:
+    """(doc_id, lang, vid, sz): each doc's first ``sz - ceil(tau·sz)
+    + 1`` postings in vid order, tau = ``tau_num``/10, with the doc's
+    set size ``sz``. One per-doc window pass yields both the rank and
+    the size; integer ceil = (tau_num·sz + 9) div 10."""
+    wd = Window.partitionBy("doc_id")
+    ranked = post.select(
+        "doc_id",
+        "lang",
+        "vid",
+        F.row_number().over(wd.orderBy("vid")).alias("rn"),
+        F.count(F.lit(1)).over(wd).alias("sz"),
+    )
+    return ranked.filter(
+        F.col("rn") <= F.col("sz") - F.expr(f"({tau_num}*sz+9) div 10") + 1
+    ).select("doc_id", "lang", "vid", "sz")
+
+
+def _with_overlap(cand: DataFrame, post: DataFrame, n_vocab: int) -> DataFrame:
+    """``cand`` (doc_a, doc_b, ...) + ``n_inter`` = exact |a∩b| from
+    the postings ``post``, verified MAP-SIDE on the raw pair stream.
+
+    Per-doc BITMAPS over the dense shingle ids: a codegen'd wide bit_or
+    aggregate (the proven 128-slot minhash pattern) builds
+    ceil(|vocab|/64) longs per doc once; each candidate pair then costs
+    nwords AND+popcount ops instead of a string-array intersect (first
+    cut: 17.3 s of the 26.6 s sf0.1 runtime was 1.2M array_intersects;
+    the cut before THAT re-shingled per pair per reference — the
+    CollapseProject inlining trap). Past ``_BITMAP_MAX_WORDS`` words
+    (a non-saturating vocab) the slots would blow the codegen field
+    budget, so the index falls back to per-doc id arrays and
+    array_intersect; both branches are exact.
+
+    The index tables are broadcast (vocab/8 bytes per doc, ~260 B
+    here), so the candidate stream — the side that grows
+    quadratically with corpus overlap — is never shuffled; without the
+    hints the static plan cascades SortMergeJoins that re-shuffle every
+    candidate row with all its bitmap words (AQE converts most back at
+    runtime — the hints pin the right plan instead of relying on it).
+    Past the broadcast budget (~40M docs) the deployment swap is a
+    doc-bucketed persisted index joined exchange-free — the
+    write_ivf_index pattern.
+
+    ``n_inter`` stays an expression: a caller's SINGLE-reference
+    threshold on it is pushed into the join condition, so each raw pair
+    evaluates the popcount sum once and only survivors evaluate it
+    again for the output (the 3-reference form ran the Jaccard verify
+    stage at 11.6 s vs 3.6 s single-reference at sf0.1). Materializing
+    it through a Generate node instead measured ~2x the executor CPU on
+    the raw pair stream of both joins (sf0.1 A/B, CHANGES.md)."""
+    nwords = (n_vocab + 63) // 64
+    if nwords <= _BITMAP_MAX_WORDS:
+        bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(vid % 64 AS INT))")
+        cols = [f"w{k}" for k in range(nwords)]
+        idx = post.groupBy("doc_id").agg(
+            *[
+                F.bit_or(
+                    F.when(
+                        (F.col("vid") >= k * 64) & (F.col("vid") < (k + 1) * 64), bit
+                    ).otherwise(F.lit(0).cast("bigint"))
+                ).alias(c)
+                for k, c in enumerate(cols)
+            ]
+        )
+        inter = sum(
+            (F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}"))) for c in cols),
+            start=F.lit(0),
+        ).cast("int")
+    else:
+        cols = ["vids"]
+        idx = post.groupBy("doc_id").agg(F.collect_list("vid").alias("vids"))
+        inter = F.size(F.array_intersect(F.col("a_vids"), F.col("b_vids")))
+    ia = idx.select(F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"a_{c}") for c in cols])
+    ib = idx.select(F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"b_{c}") for c in cols])
+    return (
+        cand.join(F.broadcast(ia), "doc_a")
+        .join(F.broadcast(ib), "doc_b")
+        .select(*cand.columns, inter.alias("n_inter"))
+    )
+
+
 @register(
     "dedup_jaccard_prefix_join",
     oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(len(list_intersect(a.shingles, b.shingles)) AS INTEGER) AS n_inter,
-               CAST(len(a.shingles) + len(b.shingles)
-                 - len(list_intersect(a.shingles, b.shingles)) AS INTEGER) AS n_union
-        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, n_inter, n_union,
-           round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard
-    FROM pairs
-    WHERE n_union > 0 AND 10 * n_inter >= {_TAU_NUM} * n_union
+    WITH {lang_overlap_ctes()}
+    SELECT doc_a, doc_b, CAST(ni AS INTEGER) AS n_inter,
+           CAST(nu AS INTEGER) AS n_union, {tx.jaccard_sql("ni", "nu")} AS jaccard
+    FROM scored
+    WHERE nu > 0 AND 10 * ni >= {_TAU_NUM} * nu
     """,
 )
 def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,73 +223,11 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs), so verification, not candidate generation, bounds cost —
     both honest regimes are exact.
     """
-    d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    # distinct shingle postings via EXPLODE + codegen'd substring —
-    # never materialize the (interpreted) transform-built array on
-    # the corpus path. length>=K guard: sequence(1, 0) is the
-    # DESCENDING [1, 0] in Spark, not empty.
-    sh = (
-        d.where(F.length("text") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - F.lit(SHINGLE_K - 1))
-            ).alias("i"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr(f"substring(text, i, {SHINGLE_K})").alias("s"),
-        )
-        .distinct()
-    )
-    # feeds vocab, ranked AND the bitmap build — materialize once
-    # instead of replaying the explode per consumer. persist(), not
-    # localCheckpoint(): the SQL cache stores compressed COLUMNAR
-    # batches (~10 B/row here) where the checkpoint holds deserialized
-    # row objects (~250 B/row) — at the 40x scale-up (40.9M postings)
-    # the checkpointed form alone held ~10 GB of heap and the
-    # candidate-join sorts OOMed even at 24 g.
-    sh.persist()
-    sh.count()
-    # vocab with dense integer ids in (document-frequency, shingle)
-    # order: the shingle space of a char-5 shingle saturates (bounded
-    # by the underlying word vocabulary — ~2k distinct on this corpus
-    # at ANY sf), so the id-assignment window is metadata-scale. The
-    # vid replaces the (dfreq, string) pair everywhere downstream:
-    # the prefix ordering IS ascending vid, and postings/candidates
-    # shuffle ints, never shingle strings.
-    vocab = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("dfreq"))
-        .withColumn("vid", F.row_number().over(Window.orderBy("dfreq", "s")) - 1)
-        .select("s", "vid")
-        .localCheckpoint(eager=True)
-    )
-    n_vocab = vocab.count()
-    post = sh.join(F.broadcast(vocab), "s").select("doc_id", "lang", "vid")
-    # one per-doc window pass yields BOTH the prefix rank and the set
-    # size (count over the same partition) — no separate size
-    # aggregate + join
-    wd = Window.partitionBy("doc_id")
-    ranked = post.select(
-        "doc_id",
-        "lang",
-        "vid",
-        F.row_number().over(wd.orderBy("vid")).alias("rn"),
-        F.count(F.lit(1)).over(wd).alias("sz"),
-    )
-    # prefix length sz - ceil(tau*sz) + 1, integer ceil = (7*sz+9) div 10
-    pref = ranked.filter(
-        F.col("rn") <= F.col("sz") - F.expr(f"({_TAU_NUM}*sz+9) div 10") + 1
-    ).select("doc_id", "lang", "vid", "sz")
+    post, n_vocab = _vocab_postings(spark, sf_dir)
     # the prefix table feeds both sides of the candidate self-join —
-    # without materialization the vid-join + window pipeline executes
-    # twice (sh itself is already cached above); columnar persist for
-    # the same heap reason as sh
-    pref.persist()
+    # without materialization the window pipeline executes twice;
+    # columnar persist for the same heap reason as the postings
+    pref = _prefix(post, _TAU_NUM).persist()
     pref.count()
     # the candidate self-join is the one stage whose input grows
     # superlinearly with corpus overlap (prefix postings² per
@@ -193,10 +242,10 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Σ per-(shingle,lang) prefix-count²), and a distinct-first plan
     # OOMed its partial hash maps even at 24g/256 partitions.
     # Instead each raw pair is verified MAP-SIDE straight out of the
-    # join (broadcast bitmap popcounts below); only the survivors —
-    # bounded by the true answer times prefix overlap — reach the
-    # final distinct. A pair sharing k prefix shingles is verified k
-    # times; k extra popcounts are ~free next to shuffling the pair.
+    # join (_with_overlap); only the survivors — bounded by the true
+    # answer times prefix overlap — reach the final distinct. A pair
+    # sharing k prefix shingles is verified k times; k extra
+    # popcounts are ~free next to shuffling the pair.
     #
     # Skew: measured at 40× (SCALING.md r5), the 1.49B pair mass is
     # spread over ~40k (vid, lang) keys — hottest key 189k pairs
@@ -227,91 +276,14 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         (F.col("sz_a") + F.col("sz_b")).cast("int").alias("sz_sum"),
     )
-    # verification: exact |a∩b| via per-doc BITMAPS over the dense
-    # shingle ids — a codegen'd wide bit_or aggregate (the proven
-    # 128-slot minhash pattern) builds ceil(|vocab|/64) longs per doc
-    # once; each candidate pair then costs nwords AND+popcount ops
-    # instead of a string-array intersect (first cut: 17.3 s of the
-    # 26.6 s sf0.1 runtime was 1.2M array_intersects; and the cut
-    # before THAT re-shingled per pair per reference — the
-    # CollapseProject inlining trap). Sizes come from sz, so the
-    # bitmaps are verify-only. Wide-agg guard: past 128 words (vocab
-    # > 8192 — a non-saturating corpus) the slots would blow the
-    # codegen field budget, so verification falls back to the
-    # materialized-array intersect; both branches are exact.
-    nwords = (n_vocab + 63) // 64
-    if nwords <= _BITMAP_MAX_WORDS:
-        bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(vid % 64 AS INT))")
-        slots = [
-            F.bit_or(
-                F.when(
-                    (F.col("vid") >= k * 64) & (F.col("vid") < (k + 1) * 64), bit
-                ).otherwise(F.lit(0).cast("bigint"))
-            ).alias(f"w{k}")
-            for k in range(nwords)
-        ]
-        bmp = post.groupBy("doc_id").agg(*slots)
-        ba = bmp.select(
-            F.col("doc_id").alias("doc_a"),
-            *[F.col(f"w{k}").alias(f"wa{k}") for k in range(nwords)],
-        )
-        bb = bmp.select(
-            F.col("doc_id").alias("doc_b"),
-            *[F.col(f"w{k}").alias(f"wb{k}") for k in range(nwords)],
-        )
-        inter_col = sum(
-            (
-                F.bit_count(F.col(f"wa{k}").bitwiseAND(F.col(f"wb{k}")))
-                for k in range(nwords)
-            ),
-            start=F.lit(0),
-        ).cast("int")
-        # broadcast the index tables: the bitmap index is vocab/8
-        # bytes per doc (~260 B here), so the candidate stream — the
-        # side that grows quadratically with corpus overlap — is
-        # never shuffled and the popcount runs in ONE codegen stage;
-        # without the hints the static plan cascades SortMergeJoins
-        # that re-shuffle every candidate row carrying all 32 bitmap
-        # words between joins (AQE converts most back at runtime —
-        # the hints pin the right plan instead of relying on it).
-        # Past the broadcast budget (~40M docs) the deployment swap
-        # is a doc-bucketed persisted index joined exchange-free —
-        # the write_ivf_index pattern.
-        scored = (
-            cand.join(F.broadcast(ba), "doc_a")
-            .join(F.broadcast(bb), "doc_b")
-            .select("doc_a", "doc_b", inter_col.alias("n_inter"), "sz_sum")
-        )
-    else:
-        arrs = post.groupBy("doc_id").agg(F.collect_list("vid").alias("shingles"))
-        arr_a = arrs.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        arr_b = arrs.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-        )
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        scored = (
-            cand.join(F.broadcast(arr_a), "doc_a")
-            .join(F.broadcast(arr_b), "doc_b")
-            .select("doc_a", "doc_b", inter.alias("n_inter"), "sz_sum")
-        )
-    # Threshold as ONE single-reference comparison: 10·i >= 7·(s−i)
-    # ⇔ 17·i >= 7·s, and the oracle's n_union > 0 guard is vacuous
-    # here (every doc in pref has >=1 shingle, so any joined pair has
-    # union >= 1; the all-pairs oracle needs it only for empty-empty
-    # pairs the prefix path cannot produce). This matters because
-    # Catalyst pushes the filter INTO the join condition — every raw
-    # pair evaluates it — and each reference to n_inter inlines the
-    # whole nwords-term popcount sum (measured: the 3-reference form
-    # ran the verify stage at 11.6 s vs 3.6 s single-reference at
-    # sf0.1). The n_inter/n_union OUTPUT projections also inline
-    # popcounts, but they run only on filter survivors.
+    # Threshold as ONE comparison: 10·i >= 7·(s−i) ⇔ 17·i >= 7·s, and
+    # the oracle's n_union > 0 guard is vacuous here (every doc in
+    # pref has >=1 shingle, so any joined pair has union >= 1; the
+    # all-pairs oracle needs it only for empty-empty pairs the prefix
+    # path cannot produce).
     return (
-        scored.filter(
-            (10 + _TAU_NUM) * F.col("n_inter") >= _TAU_NUM * F.col("sz_sum")
-        )
-        .select("doc_a", "doc_b", "n_inter", "sz_sum")
+        _with_overlap(cand, post, n_vocab)
+        .filter((10 + _TAU_NUM) * F.col("n_inter") >= _TAU_NUM * F.col("sz_sum"))
         # dedupe only the SURVIVORS (a true pair appears once per
         # shared prefix shingle) — the tiny tail of the stream
         .distinct()
@@ -326,12 +298,9 @@ def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_b",
             "n_inter",
             "n_union",
-            F.round(F.col("n_inter").cast("double") / F.col("n_union"), 6).alias(
-                "jaccard"
-            ),
+            tx.jaccard(F.col("n_inter"), F.col("n_union")).alias("jaccard"),
         )
     )
-
 
 # Part co-purchase graph: edge = pair of parts bought together in >= 2
 # distinct orders (the support threshold sparsifies the shared-order
@@ -928,10 +897,7 @@ CONTAIN_TAU_NUM = 9  # tau = 0.9 as the integer 9/10
     "documents_containment_join",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
+        SELECT doc_id, lang, {tx.shingle_set_sql("text", SHINGLE_K)} AS shingles
         FROM documents
     ), pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -963,10 +929,11 @@ def documents_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       (10*sz_b >= 9*sz_a); no upper bound on |B|.
 
     Scale shape notes shared with the sibling (see its inline 40x
-    commentary): postings persist columnar; the candidate stream is
-    verified MAP-SIDE against broadcast bitmaps and never shuffled
-    raw; the threshold is a single-reference integer comparison
-    pushed into the filter; survivors-only distinct. Measured stage
+    commentary and ``_vocab_postings``): shingles persist columnar;
+    the candidate stream is verified MAP-SIDE against broadcast
+    bitmaps and never shuffled raw; the threshold is a
+    single-reference integer comparison pushed into the join
+    condition; survivors-only distinct. Measured stage
     decomposition at sf0.1 (~9.5 s best-of-3): postings distinct
     4.9, vocab 1.5, prefix 2.1, candidate join 4.7 over 4.3M raw
     pairs — the B-full side carries ~4x the sibling's candidate
@@ -976,69 +943,13 @@ def documents_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment via exact sizes; 30.5 s at 40× vs this form's
     352.9 s), alongside the KMV sketch — three regimes documented
     across the three forms."""
-    d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    sh = (
-        d.where(F.length("text") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - F.lit(SHINGLE_K - 1))
-            ).alias("i"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr(f"substring(text, i, {SHINGLE_K})").alias("s"),
-        )
-        .distinct()
-    )
-    sh.persist()
-    sh.count()
-    vocab = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("dfreq"))
-        .withColumn("vid", F.row_number().over(Window.orderBy("dfreq", "s")) - 1)
-        .select("s", "vid")
-        .localCheckpoint(eager=True)
-    )
-    n_vocab = vocab.count()
-    # postings persist (r13): FOUR consumers read this frame (the
-    # ranked prefix window, the B-side sizes, the B join side, and the
-    # bitmap aggregate) — each otherwise re-runs the vocab broadcast
-    # join over the persisted shingle table. Narrow (two ints + lang),
-    # compressed columnar; materialized inside the timed query,
-    # bench.py clearCaches between runs.
-    post = (
-        sh.join(F.broadcast(vocab), "s")
-        .select("doc_id", "lang", "vid")
-        .persist()
-    )
-    post.count()
-    # nothing downstream reads sh once post is materialized — free the
-    # full-shingle cache before the heavy candidate join (review catch;
-    # an evicted post partition would recompute through the unpersisted
-    # lineage, which is correctness-neutral)
-    sh.unpersist()
-    wd = Window.partitionBy("doc_id")
-    ranked = post.select(
-        "doc_id",
-        "lang",
-        "vid",
-        F.row_number().over(wd.orderBy("vid")).alias("rn"),
-        F.count(F.lit(1)).over(wd).alias("sz"),
-    )
-    # containment prefix: sz - ceil(tau*sz) + 1 kept shingles
-    # unlike the Jaccard sibling, pref feeds only ONE join side (B
-    # is full postings), so no persist — a second pass would cost
-    # more than it saves. Sizes for the B side come from a plain
-    # count aggregate over the (persisted) postings, not from the
-    # ranked window pipeline (no per-doc sort needed).
-    pref = ranked.filter(
-        F.col("rn")
-        <= F.col("sz") - F.expr(f"({CONTAIN_TAU_NUM}*sz+9) div 10") + 1
-    ).select("doc_id", "lang", "vid", "sz")
+    post, n_vocab = _vocab_postings(spark, sf_dir)
+    # containment prefix: pref feeds only ONE join side (B is full
+    # postings), so no persist — a second pass would cost more than
+    # it saves. Sizes for the B side come from a plain count
+    # aggregate over the postings, not from the ranked
+    # window pipeline (no per-doc sort needed).
+    pref = _prefix(post, CONTAIN_TAU_NUM)
     szs = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     n_join = spark.sparkContext.defaultParallelism * 8
     a = pref.repartition(n_join, "vid", "lang").select(
@@ -1063,75 +974,9 @@ def documents_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("doc_a") != F.col("doc_b"))
         & (10 * F.col("sz_b") >= CONTAIN_TAU_NUM * F.col("sz_a")),
     ).select("doc_a", "doc_b", "sz_a", "sz_b")
-    nwords = (n_vocab + 63) // 64
-    if nwords <= _BITMAP_MAX_WORDS:
-        bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(vid % 64 AS INT))")
-        slots = [
-            F.bit_or(
-                F.when(
-                    (F.col("vid") >= k * 64) & (F.col("vid") < (k + 1) * 64), bit
-                ).otherwise(F.lit(0).cast("bigint"))
-            ).alias(f"w{k}")
-            for k in range(nwords)
-        ]
-        bmp = post.groupBy("doc_id").agg(*slots)
-        ba = bmp.select(
-            F.col("doc_id").alias("doc_a"),
-            *[F.col(f"w{k}").alias(f"wa{k}") for k in range(nwords)],
-        )
-        bb = bmp.select(
-            F.col("doc_id").alias("doc_b"),
-            *[F.col(f"w{k}").alias(f"wb{k}") for k in range(nwords)],
-        )
-        inter_col = sum(
-            (
-                F.bit_count(F.col(f"wa{k}").bitwiseAND(F.col(f"wb{k}")))
-                for k in range(nwords)
-            ),
-            start=F.lit(0),
-        ).cast("int")
-        scored = (
-            cand.join(F.broadcast(ba), "doc_a")
-            .join(F.broadcast(bb), "doc_b")
-            # materialize the popcount sum through a Generate (r13):
-            # the downstream threshold filter on the n_inter alias
-            # otherwise gets pushed into this join's condition with
-            # the 32-word popcount chain inlined a second time per
-            # candidate row (the exact_jaccard_pairs class)
-            .select(
-                "doc_a",
-                "doc_b",
-                F.explode(F.array(inter_col)).alias("n_inter"),
-                "sz_a",
-                "sz_b",
-            )
-        )
-    else:
-        arrs = post.groupBy("doc_id").agg(F.collect_list("vid").alias("shingles"))
-        arr_a = arrs.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        arr_b = arrs.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-        )
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        scored = (
-            cand.join(F.broadcast(arr_a), "doc_a")
-            .join(F.broadcast(arr_b), "doc_b")
-            # same Generate materialization as the bitmap branch: the
-            # threshold filter would otherwise inline array_intersect
-            # into the join condition per reference (review catch —
-            # this branch is the declared non-saturating-vocab path)
-            .select(
-                "doc_a",
-                "doc_b",
-                F.explode(F.array(inter)).alias("n_inter"),
-                "sz_a",
-                "sz_b",
-            )
-        )
     return (
-        scored.filter(10 * F.col("n_inter") >= CONTAIN_TAU_NUM * F.col("sz_a"))
+        _with_overlap(cand, post, n_vocab)
+        .filter(10 * F.col("n_inter") >= CONTAIN_TAU_NUM * F.col("sz_a"))
         .select("doc_a", "doc_b", "n_inter", "sz_a", "sz_b")
         .distinct()
         .select(
@@ -1145,7 +990,6 @@ def documents_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("containment"),
         )
     )
-
 
 # Bounded-recall twin of documents_containment_join: KMV (bottom-k)
 # containment SKETCH. Each doc keeps the k smallest md5 hashes of
@@ -1171,9 +1015,7 @@ def _kmv_oracle() -> str:
     WITH sh AS MATERIALIZED (
         SELECT DISTINCT doc_id, lang, {h} AS h
         FROM (
-            SELECT doc_id, lang,
-                   unnest([substring(text, x, {SHINGLE_K})
-                           for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))]) AS sgl
+            SELECT doc_id, lang, unnest({tx.shingle_set_sql("text", SHINGLE_K)}) AS sgl
             FROM documents
         )
     ),
@@ -1240,26 +1082,10 @@ def dedup_containment_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     16/16 (pinned in test_mining); precision is threshold-quantized
     (k=64 -> 1/64 steps), so borderline pairs over-report
     (28 vs 12 true at sf0.01) — the exact join is the verify path."""
-    from ..dedup.minhash import shingle_hash
-
     d = wide_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     sh = (
-        d.where(F.length("text") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - F.lit(SHINGLE_K - 1))
-            ).alias("i"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "lang",
-            shingle_hash(
-                F.expr(f"substring(text, i, {SHINGLE_K})"), "md5"
-            ).alias("h"),
-        )
+        tx.shingle_positions(d, ["doc_id", "lang"], SHINGLE_K)
+        .select("doc_id", "lang", shingle_hash(F.col("s"), "md5").alias("h"))
         .distinct()
     )
     wd = Window.partitionBy("doc_id").orderBy("h")
@@ -1422,16 +1248,7 @@ def documents_containment_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     # below also drop the sentinel-signature band collisions — same
     # candidate set the SQL twin produces
     szs = (
-        d.where(F.length("text") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - F.lit(SHINGLE_K - 1))
-            ).alias("i"),
-            "text",
-        )
-        .select("doc_id", F.expr(f"substring(text, i, {SHINGLE_K})").alias("s"))
-        .distinct()
+        tx.shingle_postings(d, ["doc_id"], SHINGLE_K)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )

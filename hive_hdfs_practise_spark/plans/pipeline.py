@@ -27,15 +27,20 @@ from pyspark.sql.window import Window
 
 from ..dedup.clusters import connected_components
 from ..functions import text as tx
-from ..functions.hexdigest import hex_int_sql
-from ..operators.sampling import dataset_split
+from ..operators.sampling import dataset_split, md5_bucket_sql
 from ..sources.catalog import table, wide_table
-from .constants import JACCARD_THRESHOLD, SHINGLE_K
+from .constants import JACCARD_THRESHOLD
+from .minhash_sql import (
+    jaccard_pairs_cte,
+    lang_overlap_ctes,
+    minhash_cand_ctes,
+    verified_pairs_ctes,
+)
 from .text import _lang_oracle, _quality_oracle, _token_agg
 
 QUALITY_MIN = 0.6
 
-_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
+_BUCKET = md5_bucket_sql("doc_id")
 
 
 def _pipeline_oracle(lsh_pairs: bool = False) -> str:
@@ -47,30 +52,11 @@ def _pipeline_oracle(lsh_pairs: bool = False) -> str:
     quality_sql = _quality_oracle().strip()
     lang_sql = _lang_oracle().strip()
     if lsh_pairs:
-        from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes
-
-        pair_ctes = f"""{_minhash_cand_ctes("uniq", downsample=1, lang=True)},
-    pairs AS (
-        SELECT c.doc_a, c.doc_b
-        FROM mh_cand c
-        JOIN sh a ON a.doc_id = c.doc_a
-        JOIN sh b ON b.doc_id = c.doc_b
-        WHERE len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) > 0
-          AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                    / (len(a.shingles) + len(b.shingles)
-                       - len(list_intersect(a.shingles, b.shingles))), 6)
-              >= {JACCARD_THRESHOLD}
-    ),"""
+        pair_ctes = f"""{minhash_cand_ctes("uniq", downsample=1, lang=True)},
+    {verified_pairs_ctes("mh_cand", "uniq")},"""
     else:
-        pair_ctes = f"""pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) > 0
-          AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                    / (len(a.shingles) + len(b.shingles)
-                       - len(list_intersect(a.shingles, b.shingles))), 6)
-              >= {JACCARD_THRESHOLD}
-    ),"""
+        pair_ctes = f"""{lang_overlap_ctes("uniq")},
+    {jaccard_pairs_cte()},"""
     return f"""
     WITH RECURSIVE
     q AS ({quality_sql}),
@@ -88,13 +74,6 @@ def _pipeline_oracle(lsh_pairs: bool = False) -> str:
         FROM kept
     ),
     uniq AS (SELECT doc_id, text, lang FROM exact WHERE rn = 1),
-    sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substring(text, x, {SHINGLE_K})
-                              for x in generate_series(1, greatest(len(text) - {SHINGLE_K - 1}, 0))])
-               AS shingles
-        FROM uniq
-    ),
     {pair_ctes}
     edges AS (
         SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -113,8 +92,8 @@ def _pipeline_oracle(lsh_pairs: bool = False) -> str:
         LEFT JOIN comp ON comp.doc_id = uq.doc_id
         WHERE comp.doc_id IS NULL OR comp.cluster_id = uq.doc_id
     )
-    SELECT CASE WHEN {_BUCKET} % 256 < 205 THEN 'train'
-                WHEN {_BUCKET} % 256 < 231 THEN 'val'
+    SELECT CASE WHEN {_BUCKET} < 205 THEN 'train'
+                WHEN {_BUCKET} < 231 THEN 'val'
                 ELSE 'test' END AS split,
            count(*) AS n_docs,
            CAST(coalesce(sum(len(regexp_extract_all(trim(text), '\\S+'))), 0) AS BIGINT)
@@ -191,24 +170,14 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniq = _kept_uniq(spark, sf_dir).persist()
 
     # near-dup pairs (exact Jaccard, lang-blocked) over the deduped
-    # set; checkpointed — the self-join would otherwise replay the
-    # whole quality/lang/dedup pipeline per side
-    shingled = uniq.select(
-        "doc_id", "lang", tx.char_shingles(F.col("text"), SHINGLE_K).alias("shingles")
-    ).localCheckpoint(eager=True)
-    a, b = shingled.alias("a"), shingled.alias("b")
-    n_inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
-    n_union = F.size(F.col("a.shingles")) + F.size(F.col("b.shingles")) - n_inter
+    # set — dedup_ngram_jaccard's pair stage, whose shingle checkpoint
+    # also keeps the self-join from replaying the front end per side
+    from .dedup import _lang_jaccard_pairs
+
     pairs = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(
-            (n_union > 0)
-            & (F.round(n_inter.cast("double") / n_union, 6) >= JACCARD_THRESHOLD)
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _lang_jaccard_pairs(uniq)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
     )
     return _pipeline_tail(uniq, pairs)
 

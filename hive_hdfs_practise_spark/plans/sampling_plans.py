@@ -14,11 +14,11 @@ from pyspark.sql.window import Window
 from ..dedup import minhash as mh
 from ..functions import text as tx
 from ..functions.hexdigest import hex_int, hex_int_sql
-from ..operators.sampling import dataset_split, hash_sample
+from ..operators.sampling import dataset_split, hash_sample, md5_bucket_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
-_BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
+_BUCKET = md5_bucket_sql("doc_id")
 
 
 @register(
@@ -26,7 +26,7 @@ _BUCKET = hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 2)
     oracle=f"""
     SELECT doc_id, lang, n_chars
     FROM documents
-    WHERE {_BUCKET} % 256 < 26
+    WHERE {_BUCKET} < 26
     """,
 )
 def dataset_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,8 +40,8 @@ def dataset_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dataset_split_counts",
     oracle=f"""
-    SELECT CASE WHEN {_BUCKET} % 256 < 205 THEN 'train'
-                WHEN {_BUCKET} % 256 < 231 THEN 'val'
+    SELECT CASE WHEN {_BUCKET} < 205 THEN 'train'
+                WHEN {_BUCKET} < 231 THEN 'val'
                 ELSE 'test' END AS split,
            count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -67,7 +67,7 @@ def dataset_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang, count(*) AS n_kept
     FROM documents
-    WHERE {_BUCKET} % 256 < CASE WHEN lang = 'en' THEN 128
+    WHERE {_BUCKET} < CASE WHEN lang = 'en' THEN 128
                                  WHEN lang = 'zh' THEN 51
                                  ELSE 26 END
     GROUP BY lang
@@ -133,7 +133,7 @@ DECON_NGRAM = 8
 # stream under the 80/10/10 hash split, as matching Spark and SQL
 # forms so the three queries cannot drift (r8 review).
 _DECON_SH_SQL = rf"""sh AS (
-        SELECT doc_id, {_BUCKET} % 256 AS bucket,
+        SELECT doc_id, {_BUCKET} AS bucket,
                list_distinct([array_to_string(toks[x:x + {DECON_NGRAM - 1}], ' ')
                               for x in generate_series(1, len(toks) - {DECON_NGRAM - 1})]) AS grams
         FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
@@ -309,7 +309,7 @@ def split_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     trd AS (
         SELECT d.doc_id, d.source
         FROM documents d
-        WHERE {hex_int_sql("md5(CAST(d.doc_id AS VARCHAR))", 1, 2)} % 256 < 205
+        WHERE {md5_bucket_sql("d.doc_id")} < 205
     )
     SELECT trd.source,
            CAST(count(*) AS BIGINT) AS n_train_docs,
@@ -402,7 +402,7 @@ def _bloom_decon_oracle() -> str:
     )
     return rf"""
     WITH sh AS MATERIALIZED (
-        SELECT doc_id, {_BUCKET} % 256 AS bucket,
+        SELECT doc_id, {_BUCKET} AS bucket,
                list_distinct([array_to_string(toks[x:x + {DECON_NGRAM - 1}], ' ')
                               for x in generate_series(1, len(toks) - {DECON_NGRAM - 1})]) AS grams
         FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks

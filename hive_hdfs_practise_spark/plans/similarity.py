@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from ..functions import vectors as vec
 from ..functions.hexdigest import hex_int, hex_int_sql
+from ..operators.sampling import md5_bucket, md5_bucket_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -81,33 +82,6 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(TOP_K)
     )
-
-
-@register(
-    "knn_brute_cosine_vectorized",
-    oracle=f"""
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-               WHERE vec_id = {QUERY_VEC_ID}),
-         scored AS (
-           SELECT e.vec_id, round(CASE WHEN list_sum(list_transform(CAST(e.embedding AS DOUBLE[]), x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) ELSE 0.0 END, 6) AS cosine
-           FROM embeddings e, q
-           WHERE e.vec_id <> {QUERY_VEC_ID}
-         )
-    SELECT vec_id, cosine FROM scored
-    ORDER BY cosine DESC, vec_id
-    LIMIT {TOP_K}
-    """,
-)
-def knn_brute_cosine_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact k-NN, Arrow-vectorized path: same contract (and same
-    oracle) as ``knn_brute_cosine``, but scoring is one BLAS
-    matrix-vector product per Arrow batch inside ``mapInPandas``
-    instead of the interpreted JVM lambda fold — the shape that
-    extends to GPU execution (see ``similarity/vectorized.py``)."""
-    from ..similarity.vectorized import brute_cosine_topk_vectorized
-
-    e = wide_table(spark, sf_dir, "embeddings")
-    return brute_cosine_topk_vectorized(e, QUERY_VEC_ID, TOP_K)
 
 
 N_PLANES = 8
@@ -2112,7 +2086,7 @@ DRIFT_SCALE = 1_000_000
 
 
 def _drift_oracle() -> str:
-    bucket = hex_int_sql("md5(CAST(vec_id AS VARCHAR))", 1, 2)
+    bucket = md5_bucket_sql("vec_id")
     return f"""
     WITH eb AS (
         SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v,
@@ -2168,8 +2142,6 @@ def embeddings_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared-difference mass and the final scalar math are
     metadata-scale. No vector ever crosses the exchange unquantized
     and no float is ever summed."""
-    from ..operators.sampling import md5_bucket
-
     e = wide_table(spark, sf_dir, "embeddings")
     eb = e.select(
         "label",

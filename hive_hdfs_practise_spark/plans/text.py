@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from ..functions import text as tx
 from ..functions.hexdigest import hex_int_sql
 from ..sources.catalog import table, wide_table
+from .constants import SHINGLE_K
 from .registry import register
 
 
@@ -355,11 +356,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5,
-           list_min([md5(substring(text, x, 5))
-                     for x in generate_series(1, greatest(len(text) - 4, 0))]) AS min_shingle_md5
+           list_min([md5(s) for s in {tx.shingle_set_sql("text", SHINGLE_K)}]) AS min_shingle_md5
     FROM documents
     """,
 )
@@ -371,7 +371,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         tx.content_hash(F.col("text")).alias("content_md5"),
-        tx.minhash_fingerprint(F.col("text"), 5).alias("min_shingle_md5"),
+        tx.minhash_fingerprint(F.col("text"), SHINGLE_K).alias("min_shingle_md5"),
     )
 
 

@@ -22,6 +22,19 @@ def cpu_count() -> int:
         return os.cpu_count() or 4
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap default: min(24g, half of physical memory).
+
+    In local mode the driver heap IS the executor heap for all N worker
+    threads. 8g gave each of 32 concurrent tasks ~250MB — the
+    40x-scale candidate-join sort OOMed exactly there — so a large host
+    gets 24g; a heap past physical memory lets the kernel kill the JVM
+    instead, so a small host gets half of what it has."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "hive_hdfs_practise_spark",
     shuffle_partitions: int | None = None,
@@ -52,11 +65,12 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # local mode: the driver heap IS the executor heap for all N
-        # worker threads. 8g gave each of 32 concurrent tasks ~250MB —
-        # the 40x-scale candidate-join sort OOMed exactly there (the
-        # host has 128GiB; a real cluster gives 4-8GB per few cores).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # a real cluster gives 4-8GB per few cores; SPARK_DRIVER_MEM
+        # overrides the host-derived local default
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     # Only force a local master when none is configured (spark-submit on a
     # cluster sets one; tests/bench get local[N]).

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 import hive_hdfs_practise_spark
 from hive_hdfs_practise_spark.functions.hexdigest import hex_int, hex_int_sql
+from hive_hdfs_practise_spark.operators.sampling import md5_bucket, md5_bucket_sql
 
 N_IDS = 300
 
@@ -63,6 +64,30 @@ def test_engines_agree(spark, start, n):
         for fn, v in ((hashlib.md5, md5_v), (hashlib.sha256, sha_v)):
             hexdigest = fn(str(i).encode()).hexdigest()
             assert v == int(hexdigest[start - 1 : start - 1 + n], 16), (i, start, n)
+
+
+def test_split_bucket_engines_agree(spark):
+    """The split-bucket rule (first md5 byte of the key) reads the same
+    bucket as a Column, as SQL text in Spark and as SQL text in DuckDB."""
+    import duckdb
+
+    got = {
+        r["id"]: (r["col"], r["sql"])
+        for r in spark.range(N_IDS)
+        .select(
+            "id",
+            md5_bucket(F.col("id")).alias("col"),
+            F.expr(md5_bucket_sql("id")).alias("sql"),
+        )
+        .collect()
+    }
+    want = duckdb.sql(
+        f"SELECT i, {md5_bucket_sql('i')} FROM range({N_IDS}) t(i)"
+    ).fetchall()
+    assert len(want) == len(got) == N_IDS
+    for i, v in want:
+        assert got[i] == (v, v), i
+        assert v == int(hashlib.md5(str(i).encode()).hexdigest()[:2], 16)
 
 
 def _docstrings(tree: ast.AST) -> set[int]:

@@ -52,25 +52,7 @@ class TestJaccardPrefixJoin:
             assert r.n_union == len(a | b)
 
     def test_array_fallback_branch_matches(self, spark, monkeypatch):
-        """Force the >128-word fallback (array intersect) and pin
-        output equality with the bitmap branch on the same corpus."""
-        import hive_hdfs_practise_spark.plans.mining as mining
-
-        bitmap = {
-            tuple(r)
-            for r in plans.QUERIES["dedup_jaccard_prefix_join"](
-                spark, SF
-            ).collect()
-        }
-        # shrink the slot budget so any real vocab exceeds it
-        monkeypatch.setattr(mining, "_BITMAP_MAX_WORDS", 0)
-        fallback = {
-            tuple(r)
-            for r in plans.QUERIES["dedup_jaccard_prefix_join"](
-                spark, SF
-            ).collect()
-        }
-        assert fallback == bitmap
+        _assert_fallback_matches(spark, monkeypatch, "dedup_jaccard_prefix_join")
 
 
     def test_candidate_join_partitioning_pinned(self, spark):
@@ -268,7 +250,24 @@ class TestBfsLevels:
         assert got and max(got.values()) <= BFS_ROUNDS
 
 
+def _assert_fallback_matches(spark, monkeypatch, name):
+    """Force the >128-word verify fallback (array intersect) of a
+    prefix-filter join and pin output equality with the bitmap branch
+    on the same corpus."""
+    import hive_hdfs_practise_spark.plans.mining as mining
+
+    bitmap = {tuple(r) for r in plans.QUERIES[name](spark, SF).collect()}
+    # shrink the slot budget so any real vocab exceeds it
+    monkeypatch.setattr(mining, "_BITMAP_MAX_WORDS", 0)
+    fallback = {tuple(r) for r in plans.QUERIES[name](spark, SF).collect()}
+    assert fallback == bitmap
+    assert bitmap  # non-vacuous
+
+
 class TestContainmentJoin:
+    def test_array_fallback_branch_matches(self, spark, monkeypatch):
+        _assert_fallback_matches(spark, monkeypatch, "documents_containment_join")
+
     @pytest.fixture(scope="class")
     def result(self, spark):
         return plans.QUERIES["documents_containment_join"](

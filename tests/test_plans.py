@@ -70,10 +70,15 @@ class TestTopKAndAgg:
 
 
 class TestNewQueryPlans:
-    def test_vectorized_knn_is_takeordered_over_mapinpandas(self, spark):
-        p = _plan(spark, "knn_brute_cosine_vectorized")
-        assert "MapInPandas" in p and "TakeOrderedAndProject" in p
-        assert "SortMergeJoin" not in p  # no join at all in this plan
+    def test_shingle_intersect_not_in_join_condition(self, spark):
+        """The Jaccard threshold filter must not be pushed into the
+        lang-blocked self-join with array_intersect inlined per
+        reference: the counts are materialized first (the pair stage
+        pipeline_training_data shares)."""
+        p = _plan(spark, "dedup_ngram_jaccard")
+        joins = [ln for ln in p.splitlines() if "Join" in ln]
+        assert joins
+        assert sum(ln.count("array_intersect") for ln in joins) == 0
 
     def test_q17_part_filter_pushed_and_broadcast(self, spark):
         p = _plan(spark, "q17_small_quantity_revenue")

@@ -20,9 +20,7 @@ SNAPSHOT = json.loads(
 # checkpoint-eager queries execute real jobs at plan-build time;
 # their schemas are covered by the snapshot tool run, not per-test.
 # (hyperplane-LSH and IVF queries used to sit here for their driver-
-# side dim probe; planes are now derived lazily in-plan, so only the
-# vectorized brute path — whose numpy closure genuinely needs the
-# query vector driver-side — still executes at build.)
+# side dim probe; planes are now derived lazily in-plan.)
 BUILD_EXECUTES = {
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
@@ -37,7 +35,6 @@ BUILD_EXECUTES = {
     "stream_enriched_nation",
     "stream_upsert_latest",
     "stream_pattern_browse_buy",
-    "knn_brute_cosine_vectorized",
     "dedup_clusters_lsh",
     # r5: phash pair graph checkpointed per CC round
     "multimodal_phash_clusters",

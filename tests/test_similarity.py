@@ -64,31 +64,6 @@ class TestKnn:
             want = float(np.dot(M[r.vec_id], q) / (np.linalg.norm(M[r.vec_id]) * np.linalg.norm(q)))
             assert abs(r.cosine - round(want, 6)) < 1e-6
 
-    def test_vectorized_equals_jvm_path(self, spark):
-        jvm = [
-            (r.vec_id, r.cosine)
-            for r in plans.QUERIES["knn_brute_cosine"](spark, SF).collect()
-        ]
-        vec_path = [
-            (r.vec_id, r.cosine)
-            for r in plans.QUERIES["knn_brute_cosine_vectorized"](spark, SF).collect()
-        ]
-        assert jvm == vec_path
-
-    def test_vectorized_zero_norm_scores_zero(self, spark):
-        from hive_hdfs_practise_spark.similarity.vectorized import (
-            cosine_scores_vectorized,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [1.0, 0.0])], "vec_id LONG, embedding ARRAY<DOUBLE>"
-        )
-        got = {
-            r.vec_id: r.cosine
-            for r in cosine_scores_vectorized(df, [1.0, 0.0]).collect()
-        }
-        assert got == {1: 0.0, 2: 1.0}
-
     def test_lsh_bucketing_deterministic(self, spark):
         a = {r.vec_id for r in plans.QUERIES["knn_lsh_bucketed"](spark, SF).collect()}
         b = {r.vec_id for r in plans.QUERIES["knn_lsh_bucketed"](spark, SF).collect()}

@@ -3,9 +3,14 @@ inputs (the oracle check covers engine parity; these pin semantics)."""
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
+import hive_hdfs_practise_spark
 from hive_hdfs_practise_spark import plans
 from hive_hdfs_practise_spark.functions import text as tx
 
@@ -34,6 +39,58 @@ class TestShingles:
 
     def test_short_text_no_shingles(self, spark):
         assert _one(spark, "ab", tx.char_shingles(F.col("text"), 5)) == []
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef)):
+            body = node.body
+            if (
+                body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+            ):
+                ids.add(id(body[0].value))
+    return ids
+
+
+def _shingle_set_sites(root: Path) -> dict[str, int]:
+    """Modules (with hit counts) that spell out a doc's shingle set:
+    the SQL ``[... for x in generate_series(1, greatest(len(...`` list
+    comprehension, or a Spark ``F.sequence`` of k-gram positions ending
+    at ``length - (SHINGLE_K - 1)``. The positional k-gram tables with
+    their own K (ESD_K, WIN_K, CDC_K) and the MinHash signature explode
+    (``dedup/minhash.py``, which hashes positions, never builds a set)
+    do not match; docstrings and comments do not count."""
+    sql = re.compile(r"for\s+x\s+in\s+generate_series\(1,\s*greatest\(len\(")
+    spark_k = re.compile(r"F\.lit\((SHINGLE_K|k) - 1\)")
+    sites: dict[str, int] = {}
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        skip = _docstrings(tree)
+        for node in ast.walk(tree):
+            hit = False
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hit = id(node) not in skip and bool(sql.search(node.value))
+            elif isinstance(node, ast.Call):
+                f = node.func
+                hit = (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "sequence"
+                    and bool(spark_k.search(ast.unparse(node)))
+                )
+            if hit:
+                rel = path.relative_to(root).as_posix()
+                sites[rel] = sites.get(rel, 0) + 1
+    return sites
+
+
+def test_one_shingle_set():
+    """functions/text.py is the only module that builds a shingle set;
+    everything else calls shingle_set_sql / shingle_postings."""
+    root = Path(hive_hdfs_practise_spark.__file__).parent
+    assert set(_shingle_set_sites(root)) == {"functions/text.py"}
 
 
 class TestLangId:

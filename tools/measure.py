@@ -60,7 +60,7 @@ def warm_up(spark, sf_dir: str) -> None:
     # Arrow-batched query in a session pays worker fork + Arrow init
     # (~2 s measured at sf0.1); that belongs to session startup, not
     # to whichever mapInPandas query happens to run first (r2 read it
-    # as a bogus 4x regression of knn_brute_cosine_vectorized).
+    # as a bogus 4x regression of a mapInPandas kNN query).
     spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long").collect()
     # micro-batch engine + state store init (~6 s measured on the
     # first streaming query of a session)
