@@ -91,10 +91,14 @@ def minhash_family(sf_dir: str) -> str:
 
     Selection: explicit ``SPARK_GRAFT_MINHASH_FAMILY`` env override,
     else by local corpus size (md5 for small/correctness corpora,
-    xxhash for bench/scale); non-local paths default to xxhash."""
+    xxhash for bench/scale); non-local paths default to xxhash. A
+    non-empty override other than ``md5``/``xxhash`` raises, rather
+    than falling back to the size rule."""
     fam = os.environ.get(_FAMILY_ENV, "")
     if fam in ("md5", "xxhash"):
         return fam
+    if fam:
+        raise ValueError(f"{_FAMILY_ENV} must be 'md5' or 'xxhash', got {fam!r}")
     target = os.path.join(sf_dir, "documents.parquet")
     try:
         # a corpus can be one bare file (driver testdata) OR a Spark
@@ -240,6 +244,36 @@ def minhash_signature_from_text(
         ).alias("_h"),
     )
     return _signature(exploded, id_cols, downsample)
+
+
+def delta_signatures(
+    docs: DataFrame,
+    id_cols: list[str],
+    downsample: int,
+    family: str,
+) -> DataFrame:
+    """Checkpointed signatures of an ingest batch: the one signature
+    path of ``probe_minhash_index`` and ``append_minhash_index``.
+
+    The batch's rows are checkpointed BEFORE the 128-slot stage, so
+    that stage reads the checkpoint and never sees the caller's
+    selection. A per-batch literal (a ``doc_id BETWEEN lo AND hi``)
+    fused into it would be written into its generated Java: new
+    source every batch, a ~350 ms compile, and a cold class. Past the
+    checkpoint the stage's source is the same for every batch, so the
+    probe and the append of every batch share one compiled class;
+    only the small scan+filter stage that fills the checkpoint
+    recompiles. The checkpoint keeps the caller's partitioning, so
+    the partial aggregate runs on as many cores as before (a by-id
+    shuffle instead would be coalesced by AQE to one partition on a
+    small batch, or need a fixed partition count that a 40-doc batch
+    pays for in tasks and files). The signature checkpoint lets the
+    banding and the prefilter read the signatures without
+    recomputing them."""
+    rows = docs.select(*id_cols, "text").localCheckpoint(eager=True)
+    return minhash_signature_from_text(
+        rows, id_cols, downsample=downsample, family=family
+    ).localCheckpoint(eager=True)
 
 
 def lsh_candidate_pairs(
@@ -469,12 +503,7 @@ def append_minhash_index(
     deterministic, so the appended index equals a from-scratch build
     row for row (pinned by dedup_minhash_index_append's oracle and the
     untouched-files test)."""
-    # delta signatures are tiny (batch × N_PERM longs) and feed both
-    # the sigs append and the banding — checkpoint so the delta text
-    # is scanned once (and the band rows' plan has no exchange)
-    dsigs = minhash_signature_from_text(
-        docs, ["doc_id", *extra_cols], downsample=downsample, family=family
-    ).localCheckpoint(eager=True)
+    dsigs = delta_signatures(docs, ["doc_id", *extra_cols], downsample, family)
     dsigs.write.mode("append").format("parquet").saveAsTable(
         f"{table_prefix}_sigs"
     )

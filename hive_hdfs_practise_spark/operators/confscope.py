@@ -1,12 +1,14 @@
 """Scoped SQL-conf helper for plan-shaping confs.
 
-Some reads need a session conf flipped to get the right PHYSICAL
+Some reads need session confs flipped to get the right PHYSICAL
 plan (the bucketed-index probes pin
 ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false`` so
-the bucketed layout / bucket pruning is not auto-dropped). Setting
-it and never restoring is a cross-query side effect: bench and
-check_oracle sweeps share one session, so every later query using
-bucketed tables silently planned differently (r8 advice item).
+the bucketed layout / bucket pruning is not auto-dropped; the
+MinHash ingest probe turns constraint propagation and bucketed
+reads off). Setting one and never restoring is a cross-query side
+effect: bench and check_oracle sweeps share one session, so every
+later query using bucketed tables silently planned differently (r8
+advice item).
 
 A naive set→build→restore loses the effect — the conf is consulted
 when the PHYSICAL plan is materialized, not when the lazy DataFrame
@@ -27,26 +29,30 @@ from pyspark.sql import DataFrame, SparkSession
 
 def build_with_conf(
     spark: SparkSession,
-    key: str,
-    value: str,
+    confs: dict[str, str],
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Run ``build`` with ``key=value`` set, FORCE the returned
-    DataFrame's physical plan so the conf is baked in, then restore
-    the prior session value (unset if it was never set)."""
-    try:
-        prior: str | None = spark.conf.get(key)
-    except Exception:
-        prior = None
-    spark.conf.set(key, value)
+    """Run ``build`` with every ``key=value`` of ``confs`` set, FORCE
+    the returned DataFrame's physical plan so the confs are baked in,
+    then restore each prior session value (unset if it was never
+    set)."""
+    prior: dict[str, str | None] = {}
+    for key in confs:
+        try:
+            prior[key] = spark.conf.get(key)
+        except Exception:
+            prior[key] = None
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         df = build()
         # materialize (and thereby cache) the physical plan under
-        # the scoped conf — planning only, no job is launched
+        # the scoped confs — planning only, no job is launched
         df._jdf.queryExecution().executedPlan()
         return df
     finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

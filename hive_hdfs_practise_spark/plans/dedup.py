@@ -331,8 +331,7 @@ def _indexed_pairs(spark, sf_dir, table_prefix, post=None):
 
     return build_with_conf(
         spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
+        {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"},
         _probe,
     )
 
@@ -481,37 +480,68 @@ def probe_minhash_index(
     what the ingestion service runs per batch (the registered query
     wraps it with the index build so the green row certifies both;
     SCALING.md measures this helper separately for the
-    probe-vs-rebuild economics)."""
+    probe-vs-rebuild economics).
+
+    Per-batch fixed cost is what this path pays, so nothing specific
+    to the batch may reach generated code or widen a scan:
+
+    - the delta's signatures come from ``mh.delta_signatures`` (the
+      append's path too): a shuffle keeps the caller's selection out
+      of the 128-slot stage, whose compiled class is then reused by
+      every later batch's probe and append;
+    - the rest is built and planned under one conf scope.
+      ``constraintPropagation.enabled=false``: the checkpoint's
+      origin constraints would otherwise carry a ``doc_id BETWEEN``
+      selection into the ``_sigs`` and ``documents`` scans as
+      literal filters (two more compiles per batch, and the two
+      sides' broadcasts no longer match). ``bucketing.enabled=false``:
+      the band table streams through a broadcast join, which gains
+      nothing from its bucket layout, so it is read as plain file
+      splits rather than one task per bucket.
+
+    The plan shape is pinned in test_dedup (TestIngestBatchCompiles)."""
+    from ..operators.confscope import build_with_conf
+
     # delta signatures: tiny (batch × 128 longs), reused by banding
-    # AND the prefilter — checkpoint so neither consumer replays the
-    # delta text scan
-    dsigs = mh.minhash_signature_from_text(
-        delta, ["doc_id"], downsample=4, family=family
-    ).localCheckpoint(eager=True)
-    dbands = mh._band_rows(dsigs, family=family).withColumnRenamed("doc_id", "doc_new")
-    idx = live_rows(spark, f"{table_prefix}_bands", table_prefix, "doc_id")
-    # the delta's banded rows broadcast; the index streams map-side —
-    # no shuffle of the (much larger) index ever happens; tombstoned
-    # corpus docs are never candidates
-    cand = (
-        idx.join(F.broadcast(dbands), ["band", "band_key"])
-        .select(
-            F.col("doc_new").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
+    # AND the prefilter
+    dsigs = mh.delta_signatures(delta, ["doc_id"], 4, family)
+
+    def _probe() -> DataFrame:
+        dbands = mh._band_rows(dsigs, family=family).withColumnRenamed(
+            "doc_id", "doc_new"
         )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    # corpus signatures come from the INDEX (never recomputed);
-    # delta/corpus doc_ids are disjoint, so the union lookup feeds
-    # the shared prefilter exactly
-    sigs = dsigs.select("doc_id", "sig").unionByName(
-        spark.table(f"{table_prefix}_sigs").select("doc_id", "sig")
-    )
-    pre = _est_prefilter(cand, sigs)
-    return exact_jaccard_pairs(pre, docs).select(
-        F.col("doc_a").alias("doc_new"),
-        F.col("doc_b").alias("doc_corpus"),
-        "jaccard",
+        idx = live_rows(spark, f"{table_prefix}_bands", table_prefix, "doc_id")
+        # the delta's banded rows broadcast; the index streams
+        # map-side — no shuffle of the (much larger) index ever
+        # happens; tombstoned corpus docs are never candidates
+        cand = (
+            idx.join(F.broadcast(dbands), ["band", "band_key"])
+            .select(
+                F.col("doc_new").alias("doc_a"),
+                F.col("doc_id").alias("doc_b"),
+            )
+            .dropDuplicates(["doc_a", "doc_b"])
+        )
+        # corpus signatures come from the INDEX (never recomputed);
+        # delta/corpus doc_ids are disjoint, so the union lookup feeds
+        # the shared prefilter exactly
+        sigs = dsigs.select("doc_id", "sig").unionByName(
+            spark.table(f"{table_prefix}_sigs").select("doc_id", "sig")
+        )
+        pre = _est_prefilter(cand, sigs)
+        return exact_jaccard_pairs(pre, docs).select(
+            F.col("doc_a").alias("doc_new"),
+            F.col("doc_b").alias("doc_corpus"),
+            "jaccard",
+        )
+
+    return build_with_conf(
+        spark,
+        {
+            "spark.sql.constraintPropagation.enabled": "false",
+            "spark.sql.sources.bucketing.enabled": "false",
+        },
+        _probe,
     )
 
 

@@ -271,8 +271,7 @@ def documents_dedup_pipeline_indexed(
 
     pairs = build_with_conf(
         spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
+        {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"},
         _probe,
     )
     return _pipeline_tail(uniq, pairs)

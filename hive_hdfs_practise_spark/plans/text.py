@@ -304,8 +304,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return build_with_conf(
         spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
+        {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"},
         _probe,
     )
 

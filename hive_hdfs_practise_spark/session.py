@@ -16,10 +16,16 @@ from pyspark.sql import SparkSession
 
 
 def cpu_count() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 4)
-    except ValueError:
+    """Local cores: ``SPARK_GRAFT_CPUS`` if set and non-empty, else the
+    host's. A value that is not a positive integer raises: ``0`` would
+    start ``local[0]`` with 0 shuffle partitions, and a typo would
+    silently run on every core."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if not raw:
         return os.cpu_count() or 4
+    if not raw.isdigit() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
 
 
 def default_driver_memory(phys_bytes: int | None = None) -> str:

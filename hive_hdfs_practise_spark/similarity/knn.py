@@ -247,8 +247,7 @@ def knn_ivf_indexed(
 
     return build_with_conf(
         spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
+        {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"},
         _probe,
     )
 

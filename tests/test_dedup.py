@@ -187,6 +187,16 @@ class TestFamilyParity:
         monkeypatch.setenv("SPARK_GRAFT_MINHASH_FAMILY", family)
         return {tuple(r) for r in plans.QUERIES[name](spark, sf).collect()}
 
+    @pytest.mark.parametrize("family", ["MD5", "xx", "murmur"])
+    def test_unknown_family_raises(self, monkeypatch, family):
+        """A typo must not fall back to picking the family by corpus
+        size: the md5 oracle contract would silently not apply."""
+        from hive_hdfs_practise_spark.dedup.minhash import minhash_family
+
+        monkeypatch.setenv("SPARK_GRAFT_MINHASH_FAMILY", family)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_MINHASH_FAMILY"):
+            minhash_family(SF_DIR)
+
     def test_minhash_lsh_family_swap_identical(self, spark, monkeypatch):
         sf = "/root/testdata/sf0.01"
         md5 = self._run(spark, "dedup_minhash_lsh", sf, "md5", monkeypatch)
@@ -1630,6 +1640,115 @@ class TestIndexCompact:
             for r in P.QUERIES["dedup_minhash_lsh"](spark, sf).collect()
         }
         assert got == want and got
+
+
+class TestIngestBatchCompiles:
+    """A steady-state ingest batch (probe + append, the perfbench
+    ``ingest`` op) selected by a per-batch ``doc_id BETWEEN`` range
+    must not recompile the 128-slot signature stage, and the probe's
+    plan must carry no batch literal and no bucketed band scan."""
+
+    @staticmethod
+    def _codegen(spark):
+        """(compiles so far, the source sizes the histogram holds)."""
+        cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        sizes = cm.METRIC_SOURCE_CODE_SIZE().getSnapshot().getValues()
+        return cm.METRIC_COMPILATION_TIME().getCount(), list(sizes)
+
+    def _batch(self, spark, prefix, docs, lo, hi):
+        """Probe then append ids [lo, hi]; return (compiles, sizes of
+        the sources compiled, probe frame)."""
+        from collections import Counter
+
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.plans.dedup import probe_minhash_index
+
+        n0, s0 = self._codegen(spark)
+        delta = docs.filter(f"doc_id BETWEEN {lo} AND {hi}")
+        probe = probe_minhash_index(spark, delta, prefix, docs, "md5")
+        assert probe.collect()
+        mh.append_minhash_index(spark, delta, prefix, downsample=4, family="md5")
+        n1, s1 = self._codegen(spark)
+        # the histogram is a decaying sample, not a log: compiles are
+        # read from the exact count, and the multiset difference holds
+        # the sizes of (the sampled) new sources
+        return n1 - n0, sorted((Counter(s1) - Counter(s0)).elements()), probe
+
+    @pytest.fixture()
+    def index(self, spark):
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+            "doc_id", "text"
+        )
+        prefix = "minhash_ingest_compile_idx"
+        mh.write_minhash_index(
+            spark, docs.filter("doc_id < 100"), prefix, downsample=4, family="md5"
+        )
+        return docs, prefix
+
+    def test_steady_batch_reuses_signature_stage(self, spark, index):
+        """Warm with batch [100, 139], then run batch [350, 389] (both
+        have near-dups in the index, so every stage of the probe runs):
+        the second batch compiles no source as large as the warm
+        batch's largest (the 128-slot stage) and at most 2 classes
+        (the caller's scan+filter stage). With the range fused into
+        the 128-slot stage and carried into the _sigs and documents
+        scans, every batch compiled 6."""
+        docs, prefix = index
+        _, warm, _ = self._batch(spark, prefix, docs, 100, 139)
+        n, sizes, _ = self._batch(spark, prefix, docs, 350, 389)
+        assert warm and max(sizes, default=0) < max(warm), (sizes, max(warm))
+        assert n <= 2, (n, sizes)
+
+    def test_probe_plan_unbucketed_literal_free(self, spark, index, monkeypatch):
+        """After a collect the probe's plan (a) reads the band table
+        unbucketed, (b) has no ``doc_id`` range literal in any _sigs
+        or documents scan, and (c) its signature job (and the
+        append's) runs the 128-slot aggregate over the checkpointed
+        delta rows, with no range literal anywhere in its plan. The
+        scoped confs are restored."""
+        import re
+
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+
+        docs, prefix = index
+        built = []
+        sign = mh.minhash_signature_from_text
+
+        def spy(*args, **kwargs):
+            built.append(sign(*args, **kwargs))
+            return built[-1]
+
+        monkeypatch.setattr(mh, "minhash_signature_from_text", spy)
+        _, _, probe = self._batch(spark, prefix, docs, 100, 139)
+        for key in (
+            "spark.sql.constraintPropagation.enabled",
+            "spark.sql.sources.bucketing.enabled",
+        ):
+            assert spark.conf.get(key) == "true", key
+        literal = re.compile(r"doc_id#\d+L? [<>]=|(Greater|Less)ThanOrEqual\(doc_id")
+
+        def final(df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return plan.split("== Initial Plan ==")[0].splitlines()
+
+        scans = [ln for ln in final(probe) if "FileScan" in ln]
+        bands = [ln for ln in scans if f"{prefix}_bands" in ln]
+        assert bands and all("Bucketed: false" in ln for ln in bands), bands
+        lookups = [
+            ln for ln in scans
+            if f"{prefix}_sigs" in ln or "documents.parquet" in ln
+        ]
+        assert len(lookups) >= 2, scans
+        assert not [ln for ln in lookups if literal.search(ln)], lookups
+        # two signature jobs: the probe's and the append's
+        assert len(built) == 2
+        for df in built:
+            sig = final(df)
+            assert any("HashAggregate" in ln and "min(" in ln for ln in sig), sig
+            assert any("Scan ExistingRDD" in ln for ln in sig), sig
+            assert not any("FileScan" in ln or literal.search(ln) for ln in sig), sig
 
 
 class TestKnnGraphStats:

@@ -75,6 +75,17 @@ def test_run_drops_the_cache(spark, measure):
     assert rows is not None
 
 
+def test_run_records_compiles(spark, measure):
+    """Each run's record carries its Janino compiles and their time;
+    a repeat of the same plan hits the compile cache."""
+    record, _ = measure.run(spark, "q6_forecast_revenue", SF_DIR, runs=2)
+    first, second = record["runs"]
+    for cost in record["runs"]:
+        assert isinstance(cost["compiles"], int) and cost["compiles"] >= 0
+        assert isinstance(cost["compile_ms"], float) and cost["compile_ms"] >= 0
+    assert second["compiles"] <= first["compiles"]
+
+
 def test_run_counts_micro_batch_jobs(spark, measure):
     """The micro-batch thread does not inherit the job group; its jobs
     run while the builder waits for the stream, and are still costed."""

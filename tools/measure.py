@@ -92,7 +92,9 @@ def run(spark, name: str, sf_dir: str, runs: int = 2, action=collect, timeout_s=
     outside the timed window, and by job id rather than job group,
     because the streaming micro-batch thread does not inherit the
     group. Jobs submitted before the builder returned count as
-    ``jobs_build``, the rest as ``jobs_action``.
+    ``jobs_build``, the rest as ``jobs_action``. ``compiles`` and
+    ``compile_ms`` are the Janino compiles of the run (build and
+    action) and their time.
 
     ``timeout_s`` bounds all runs together: a watchdog cancels the job
     group, and ``wall_s`` is the best finished run or None. Without
@@ -108,6 +110,7 @@ def run(spark, name: str, sf_dir: str, runs: int = 2, action=collect, timeout_s=
     try:
         for _ in range(runs):
             counters.mark()
+            c0 = compiled(spark)
             cpu0, t0 = time.process_time(), time.time()
             try:
                 df = plans.QUERIES[name](spark, sf_dir)
@@ -117,7 +120,12 @@ def run(spark, name: str, sf_dir: str, runs: int = 2, action=collect, timeout_s=
                 cpu_s = time.process_time() - cpu0
             finally:
                 spark.catalog.clearCache()
-            records.append(_costs(sc, counters, t2 - t0, t1 - t0, t1, cpu_s))
+            c1 = compiled(spark)
+            records.append({
+                **_costs(sc, counters, t2 - t0, t1 - t0, t1, cpu_s),
+                "compiles": c1[0] - c0[0],
+                "compile_ms": round(c1[1] - c0[1], 1),
+            })
     except Exception as exc:  # noqa: BLE001 — cancelled or failed: over budget
         if timeout_s is None:
             raise
@@ -126,6 +134,17 @@ def run(spark, name: str, sf_dir: str, runs: int = 2, action=collect, timeout_s=
         done.set()
     best = min((r["wall_s"] for r in records), default=None)
     return {"query": name, "wall_s": best, "runs": records}, result
+
+
+def compiled(spark) -> tuple[int, float]:
+    """(Janino compiles, their total ms) so far in this JVM: the
+    compile count from ``CodegenMetrics``, the time from
+    ``CodeGenerator.compileTime`` (ns). A compile cache hit counts as
+    neither."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
 
 
 def _watchdog(sc, group: str, done, timeout_s: float) -> None:
