@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as tx
+from ..functions import vectors as vec
 from ..operators.graph import trade_pairs, undirected
 from ..sources.catalog import table, wide_table
 from .registry import register
@@ -471,13 +472,8 @@ def _hybrid_rrf_oracle() -> str:
         SELECT q.qid, e.vec_id AS doc_id,
                row_number() OVER (
                    PARTITION BY q.qid
-                   ORDER BY round(CASE
-                       WHEN list_sum(list_transform(
-                                CAST(e.embedding AS DOUBLE[]), x -> x * x)) > 0
-                            AND list_sum(list_transform(q.qv, x -> x * x)) > 0
-                       THEN list_cosine_similarity(
-                                CAST(e.embedding AS DOUBLE[]), q.qv)
-                       ELSE 0.0 END, 6) DESC, e.vec_id
+                   ORDER BY {vec.cosine6_sql("CAST(e.embedding AS DOUBLE[])", "q.qv")}
+                       DESC, e.vec_id
                ) AS rb
         FROM embeddings e, qv q
         WHERE e.vec_id <> q.qvec
@@ -529,8 +525,6 @@ def documents_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact scan is their re-rank stage); both rankings are
     per-query WindowGroupLimit row_numbers; the fusion joins two
     ≤HYB_LIST-per-query lists — metadata-sized."""
-    from ..functions import vectors as vec
-
     term = _bm25_term_df(spark, sf_dir)
     sc = term.groupBy("qid", "doc_id").agg(F.sum("tm").alias("score_micro"))
     wa = Window.partitionBy("qid").orderBy(F.desc("score_micro"), "doc_id")
@@ -555,9 +549,7 @@ def documents_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             F.col("vec_id").alias("doc_id"),
-            F.round(
-                vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-            ).alias("cos"),
+            vec.cosine6(vec.as_double(F.col("embedding")), F.col("qv")).alias("cos"),
         )
         .select("qid", "doc_id", F.row_number().over(wb).alias("rb"))
         .where(F.col("rb") <= HYB_LIST)

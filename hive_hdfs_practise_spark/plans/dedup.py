@@ -1391,9 +1391,9 @@ COSINE_THRESHOLD = 0.4
     oracle=f"""
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(CASE WHEN list_sum(list_transform(a.v, x -> x * x)) > 0 AND list_sum(list_transform(b.v, x -> x * x)) > 0 THEN list_cosine_similarity(a.v, b.v) ELSE 0.0 END, 6) AS cosine
+           {vec.cosine6_sql('a.v', 'b.v')} AS cosine
     FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE round(CASE WHEN list_sum(list_transform(a.v, x -> x * x)) > 0 AND list_sum(list_transform(b.v, x -> x * x)) > 0 THEN list_cosine_similarity(a.v, b.v) ELSE 0.0 END, 6) >= {COSINE_THRESHOLD}
+    WHERE {vec.cosine6_sql('a.v', 'b.v')} >= {COSINE_THRESHOLD}
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1407,7 +1407,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = e.alias("a")
     b = e.alias("b")
-    cos = F.round(vec.cosine(F.col("a.v"), F.col("b.v")), 6)
+    cos = vec.cosine6(F.col("a.v"), F.col("b.v"))
     return (
         a.join(
             b,
@@ -1564,34 +1564,9 @@ PLANES_PER_BAND = 4
 
 def _emb_lsh_cand_sql(n_bands: int, ppb: int) -> str:
     """The WITH-clause body shared by every banded hyperplane-LSH
-    oracle: md5-derived planes, per-band sign-bit buckets, distinct
-    a<b pairs sharing any (band, bucket)."""
-    u32 = hex_int_sql("md5(concat(p.plane_id, ':', c.c))")
-    n_planes = n_bands * ppb
-    return f"""
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    pc AS (
-        SELECT p.plane_id, c.c, {u32} / 2147483648.0 - 1.0 AS comp
-        FROM generate_series(0, {n_planes - 1}) AS p(plane_id),
-             generate_series(0, 63) AS c(c)
-    ),
-    planes AS (
-        SELECT plane_id, plane_id // {ppb} AS band,
-               list(comp ORDER BY c) AS plane
-        FROM pc GROUP BY plane_id
-    ),
-    bits AS (
-        SELECT e.vec_id, pl.band, pl.plane_id,
-               CASE WHEN list_sum(list_transform(range(1, 65),
-                                                 i -> e.v[i] * pl.plane[i])) >= 0
-                    THEN 1 ELSE 0 END AS bit
-        FROM e, planes AS pl
-    ),
-    buckets AS (
-        SELECT vec_id, band,
-               CAST(sum(bit * (1 << ({ppb - 1} - (plane_id % {ppb})))) AS BIGINT) AS bucket
-        FROM bits GROUP BY vec_id, band
-    ),
+    oracle: the sign-bit buckets (``vectors.hyperplane_bucket_ctes``)
+    and the distinct a<b pairs sharing any (band, bucket)."""
+    return f"""{vec.hyperplane_bucket_ctes(n_bands, ppb)},
     cand AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM buckets AS a JOIN buckets AS b
@@ -1609,11 +1584,11 @@ def _emb_lsh_oracle(
     return f"""
     WITH {_emb_lsh_cand_sql(n_bands, ppb)}
     SELECT c.vec_a, c.vec_b,
-           round(CASE WHEN list_sum(list_transform(ea.v, x -> x * x)) > 0 AND list_sum(list_transform(eb.v, x -> x * x)) > 0 THEN list_cosine_similarity(ea.v, eb.v) ELSE 0.0 END, 6) AS cosine
+           {vec.cosine6_sql('ea.v', 'eb.v')} AS cosine
     FROM cand AS c
     JOIN e AS ea ON ea.vec_id = c.vec_a
     JOIN e AS eb ON eb.vec_id = c.vec_b
-    WHERE round(CASE WHEN list_sum(list_transform(ea.v, x -> x * x)) > 0 AND list_sum(list_transform(eb.v, x -> x * x)) > 0 THEN list_cosine_similarity(ea.v, eb.v) ELSE 0.0 END, 6) >= {threshold}
+    WHERE {vec.cosine6_sql('ea.v', 'eb.v')} >= {threshold}
     """
 
 
@@ -1656,36 +1631,11 @@ def _emb_lsh_candidates(
     (doc_a < doc_b) and the (vec_id, v) vector table. See
     dedup_embedding_lsh for the full design notes."""
     from ..dedup.minhash import pairs_within_buckets
-    from .similarity import _hyperplanes_from
 
     e = wide_table(spark, sf_dir, "embeddings").select(
         "vec_id", vec.as_double(F.col("embedding")).alias("v")
     )
-    planes = _hyperplanes_from(e, "v", n_bands * ppb).withColumn(
-        "band", (F.col("plane_id") / ppb).cast("int")
-    )
-    buckets = (
-        e.join(F.broadcast(planes))
-        .select(
-            "vec_id",
-            "band",
-            "plane_id",
-            F.when(vec.dot(F.col("v"), F.col("plane")) >= 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("bit"),
-        )
-        .groupBy("vec_id", "band")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("plane_id", "bit"))),
-                    lambda s: s["bit"],
-                ),
-                F.lit(0),
-                lambda acc, b: acc * 2 + b,
-            ).alias("bucket")
-        )
-    )
+    buckets = vec.hyperplane_buckets(e, "v", n_bands, ppb)
     return (
         pairs_within_buckets(
             buckets, "vec_id", ["band", "bucket"], distinct=distinct
@@ -1708,7 +1658,7 @@ def _emb_lsh_pairs(
     cand, e = _emb_lsh_candidates(spark, sf_dir, n_bands, ppb)
     va = e.select(F.col("vec_id").alias("doc_a"), F.col("v").alias("va"))
     vb = e.select(F.col("vec_id").alias("doc_b"), F.col("v").alias("vb"))
-    cos = F.round(vec.cosine(F.col("va"), F.col("vb")), 6)
+    cos = vec.cosine6(F.col("va"), F.col("vb"))
     return (
         cand.join(va, "doc_a")
         .join(vb, "doc_b")
@@ -1764,7 +1714,7 @@ def _ann_self_join_oracle() -> str:
     ),
     scored AS (
         SELECT d.vec_id, d.cnd,
-               round(CASE WHEN list_sum(list_transform(ea.v, x -> x * x)) > 0 AND list_sum(list_transform(eb.v, x -> x * x)) > 0 THEN list_cosine_similarity(ea.v, eb.v) ELSE 0.0 END, 6) AS cosine
+               {vec.cosine6_sql('ea.v', 'eb.v')} AS cosine
         FROM directed AS d
         JOIN e AS ea ON ea.vec_id = d.vec_id
         JOIN e AS eb ON eb.vec_id = d.cnd
@@ -1823,7 +1773,7 @@ def embeddings_ann_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cnd",
-            F.round(vec.cosine(F.col("va"), F.col("vb")), 6).alias("cosine"),
+            vec.cosine6(F.col("va"), F.col("vb")).alias("cosine"),
         )
     )
     best = scored.groupBy("vec_id").agg(
@@ -1899,13 +1849,19 @@ SEM_TAU2_DEN = 25
 assert abs(SEM_TAU2_NUM / SEM_TAU2_DEN - COSINE_THRESHOLD**2) < 1e-12
 
 
-def _semdedup_oracle() -> str:
+def _sem_vq_sql() -> str:
+    """WITH-head shared by the oracles of the SemDeDup quantizer's
+    three riders: the quantized rows ``e`` and the unrolled VQ with
+    its in-cell shards (``af``)."""
     from ..similarity.pq import vq_kmeans_unrolled_cte
 
+    return f"""WITH {vec.quantized_sql()},
+    {vq_kmeans_unrolled_cte(SEM_ITERS, SEM_NLIST_SQL, shard_cap=SEM_SHARD_CAP)}"""
+
+
+def _semdedup_oracle() -> str:
     return (
-        vq_kmeans_unrolled_cte(
-            SEM_ITERS, SEM_NLIST_SQL, shard_cap=SEM_SHARD_CAP
-        )
+        _sem_vq_sql()
         + f""",
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cid,
@@ -2712,11 +2668,7 @@ KNN_GRAPH_K = 3
 
 
 def _knn_graph_oracle() -> str:
-    guarded = """round(CASE
-                       WHEN list_sum(list_transform(ea.v, x -> x * x)) > 0
-                            AND list_sum(list_transform(eb.v, x -> x * x)) > 0
-                       THEN list_cosine_similarity(ea.v, eb.v)
-                       ELSE 0.0 END, 6)"""
+    guarded = vec.cosine6_sql("ea.v", "eb.v")
     return f"""
     WITH {_emb_lsh_cand_sql(N_EMB_BANDS, PLANES_PER_BAND)},
     directed AS (
@@ -2752,8 +2704,6 @@ def _knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-checkpoint top-K kNN list (vec_id, cnd) — factored so the
     WindowGroupLimit plan pin can inspect it (the checkpoint in the
     registered builder executes the plan away)."""
-    from ..functions import vectors as vec
-
     cand, e = _emb_lsh_candidates(
         spark, sf_dir, N_EMB_BANDS, PLANES_PER_BAND, distinct=False
     )
@@ -2782,7 +2732,7 @@ def _knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cnd",
-            F.round(vec.cosine(F.col("va"), F.col("vb")), 6).alias("cosine"),
+            vec.cosine6(F.col("va"), F.col("vb")).alias("cosine"),
         )
     )
     wr = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), "cnd")
@@ -2834,12 +2784,8 @@ def embeddings_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_graph_ivf_oracle() -> str:
-    from ..similarity.pq import vq_kmeans_unrolled_cte
-
     return (
-        vq_kmeans_unrolled_cte(
-            SEM_ITERS, SEM_NLIST_SQL, shard_cap=SEM_SHARD_CAP
-        )
+        _sem_vq_sql()
         + f""",
     upairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -2977,12 +2923,8 @@ def embeddings_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_cell_stats_oracle() -> str:
-    from ..similarity.pq import vq_kmeans_unrolled_cte
-
     return (
-        vq_kmeans_unrolled_cte(
-            SEM_ITERS, SEM_NLIST_SQL, shard_cap=SEM_SHARD_CAP
-        )
+        _sem_vq_sql()
         + f""",
     cells AS (SELECT cid, count(*) AS m FROM af GROUP BY cid),
     blocks AS (

@@ -50,7 +50,7 @@ IVF_ITERS = 3
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
                WHERE vec_id = {QUERY_VEC_ID}),
          scored AS (
-           SELECT e.vec_id, round(CASE WHEN list_sum(list_transform(CAST(e.embedding AS DOUBLE[]), x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) ELSE 0.0 END, 6) AS cosine
+           SELECT e.vec_id, {vec.cosine6_sql('CAST(e.embedding AS DOUBLE[])', 'q.qv')} AS cosine
            FROM embeddings e, q
            WHERE e.vec_id <> {QUERY_VEC_ID}
          )
@@ -70,104 +70,23 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") == QUERY_VEC_ID)
         .select(vec.as_double(F.col("embedding")).alias("qv"))
     )
-    return (
-        e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(TOP_K)
+    return vec.top_k_cosine(
+        e.filter(F.col("vec_id") != QUERY_VEC_ID).join(F.broadcast(q)),
+        vec.as_double(F.col("embedding")),
+        F.col("qv"),
+        TOP_K,
     )
 
 
 N_PLANES = 8
 
 
-def _hyperplanes_df(spark: SparkSession, dim: int, n_planes: int = N_PLANES):
-    """Deterministic pseudo-random hyperplanes: component c of plane p
-    is derived from md5(p:c) → uniform in [-1, 1). No RNG state, so
-    the bucketing is reproducible across runs/engines."""
-    rows = []
-    import hashlib
-
-    for p in range(n_planes):
-        comps = []
-        for c in range(dim):
-            h = hashlib.md5(f"{p}:{c}".encode()).hexdigest()
-            comps.append(int(h[:8], 16) / float(1 << 31) - 1.0)
-        rows.append((p, comps))
-    return spark.createDataFrame(rows, "plane_id INT, plane ARRAY<DOUBLE>")
-
-
-def _hyperplanes_from(
-    e: DataFrame, vec_col: str = "embedding", n_planes: int = N_PLANES
-) -> DataFrame:
-    """The same planes as ``_hyperplanes_df`` — component c of plane
-    p is md5(p:c) mapped to [-1, 1) — but the dimension comes from
-    the DATA, lazily: ``size(vec)`` of one row, exploded into
-    (plane, component) pairs, with the md5 evaluated by Spark's own
-    ``md5``/``conv`` (bit-identical to the hashlib formula; pinned
-    by a parity test). No driver-side ``.head()`` job runs at plan
-    time, so plan construction stays metadata-only and the
-    correctness gate never pays an extra Spark job per build."""
-    comp = (
-        hex_int(F.md5(F.concat_ws(":", F.col("plane_id"), F.col("c"))))
-        / F.lit(float(1 << 31))
-        - F.lit(1.0)
-    )
-    return (
-        e.limit(1)
-        .select(F.size(F.col(vec_col)).alias("_dim"))
-        .select(
-            F.explode(F.sequence(F.lit(0), F.lit(n_planes - 1))).alias("plane_id"),
-            "_dim",
-        )
-        .select(
-            "plane_id", F.explode(F.sequence(F.lit(0), F.col("_dim") - 1)).alias("c")
-        )
-        .select("plane_id", "c", comp.alias("comp"))
-        .groupBy("plane_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("c", "comp"))),
-                lambda s: s["comp"],
-            ).alias("plane")
-        )
-    )
-
-
-def _lsh_bucket_ctes() -> str:
-    """Shared CTE prefix: deterministic md5-derived hyperplanes,
-    per-vector sign bits, bucket ids — the SQL restatement of
-    ``_hyperplanes_from`` + the bucket fold."""
-    u32 = hex_int_sql("md5(concat(p.plane_id, ':', c.c))")
-    comp = f"{u32} / 2147483648.0 - 1.0"
+def _lsh_query_ctes() -> str:
+    """WITH-head of the two kNN-LSH oracles: the 1-band, N_PLANES-bit
+    sign buckets (``vectors.hyperplane_bucket_ctes``) and the query
+    row's bucket ``q(qb, qv)``."""
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    pc AS (
-        SELECT p.plane_id, c.c, {comp} AS comp
-        FROM generate_series(0, {N_PLANES - 1}) AS p(plane_id),
-             generate_series(0, 63) AS c(c)
-    ),
-    planes AS (
-        SELECT plane_id, list(comp ORDER BY c) AS plane FROM pc GROUP BY plane_id
-    ),
-    bits AS (
-        SELECT e.vec_id, pl.plane_id,
-               CASE WHEN list_sum(list_transform(range(1, 65),
-                                                 i -> e.v[i] * pl.plane[i])) >= 0
-                    THEN 1 ELSE 0 END AS bit
-        FROM e, planes AS pl
-    ),
-    buckets AS (
-        SELECT vec_id,
-               CAST(sum(bit * (1 << ({N_PLANES - 1} - plane_id))) AS BIGINT) AS bucket
-        FROM bits GROUP BY vec_id
-    ),
+    WITH {vec.hyperplane_bucket_ctes(1, N_PLANES)},
     q AS (
         SELECT b.bucket AS qb, e.v AS qv
         FROM buckets AS b JOIN e USING (vec_id) WHERE vec_id = {QUERY_VEC_ID}
@@ -176,9 +95,9 @@ def _lsh_bucket_ctes() -> str:
 
 @register(
     "knn_lsh_bucketed",
-    oracle=_lsh_bucket_ctes()
+    oracle=_lsh_query_ctes()
     + f"""
-    SELECT b.vec_id, round(CASE WHEN list_sum(list_transform(e.v, x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(e.v, q.qv) ELSE 0.0 END, 6) AS cosine
+    SELECT b.vec_id, {vec.cosine6_sql('e.v', 'q.qv')} AS cosine
     FROM buckets AS b JOIN e USING (vec_id), q
     WHERE b.vec_id <> {QUERY_VEC_ID} AND b.bucket = q.qb
     ORDER BY cosine DESC, b.vec_id
@@ -203,34 +122,8 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force ranking.
     """
     e = wide_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes_from(e)
-
-    # bucket id: fold the ordered sign bits into an int (bit p =
-    # sign(v · plane_p), bits ordered by plane_id).
-    def bucket_of(bits):
-        return F.aggregate(bits, F.lit(0), lambda acc, b: acc * 2 + b)
-
-    with_bits = (
-        e.join(F.broadcast(planes))
-        .select(
-            "vec_id",
-            "embedding",
-            "plane_id",
-            F.when(
-                vec.dot(vec.as_double(F.col("embedding")), F.col("plane")) >= 0, F.lit(1)
-            )
-            .otherwise(F.lit(0))
-            .alias("bit"),
-        )
-        .groupBy("vec_id", "embedding")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("plane_id", "bit"))),
-                lambda s: s["bit"],
-            ).alias("bits")
-        )
-        .withColumn("bucket", bucket_of(F.col("bits")))
-        .drop("bits")
+    with_bits = vec.hyperplane_buckets(
+        e, "embedding", 1, N_PLANES, carry=("embedding",)
     )
     probe = (
         with_bits.filter(F.col("vec_id") == QUERY_VEC_ID)
@@ -239,17 +132,13 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec.as_double(F.col("embedding")).alias("qv"),
         )
     )
-    return (
-        with_bits.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(probe), F.col("bucket") == F.col("probe_bucket"))
-        .select(
-            "vec_id",
-            F.round(
-                vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(TOP_K)
+    return vec.top_k_cosine(
+        with_bits.filter(F.col("vec_id") != QUERY_VEC_ID).join(
+            F.broadcast(probe), F.col("bucket") == F.col("probe_bucket")
+        ),
+        vec.as_double(F.col("embedding")),
+        F.col("qv"),
+        TOP_K,
     )
 
 
@@ -261,100 +150,39 @@ def _ivf_oracle(
     train_pred: str | None = None,
     final_pred: str | None = None,
 ) -> str:
-    """DuckDB restatement of the ENTIRE IVF pipeline — deterministic
-    k-means (lowest-id seeding, argmin ties to the lower cluster id,
-    centroid components rounded to 9 dp exactly as
-    similarity/knn.py does) unrolled over ``iters`` Lloyd steps,
-    then the nprobe-list probe and exact cosine top-k. sqrt is
-    omitted from argmin distances (monotone, ordering-equivalent).
-
-    ``train_pred``: optional SQL predicate on ``e`` restricting the
-    TRAINING set (seeds + Lloyd rounds) to a subset — the frozen-
-    centroid append regime (knn_ivf_index_append): the quantizer is
-    fit on the corpus shard while the final assignment, probe, and
-    top-k run over ALL vectors. None keeps the original text
-    (training set == e).
+    """DuckDB restatement of the ENTIRE IVF pipeline — the
+    deterministic k-means quantizer unrolled by
+    ``similarity/knn.py::kmeans_unrolled_cte`` (``train_pred``, the
+    frozen-centroid append regime, is its training set), then the
+    nprobe-list probe and exact cosine top-k.
 
     ``final_pred``: optional SQL predicate on the final candidate row
     ``f`` (e.g. a keep-filter on ``f.vec_id``) — the tombstone-probe
     regime (knn_ivf_index_delete): quantizer AND assignment still
     cover the full corpus (the index was built before the deletes),
     only the probe's candidates are filtered."""
+    from ..similarity.knn import kmeans_unrolled_cte
 
-    def dist(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, 65), "
-            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
-
-    te = "e" if train_pred is None else "te"
-    parts = [
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-    ]
-    if train_pred is not None:
-        parts.append(f"te AS (SELECT * FROM e WHERE {train_pred})")
-    parts.append(
-        f"""seed AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-        FROM {te} ORDER BY vec_id LIMIT {nlist}
-    )"""
-    )
-    prev = "seed"
-    for k in range(1, iters + 1):
-        parts.append(
-            f"""a{k} AS (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist('e.v', 'c.c')}, c.cid) AS rn
-        FROM {te} AS e, {prev} AS c
-    )"""
-        )
-        parts.append(
-            f"""c{k} AS (
-        SELECT cid, list(m ORDER BY i) AS c FROM (
-            SELECT a.cid, t.i, round(avg(a.v[t.i]), 9) AS m
-            FROM a{k} AS a, generate_series(1, 64) AS t(i)
-            WHERE a.rn = 1
-            GROUP BY a.cid, t.i
-        ) GROUP BY cid
-    )"""
-        )
-        prev = f"c{k}"
-    final = iters + 1
-    parts.append(
-        f"""a{final} AS (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist('e.v', 'c.c')}, c.cid) AS rn
-        FROM e, {prev} AS c
-    )"""
-    )
-    parts.append(
-        f"q AS (SELECT v AS qv FROM e WHERE vec_id = {QUERY_VEC_ID})"
-    )
-    parts.append(
-        f"""probe AS (
-        SELECT c.cid FROM {prev} AS c, q
-        ORDER BY {dist('q.qv', 'c.c')}, c.cid LIMIT {nprobe}
-    )"""
-    )
     label_join = (
         ""
         if label is None
-        else f" JOIN embeddings AS lab ON lab.vec_id = f.vec_id"
+        else " JOIN embeddings AS lab ON lab.vec_id = f.vec_id"
     )
     label_pred = "" if label is None else f" AND lab.label = {label}"
     keep_pred = "" if final_pred is None else f" AND ({final_pred})"
-    return (
-        ",\n    ".join(parts)
-        + f"""
-    SELECT f.vec_id, round(CASE WHEN list_sum(list_transform(f.v, x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(f.v, q.qv) ELSE 0.0 END, 6) AS cosine
-    FROM a{final} AS f{label_join}, probe, q
-    WHERE f.rn = 1 AND f.cid = probe.cid AND f.vec_id <> {QUERY_VEC_ID}{label_pred}{keep_pred}
+    return f"""
+    {kmeans_unrolled_cte(nlist, iters, train_pred=train_pred)},
+    q AS (SELECT v AS qv FROM e WHERE vec_id = {QUERY_VEC_ID}),
+    probe AS (
+        SELECT c.cid FROM c{iters} AS c, q
+        ORDER BY {vec.l2sq_sql('q.qv', 'c.c', 64)}, c.cid LIMIT {nprobe}
+    )
+    SELECT f.vec_id, {vec.cosine6_sql('f.v', 'q.qv')} AS cosine
+    FROM af AS f{label_join}, probe, q
+    WHERE f.cid = probe.cid AND f.vec_id <> {QUERY_VEC_ID}{label_pred}{keep_pred}
     ORDER BY cosine DESC, f.vec_id
     LIMIT {TOP_K}
     """
-    )
 
 
 @register("knn_ivf", oracle=_ivf_oracle())
@@ -561,34 +389,20 @@ AUDIT_QVECS = [0, 7, 23, 48, 77, 111, 222, 333]
 
 
 def _recall_audit_oracle() -> str:
-    from ..similarity.knn import kmeans_unrolled_cte
-
-    def dist(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, 65), "
-            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
+    from ..similarity.knn import kmeans_unrolled_cte, probe_ranks_cte
 
     ids = ", ".join(str(v) for v in AUDIT_QVECS)
-    cfinal = f"c{IVF_ITERS}"
     return f"""
     {kmeans_unrolled_cte(IVF_NLIST, IVF_ITERS)},
     q AS (SELECT vec_id AS qvec, v AS qv FROM e WHERE vec_id IN ({ids})),
-    probe AS (
-        SELECT qvec, cid FROM (
-            SELECT q.qvec, c.cid,
-                   row_number() OVER (PARTITION BY q.qvec
-                                      ORDER BY {dist('q.qv', 'c.c')}, c.cid)
-                       AS rn
-            FROM q, {cfinal} AS c
-        ) WHERE rn <= {IVF_NPROBE}
-    ),
+    {probe_ranks_cte(f"c{IVF_ITERS}")},
+    probe AS (SELECT qvec, cid FROM ranked WHERE rn <= {IVF_NPROBE}),
     ivf AS (
         SELECT qvec, vec_id FROM (
             SELECT q.qvec, f.vec_id,
                    row_number() OVER (
                        PARTITION BY q.qvec
-                       ORDER BY round(CASE WHEN list_sum(list_transform(f.v, x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(f.v, q.qv) ELSE 0.0 END, 6)
+                       ORDER BY {vec.cosine6_sql('f.v', 'q.qv')}
                                 DESC, f.vec_id) AS rn
             FROM probe p
             JOIN af f ON f.cid = p.cid
@@ -601,7 +415,7 @@ def _recall_audit_oracle() -> str:
             SELECT q.qvec, e.vec_id,
                    row_number() OVER (
                        PARTITION BY q.qvec
-                       ORDER BY round(CASE WHEN list_sum(list_transform(e.v, x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(e.v, q.qv) ELSE 0.0 END, 6)
+                       ORDER BY {vec.cosine6_sql('e.v', 'q.qv')}
                                 DESC, e.vec_id) AS rn
             FROM e, q WHERE e.vec_id <> q.qvec
         ) WHERE rn <= {TOP_K}
@@ -629,7 +443,6 @@ def knn_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-compare is a (qvec, vec_id) left join of two ≤K-per-query
     lists. Builder runs jobs at plan time (kmeans checkpoints):
     BUILD_EXECUTES."""
-    from ..functions import vectors as vec
     from ..similarity.knn import assign_clusters, kmeans_centroids
 
     e = wide_table(spark, sf_dir, "embeddings")
@@ -650,9 +463,7 @@ def knn_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= IVF_NPROBE)
         .select("qvec", "cluster_id")
     )
-    score = F.round(
-        vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-    )
+    score = vec.cosine6(vec.as_double(F.col("embedding")), F.col("qv"))
     wr = Window.partitionBy("qvec").orderBy(F.desc("_s"), "vec_id")
     ivf = (
         assigned.join(F.broadcast(probe), "cluster_id")
@@ -730,10 +541,10 @@ _MULTIPROBE_SET = ", ".join(
 
 @register(
     "knn_lsh_multiprobe",
-    oracle=_lsh_bucket_ctes()
+    oracle=_lsh_query_ctes()
     + f""",
     probes AS (SELECT unnest([{_MULTIPROBE_SET}]) AS pb FROM q)
-    SELECT b.vec_id, round(CASE WHEN list_sum(list_transform(e.v, x -> x * x)) > 0 AND list_sum(list_transform(q.qv, x -> x * x)) > 0 THEN list_cosine_similarity(e.v, q.qv) ELSE 0.0 END, 6) AS cosine
+    SELECT b.vec_id, {vec.cosine6_sql('e.v', 'q.qv')} AS cosine
     FROM buckets AS b JOIN e USING (vec_id) JOIN probes ON b.bucket = probes.pb, q
     WHERE b.vec_id <> {QUERY_VEC_ID}
     ORDER BY cosine DESC, b.vec_id
@@ -751,32 +562,8 @@ def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is a superset of the single-probe query with brute-force
     scores."""
     e = wide_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes_from(e)
-
-    def bucket_of(bits):
-        return F.aggregate(bits, F.lit(0), lambda acc, b: acc * 2 + b)
-
-    with_bits = (
-        e.join(F.broadcast(planes))
-        .select(
-            "vec_id",
-            "embedding",
-            "plane_id",
-            F.when(
-                vec.dot(vec.as_double(F.col("embedding")), F.col("plane")) >= 0, F.lit(1)
-            )
-            .otherwise(F.lit(0))
-            .alias("bit"),
-        )
-        .groupBy("vec_id", "embedding")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("plane_id", "bit"))),
-                lambda s: s["bit"],
-            ).alias("bits")
-        )
-        .withColumn("bucket", bucket_of(F.col("bits")))
-        .drop("bits")
+    with_bits = vec.hyperplane_buckets(
+        e, "embedding", 1, N_PLANES, carry=("embedding",)
     )
     probe = (
         with_bits.filter(F.col("vec_id") == QUERY_VEC_ID)
@@ -794,17 +581,13 @@ def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec.as_double(F.col("embedding")).alias("qv"),
         )
     )
-    return (
-        with_bits.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(probe), F.col("bucket") == F.col("probe_bucket"))
-        .select(
-            "vec_id",
-            F.round(
-                vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(TOP_K)
+    return vec.top_k_cosine(
+        with_bits.filter(F.col("vec_id") != QUERY_VEC_ID).join(
+            F.broadcast(probe), F.col("bucket") == F.col("probe_bucket")
+        ),
+        vec.as_double(F.col("embedding")),
+        F.col("qv"),
+        TOP_K,
     )
 
 
@@ -828,7 +611,7 @@ HARD_NEG_K = 5
           FROM e WHERE vec_id < {N_ANCHORS}),
     scored AS (
         SELECT a.anchor_id, e.vec_id,
-               round(CASE WHEN list_sum(list_transform(a.av, x -> x * x)) > 0 AND list_sum(list_transform(e.v, x -> x * x)) > 0 THEN list_cosine_similarity(a.av, e.v) ELSE 0.0 END, 6) AS cosine
+               {vec.cosine6_sql('a.av', 'e.v')} AS cosine
         FROM a JOIN e ON e.label <> a.anchor_label
     ),
     ranked AS (
@@ -868,7 +651,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "anchor_id",
             "vec_id",
-            F.round(vec.cosine(F.col("av"), F.col("v")), 6).alias("cosine"),
+            vec.cosine6(F.col("av"), F.col("v")).alias("cosine"),
         )
     )
     w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -1080,7 +863,6 @@ def knn_quantized_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # numerator n·Sxy − Sx·Sy — no float enters until the display
 # rounding. Same exactness family as lineitem_correlation_matrix.
 COV_TOPK = 20
-_COV_SCALE = 1_000_000
 
 
 @register(
@@ -1088,7 +870,7 @@ _COV_SCALE = 1_000_000
     oracle=f"""
     WITH x AS (
         SELECT vec_id, i,
-               CAST(round(CAST(embedding[i] AS DOUBLE) * {_COV_SCALE}) AS BIGINT) AS xi
+               CAST(round(CAST(embedding[i] AS DOUBLE) * {vec.QUANT_SCALE}) AS BIGINT) AS xi
         FROM embeddings, generate_series(1, 64) AS t(i)
     ),
     n AS (SELECT count(*) AS n FROM embeddings),
@@ -1107,7 +889,7 @@ _COV_SCALE = 1_000_000
     )
     SELECT CAST(di AS INTEGER) AS dim_i, CAST(dj AS INTEGER) AS dim_j,
            round(CAST(num AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * n * {_COV_SCALE}.0 * {_COV_SCALE}), 9)
+                 / (CAST(n AS DOUBLE) * n * {vec.QUANT_SCALE}.0 * {vec.QUANT_SCALE}), 9)
                AS cov
     FROM (
         SELECT di, dj, num, n,
@@ -1136,7 +918,7 @@ def embeddings_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "vec_id",
             (F.col("p") + 1).alias("i"),
-            F.round(F.col("xf").cast("double") * _COV_SCALE)
+            F.round(F.col("xf").cast("double") * vec.QUANT_SCALE)
             .cast("bigint")
             .alias("xi"),
         )
@@ -1185,8 +967,8 @@ def embeddings_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (
                     F.col("n").cast("double")
                     * F.col("n")
-                    * float(_COV_SCALE)
-                    * _COV_SCALE
+                    * float(vec.QUANT_SCALE)
+                    * vec.QUANT_SCALE
                 ),
                 9,
             ).alias("cov"),
@@ -1246,7 +1028,7 @@ def _pca_oracle() -> str:
         f"""
     WITH x AS MATERIALIZED (
         SELECT vec_id, i,
-               CAST(round(CAST(embedding[i] AS DOUBLE) * {_COV_SCALE})
+               CAST(round(CAST(embedding[i] AS DOUBLE) * {vec.QUANT_SCALE})
                     AS BIGINT) AS xi
         FROM embeddings, generate_series(1, {PCA_DIM}) AS t(i)
     ),
@@ -1314,7 +1096,7 @@ def _pca_oracle() -> str:
                                   * CAST(ray.dn AS DOUBLE)
                                   * CAST(n.n AS DOUBLE)
                                   * CAST(n.n AS DOUBLE)
-                                  * {_COV_SCALE}.0 * {_COV_SCALE}), 9)
+                                  * {vec.QUANT_SCALE}.0 * {vec.QUANT_SCALE}), 9)
                END AS lambda_cov
         FROM ray, mx_p0, n
     )
@@ -1359,7 +1141,7 @@ def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "vec_id",
             (F.col("p") + 1).alias("i"),
-            F.round(F.col("xf").cast("double") * _COV_SCALE)
+            F.round(F.col("xf").cast("double") * vec.QUANT_SCALE)
             .cast("bigint")
             .alias("xi"),
         )
@@ -1455,8 +1237,8 @@ def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.lit(float(den))
                 * F.lit(float(n))
                 * F.lit(float(n))
-                * float(_COV_SCALE)
-                * _COV_SCALE
+                * float(vec.QUANT_SCALE)
+                * vec.QUANT_SCALE
             ),
             9,
         )
@@ -1493,80 +1275,33 @@ PQ_RERANK = 100  # ADC shortlist size handed to the exact re-rank
 
 
 def _pq_oracle(e_head: str | None = None, disp_div: str = "") -> str:
-    """The unrolled PQ cascade. ``e_head``: override the WITH-head up
-    to (and producing) CTE ``e(vec_id, xi)`` — the OPQ variant swaps
-    in a rotated component list; ``disp_div``: extra divisor appended
-    to the display-scale division chain (rotation scales squared
+    """The unrolled PQ cascade: one ``vq_kmeans_unrolled_cte`` codebook
+    per subspace. ``e_head``: override the WITH-head up to (and
+    producing) CTE ``e(vec_id, xi)`` — the OPQ variant swaps in a
+    rotated component list; ``disp_div``: extra divisor appended to
+    the display-scale division chain (rotation scales squared
     distances by d)."""
-    dist8 = (
-        "list_sum(list_transform(range(1, {sd} + 1), "
-        "i -> (s.v[i] - c.c[i]) * (s.v[i] - c.c[i])))"
-    ).format(sd=PQ_SUBDIM)
+    from ..similarity.pq import vq_kmeans_unrolled_cte
+
     if e_head is None:
-        e_head = f"""
-    WITH e AS MATERIALIZED (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(round(x * {_COV_SCALE}) AS BIGINT)) AS xi
-        FROM embeddings
-    )"""
-    parts = [
-        e_head
-        + f""",
+        e_head = f"WITH {vec.quantized_sql()}"
+    return f"""{e_head},
     sub AS MATERIALIZED (
         SELECT vec_id, t.s,
                list_transform(range(1, {PQ_SUBDIM} + 1),
                               i -> xi[t.s * {PQ_SUBDIM} + i]) AS v
         FROM e, generate_series(0, {PQ_M - 1}) AS t(s)
     ),
-    seed AS (
-        SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-               v AS c
-        FROM sub QUALIFY row_number() OVER (PARTITION BY s ORDER BY vec_id) <= {PQ_K}
-    )"""
-    ]
-    prev = "seed"
-    for k in range(1, PQ_ITERS + 1):
-        parts.append(
-            f"""a{k} AS MATERIALIZED (
-        SELECT s.vec_id, s.s, s.v, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.s
-                                  ORDER BY {dist8}, c.cid) AS rn
-        FROM sub AS s, {prev} AS c
-        WHERE s.s = c.s
-    )"""
-        )
-        parts.append(
-            f"""c{k} AS MATERIALIZED (
-        SELECT s, cid, list(m ORDER BY i) AS c FROM (
-            SELECT a.s, a.cid, t.i, sum(a.v[t.i]) // count(*) AS m
-            FROM a{k} AS a, generate_series(1, {PQ_SUBDIM}) AS t(i)
-            WHERE a.rn = 1
-            GROUP BY a.s, a.cid, t.i
-        ) GROUP BY s, cid
-    )"""
-        )
-        prev = f"c{k}"
-    final = PQ_ITERS + 1
-    parts.append(
-        f"""a{final} AS MATERIALIZED (
-        SELECT s.vec_id, s.s, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.s
-                                  ORDER BY {dist8}, c.cid) AS rn
-        FROM sub AS s, {prev} AS c
-        WHERE s.s = c.s
-    ),
+    {vq_kmeans_unrolled_cte(PQ_ITERS, str(PQ_K), PQ_SUBDIM, src="sub", col="v", key="s")},
     q AS (SELECT s, v FROM sub WHERE vec_id = {QUERY_VEC_ID}),
     dq AS (
-        SELECT c.s, c.cid,
-               list_sum(list_transform(range(1, {PQ_SUBDIM} + 1),
-                        i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i]))) AS d
-        FROM {prev} AS c JOIN q ON q.s = c.s
+        SELECT c.s, c.cid, {vec.l2sq_sql('q.v', 'c.c', PQ_SUBDIM)} AS d
+        FROM c{PQ_ITERS} AS c JOIN q ON q.s = c.s
     ),
     scored AS (
         SELECT f.vec_id, CAST(sum(dq.d) AS BIGINT) AS adc_fp
-        FROM a{final} AS f JOIN dq ON f.s = dq.s AND f.cid = dq.cid
-        WHERE f.rn = 1 AND f.vec_id <> {QUERY_VEC_ID}
+        FROM af AS f JOIN dq ON f.s = dq.s AND f.cid = dq.cid
+        WHERE f.vec_id <> {QUERY_VEC_ID}
         GROUP BY f.vec_id
     ),
     shortlist AS MATERIALIZED (
@@ -1575,24 +1310,20 @@ def _pq_oracle(e_head: str | None = None, disp_div: str = "") -> str:
     ),
     exact AS (
         SELECT s.vec_id,
-               CAST(sum(list_sum(list_transform(range(1, {PQ_SUBDIM} + 1),
-                        i -> (s.v[i] - q.v[i]) * (s.v[i] - q.v[i]))))
-                    AS BIGINT) AS l2sq_fp
+               CAST(sum({vec.l2sq_sql('s.v', 'q.v', PQ_SUBDIM)}) AS BIGINT) AS l2sq_fp
         FROM sub AS s
         JOIN q ON q.s = s.s
         JOIN shortlist AS sl ON sl.vec_id = s.vec_id
         GROUP BY s.vec_id
     )
     SELECT x.vec_id, x.l2sq_fp,
-           round(CAST(x.l2sq_fp AS DOUBLE) / {_COV_SCALE}.0 / {_COV_SCALE}{disp_div}, 6)
+           round(CAST(x.l2sq_fp AS DOUBLE) / {vec.QUANT_SCALE}.0 / {vec.QUANT_SCALE}{disp_div}, 6)
                AS l2sq,
            sl.adc_fp
     FROM exact AS x JOIN shortlist AS sl ON sl.vec_id = x.vec_id
     ORDER BY x.l2sq_fp, x.vec_id
     LIMIT {TOP_K}
     """
-    )
-    return ",\n    ".join(parts)
 
 
 @register("knn_pq_adc", oracle=_pq_oracle())
@@ -1657,12 +1388,7 @@ def _opq_e_head() -> str:
     are exact in any order, so a plain SQL GROUP BY restates the
     rotation."""
     return f"""
-    WITH raw AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(round(x * {_COV_SCALE}) AS BIGINT)) AS x0
-        FROM embeddings
-    ),
+    WITH {vec.quantized_sql("raw", "x0")},
     rot AS (
         SELECT ti.i, tj.j,
                CASE WHEN (bit_count(CAST(ti.i AS BIGINT) & CAST(tj.j AS BIGINT))
@@ -1741,7 +1467,7 @@ def _mrl_oracle() -> str:
         WHERE e.vec_id <> qs.qid
         QUALIFY row_number() OVER (
             PARTITION BY qs.qid
-            ORDER BY round(CASE WHEN list_sum(list_transform({vexpr}, x -> x * x)) > 0 AND list_sum(list_transform(qs.qv[1:len({vexpr})], x -> x * x)) > 0 THEN list_cosine_similarity({vexpr}, qs.qv[1:len({vexpr})]) ELSE 0.0 END, 6) DESC, e.vec_id
+            ORDER BY {vec.cosine6_sql(vexpr, f"qs.qv[1:len({vexpr})]")} DESC, e.vec_id
         ) <= {TOP_K}
     )"""
 
@@ -1809,7 +1535,7 @@ def embeddings_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "qid",
                 "vec_id",
-                F.round(vec.cosine(vcol, qcol), 6).alias("c"),
+                vec.cosine6(vcol, qcol).alias("c"),
             )
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= TOP_K)
@@ -1888,60 +1614,19 @@ IVFPQ_NPROBE = 2
 
 
 def _ivfpq_oracle() -> str:
-    d64 = (
-        "list_sum(list_transform(range(1, 65), "
-        "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-    )
-    d8 = (
-        "list_sum(list_transform(range(1, {sd} + 1), "
-        "i -> (s.v[i] - c.c[i]) * (s.v[i] - c.c[i])))"
-    ).format(sd=PQ_SUBDIM)
-    parts = [
-        f"""
-    WITH e AS MATERIALIZED (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(round(x * {_COV_SCALE}) AS BIGINT)) AS xi
-        FROM embeddings
-    ),
-    cseed AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, xi AS c
-        FROM e ORDER BY vec_id LIMIT {IVFPQ_NLIST}
-    )"""
-    ]
-    prev = "cseed"
-    for k in range(1, IVFPQ_COARSE_ITERS + 1):
-        parts.append(
-            f"""cja{k} AS MATERIALIZED (
-        SELECT e.vec_id, e.xi, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {d64.format(a="e.xi", b="c.c")}, c.cid) AS rn
-        FROM e, {prev} AS c
-    )"""
-        )
-        parts.append(
-            f"""cjc{k} AS MATERIALIZED (
-        SELECT cid, list(m ORDER BY i) AS c FROM (
-            SELECT a.cid, t.i, sum(a.xi[t.i]) // count(*) AS m
-            FROM cja{k} AS a, generate_series(1, 64) AS t(i)
-            WHERE a.rn = 1
-            GROUP BY a.cid, t.i
-        ) GROUP BY cid
-    )"""
-        )
-        prev = f"cjc{k}"
-    parts.append(
-        f"""caf AS MATERIALIZED (
-        SELECT e.vec_id, e.xi, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {d64.format(a="e.xi", b="c.c")}, c.cid) AS rn
-        FROM e, {prev} AS c
-    ),
+    """Two ``vq_kmeans_unrolled_cte`` unrolls: the coarse lists
+    (``cc*``, ``caf``) over the quantized vectors, then the residual
+    PQ codebooks (``pc*``, ``paf``) per subspace."""
+    from ..similarity.pq import vq_kmeans_unrolled_cte
+
+    cents = f"cc{IVFPQ_COARSE_ITERS}"
+    return f"""
+    WITH {vec.quantized_sql()},
+    {vq_kmeans_unrolled_cte(IVFPQ_COARSE_ITERS, str(IVFPQ_NLIST), prefix="c")},
     res AS MATERIALIZED (
         SELECT f.vec_id, f.cid AS lst,
                list_transform(range(1, 65), i -> f.xi[i] - c.c[i]) AS r
-        FROM caf AS f JOIN {prev} AS c ON c.cid = f.cid
-        WHERE f.rn = 1
+        FROM caf AS f JOIN {cents} AS c ON c.cid = f.cid
     ),
     sub AS MATERIALIZED (
         SELECT vec_id, lst, t.s,
@@ -1949,47 +1634,11 @@ def _ivfpq_oracle() -> str:
                               i -> r[t.s * {PQ_SUBDIM} + i]) AS v
         FROM res, generate_series(0, {PQ_M - 1}) AS t(s)
     ),
-    seed AS (
-        SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-               v AS c
-        FROM sub QUALIFY row_number() OVER (PARTITION BY s ORDER BY vec_id) <= {PQ_K}
-    )"""
-    )
-    prev = "seed"
-    for k in range(1, PQ_ITERS + 1):
-        parts.append(
-            f"""pa{k} AS MATERIALIZED (
-        SELECT s.vec_id, s.s, s.v, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.s
-                                  ORDER BY {d8}, c.cid) AS rn
-        FROM sub AS s, {prev} AS c
-        WHERE s.s = c.s
-    )"""
-        )
-        parts.append(
-            f"""pc{k} AS MATERIALIZED (
-        SELECT s, cid, list(m ORDER BY i) AS c FROM (
-            SELECT a.s, a.cid, t.i, sum(a.v[t.i]) // count(*) AS m
-            FROM pa{k} AS a, generate_series(1, {PQ_SUBDIM}) AS t(i)
-            WHERE a.rn = 1
-            GROUP BY a.s, a.cid, t.i
-        ) GROUP BY s, cid
-    )"""
-        )
-        prev = f"pc{k}"
-    final = PQ_ITERS + 1
-    parts.append(
-        f"""paf AS MATERIALIZED (
-        SELECT s.vec_id, s.lst, s.s, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.s
-                                  ORDER BY {d8}, c.cid) AS rn
-        FROM sub AS s, {prev} AS c
-        WHERE s.s = c.s
-    ),
+    {vq_kmeans_unrolled_cte(PQ_ITERS, str(PQ_K), PQ_SUBDIM, src="sub", col="v", key="s", prefix="p")},
     q AS (SELECT xi FROM e WHERE vec_id = {QUERY_VEC_ID}),
     probe AS (
-        SELECT c.cid FROM cjc{IVFPQ_COARSE_ITERS} AS c, q
-        ORDER BY {d64.format(a="q.xi", b="c.c")}, c.cid
+        SELECT c.cid FROM {cents} AS c, q
+        ORDER BY {vec.l2sq_sql('q.xi', 'c.c', 64)}, c.cid
         LIMIT {IVFPQ_NPROBE}
     ),
     qsub AS (
@@ -1997,18 +1646,18 @@ def _ivfpq_oracle() -> str:
                list_transform(range(1, {PQ_SUBDIM} + 1),
                               i -> (q.xi[t.s * {PQ_SUBDIM} + i]
                                     - c.c[t.s * {PQ_SUBDIM} + i])) AS v
-        FROM cjc{IVFPQ_COARSE_ITERS} AS c JOIN probe ON probe.cid = c.cid,
+        FROM {cents} AS c JOIN probe ON probe.cid = c.cid,
              q, generate_series(0, {PQ_M - 1}) AS t(s)
     ),
     dq AS (
-        SELECT s.lst, c.s, c.cid, {d8} AS d
-        FROM {prev} AS c JOIN qsub AS s ON s.s = c.s
+        SELECT s.lst, c.s, c.cid, {vec.l2sq_sql('s.v', 'c.c', PQ_SUBDIM)} AS d
+        FROM pc{PQ_ITERS} AS c JOIN qsub AS s ON s.s = c.s
     ),
     scored AS (
         SELECT f.vec_id, CAST(sum(dq.d) AS BIGINT) AS adc_fp
         FROM paf AS f
         JOIN dq ON dq.lst = f.lst AND dq.s = f.s AND dq.cid = f.cid
-        WHERE f.rn = 1 AND f.vec_id <> {QUERY_VEC_ID}
+        WHERE f.vec_id <> {QUERY_VEC_ID}
         GROUP BY f.vec_id
     ),
     shortlist AS MATERIALIZED (
@@ -2017,19 +1666,17 @@ def _ivfpq_oracle() -> str:
     ),
     exact AS (
         SELECT e.vec_id,
-               CAST({d64.format(a="e.xi", b="q.xi")} AS BIGINT) AS l2sq_fp
+               CAST({vec.l2sq_sql('e.xi', 'q.xi', 64)} AS BIGINT) AS l2sq_fp
         FROM e JOIN shortlist AS sl ON sl.vec_id = e.vec_id, q
     )
     SELECT x.vec_id, x.l2sq_fp,
-           round(CAST(x.l2sq_fp AS DOUBLE) / {_COV_SCALE}.0 / {_COV_SCALE}, 6)
+           round(CAST(x.l2sq_fp AS DOUBLE) / {vec.QUANT_SCALE}.0 / {vec.QUANT_SCALE}, 6)
                AS l2sq,
            sl.adc_fp
     FROM exact AS x JOIN shortlist AS sl ON sl.vec_id = x.vec_id
     ORDER BY x.l2sq_fp, x.vec_id
     LIMIT {TOP_K}
     """
-    )
-    return ",\n    ".join(parts)
 
 
 @register("knn_ivfpq_adc", oracle=_ivfpq_oracle())
@@ -2206,19 +1853,10 @@ def embeddings_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the next round references it twice, the r6 CTE-inlining lesson).
 MMR_POOL = 50
 
-_DDB_GUARDED_COS = (
-    "CASE WHEN list_sum(list_transform({a}, x -> x * x)) > 0"
-    " AND list_sum(list_transform({b}, x -> x * x)) > 0"
-    " THEN list_cosine_similarity({a}, {b}) ELSE 0.0 END"
-)
-
-
 def _mmr_oracle() -> str:
-    qcos = _DDB_GUARDED_COS.format(
-        a="CAST(e.embedding AS DOUBLE[])", b="q.qv"
-    )
-    pcos = _DDB_GUARDED_COS.format(
-        a="CAST(a.embedding AS DOUBLE[])", b="CAST(b.embedding AS DOUBLE[])"
+    qcos = vec.cosine6_sql("CAST(e.embedding AS DOUBLE[])", "q.qv")
+    pcos = vec.cosine6_sql(
+        "CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])"
     )
     rounds = []
     for k in range(2, TOP_K + 1):
@@ -2244,16 +1882,16 @@ def _mmr_oracle() -> str:
                WHERE vec_id = {QUERY_VEC_ID}),
     mmr_cand AS MATERIALIZED (
         SELECT e.vec_id, e.embedding,
-               CAST(round(round({qcos}, 6) * 1000000) AS BIGINT)
+               CAST(round({qcos} * 1000000) AS BIGINT)
                    AS rel_micro
         FROM embeddings e, q
         WHERE e.vec_id <> {QUERY_VEC_ID}
-        ORDER BY round({qcos}, 6) DESC, e.vec_id
+        ORDER BY {qcos} DESC, e.vec_id
         LIMIT {MMR_POOL}
     ),
     mmr_sims AS MATERIALIZED (
         SELECT a.vec_id AS va, b.vec_id AS vb,
-               CAST(round(round({pcos}, 6) * 1000000) AS BIGINT)
+               CAST(round({pcos} * 1000000) AS BIGINT)
                    AS sim_micro
         FROM mmr_cand a JOIN mmr_cand b ON a.vec_id <> b.vec_id
     ),
@@ -2289,9 +1927,7 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         vec.as_double(F.col("embedding")).alias("qv")
     )
-    cos6 = F.round(
-        vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-    )
+    cos6 = vec.cosine6(vec.as_double(F.col("embedding")), F.col("qv"))
     cand = (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(q))
@@ -2319,7 +1955,7 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "va",
             "vb",
-            F.round(F.round(vec.cosine(F.col("ea"), F.col("eb")), 6) * 1000000)
+            F.round(vec.cosine6(F.col("ea"), F.col("eb")) * 1000000)
             .cast("bigint")
             .alias("sim_micro"),
         )
@@ -2505,31 +2141,14 @@ NPROBE_LEVELS = [1, 2, 4, 8]
 
 
 def _nprobe_sweep_oracle() -> str:
-    from ..similarity.knn import kmeans_unrolled_cte
-
-    def dist(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, 65), "
-            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
+    from ..similarity.knn import kmeans_unrolled_cte, probe_ranks_cte
 
     ids = ", ".join(str(v) for v in AUDIT_QVECS)
     lvls = ", ".join(f"({n})" for n in NPROBE_LEVELS)
-    cfinal = f"c{IVF_ITERS}"
-    # zero-norm-guarded cosine on the ranking axis (the r8 rule:
-    # raw list_cosine_similarity NaNs sort FIRST under DESC)
-    gc_f = _DDB_GUARDED_COS.format(a="f.v", b="q.qv")
-    gc_e = _DDB_GUARDED_COS.format(a="e.v", b="q.qv")
     return f"""
     {kmeans_unrolled_cte(IVF_NLIST, IVF_ITERS)},
     q AS (SELECT vec_id AS qvec, v AS qv FROM e WHERE vec_id IN ({ids})),
-    ranked AS MATERIALIZED (
-        SELECT q.qvec, c.cid,
-               row_number() OVER (PARTITION BY q.qvec
-                                  ORDER BY {dist('q.qv', 'c.c')}, c.cid)
-                   AS rn
-        FROM q, {cfinal} AS c
-    ),
+    {probe_ranks_cte(f"c{IVF_ITERS}")},
     probe AS (
         SELECT v.np, r.qvec, r.cid
         FROM ranked r, (VALUES {lvls}) v(np)
@@ -2537,7 +2156,7 @@ def _nprobe_sweep_oracle() -> str:
     ),
     cand AS MATERIALIZED (
         SELECT p.np, p.qvec, f.vec_id,
-               round({gc_f}, 6) AS s
+               {vec.cosine6_sql('f.v', 'q.qv')} AS s
         FROM probe p
         JOIN af f ON f.cid = p.cid
         JOIN q ON q.qvec = p.qvec
@@ -2556,7 +2175,7 @@ def _nprobe_sweep_oracle() -> str:
             SELECT q.qvec, e.vec_id,
                    row_number() OVER (
                        PARTITION BY q.qvec
-                       ORDER BY round({gc_e}, 6)
+                       ORDER BY {vec.cosine6_sql('e.v', 'q.qv')}
                                 DESC, e.vec_id) AS rn
             FROM e, q WHERE e.vec_id <> q.qvec
         ) WHERE rn <= {TOP_K}
@@ -2591,7 +2210,6 @@ def knn_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-ranked join (no retraining, no rescans); windows partition
     by (level, query) — parallelism = levels × panel. Builder runs
     jobs at plan time (kmeans checkpoints): BUILD_EXECUTES."""
-    from ..functions import vectors as vec
     from ..similarity.knn import assign_clusters, kmeans_centroids
 
     e = wide_table(spark, sf_dir, "embeddings")
@@ -2613,9 +2231,7 @@ def knn_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = ranked.crossJoin(F.broadcast(lvls)).where(
         F.col("rn") <= F.col("np")
     ).select("np", "qvec", "cluster_id")
-    score = F.round(
-        vec.cosine(vec.as_double(F.col("embedding")), F.col("qv")), 6
-    )
+    score = vec.cosine6(vec.as_double(F.col("embedding")), F.col("qv"))
     # persisted: both the per-level ranking and the cost aggregate
     # consume this corpus-scale stream, and AQE does not dedupe
     # identical heavy subtrees (the r6 association-rules lesson);

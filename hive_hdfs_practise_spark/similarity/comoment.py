@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-COMOMENT_SCALE = 1_000_000
+from ..functions.vectors import QUANT_SCALE
 
 
 def comoment_upper_exact(emb: DataFrame) -> DataFrame:
@@ -50,7 +50,7 @@ def comoment_upper_exact(emb: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            y = X * COMOMENT_SCALE
+            y = X * QUANT_SCALE
             # HALF_UP to match Spark round()/DuckDB round(); numpy's
             # own round() is half-to-even
             Xi = np.where(

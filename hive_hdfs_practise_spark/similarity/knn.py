@@ -232,17 +232,11 @@ def knn_ivf_indexed(
         )
         probe_ids = [cid for _, cid in scored[:nprobe]]
         qv_col = F.array(*[F.lit(float(x)) for x in qv])
-        return (
-            assign.filter(F.col("cluster_id").isin(probe_ids))
-            .filter(F.col("vec_id") != query_vec_id)
-            .select(
-                "vec_id",
-                F.round(
-                    vec.cosine(vec.as_double(F.col(vec_col)), qv_col), 6
-                ).alias("cosine"),
-            )
-            .orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(top_k)
+        cand = assign.filter(F.col("cluster_id").isin(probe_ids)).filter(
+            F.col("vec_id") != query_vec_id
+        )
+        return vec.top_k_cosine(
+            cand, vec.as_double(F.col(vec_col)), qv_col, top_k
         )
 
     return build_with_conf(
@@ -285,52 +279,54 @@ def knn_ivf(
     )
     if label_filter is not None:
         cand = cand.filter(F.col("label") == label_filter)
-    return (
-        cand
-        .join(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(vec.cosine(vec.as_double(F.col(vec_col)), F.col("qv")), 6).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(top_k)
+    return vec.top_k_cosine(
+        cand.join(F.broadcast(qv)),
+        vec.as_double(F.col(vec_col)),
+        F.col("qv"),
+        top_k,
     )
 
 
-def kmeans_unrolled_cte(nlist: int, iters: int, dim: int = 64) -> str:
+def kmeans_unrolled_cte(
+    nlist: int, iters: int, dim: int = 64, train_pred: str | None = None
+) -> str:
     """DuckDB CTE chain restating ``kmeans_centroids`` +
     ``assign_clusters`` exactly (lowest-id seeds, 9-dp-rounded
     centroid components, argmin with cid tiebreak): produces CTEs
-    ``e(vec_id, v)`` and ``af(vec_id, v, cid)`` — the final
-    assignment, already filtered to the argmin row. Shared by the
-    oracles of queries that compose on top of the deterministic
-    quantizer (the _ivf_oracle idiom, factored)."""
+    ``e(vec_id, v)``, the centroids ``c{iters}(cid, c)`` and
+    ``af(vec_id, v, cid)`` — the final assignment of EVERY vector,
+    already filtered to the argmin row. The one SQL Lloyd unroll of
+    the double-valued quantizer; the oracles of every query built on
+    it compose on top.
 
-    def dist(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, {dim} + 1), "
-            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
-
+    ``train_pred``: optional SQL predicate on ``e`` restricting the
+    TRAINING set (seeds + Lloyd rounds) to a subset — the
+    frozen-centroid append regime (knn_ivf_index_append): the
+    quantizer is fit on the corpus shard while the final assignment
+    covers all vectors."""
+    te = "e" if train_pred is None else "te"
     parts = [
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
+    ]
+    if train_pred is not None:
+        parts.append(f"te AS (SELECT * FROM e WHERE {train_pred})")
+    parts.append(
         f"""seed AS (
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-        FROM e ORDER BY vec_id LIMIT {nlist}
-    )""",
-    ]
+        FROM {te} ORDER BY vec_id LIMIT {nlist}
+    )"""
+    )
+
+    def argmin(src: str, cents: str) -> str:
+        return f"""SELECT e.vec_id, e.v, c.cid,
+                   row_number() OVER (PARTITION BY e.vec_id
+                                      ORDER BY {vec.l2sq_sql('e.v', 'c.c', dim)}, c.cid)
+                       AS rn
+            FROM {src} AS e, {cents} AS c"""
+
     prev = "seed"
     for k in range(1, iters + 1):
-        parts.append(
-            f"""a{k} AS (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist('e.v', 'c.c')}, c.cid) AS rn
-        FROM e, {prev} AS c
-    )"""
-        )
+        parts.append(f"a{k} AS (\n            {argmin(te, prev)}\n    )")
         parts.append(
             f"""c{k} AS (
         SELECT cid, list(m ORDER BY i) AS c FROM (
@@ -342,16 +338,24 @@ def kmeans_unrolled_cte(nlist: int, iters: int, dim: int = 64) -> str:
     )"""
         )
         prev = f"c{k}"
-    final = iters + 1
     parts.append(
         f"""af AS MATERIALIZED (
         SELECT vec_id, v, cid FROM (
-            SELECT e.vec_id, e.v, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {dist('e.v', 'c.c')}, c.cid)
-                       AS rn
-            FROM e, {prev} AS c
+            {argmin("e", prev)}
         ) WHERE rn = 1
     )"""
     )
     return ",\n    ".join(parts)
+
+
+def probe_ranks_cte(cents: str) -> str:
+    """CTE ``ranked(qvec, cid, rn)``: every query of CTE
+    ``q(qvec, qv)`` ranks the centroids ``cents(cid, c)`` by L2,
+    ties to the lower cid (``rn <= nprobe`` are its probed lists)."""
+    return f"""ranked AS MATERIALIZED (
+        SELECT q.qvec, c.cid,
+               row_number() OVER (PARTITION BY q.qvec
+                                  ORDER BY {vec.l2sq_sql('q.qv', 'c.c', 64)}, c.cid)
+                   AS rn
+        FROM q, {cents} AS c
+    )"""

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-COMOMENT_SCALE = 1_000_000
+from ..functions.vectors import QUANT_SCALE, l2sq_sql
 
 
 def quantize_rows(vectors) -> "object":
@@ -54,7 +54,7 @@ def quantize_rows(vectors) -> "object":
     list of Row embeddings or an Arrow batch's column) to int64."""
     import numpy as np
 
-    X = np.array(list(vectors), dtype=np.float64) * COMOMENT_SCALE
+    X = np.array(list(vectors), dtype=np.float64) * QUANT_SCALE
     return np.where(X >= 0, np.floor(X + 0.5), np.ceil(X - 0.5)).astype(
         np.int64
     )
@@ -312,13 +312,13 @@ def exact_rerank(
         .select(
             "vec_id",
             "j",
-            F.round(F.col("xf").cast("double") * COMOMENT_SCALE)
+            F.round(F.col("xf").cast("double") * QUANT_SCALE)
             .cast("bigint")
             .alias("x"),
         )
         .join(F.broadcast(shortlist.select("vec_id")), "vec_id")
     )
-    l2sq = F.col("l2sq_fp").cast("double") / float(COMOMENT_SCALE) / COMOMENT_SCALE
+    l2sq = F.col("l2sq_fp").cast("double") / float(QUANT_SCALE) / QUANT_SCALE
     if rot is not None:
         d = len(rot)
         signs = emb.sparkSession.createDataFrame(
@@ -416,63 +416,69 @@ def vq_assign_pass(emb: DataFrame, cents: tuple) -> DataFrame:
 
 
 def vq_kmeans_unrolled_cte(
-    iters: int, nlist_sql: str, dim: int = 64, shard_cap: int | None = None
+    iters: int,
+    nlist_sql: str,
+    dim: int = 64,
+    shard_cap: int | None = None,
+    src: str = "e",
+    col: str = "xi",
+    key: str | None = None,
+    prefix: str = "",
 ) -> str:
-    """DuckDB CTE chain restating the INTEGER-domain vector
-    quantizer exactly (1e6 HALF_UP quantization, exact int squared
+    """The one SQL Lloyd unroll of the INTEGER-domain vector quantizer
+    (``train``), as a CTE list without WITH: exact int squared
     distances, first-min == lowest-cid ties, ``//`` truncating
     centroid updates — the ``pq_update_pass``/``vq_assign_pass``
-    semantics). ``nlist_sql``: a SQL scalar expression for the seed
-    count, so nlist can DERIVE FROM THE DATA (e.g.
-    ``least(greatest(8, (SELECT count(*) FROM e) // 640), 4096)``)
-    and the same static unroll serves every corpus size. Produces
-    ``e(vec_id, xi)`` and ``af(vec_id, xi, cid, nrm)`` (final
-    assignment + per-row squared norm), af MATERIALIZED. With
-    ``shard_cap`` set, af also carries ``shard`` — the in-cell
-    md5-rank sub-split ((rank-1) // cap) that re-pins per-block pair
-    mass once a capped nlist lets cells grow (plans/dedup.py's
-    SEM_SHARD_CAP design note)."""
+    semantics. Runs over ``src(vec_id, [key,] col, ...)``, quantized
+    rows such as ``vectors.quantized_sql()``'s ``e(vec_id, xi)``.
 
-    def dist(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, {dim} + 1), "
-            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
+    ``nlist_sql``: a SQL scalar expression for the seed count (the
+    lowest vec_ids), so nlist can DERIVE FROM THE DATA (e.g.
+    ``least(greatest(8, (SELECT count(*) FROM e) // 640), 4096)``)
+    and the same static unroll serves every corpus size. ``key``: a
+    subspace column of ``src``; each key value trains its own
+    codebook (PQ's subvectors). Produces ``{prefix}c{iters}([key,]
+    cid, c)`` (the centroids) and ``{prefix}af`` — ``src``'s columns
+    plus ``cid`` and the squared norm ``nrm``, one row per (vec_id,
+    key), MATERIALIZED. With ``shard_cap`` set, af also carries
+    ``shard`` — the in-cell md5-rank sub-split ((rank-1) // cap) that
+    re-pins per-block pair mass once a capped nlist lets cells grow
+    (plans/dedup.py's SEM_SHARD_CAP design note)."""
+    by = "" if key is None else f"PARTITION BY {key} "
+    keyc = "" if key is None else f"{key}, "
+    row = "r.vec_id" if key is None else f"r.vec_id, r.{key}"
+    match = "" if key is None else f" WHERE r.{key} = c.{key}"
+
+    def argmin(cents: str) -> str:
+        return f"""SELECT r.*, c.cid,
+                   row_number() OVER (PARTITION BY {row}
+                                      ORDER BY {l2sq_sql(f'r.{col}', 'c.c', dim)}, c.cid)
+                       AS rn
+            FROM {src} AS r, {cents} AS c{match}"""
 
     parts = [
-        f"""WITH e AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                              x -> CAST(round(x * {COMOMENT_SCALE}) AS BIGINT)) AS xi
-        FROM embeddings
-    )""",
-        f"""seed AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, xi AS c
-        FROM e QUALIFY row_number() OVER (ORDER BY vec_id) <= ({nlist_sql})
-    )""",
+        f"""{prefix}seed AS (
+        SELECT {keyc}row_number() OVER ({by}ORDER BY vec_id) - 1 AS cid, {col} AS c
+        FROM {src} QUALIFY row_number() OVER ({by}ORDER BY vec_id) <= ({nlist_sql})
+    )"""
     ]
-    prev = "seed"
+    prev = f"{prefix}seed"
     for k in range(1, iters + 1):
         parts.append(
-            f"""a{k} AS (
-        SELECT e.vec_id, e.xi, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist('e.xi', 'c.c')}, c.cid) AS rn
-        FROM e, {prev} AS c
-    )"""
+            f"{prefix}a{k} AS MATERIALIZED (\n            {argmin(prev)}\n    )"
         )
         parts.append(
-            f"""c{k} AS (
-        SELECT cid, list(m ORDER BY i) AS c FROM (
-            SELECT a.cid, t.i,
-                   CAST(sum(a.xi[t.i]) // count(*) AS BIGINT) AS m
-            FROM a{k} AS a, generate_series(1, {dim}) AS t(i)
+            f"""{prefix}c{k} AS MATERIALIZED (
+        SELECT {keyc}cid, list(m ORDER BY i) AS c FROM (
+            SELECT {keyc}cid, t.i,
+                   CAST(sum(a.{col}[t.i]) // count(*) AS BIGINT) AS m
+            FROM {prefix}a{k} AS a, generate_series(1, {dim}) AS t(i)
             WHERE a.rn = 1
-            GROUP BY a.cid, t.i
-        ) GROUP BY cid
+            GROUP BY {keyc}cid, t.i
+        ) GROUP BY {keyc}cid
     )"""
         )
-        prev = f"c{k}"
+        prev = f"{prefix}c{k}"
     shard_col = (
         f""",
                (row_number() OVER (PARTITION BY cid
@@ -482,15 +488,11 @@ def vq_kmeans_unrolled_cte(
         else ""
     )
     parts.append(
-        f"""af AS MATERIALIZED (
-        SELECT vec_id, xi, cid,
-               list_sum(list_transform(xi, x -> x * x)) AS nrm{shard_col}
+        f"""{prefix}af AS MATERIALIZED (
+        SELECT * EXCLUDE (rn),
+               list_sum(list_transform({col}, x -> x * x)) AS nrm{shard_col}
         FROM (
-            SELECT e.vec_id, e.xi, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {dist('e.xi', 'c.c')}, c.cid)
-                       AS rn
-            FROM e, {prev} AS c
+            {argmin(prev)}
         ) WHERE rn = 1
     )"""
     )

@@ -93,15 +93,21 @@ class TestIvf:
 
     def test_lazy_hyperplanes_match_eager(self, spark, emb):
         # the in-plan (SQL md5/conv) plane generator must be
-        # bit-identical to the driver-side hashlib form it replaced —
-        # LSH bucket assignments depend on every component's sign
-        from hive_hdfs_practise_spark.plans.similarity import (
-            _hyperplanes_df,
-            _hyperplanes_from,
-        )
+        # bit-identical to the hashlib formula — component c of plane
+        # p is md5("p:c")'s first 8 hex digits mapped to [-1, 1); LSH
+        # bucket assignments depend on every component's sign
+        import hashlib
 
-        eager = {r.plane_id: r.plane for r in _hyperplanes_df(spark, 64, 8).collect()}
-        lazy = {r.plane_id: r.plane for r in _hyperplanes_from(emb, "embedding", 8).collect()}
+        eager = {
+            p: [
+                int(hashlib.md5(f"{p}:{c}".encode()).hexdigest()[:8], 16)
+                / float(1 << 31)
+                - 1.0
+                for c in range(64)
+            ]
+            for p in range(8)
+        }
+        lazy = {r.plane_id: r.plane for r in vec.hyperplanes(emb, "embedding", 8).collect()}
         assert set(eager) == set(lazy)
         for p in eager:
             assert eager[p] == lazy[p]  # exact double equality
@@ -736,6 +742,145 @@ def test_one_lloyd_loop():
             ):
                 sites.add(path.relative_to(root).as_posix())
     assert sites == {"similarity/pq.py"}
+
+
+_GEOMETRY_OWNERS = {
+    # the guarded cosine: a raw list_cosine_similarity, or a 6-dp
+    # round around a cosine
+    "cosine": (
+        r"list_cosine_similarity|round\(\s*(vec\.)?cosine\(",
+        {"functions/vectors.py"},
+    ),
+    # the md5 hyperplane formula
+    "hyperplane": (r"md5\(concat\(p\.plane_id", {"functions/vectors.py"}),
+    # the SQL k-means argmin: a row_number ranked by squared L2,
+    # written out or through vectors.l2sq_sql
+    "argmin": (
+        r"row_number\(\) OVER \(PARTITION BY [^()]*?ORDER BY "
+        r"(list_sum\(list_transform\(range\(|\{[\w.]*l2sq_sql\()",
+        {"similarity/knn.py", "similarity/pq.py"},
+    ),
+}
+
+
+def _geometry_sites(root) -> dict[str, set[str]]:
+    """Modules spelling out each vector formula of ``_GEOMETRY_OWNERS``.
+    Scans string constants (an f-string reads with each hole as
+    ``{expr}``, whitespace collapsed) and Spark calls; docstrings and
+    comments do not count."""
+    import ast
+    import re
+
+    from test_text import _docstrings
+
+    pats = {k: re.compile(p) for k, (p, _) in _GEOMETRY_OWNERS.items()}
+    sites: dict[str, set[str]] = {k: set() for k in pats}
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        skip = _docstrings(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                text = "" if id(node) in skip else node.value
+            elif isinstance(node, ast.JoinedStr):
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{%s}" % ast.unparse(v.value)
+                    for v in node.values
+                )
+            elif isinstance(node, ast.Call):
+                text = ast.unparse(node)
+            else:
+                continue
+            text = " ".join(text.split())
+            for k, pat in pats.items():
+                if pat.search(text):
+                    sites[k].add(path.relative_to(root).as_posix())
+    return sites
+
+
+def test_one_vector_geometry():
+    """Each vector formula is written in one place per engine:
+    functions/vectors.py owns the guarded cosine and the hyperplanes,
+    the two k-means modules own their SQL Lloyd unrolls."""
+    from pathlib import Path
+
+    import hive_hdfs_practise_spark
+
+    root = Path(hive_hdfs_practise_spark.__file__).parent
+    sites = _geometry_sites(root)
+    for k, (_, owners) in _GEOMETRY_OWNERS.items():
+        assert sites[k] == owners, k
+
+
+class TestEngineParity:
+    """The Spark and SQL forms of each vector formula agree exactly on
+    degenerate vectors (zero, self, opposite, scaled, tiny-norm)."""
+
+    PAIRS = [
+        ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # zero vector
+        ([0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),  # zero with zero
+        ([0.3, -1.7, 2.2], [0.3, -1.7, 2.2]),  # itself
+        ([0.3, -1.7, 2.2], [-0.3, 1.7, -2.2]),  # opposite
+        ([0.3, -1.7, 2.2], [0.9, -5.1, 6.6]),  # scaled copy (x3)
+        ([1e-160, 2e-160, -3e-160], [1.0, 2.0, 3.0]),  # tiny norm
+        ([1e-200, 0.0, 0.0], [0.0, 1e-200, 1e-200]),  # tiny, orthogonal
+        ([0.1, 0.2, 0.3], [0.2, 0.4, 0.6000000001]),  # near-parallel
+    ]
+
+    def test_cosine6(self, spark):
+        import duckdb
+
+        df = spark.createDataFrame(
+            [(i, a, b) for i, (a, b) in enumerate(self.PAIRS)],
+            "i int, a array<double>, b array<double>",
+        )
+        got = {
+            r.i: r.c
+            for r in df.select("i", vec.cosine6(F.col("a"), F.col("b")).alias("c")).collect()
+        }
+        con = duckdb.connect()
+        con.execute("CREATE TABLE p (i INT, a DOUBLE[], b DOUBLE[])")
+        con.executemany("INSERT INTO p VALUES (?, ?, ?)", [
+            (i, a, b) for i, (a, b) in enumerate(self.PAIRS)
+        ])
+        want = dict(
+            con.execute(f"SELECT i, {vec.cosine6_sql('a', 'b')} FROM p").fetchall()
+        )
+        assert got == want
+        assert got[0] == got[1] == 0.0 and got[2] == 1.0 and got[3] == -1.0
+
+    @pytest.mark.parametrize("n_bands,ppb", [(1, 8), (4, 4)])
+    def test_hyperplane_buckets(self, spark, emb, n_bands, ppb):
+        import duckdb
+        import pyarrow as pa
+
+        rows = [
+            (int(r.vec_id), list(r.embedding))
+            for r in emb.orderBy("vec_id").limit(40).collect()
+        ]
+        rows.append((10_000, [0.0] * 64))  # a dot product of 0 is bit 1
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        got = {
+            (r.vec_id, r.band): r.bucket
+            for r in vec.hyperplane_buckets(df, "embedding", n_bands, ppb).collect()
+        }
+        con = duckdb.connect()
+        con.register(
+            "embeddings",
+            pa.table({
+                "vec_id": [v for v, _ in rows],
+                "embedding": pa.array([e for _, e in rows], pa.list_(pa.float32())),
+            }),
+        )
+        want = {
+            (v, b): k
+            for v, b, k in con.execute(
+                f"WITH {vec.hyperplane_bucket_ctes(n_bands, ppb)} "
+                "SELECT vec_id, band, bucket FROM buckets"
+            ).fetchall()
+        }
+        assert got == want
+        assert len(got) == len(rows) * n_bands
+        assert {got[(10_000, b)] for b in range(n_bands)} == {(1 << ppb) - 1}
 
 
 class TestClusterBalancedSample:

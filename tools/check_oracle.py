@@ -34,6 +34,7 @@ plans/:
 from __future__ import annotations
 
 import datetime
+import hashlib
 import math
 import os
 import sys
@@ -312,6 +313,10 @@ def main() -> int:
             results[name] = {
                 "status": "OK",
                 "spark_rows": len(spdf),
+                # the oracle's canonical result, to compare across trees
+                "oracle_sha256": hashlib.sha256(
+                    repr((sorted(odf.columns), on_)).encode()
+                ).hexdigest(),
                 "secs": round(time.time() - t0, 1),
                 **cost,
             }
