@@ -21,13 +21,6 @@ from .hexdigest import hex_int_sql
 BITS = 32
 
 
-def tokens_expr(dialect: str, text: str = "text") -> str:
-    """Whitespace tokens (identical lists in both engines)."""
-    if dialect == "spark":
-        return f"filter(split(trim({text}), '\\\\s+'), t -> length(t) > 0)"
-    return f"regexp_extract_all(trim({text}), '\\S+')"
-
-
 def token_sig_term(h: str, bits: int = BITS) -> str:
     """Scalar ``bits``-wide signature of one md5-hex expression,
     little-endian: hex digit p weighs 16^p (dialect-neutral).

@@ -13,9 +13,9 @@ Design points that matter at scale:
   ``target_bytes`` bins: FFD is the classic 11/9-OPT guarantee and
   keeps every output file near the target instead of producing one
   giant merged file plus crumbs.
-- ``compact_parquet`` (directory to directory) runs one
-  ``coalesce(1)`` job per bin; ``compact_bucketed_table`` rewrites
-  all bins of a table in ONE job (``rewrite_groups``).
+- ``compact_bucketed_table`` plans each bucket's files with
+  ``plan_compaction_files`` and rewrites all bins of a table in ONE
+  job (``rewrite_groups``), then publishes them.
 
 The bucketed-index lifecycle
 ----------------------------
@@ -97,8 +97,10 @@ def plan_compaction_files(
     target_bytes: int = 128 * 1024 * 1024,
     small_threshold: float = 0.5,
 ) -> CompactionPlan:
-    """FFD bin-pack an explicit file list (the core shared by the
-    directory planner and the per-bucket table compactor)."""
+    """Bin-pack every file of ``files`` smaller than
+    ``small_threshold * target_bytes`` into ``target_bytes`` bins,
+    first-fit-decreasing. Files at/above the threshold are listed as
+    untouched."""
     sizes = {f: os.path.getsize(f) for f in files}
     plan = CompactionPlan(total_bytes=sum(sizes.values()))
     cutoff = small_threshold * target_bytes
@@ -120,45 +122,6 @@ def plan_compaction_files(
         if not placed:
             plan.bins.append([f])
             bin_free.append(target_bytes - sizes[f])
-    return plan
-
-
-def plan_compaction(
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
-) -> CompactionPlan:
-    """Bin-pack every parquet file under ``path`` smaller than
-    ``small_threshold * target_bytes`` into ``target_bytes`` bins,
-    first-fit-decreasing. Files at/above the threshold are listed as
-    untouched."""
-    files = sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    return plan_compaction_files(files, target_bytes, small_threshold)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
-) -> CompactionPlan:
-    """Execute ``plan_compaction``: each bin becomes one output file
-    under ``out``; untouched files are NOT rewritten (a production
-    run would hard-link/move them — here they stay in place and the
-    caller unions the two directories)."""
-    plan = plan_compaction(path, target_bytes, small_threshold)
-    for i, group in enumerate(plan.bins):
-        (
-            spark.read.parquet(*group)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, f"bin-{i:05d}"))
-        )
     return plan
 
 

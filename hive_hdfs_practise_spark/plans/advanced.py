@@ -85,10 +85,10 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_tfidf_topk",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, t.word AS word
-        FROM documents, unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS t(word)
+        FROM documents, unnest({tx.tokens_sql(lower=True)}) AS t(word)
     ), tf AS (
         SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word
     ), df AS (
@@ -169,7 +169,7 @@ def _bm25_sc_ctes() -> str:
     toks AS MATERIALIZED (
         SELECT doc_id, t.word AS word
         FROM documents,
-             unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS t(word)
+             unnest({tx.tokens_sql(lower=True)}) AS t(word)
     ),
     tf AS MATERIALIZED (
         SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word
@@ -784,7 +784,7 @@ FUZZY_MAX_LEV = 2
     ),
     p AS (
         SELECT p_name, n_parts,
-               regexp_extract(p_name, '(\S+)$', 1) AS block
+               regexp_extract(p_name, '([^{tx.WS_SQL}]+)$', 1) AS block
         FROM names
     )
     SELECT a.block,
@@ -860,7 +860,7 @@ TFIDF_SIM_TOP_K = 10
     WITH tf AS (
         SELECT doc_id, word, count(*) AS tf
         FROM (SELECT doc_id,
-                     unnest(regexp_extract_all(trim(text), '\S+')) AS word
+                     unnest({tx.tokens_sql()}) AS word
               FROM documents)
         GROUP BY doc_id, word
     ),

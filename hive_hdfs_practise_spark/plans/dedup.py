@@ -81,8 +81,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact_normalized",
-    oracle="""
-    SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS text_hash,
+    oracle=f"""
+    SELECT {tx.content_hash_sql()} AS text_hash,
            min(doc_id) AS keep_doc_id,
            count(*) AS n_copies
     FROM documents
@@ -1078,22 +1078,13 @@ def dedup_cross_source_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 HAMMING_THRESHOLD = 6
 
 
-def _simhash_signatures(d: DataFrame, bits: int, family: str = "md5") -> DataFrame:
+def _simhash_signatures(d: DataFrame, bits: int) -> DataFrame:
     """(doc_id, lang, simhash): ``bits``-wide simhash per document.
     Explode tokens → one codegen'd scalar sig per token → ``bits``
     plain sum() aggregates → assemble bits (see dedup_simhash's
-    docstring for why this beats the array form).
-
-    ``family`` picks the per-token hash:
-    - ``md5``: nibble-sum of the md5 hex digest — bit-identical in
-      DuckDB, so dedup_simhash's pair output is exactly
-      oracle-checked. 15 instr/substring extractions per token.
-    - ``xxhash``: ``xxhash64(token) & (2^bits - 1)`` — one JVM hash,
-      measured ~30% faster at sf0.1. No DuckDB twin — the optional
-      deployment-time fast path (exercised by
-      test_xxhash_family_builder; dedup_simhash_bucketed itself uses
-      md5 and is fully oracle-checked — the pigeonhole pair stage is
-      family-independent).
+    docstring for why this beats the array form). The per-token hash
+    is the nibble-sum of the md5 hex digest — bit-identical in
+    DuckDB, so the pair outputs are exactly oracle-checked.
 
     Slot shape (compile cost matters — the slot text is codegen'd
     ``bits``× into one method): the ±1 majority vote is folded to a
@@ -1101,12 +1092,9 @@ def _simhash_signatures(d: DataFrame, bits: int, family: str = "md5") -> DataFra
     ``2*s_j > n``. No per-slot NULL guard: sum() skips the
     explode_outer marker rows natively, and an empty doc yields
     n=0 → all-zero signature, same as the ±1 form."""
-    if family == "xxhash":
-        tsig = F.xxhash64(F.col("t")).bitwiseAND(F.lit((1 << bits) - 1))
-    else:
-        tsig = F.expr(sh.token_sig_term("md5(t)", bits))
+    tsig = F.expr(sh.token_sig_term("md5(t)", bits))
     toks = d.select(
-        "doc_id", "lang", F.explode_outer(F.expr(sh.tokens_expr("spark"))).alias("t")
+        "doc_id", "lang", F.explode_outer(tx.tokens(F.col("text"))).alias("t")
     ).withColumn("tsig", tsig)
     counters = toks.groupBy("doc_id", "lang").agg(
         F.count(F.col("tsig")).alias("_n"),
@@ -1131,7 +1119,7 @@ def _simhash_pairs_oracle(table: str = "documents") -> str:
     parametrizes the input relation, the _minhash_lsh_oracle idiom)."""
     return f"""
     WITH toks AS (
-        SELECT doc_id, lang, {sh.tokens_expr('duckdb')} AS tokens FROM {table}
+        SELECT doc_id, lang, {tx.tokens_sql()} AS tokens FROM {table}
     ), sigs AS (
         SELECT doc_id, lang, {sh.token_sigs_expr('duckdb', 'tokens')} AS tok_sigs FROM toks
     ), hashes AS (
@@ -1216,7 +1204,7 @@ def _spectrum_oracle() -> str:
     u32 = hex_int_sql("md5(CAST(h.doc_id AS VARCHAR))")
     return f"""
     WITH toks AS (
-        SELECT doc_id, lang, {sh.tokens_expr('duckdb')} AS tokens FROM documents
+        SELECT doc_id, lang, {tx.tokens_sql()} AS tokens FROM documents
     ), sigs AS (
         SELECT doc_id, lang, {sh.token_sigs_expr('duckdb', 'tokens')} AS tok_sigs FROM toks
     ), hashes AS (
@@ -1305,7 +1293,7 @@ def _simhash_bucketed_oracle() -> str:
     """SQL restatement of the whole chunk-bucketed pipeline: 60-bit
     md5-nibble signatures, 7-way chunking, (lang, chunk, value)
     buckets, distinct a<b pairs, exact Hamming verify."""
-    toks = sh.tokens_expr("duckdb")
+    toks = tx.tokens_sql()
     tsigs = sh.token_sigs_expr("duckdb", "toks", SIMHASH_SCALE_BITS)
     sig = sh.simhash_expr("duckdb", "sigs", SIMHASH_SCALE_BITS)
     base, extra = divmod(SIMHASH_SCALE_BITS, N_SIMHASH_CHUNKS)
@@ -1348,18 +1336,13 @@ def dedup_simhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole (tests assert equality with the brute-force pair join
     over the same signatures). Signatures use the md5-nibble family
     so the ENTIRE pipeline restates in SQL and the pair output is
-    value-checked; a deployment that trusts the algorithm flips
-    ``family='xxhash'`` for one-hash-per-token signatures (~30%
-    faster, same pair stage — the pigeonhole property is
-    family-independent). The crossover study (SCALING.md) keeps this
+    value-checked. The crossover study (SCALING.md) keeps this
     query off the bench: the brute pair join stays faster through at
     least 200k docs."""
     from ..dedup.minhash import pairs_within_buckets
 
     d = wide_table(spark, sf_dir, "documents")
-    hashes = _simhash_signatures(
-        d, SIMHASH_SCALE_BITS, family="md5"
-    ).localCheckpoint(eager=True)
+    hashes = _simhash_signatures(d, SIMHASH_SCALE_BITS).localCheckpoint(eager=True)
     base, extra = divmod(SIMHASH_SCALE_BITS, N_SIMHASH_CHUNKS)
     chunk_vals, off = [], 0
     for c in range(N_SIMHASH_CHUNKS):

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as tx
 from ..functions.hexdigest import hex_int
 from ..operators.sampling import md5_bucket_sql
 from ..sources.catalog import table, wide_table
@@ -92,11 +93,11 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "documents_source_entropy",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT source, t.word AS word
         FROM documents,
-             unnest(regexp_extract_all(trim(text), '\S+')) AS t(word)
+             unnest({tx.tokens_sql()}) AS t(word)
     ), wc AS (
         SELECT source, word, count(*) AS c FROM toks GROUP BY source, word
     )
@@ -128,7 +129,6 @@ def documents_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     then metadata-scale.
     """
     d = wide_table(spark, sf_dir, "documents")
-    from ..functions import text as tx
 
     wc = (
         d.select("source", F.explode(tx.tokens(F.col("text"))).alias("word"))
@@ -250,7 +250,9 @@ def lineitem_chi2_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     (they still contribute e to the statistic — dropping them
     understates chi2). Everything after the count table is
     metadata-scale; all counts integer, the ~21-term float sum is
-    rounded at 6dp.
+    rounded at 6dp. The degrees of freedom count the margins with
+    collect_set: two count_distincts in one aggregate plan through an
+    Expand whose projection order varies between sessions.
     """
     l = table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus")
     ct = (
@@ -275,8 +277,8 @@ def lineitem_chi2_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("n").cast("bigint").alias("n_rows"),
             (
-                (F.count_distinct(F.col("f")) - 1)
-                * (F.count_distinct(F.col("m")) - 1)
+                (F.size(F.collect_set("f")) - 1)
+                * (F.size(F.collect_set("m")) - 1)
             )
             .cast("int")
             .alias("dof"),
@@ -739,7 +741,7 @@ _VD_BUCKET = md5_bucket_sql("doc_id")
         SELECT doc_id,
                CASE WHEN {_VD_BUCKET} < 128 THEN 1 ELSE 0 END AS in_a,
                list_distinct(list_transform(
-                   regexp_extract_all(trim(text), '\S+'),
+                   {tx.tokens_sql()},
                    x -> lower(x))) AS toks
         FROM documents
     ),
@@ -784,7 +786,6 @@ def documents_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-sized output), a broadcast one-row half-size join,
     then a vocabulary-scale top-k sort. No per-pair work, no window
     over the corpus."""
-    from ..functions import text as tx
 
     d = table(spark, sf_dir, "documents").select(
         "doc_id",

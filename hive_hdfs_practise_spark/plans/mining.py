@@ -543,9 +543,9 @@ def part_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "documents_top_phrase",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS t
+        SELECT doc_id, {tx.tokens_sql()} AS t
         FROM documents
     ), tri AS (
         SELECT doc_id,

@@ -36,7 +36,7 @@ from .minhash_sql import (
     minhash_cand_ctes,
     verified_pairs_ctes,
 )
-from .text import _lang_oracle, _quality_oracle, _token_agg
+from .text import _token_agg
 
 QUALITY_MIN = 0.6
 
@@ -49,8 +49,8 @@ def _pipeline_oracle(lsh_pairs: bool = False) -> str:
     # ``lsh_pairs`` the quadratic shingle self-join is replaced by
     # the md5-family MinHash-LSH candidate CTEs (exact-verified) —
     # the SQL twin of the pipeline_training_data_lsh plan.
-    quality_sql = _quality_oracle().strip()
-    lang_sql = _lang_oracle().strip()
+    quality_sql = tx.quality_sql().strip()
+    lang_sql = tx.lang_id_sql().strip()
     if lsh_pairs:
         pair_ctes = f"""{minhash_cand_ctes("uniq", downsample=1, lang=True)},
     {verified_pairs_ctes("mh_cand", "uniq")},"""
@@ -96,7 +96,7 @@ def _pipeline_oracle(lsh_pairs: bool = False) -> str:
                 WHEN {_BUCKET} < 231 THEN 'val'
                 ELSE 'test' END AS split,
            count(*) AS n_docs,
-           CAST(coalesce(sum(len(regexp_extract_all(trim(text), '\\S+'))), 0) AS BIGINT)
+           CAST(coalesce(sum(len({tx.tokens_sql()})), 0) AS BIGINT)
                AS total_tokens
     FROM final
     GROUP BY 1

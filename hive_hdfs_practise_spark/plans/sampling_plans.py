@@ -134,9 +134,8 @@ DECON_NGRAM = 8
 # forms so the three queries cannot drift (r8 review).
 _DECON_SH_SQL = rf"""sh AS (
         SELECT doc_id, {_BUCKET} AS bucket,
-               list_distinct([array_to_string(toks[x:x + {DECON_NGRAM - 1}], ' ')
-                              for x in generate_series(1, len(toks) - {DECON_NGRAM - 1})]) AS grams
-        FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
+               list_distinct({tx.word_ngrams_sql('toks', DECON_NGRAM)}) AS grams
+        FROM (SELECT doc_id, {tx.tokens_sql()} AS toks
               FROM documents)
     ),
     tr AS (SELECT doc_id AS train_doc, unnest(grams) AS g FROM sh WHERE bucket < 205),
@@ -148,22 +147,11 @@ def decon_grams_of(d: DataFrame):
     (doc_id, split, g) distinct-8-gram stream and the split-labelled
     frame. Stateless column expressions only, so the same code path
     serves the batch decontamination family AND the r11 streaming
-    twin (shared-scorer rule — the twins cannot drift). The
-    dynamic-length sequence is guarded (docs under {DECON_NGRAM}
-    tokens emit no grams) because Spark's sequence() counts DOWN on
-    an empty range."""
+    twin (shared-scorer rule — the twins cannot drift). Docs under
+    {DECON_NGRAM} tokens emit no grams (``tx.word_ngrams``)."""
     from ..operators.sampling import dataset_split
 
-    toks = tx.tokens(F.col("text"))
-    grams = F.when(
-        F.size(toks) >= DECON_NGRAM,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (DECON_NGRAM - 1)),
-                lambda x: F.array_join(F.slice(toks, x, DECON_NGRAM), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(tx.word_ngrams(tx.tokens(F.col("text")), DECON_NGRAM))
     sp = dataset_split(d, "doc_id", 80, 10)
     sh = sp.select("doc_id", "split", F.explode(grams).alias("g"))
     return sh, sp
@@ -191,9 +179,8 @@ def _decon_gram_stream(spark: SparkSession, sf_dir: str):
     oracle=rf"""
     WITH gsh AS (
         SELECT doc_id,
-               unnest(list_distinct([array_to_string(toks[x:x + {DECON_NGRAM - 1}], ' ')
-                      for x in generate_series(1, len(toks) - {DECON_NGRAM - 1})])) AS g
-        FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
+               unnest(list_distinct({tx.word_ngrams_sql('toks', DECON_NGRAM)})) AS g
+        FROM (SELECT doc_id, {tx.tokens_sql()} AS toks
               FROM documents)
     ),
     fo AS (SELECT g, min(doc_id) AS first_doc FROM gsh GROUP BY g),
@@ -403,9 +390,8 @@ def _bloom_decon_oracle() -> str:
     return rf"""
     WITH sh AS MATERIALIZED (
         SELECT doc_id, {_BUCKET} AS bucket,
-               list_distinct([array_to_string(toks[x:x + {DECON_NGRAM - 1}], ' ')
-                              for x in generate_series(1, len(toks) - {DECON_NGRAM - 1})]) AS grams
-        FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
+               list_distinct({tx.word_ngrams_sql('toks', DECON_NGRAM)}) AS grams
+        FROM (SELECT doc_id, {tx.tokens_sql()} AS toks
               FROM documents)
     ),
     te_g AS MATERIALIZED (
@@ -1036,7 +1022,7 @@ DSIR_TARGET = "src0"
     oracle=rf"""
     WITH tok AS (
         SELECT doc_id, source,
-               unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS word
+               unnest({tx.tokens_sql(lower=True)}) AS word
         FROM documents
     ),
     f AS MATERIALIZED (

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import text as tx
 from ..functions import vectors as vec
 from ..functions.hexdigest import hex_int, hex_int_sql
 from ..operators.sampling import md5_bucket, md5_bucket_sql
@@ -2469,7 +2470,7 @@ def _cluster_topics_oracle() -> str:
         JOIN (
             SELECT doc_id,
                    unnest(list_distinct(list_transform(
-                       regexp_extract_all(trim(text), '\S+'),
+                       {tx.tokens_sql()},
                        x -> lower(x)))) AS tk
             FROM documents
         ) t ON t.doc_id = a.vec_id
@@ -2516,7 +2517,6 @@ def embeddings_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized — a broadcast of the nlist-row cluster sizes, and a top-k
     window over that vocabulary-scale frame. Builder runs jobs at
     plan time (kmeans checkpoints): BUILD_EXECUTES."""
-    from ..functions import text as tx
     from ..similarity.knn import assign_clusters, kmeans_centroids
 
     e = wide_table(spark, sf_dir, "embeddings")

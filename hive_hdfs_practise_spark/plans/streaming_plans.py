@@ -503,9 +503,7 @@ def cascade_flag_counts(stream: DataFrame) -> DataFrame:
 
     quality = tx.quality_score(F.col("text"))
     lang_pred = tx.lang_id(F.col("text"))
-    lines = F.filter(
-        F.split(F.col("text"), "\n"), lambda ln: ln != F.lit("")
-    )
+    lines = tx.lines(F.col("text"))
     n_lines = F.size(lines)
     n_uniq = F.size(F.array_distinct(lines))
     dup_line_frac = F.round(
@@ -514,13 +512,7 @@ def cascade_flag_counts(stream: DataFrame) -> DataFrame:
         ).otherwise(F.lit(0.0)),
         6,
     )
-    toks = tx.tokens(F.col("text"))
-    n_big = F.greatest(F.size(toks) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n_big),
-        F.slice(toks, 2, n_big),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = tx.word_ngrams(tx.tokens(F.col("text")), 2)
     # mode count without a per-element count lambda: sort, then one
     # linear fold tracking (prev, current run, best run). Tokens are
     # \S+ so no bigram equals the "" sentinel.

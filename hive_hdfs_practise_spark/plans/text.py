@@ -24,10 +24,10 @@ from .registry import register
 
 @register(
     "text_token_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, n_chars, len(text) AS text_len,
-               regexp_extract_all(trim(text), '\S+') AS tokens
+               {tx.tokens_sql()} AS tokens
         FROM documents
     )
     SELECT doc_id, text_len, n_chars,
@@ -55,11 +55,11 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_counts_bpe",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER)
+           CAST(len(regexp_extract_all(text, '{tx.BPE_ISH_SQL}')) AS INTEGER)
                AS n_bpe_tokens,
-           CAST(len(regexp_extract_all(trim(text), '\S+')) AS INTEGER) AS n_ws_tokens
+           CAST(len({tx.tokens_sql()}) AS INTEGER) AS n_ws_tokens
     FROM documents
     """,
 )
@@ -75,39 +75,6 @@ def text_token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_oracle() -> str:
-    """DuckDB restatement of functions/text.py::quality_score."""
-    stop_list = ", ".join(f"'{w}'" for w in tx.EN_STOPWORDS)
-    return rf"""
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_extract_all(trim(text), '\S+') AS tokens,
-               regexp_extract_all(lower(trim(text)), '\S+') AS ltokens,
-               len(text) AS n,
-               len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-               len(regexp_extract_all(text, '[0-9]')) AS n_digit
-        FROM documents
-    ), feat AS (
-        SELECT doc_id,
-               CASE WHEN len(tokens) > 0
-                    THEN CAST(coalesce(list_sum([len(t) for t in tokens]), 0) AS DOUBLE) / len(tokens)
-                    ELSE 0.0 END AS mtl,
-               CASE WHEN len(ltokens) > 0
-                    THEN CAST(len(list_filter(ltokens, t -> t IN ({stop_list}))) AS DOUBLE) / len(ltokens)
-                    ELSE 0.0 END AS sw_ratio,
-               CASE WHEN n > 0 THEN CAST(n_punct AS DOUBLE) / n ELSE 0.0 END AS p_ratio,
-               CASE WHEN n > 0 THEN CAST(n_digit AS DOUBLE) / n ELSE 0.0 END AS d_ratio
-        FROM toks
-    )
-    SELECT doc_id,
-           round(0.4 * (CASE WHEN mtl >= 2.0 AND mtl <= 12.0 THEN 1.0 ELSE 0.0 END)
-               + 0.2 * (CASE WHEN sw_ratio >= 0.01 THEN 1.0 ELSE 0.0 END)
-               + 0.2 * (1.0 - least(p_ratio * 5.0, 1.0))
-               + 0.2 * (1.0 - least(d_ratio * 5.0, 1.0)), 4) AS quality
-    FROM feat
-    """
-
-
 def _token_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared fast path for the per-token features: explode tokens
     once and aggregate with codegen'd scalar expressions. Spark
@@ -120,7 +87,7 @@ def _token_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         F.length("text").alias("n"),
-        F.regexp_count("text", F.lit(r"[^\w\s]")).alias("n_punct"),
+        F.regexp_count("text", F.lit(tx.PUNCT_RE)).alias("n_punct"),
         F.regexp_count("text", F.lit(r"[0-9]")).alias("n_digit"),
         F.regexp_count("text", F.lit(tx.CJK_RE)).alias("n_cjk"),
     )
@@ -149,40 +116,21 @@ def _token_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_col() -> F.Column:
-    """The composite quality score as a COLUMN over the _token_agg
-    feature frame — shared by text_quality_score and
-    documents_filter_cascade (one feature pass, r8 review)."""
-    mtl = F.when(
-        F.col("n_tokens") > 0, F.col("sum_len").cast("double") / F.col("n_tokens")
-    ).otherwise(F.lit(0.0))
-    sw_ratio = F.when(
-        F.col("n_tokens") > 0, F.col("n_stop").cast("double") / F.col("n_tokens")
-    ).otherwise(F.lit(0.0))
-    p_ratio = F.when(F.col("n") > 0, F.col("n_punct") / F.col("n")).otherwise(F.lit(0.0))
-    d_ratio = F.when(F.col("n") > 0, F.col("n_digit") / F.col("n")).otherwise(F.lit(0.0))
-    return F.round(
-        0.4 * F.when((mtl >= 2.0) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-        + 0.2 * F.when(sw_ratio >= 0.01, F.lit(1.0)).otherwise(F.lit(0.0))
-        + 0.2 * (1.0 - F.least(p_ratio * 5.0, F.lit(1.0)))
-        + 0.2 * (1.0 - F.least(d_ratio * 5.0, F.lit(1.0))),
-        4,
-    )
+    """``tx.quality`` over the _token_agg feature frame — shared by
+    text_quality_score and documents_filter_cascade (one feature
+    pass)."""
+    return tx.quality(*map(F.col, ("n", "n_tokens", "sum_len", "n_stop", "n_punct", "n_digit")))
 
 
 def _langpred_col() -> F.Column:
-    """The deterministic language-ID argmax as a COLUMN over the
-    _token_agg feature frame — shared by text_lang_id and
-    documents_filter_cascade."""
+    """``tx.lang_pred`` over the _token_agg feature frame — shared
+    by text_lang_id and documents_filter_cascade."""
     scores = {lang: F.col(f"s_{lang}").cast("long") for lang in tx.LANG_MARKERS}
     scores["zh"] = (F.col("n_cjk") * 3).cast("long")
-    top = F.greatest(*scores.values())
-    pred = F.lit("und")
-    for lang in reversed(tx.LANG_PRIORITY):
-        pred = F.when(scores[lang] == top, F.lit(lang)).otherwise(pred)
-    return F.when(top > 0, pred).otherwise(F.lit("und"))
+    return tx.lang_pred(scores)
 
 
-@register("text_quality_score", oracle=_quality_oracle())
+@register("text_quality_score", oracle=tx.quality_sql())
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality heuristic (Gopher/C4-rule spirit): mean
     token length window + stopword presence + punctuation/digit
@@ -202,7 +150,7 @@ def _survivors_quality_oracle() -> str:
     return f"""
     WITH RECURSIVE {_clusters_walk_body()},
     cl AS (SELECT u AS doc_id, min(m) AS cluster_id FROM walk GROUP BY u),
-    q AS (SELECT * FROM ({_quality_oracle()}))
+    q AS (SELECT * FROM ({tx.quality_sql()}))
     SELECT cl.doc_id, cl.cluster_id, q.quality,
            (row_number() OVER (
                 PARTITION BY cl.cluster_id
@@ -309,35 +257,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_oracle() -> str:
-    score_sql = {}
-    for lang, markers in tx.LANG_MARKERS.items():
-        lst = ", ".join(f"'{w}'" for w in markers)
-        score_sql[lang] = (
-            f"len(list_filter(regexp_extract_all(lower(trim(text)), '\\S+'), t -> t IN ({lst})))"
-        )
-    score_sql["zh"] = "len(regexp_extract_all(text, '[一-鿿]')) * 3"
-    cols = ",\n               ".join(f"{sql} AS s_{lang}" for lang, sql in sorted(score_sql.items()))
-    names = [f"s_{lang}" for lang in sorted(score_sql)]
-    top = f"greatest({', '.join(names)})"
-    case = "'und'"
-    for lang in reversed(tx.LANG_PRIORITY):
-        case = f"CASE WHEN s_{lang} = top THEN '{lang}' ELSE {case} END"
-    return f"""
-    WITH scores AS (
-        SELECT doc_id, lang AS lang_label,
-               {cols}
-        FROM documents
-    ), top AS (
-        SELECT *, {top} AS top FROM scores
-    )
-    SELECT doc_id, lang_label,
-           CASE WHEN top > 0 THEN {case} ELSE 'und' END AS lang_pred
-    FROM top
-    """
-
-
-@register("text_lang_id", oracle=_lang_oracle())
+@register("text_lang_id", oracle=tx.lang_id_sql())
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via marker-stopword/CJK-codepoint scoring with a
     deterministic argmax (chained CASE, tie priority zh>en>de>es>fr)
@@ -357,7 +277,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5,
+           {tx.content_hash_sql()} AS content_md5,
            list_min([md5(s) for s in {tx.shingle_set_sql("text", SHINGLE_K)}]) AS min_shingle_md5
     FROM documents
     """,
@@ -376,12 +296,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "word_freq_topk",
-    oracle=r"""
+    oracle=rf"""
     SELECT word, n
     FROM (
         SELECT t.word AS word, count(*) AS n,
                row_number() OVER (ORDER BY count(*) DESC, t.word) AS rn
-        FROM documents, unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS t(word)
+        FROM documents, unnest({tx.tokens_sql(lower=True)}) AS t(word)
         GROUP BY t.word
     )
     WHERE rn <= 20
@@ -404,11 +324,11 @@ def word_freq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _repetition_oracle() -> str:
     """DuckDB restatement of the per-doc repetition signals — a
     function so documents_filter_cascade can embed it as a subquery
-    (the _quality_oracle precedent)."""
-    return r"""
+    (the ``tx.quality_sql`` precedent)."""
+    return rf"""
     WITH ln AS (
         SELECT doc_id,
-               [l for l in string_split(text, chr(10)) if l <> ''] AS ls
+               {tx.lines_sql()} AS ls
         FROM documents
     ),
     lagg AS (
@@ -418,12 +338,11 @@ def _repetition_oracle() -> str:
         FROM ln
     ),
     toks AS (
-        SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS t FROM documents
+        SELECT doc_id, {tx.tokens_sql()} AS t FROM documents
     ),
     big AS (
         SELECT doc_id,
-               unnest([t[x] || ' ' || t[x + 1]
-                       for x in generate_series(1, len(t) - 1)]) AS bg
+               unnest({tx.word_ngrams_sql('t', 2)}) AS bg
         FROM toks
     ),
     cnt AS (SELECT doc_id, bg, count(*) AS c FROM big GROUP BY doc_id, bg),
@@ -451,20 +370,12 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-aggregate branches (map-side partial agg caps both
     shuffles); empty docs come back via left joins with 0.0 scores."""
     d = wide_table(spark, sf_dir, "documents")
-    lines = d.select("doc_id", F.explode(F.split("text", "\n")).alias("line")).filter(
-        F.col("line") != ""
-    )
+    lines = d.select("doc_id", F.explode(tx.lines(F.col("text"))).alias("line"))
     lagg = lines.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.countDistinct("line").alias("n_uniq"),
     )
-    toks = tx.tokens(F.col("text"))
-    n_big = F.greatest(F.size(toks) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n_big),
-        F.slice(toks, 2, n_big),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = tx.word_ngrams(tx.tokens(F.col("text")), 2)
     bg = d.select("doc_id", F.explode(bigrams).alias("bg"))
     bga = (
         bg.groupBy("doc_id", "bg")
@@ -621,7 +532,7 @@ def _cms_pos(j: int, h: str) -> str:
     "word_freq_cms_topk",
     oracle=f"""
     WITH w AS (
-        SELECT unnest(regexp_extract_all(lower(trim(text)), '\\S+')) AS word
+        SELECT unnest({tx.tokens_sql(lower=True)}) AS word
         FROM documents
     ),
     pos AS (
@@ -705,7 +616,7 @@ def _cs_sign(j: int, h: str) -> str:
     "word_freq_countsketch_topk",
     oracle=f"""
     WITH w AS (
-        SELECT unnest(regexp_extract_all(lower(trim(text)), '\\S+')) AS word
+        SELECT unnest({tx.tokens_sql(lower=True)}) AS word
         FROM documents
     ),
     pos AS (
@@ -799,7 +710,7 @@ N_PACK_SHARDS = 32
     oracle=rf"""
     WITH t AS (
         SELECT doc_id, doc_id % {N_PACK_SHARDS} AS shard,
-               CAST(len(regexp_extract_all(trim(text), '\S+')) AS BIGINT) AS n_tokens
+               CAST(len({tx.tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     c AS (
@@ -847,7 +758,7 @@ def documents_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
         SELECT doc_id, doc_id % {N_PACK_SHARDS} AS shard,
-               CAST(len(regexp_extract_all(trim(text), '\S+')) AS BIGINT) AS n_tokens
+               CAST(len({tx.tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     c AS (
@@ -960,7 +871,7 @@ CHUNK_STRIDE = 384
     oracle=rf"""
     WITH t AS (
         SELECT doc_id,
-               CAST(len(regexp_extract_all(trim(text), '\S+')) AS BIGINT) AS n_tokens
+               CAST(len({tx.tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     c AS (
@@ -1091,8 +1002,8 @@ CASCADE_MAX_DUP_LINE = 0.3
 
 def _filter_cascade_oracle() -> str:
     return f"""
-    WITH l AS (SELECT * FROM ({_lang_oracle()})),
-    q AS (SELECT * FROM ({_quality_oracle()})),
+    WITH l AS (SELECT * FROM ({tx.lang_id_sql()})),
+    q AS (SELECT * FROM ({tx.quality_sql()})),
     r AS (SELECT * FROM ({_repetition_oracle()})),
     f AS (
         SELECT l.doc_id,
@@ -1241,10 +1152,10 @@ def _bpe_ctes() -> tuple[list[str], str]:
     → BPE_ROUNDS × (pair count, argmax, greedy fold). Returns the CTE
     list and the name of the final symbol table."""
     parts = [
-        r"""
+        rf"""
     WITH w AS (
         SELECT word, count(*) AS wc
-        FROM (SELECT unnest(regexp_extract_all(trim(text), '\S+')) AS word
+        FROM (SELECT unnest({tx.tokens_sql()}) AS word
               FROM documents)
         GROUP BY word
     ),
@@ -1371,8 +1282,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_apply_oracle() -> str:
     parts, last = _bpe_ctes()
     parts.append(
-        r"""dw AS (
-        SELECT doc_id, unnest(regexp_extract_all(trim(text), '\S+')) AS word
+        rf"""dw AS (
+        SELECT doc_id, unnest({tx.tokens_sql()}) AS word
         FROM documents
     )"""
     )
@@ -1420,8 +1331,8 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fertility_oracle() -> str:
     parts, last = _bpe_ctes()
     parts.append(
-        r"""dw AS (
-        SELECT doc_id, unnest(regexp_extract_all(trim(text), '\S+')) AS word
+        rf"""dw AS (
+        SELECT doc_id, unnest({tx.tokens_sql()}) AS word
         FROM documents
     ),
     perdoc AS (
@@ -1522,14 +1433,11 @@ BP_MIN_DOCS = 5
     "documents_boilerplate_ngrams",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS w
+        SELECT doc_id, {tx.tokens_sql()} AS w
         FROM documents
     ),
     grams AS (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, len(w) - {BP_N - 1}),
-                      i -> array_to_string(w[i:i+{BP_N - 1}], ' '))) AS g
-        FROM toks WHERE len(w) >= {BP_N}
+        SELECT doc_id, unnest({tx.word_ngrams_sql('w', BP_N)}) AS g FROM toks
     ),
     dfreq AS (
         SELECT g, count(DISTINCT doc_id) AS dfreq FROM grams GROUP BY g
@@ -1565,17 +1473,9 @@ def documents_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wide_table: tokenize + gram explode is compute-dense per row
     # and the documents file is small enough to scan as ONE partition
     d = wide_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", tx.tokens(F.col("text")).alias("w")).where(
-        F.size("w") >= BP_N
-    )
-    grams = toks.select(
+    grams = d.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(w) - {BP_N - 1}), "
-                f"i -> concat_ws(' ', slice(w, i, {BP_N})))"
-            )
-        ).alias("g"),
+        F.explode(tx.word_ngrams(tx.tokens(F.col("text")), BP_N)).alias("g"),
     )
     dfreq = grams.groupBy("g").agg(
         F.count_distinct("doc_id").alias("dfreq")
@@ -1596,7 +1496,7 @@ def documents_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _curriculum_oracle() -> str:
     return f"""
-    WITH q AS (SELECT * FROM ({_quality_oracle()})),
+    WITH q AS (SELECT * FROM ({tx.quality_sql()})),
     j AS (
         SELECT q.doc_id, q.quality, d.n_chars
         FROM q JOIN documents d ON q.doc_id = d.doc_id
@@ -1658,10 +1558,10 @@ def documents_curriculum_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "word_freq_zipf_slope",
-    oracle=r"""
+    oracle=rf"""
     WITH wf AS (
         SELECT word, count(*) AS c
-        FROM (SELECT unnest(regexp_extract_all(trim(text), '\S+')) AS word
+        FROM (SELECT unnest({tx.tokens_sql()}) AS word
               FROM documents)
         GROUP BY word
     ),
@@ -1734,7 +1634,7 @@ _NB_SCALE = 1_000_000
     oracle=rf"""
     WITH tok AS (
         SELECT doc_id, source,
-               unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS word
+               unnest({tx.tokens_sql(lower=True)}) AS word
         FROM documents
     ),
     c AS (SELECT source, word, count(*) AS c FROM tok GROUP BY source, word),
@@ -1885,7 +1785,7 @@ PMI_TOP = 25
     "word_pair_pmi",
     oracle=rf"""
     WITH toks AS MATERIALIZED (
-        SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS t
+        SELECT doc_id, {tx.tokens_sql(lower=True)} AS t
         FROM documents
     ),
     uni AS MATERIALIZED (
@@ -2007,7 +1907,7 @@ KN_SCALE = 1_000_000
 def _kn_ppl_oracle() -> str:
     return rf"""
     WITH tk AS (
-        SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
+        SELECT doc_id, {tx.tokens_sql()} AS toks
         FROM documents
     ),
     strm AS MATERIALIZED (
@@ -2222,7 +2122,7 @@ def documents_perplexity_buckets(
 def _kn_trigram_oracle() -> str:
     return rf"""
     WITH tk AS (
-        SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS toks
+        SELECT doc_id, {tx.tokens_sql()} AS toks
         FROM documents
     ),
     strm AS MATERIALIZED (
@@ -2383,8 +2283,8 @@ def _gopher_oracle() -> str:
     return rf"""
     WITH t AS (
         SELECT doc_id,
-               regexp_extract_all(trim(text), '\S+') AS toks,
-               list_filter(string_split(text, chr(10)), x -> x <> '') AS ls,
+               {tx.tokens_sql()} AS toks,
+               {tx.lines_sql()} AS ls,
                len(regexp_extract_all(text, '[#…]')) AS n_symbol
         FROM documents
     ),
@@ -2399,9 +2299,9 @@ def _gopher_oracle() -> str:
                    list_transform(toks, x -> lower(x)),
                    x -> x IN ({req})))) AS n_req,
                len(ls) AS n_lines,
-               len(list_filter(ls, x -> regexp_matches(x, '^\s*[-*•]')))
+               len(list_filter(ls, x -> regexp_matches(x, '^[{tx.WS_SQL}]*[-*•]')))
                    AS n_bullet,
-               len(list_filter(ls, x -> regexp_matches(x, '(\.\.\.|…)\s*$')))
+               len(list_filter(ls, x -> regexp_matches(x, '(\.\.\.|…)[{tx.WS_SQL}]*$')))
                    AS n_ell
         FROM t
     )
@@ -2455,9 +2355,7 @@ def gopher_flags(d: DataFrame) -> DataFrame:
     (documents_gopher_rules / stream_gopher_rules — the twins cannot
     drift)."""
     toks = tx.tokens(F.col("text"))
-    ls = F.filter(
-        F.split(F.col("text"), "\n"), lambda x: x != F.lit("")
-    )
+    ls = tx.lines(F.col("text"))
     req_lit = [F.lit(w) for w in GOPHER_REQ_STOPWORDS]
     m = d.select(
         "doc_id",
@@ -2537,9 +2435,9 @@ HEAPS_BUCKETS = 10
     WITH d AS (
         SELECT doc_id,
                list_distinct(list_transform(
-                   regexp_extract_all(trim(text), '\S+'),
+                   {tx.tokens_sql()},
                    x -> lower(x))) AS toks,
-               len(regexp_extract_all(trim(text), '\S+')) AS n_toks
+               len({tx.tokens_sql()}) AS n_toks
         FROM documents
     ),
     r AS (
@@ -2659,7 +2557,7 @@ def documents_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "documents_langid_confusion",
     oracle=f"""
-    WITH per_doc AS ({_lang_oracle()}),
+    WITH per_doc AS ({tx.lang_id_sql()}),
     m AS (
         SELECT lang_label, lang_pred, count(*) AS n
         FROM per_doc GROUP BY lang_label, lang_pred
@@ -2723,7 +2621,7 @@ DECODE_STEPS = 16
 def _decode_oracle() -> str:
     parts = [
         rf"""WITH toks AS (
-        SELECT regexp_extract_all(trim(text), '\S+') AS ts FROM documents
+        SELECT {tx.tokens_sql()} AS ts FROM documents
     ),
     tok AS (SELECT unnest(ts) AS t FROM toks),
     vocab AS MATERIALIZED (
@@ -2878,7 +2776,7 @@ def _token_mi_oracle() -> str:
     WITH tokd AS (
         SELECT DISTINCT doc_id, source, word FROM (
             SELECT doc_id, source,
-                   unnest(regexp_extract_all(lower(trim(text)), '\S+'))
+                   unnest({tx.tokens_sql(lower=True)})
                        AS word
             FROM documents
         )

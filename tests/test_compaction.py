@@ -1,6 +1,7 @@
 """Small-file compaction: plan shape (FFD bins, large files
-untouched), execution (row preservation, one file per bin), and crash
-safety of the index rewrite-and-publish path."""
+untouched) and crash safety of the index rewrite-and-publish path.
+Row preservation under compaction is pinned by the
+``compact_bucketed_table`` tests in test_dedup and test_similarity."""
 
 from __future__ import annotations
 
@@ -10,10 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hive_hdfs_practise_spark.operators.compaction import (
-    compact_parquet,
-    plan_compaction,
-)
+from hive_hdfs_practise_spark.operators.compaction import plan_compaction_files
 
 SF = "/root/testdata/sf0.01"
 
@@ -43,7 +41,7 @@ class TestPlan:
         }
         big_two = sorted(sizes, key=sizes.get)[-2:]
         target = int(max(sizes.values()) * 1.5)
-        plan = plan_compaction(base, target_bytes=target)
+        plan = plan_compaction_files(sorted(sizes), target_bytes=target)
         assert sorted(plan.untouched) == sorted(big_two)
         packed = [f for g in plan.bins for f in g]
         assert sorted(packed + plan.untouched) == sorted(sizes)
@@ -60,41 +58,8 @@ class TestPlan:
             f: os.path.getsize(f) for f in glob.glob(f"{base}/*.parquet")
         }
         target = int(max(sizes.values()) * 1.5)
-        plan = plan_compaction(base, target_bytes=target)
+        plan = plan_compaction_files(sorted(sizes), target_bytes=target)
         assert plan.small_bytes < plan.total_bytes / 2
-
-
-class TestExecute:
-    def test_rows_preserved_one_file_per_bin(
-        self, spark, fragmented, tmp_path
-    ):
-        base, n_total = fragmented
-        out = str(tmp_path / "compacted")
-        sizes = [
-            os.path.getsize(f) for f in glob.glob(f"{base}/*.parquet")
-        ]
-        target = int(max(sizes) * 1.5)
-        plan = compact_parquet(spark, base, out, target_bytes=target)
-        bin_dirs = sorted(glob.glob(f"{out}/bin-*"))
-        assert len(bin_dirs) == len(plan.bins)
-        for d in bin_dirs:
-            assert len(glob.glob(f"{d}/*.parquet")) == 1
-        compacted = spark.read.parquet(*bin_dirs)
-        untouched = spark.read.parquet(*plan.untouched)
-        assert compacted.count() + untouched.count() == n_total
-        # value-level preservation: checksum both unions
-        def chk(df):
-            return (
-                df.agg(
-                    F.sum("l_orderkey").alias("a"),
-                    F.sum("l_partkey").alias("b"),
-                    F.sum("l_quantity").alias("c"),
-                ).collect()[0]
-            )
-        before = chk(spark.read.parquet(base))
-        after_df = compacted.unionByName(untouched)
-        after = chk(after_df)
-        assert (before.a, before.b, before.c) == (after.a, after.b, after.c)
 
 
 class TestInprogressRecovery:

@@ -216,7 +216,7 @@ class TestSimhash:
         from hive_hdfs_practise_spark.functions import simhash as sh
 
         hashes = (
-            docs.withColumn("tokens", F.expr(sh.tokens_expr("spark")))
+            docs.withColumn("tokens", tx.tokens(F.col("text")))
             .withColumn("tok_sigs", F.expr(sh.token_sigs_expr("spark", "tokens")))
             .select(
                 "doc_id",
@@ -527,7 +527,7 @@ class TestSimhashBucketed:
             for r in P.QUERIES["dedup_simhash_bucketed"](spark, sf).collect()
         }
         h = _simhash_signatures(
-            table(spark, sf, "documents"), SIMHASH_SCALE_BITS, family="md5"
+            table(spark, sf, "documents"), SIMHASH_SCALE_BITS
         ).localCheckpoint(eager=True)
         a, b = h.alias("a"), h.alias("b")
         brute = {
@@ -546,28 +546,6 @@ class TestSimhashBucketed:
             .collect()
         }
         assert got == brute and len(got) > 0
-
-    def test_xxhash_family_builder(self, spark):
-        """The deployment-time fast family (one xxhash per token)
-        still builds valid bounded signatures deterministically."""
-        from pyspark.sql import functions as F
-
-        from hive_hdfs_practise_spark.plans.dedup import (
-            SIMHASH_SCALE_BITS,
-            _simhash_signatures,
-        )
-        from hive_hdfs_practise_spark.sources.catalog import table
-
-        d = table(spark, "/root/testdata/sf0.001", "documents")
-        h = _simhash_signatures(d, SIMHASH_SCALE_BITS, family="xxhash")
-        row = h.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("simhash").alias("lo"),
-            F.max("simhash").alias("hi"),
-        ).collect()[0]
-        assert row.n > 0 and row.lo >= 0 and row.hi < (1 << SIMHASH_SCALE_BITS)
-        checksum = h.agg(F.expr("bit_xor(simhash)").alias("s")).collect()[0].s
-        assert checksum == h.agg(F.expr("bit_xor(simhash)").alias("s")).collect()[0].s
 
 
 class TestPairSkewGuard:

@@ -244,6 +244,15 @@ class TestDriftAndInequality:
         assert r.dof == (len(flags) - 1) * (len(stats) - 1)
         assert abs(r.chi2 - chi2) < 1e-4
 
+    def test_chi2_plans_without_expand(self, spark):
+        """dof comes from one-row margin counts, not two count_distincts
+        in one aggregate, whose Expand orders its projections
+        differently from one session to the next."""
+        from hive_hdfs_practise_spark import plans
+
+        df = plans.QUERIES["lineitem_chi2_flag_status"](spark, SF)
+        assert "Expand" not in df._jdf.queryExecution().optimizedPlan().toString()
+
     def test_ks_recompute(self, spark):
         from hive_hdfs_practise_spark import plans
         from hive_hdfs_practise_spark.sources.catalog import table

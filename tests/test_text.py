@@ -93,6 +93,176 @@ def test_one_shingle_set():
     assert set(_shingle_set_sites(root)) == {"functions/text.py"}
 
 
+def _tokenizer_sites(root: Path) -> dict[str, int]:
+    r"""Modules (with hit counts) that spell out a whitespace token, a
+    line or the quality weights: a SQL ``regexp_extract_all(`` over a
+    ``\S+`` or whitespace-class run, ``split(trim(`` (SQL or Spark),
+    ``string_split(...chr(10))``, a Spark split on "\n", or the
+    quality weight ``0.4 *`` (SQL text or a Spark product).
+    Docstrings do not count."""
+    sql = re.compile(
+        r"regexp_extract_all\([^']*'(\\S\+|\[\^[^\]]*(\\[st]|WS_SQL)[^\]]*\]\+)'"
+        r"|split\(trim\(|string_split\([^)]*chr\(10\)|0\.4 \*"
+    )
+    sites: dict[str, int] = {}
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        skip = _docstrings(tree)
+        for node in ast.walk(tree):
+            hit = False
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hit = id(node) not in skip and bool(sql.search(node.value))
+            elif isinstance(node, ast.JoinedStr):
+                hit = bool(sql.search(ast.unparse(node)))
+            elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                args = node.args
+                hit = node.func.attr == "split" and bool(args) and (
+                    (isinstance(args[0], ast.Call) and ast.unparse(args[0].func).endswith("trim"))
+                    or any(isinstance(a, ast.Constant) and a.value == "\n" for a in args[1:])
+                )
+            elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mult):
+                hit = isinstance(node.left, ast.Constant) and node.left.value == 0.4
+            if hit:
+                rel = path.relative_to(root).as_posix()
+                sites[rel] = sites.get(rel, 0) + 1
+    return sites
+
+
+def test_one_tokenizer():
+    """functions/text.py is the only module that writes a whitespace
+    token, a non-empty line or the quality formula; everything else
+    calls tokens / tokens_sql, lines / lines_sql, word_ngrams /
+    word_ngrams_sql, quality / quality_sql."""
+    root = Path(hive_hdfs_practise_spark.__file__).parent
+    assert set(_tokenizer_sites(root)) == {"functions/text.py"}
+
+
+# Legal but degenerate texts: each Spark form and its SQL twin (run in
+# DuckDB) must agree exactly on every one of them.
+PARITY_TEXTS = [
+    "",
+    None,
+    " \t\n\r\f ",
+    "\t\ny\n",
+    "a\x0bb c",
+    "\u3000z w",
+    "\xa0z w",
+    "\u2003z w",
+    "token",
+    "the cat sat",
+    "这是一个中文句子",
+    "The cat, and the dog; 42 dogs!\n\nthe cat\nthe cat\n",
+]
+# Texts on which Java's and DuckDB's lower() disagree: Spark's lowered
+# form first, DuckDB's second (the input contract of tokens_sql).
+LOWER_DIFFERS = {
+    "ΟΔΟΣ": ("οδος", "οδοσ"),
+    "\u0130stanbul": ("i\u0307stanbul", "istanbul"),
+}
+PARITY_FORMS = [
+    "tokens", "tokens_lower", "lines", "ngrams_2", "ngrams_8",
+    "content_hash", "quality", "lang",
+]
+
+
+@pytest.fixture(scope="module")
+def parity_rows(spark, tmp_path_factory):
+    """{form: ({doc_id: spark value}, {doc_id: duckdb value})} over
+    PARITY_TEXTS + LOWER_DIFFERS; quality and language ID are read
+    from the per-row scorers and from the registered batch queries
+    (the _token_agg explode pass), which must agree with each other."""
+    import duckdb
+    import pandas as pd
+
+    texts = PARITY_TEXTS + list(LOWER_DIFFERS)
+    d = tmp_path_factory.mktemp("parity")
+    pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["s"] * len(texts),
+            "n_chars": [len(t or "") for t in texts],
+        }
+    ).to_parquet(str(d / "documents.parquet"))
+    t = F.col("text")
+    spark_cols = {
+        "tokens": tx.tokens(t),
+        "tokens_lower": tx.tokens(F.lower(t)),
+        "lines": tx.lines(t),
+        "ngrams_2": tx.word_ngrams(tx.tokens(t), 2),
+        "ngrams_8": tx.word_ngrams(tx.tokens(t), 8),
+        "content_hash": tx.content_hash(t),
+        "quality": tx.quality_score(t),
+        "lang": tx.lang_id(t),
+    }
+    sdf = spark.read.parquet(str(d / "documents.parquet"))
+    srows = sdf.select("doc_id", *[c.alias(k) for k, c in spark_cols.items()]).collect()
+    got = {k: {r.doc_id: r[k] for r in srows} for k in spark_cols}
+    batch = {
+        "quality": {
+            r.doc_id: r.quality
+            for r in plans.QUERIES["text_quality_score"](spark, str(d)).collect()
+        },
+        "lang": {
+            r.doc_id: r.lang_pred
+            for r in plans.QUERIES["text_lang_id"](spark, str(d)).collect()
+        },
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
+    )
+    sql = f"""
+        SELECT doc_id, {tx.tokens_sql()} AS tokens,
+               {tx.tokens_sql(lower=True)} AS tokens_lower,
+               {tx.lines_sql()} AS lines,
+               {tx.word_ngrams_sql("toks", 2)} AS ngrams_2,
+               {tx.word_ngrams_sql("toks", 8)} AS ngrams_8,
+               {tx.content_hash_sql()} AS content_hash
+        FROM (SELECT *, {tx.tokens_sql()} AS toks FROM documents)
+    """
+    cur = con.execute(sql)
+    names = [c[0] for c in cur.description]
+    drows = [dict(zip(names, r)) for r in cur.fetchall()]
+    want = {k: {r["doc_id"]: r[k] for r in drows} for k in names[1:]}
+    want["quality"] = dict(con.execute(tx.quality_sql()).fetchall())
+    want["lang"] = {r[0]: r[2] for r in con.execute(tx.lang_id_sql()).fetchall()}
+    return texts, got, want, batch
+
+
+class TestEngineParity:
+    @pytest.mark.parametrize("form", PARITY_FORMS)
+    def test_spark_and_sql_forms_agree(self, parity_rows, form):
+        texts, got, want, batch = parity_rows
+        lowered = form in ("tokens_lower", "content_hash")
+        for i, text in enumerate(texts):
+            if lowered and text in LOWER_DIFFERS:
+                continue  # the lower() contract, pinned below
+            assert got[form][i] == want[form][i], (form, text)
+            if form in batch:
+                assert batch[form][i] == got[form][i], (form, text)
+
+    def test_lower_is_the_known_difference(self, parity_rows):
+        texts, got, want, _ = parity_rows
+        for text, (java, duck) in LOWER_DIFFERS.items():
+            i = texts.index(text)
+            assert got["tokens"][i] == want["tokens"][i] == [text]
+            assert got["tokens_lower"][i] == [java]
+            assert want["tokens_lower"][i] == [duck]
+            assert got["content_hash"][i] != want["content_hash"][i]
+
+    def test_whitespace_is_javas_class(self, parity_rows):
+        texts, got, _, _ = parity_rows
+        tok = got["tokens"]
+        assert tok[texts.index("a\x0bb c")] == ["a", "b", "c"]
+        assert tok[texts.index("\u3000z w")] == ["\u3000z", "w"]
+        assert tok[texts.index("\t\ny\n")] == ["y"]
+        assert got["ngrams_8"][texts.index("the cat sat")] == []
+        assert got["ngrams_2"][texts.index("the cat sat")] == ["the cat", "cat sat"]
+        assert got["ngrams_2"][texts.index(None)] is None
+
+
 class TestLangId:
     def test_english(self, spark):
         assert _one(spark, "the cat and the dog is here", tx.lang_id(F.col("text"))) == "en"
